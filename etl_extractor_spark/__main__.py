@@ -7,7 +7,10 @@
 Reads the configured source tables from the parquet scale-factor
 directory, runs the full staged pipeline (extract → staging → dims →
 fact → gold), and prints the per-table row-count reconciliation the
-reference logs at every stage.
+reference logs at every stage. It also writes ``<out>/run_record.json``:
+one ``{stage, rows_out, sec}`` entry per stage, where ``rows_out`` maps
+each table the stage produced to its rows, observed on the stage's own
+writes (the record costs no Spark job).
 """
 
 from __future__ import annotations
@@ -61,6 +64,8 @@ def main(argv: list[str] | None = None) -> int:
         gold_dir=os.path.join(args.out, "gold"),
         log_path=args.log,
     )
+    with open(os.path.join(args.out, "run_record.json"), "w") as f:
+        json.dump(counts.record, f, indent=1)
     print(json.dumps(counts))
     return 0
 

@@ -13,7 +13,7 @@ Spark-first translation:
 - enrich_lookup   : broadcast left join + coalesce sentinel (J1/J2/J3 —
                     a broadcast hash join IS the distributed form of the
                     reference's dict-map lookup at main.py:352-355)
-- modulo_fk_fold  : ((k-1) % max)+1 after a scalar max aggregate (J5/A1)
+- modulo_fk_fold  : ((k-1) % max)+1 given the dim's max key (J5/A1)
 """
 
 from __future__ import annotations
@@ -76,7 +76,8 @@ def enrich_lookup(
 
 def scalar_agg(df: DataFrame, expr: Column) -> int | float:
     """A1/A2: driver-side scalar aggregate (reference main.py:347-350).
-    The ONLY deliberate driver materialization in the fact path."""
+    Costs a Spark job of its own; the pipeline's fact path observes its
+    FK bounds on the dim writes instead (``sinks.writers.write_observed``)."""
     return df.agg(expr.alias("v")).first()["v"]
 
 

@@ -8,11 +8,21 @@ durable parquet zones (staging / gold), and each stage is lazy
 DataFrame composition with a single write action at its end — Catalyst
 optimizes across each stage's full expression tree.
 
+Stages hand frames to each other, not paths: every write returns a
+``Landed`` table, the written zone read back with the writer's own
+schema (no schema-inference job), plus the metrics observed on the
+write pass itself. Row counts and the dims' FK bounds ride those writes
+(``sinks.writers.write_observed``), so the only Spark jobs a run starts
+are the ones that write data — the reference's per-stage ``len(df)``
+logging (main.py:45…411) costs no extra job.
+
 Stage map (reference → here):
   read_sources   main.py:29-76     source registry, per-source isolation
   stage          main.py:82-93     overwrite-mode staging parquet
-  build_dims     main.py:97-190    dim_cliente/producto/fuente/fecha
-  build_fact     main.py:196-306   conform + union + enrich + sentinel
+  build_dims     main.py:97-190    dim_cliente/producto/fuente/fecha,
+                                   FK bounds observed on the dim writes
+  build_fact     main.py:196-306   conform + union (lazy; per-source
+                                   rows observed on the gold write)
   load_gold      main.py:323-411   surrogate FK resolve (modulo fold +
                                    broadcast date lookup), partitioned
                                    fact layout (K4 analog)
@@ -22,12 +32,14 @@ from __future__ import annotations
 
 import logging
 import os
+import time
 from logging.handlers import RotatingFileHandler
+from typing import NamedTuple
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from etl_extractor_spark.functions.casts import to_double_or, to_string_or
+from etl_extractor_spark.functions.casts import to_double_or
 from etl_extractor_spark.functions.dates import fecha_key
 from etl_extractor_spark.functions.text import normalize_text, prefixed_key, truncate
 from etl_extractor_spark.operators.dims import add_surrogate_key, build_dim_date
@@ -35,10 +47,30 @@ from etl_extractor_spark.operators.facts import (
     conform_block,
     enrich_lookup,
     modulo_fk_fold,
-    scalar_agg,
     union_blocks,
 )
-from etl_extractor_spark.sinks.writers import write_overwrite, write_partitioned
+from etl_extractor_spark.sinks.writers import write_observed
+
+
+class Landed(NamedTuple):
+    """A table written to a lake zone: the frame read back with the
+    writer's schema, and the metrics observed on the write (``rows``
+    always, plus any the stage asked for)."""
+
+    df: DataFrame
+    metrics: dict
+
+
+def _land(
+    df: DataFrame,
+    path: str,
+    metrics: dict | None = None,
+    partition_by: list[str] | None = None,
+) -> Landed:
+    """Write ``df`` observed, then read it back with its own schema: a
+    bare ``read.parquet`` would start a schema-inference job."""
+    got = write_observed(df, path, metrics, partition_by=partition_by)
+    return Landed(df.sparkSession.read.schema(df.schema).parquet(path), got)
 
 
 def get_logger(log_path: str | None = None) -> logging.Logger:
@@ -59,26 +91,28 @@ def get_logger(log_path: str | None = None) -> logging.Logger:
 
 def stage_sources(
     spark: SparkSession, sources: dict[str, DataFrame], staging_dir: str, log: logging.Logger
-) -> dict[str, str]:
+) -> dict[str, Landed]:
     """K1: overwrite-write every source frame to the staging zone.
     Idempotent by construction (fixes the reference's rerun-append
     duplication, SURVEY §4.2.5)."""
-    paths: dict[str, str] = {}
+    staged: dict[str, Landed] = {}
     for name, df in sources.items():
-        path = os.path.join(staging_dir, f"stg_{name}")
         try:  # X2: per-source isolation — a bad source never kills the run
-            write_overwrite(df, path)
-            paths[name] = path
-            log.info("STAGING: stg_%s written", name)
+            staged[name] = _land(df, os.path.join(staging_dir, f"stg_{name}"))
+            log.info("STAGING: stg_%s written (%d rows)", name, staged[name].metrics["rows"])
         except Exception as exc:
             log.warning("STAGING: stg_%s failed: %s", name, exc)
-    return paths
+    return staged
 
 
-def build_dimensions(spark: SparkSession, staged: dict[str, str], gold_dir: str, log) -> dict[str, DataFrame]:
+def build_dimensions(
+    spark: SparkSession, staged: dict[str, Landed], gold_dir: str, log
+) -> dict[str, Landed]:
     """Dims from the staged star-schema sources (reference
-    main.py:97-190; FIXTURES.md mapping customer/part/supplier/dates)."""
-    read = lambda k: spark.read.parquet(staged[k])  # noqa: E731
+    main.py:97-190; FIXTURES.md mapping customer/part/supplier/dates).
+    Each dim's FK bound (``bound``) is observed on its own write, for
+    load_gold's key fold."""
+    read = lambda k: staged[k].df  # noqa: E731
 
     dim_cliente = (
         read("customer")
@@ -117,47 +151,54 @@ def build_dimensions(spark: SparkSession, staged: dict[str, str], gold_dir: str,
     )
 
     dims = {
-        "dim_cliente": add_surrogate_key(dim_cliente, "cliente_id", "IdCliente"),
-        "dim_producto": add_surrogate_key(dim_producto, "producto_id", "IdProducto"),
-        "dim_fuente": add_surrogate_key(dim_fuente, "fuente_id", "IdFuente"),
-        "dim_fecha": dim_fecha.withColumn("IdFecha", F.col("fecha_key")),
+        "dim_cliente": (
+            add_surrogate_key(dim_cliente, "cliente_id", "IdCliente"), {"bound": F.max("IdCliente")}
+        ),
+        "dim_producto": (
+            add_surrogate_key(dim_producto, "producto_id", "IdProducto"), {"bound": F.max("IdProducto")}
+        ),
+        "dim_fuente": (
+            add_surrogate_key(dim_fuente, "fuente_id", "IdFuente"), {"bound": F.min("IdFuente")}
+        ),
+        "dim_fecha": (dim_fecha.withColumn("IdFecha", F.col("fecha_key")), None),
     }
-    for name, df in dims.items():
-        write_overwrite(df, os.path.join(gold_dir, name))
-        log.info("DIM: %s built", name)
+    landed: dict[str, Landed] = {}
+    for name, (df, metrics) in dims.items():
+        landed[name] = _land(df, os.path.join(gold_dir, name), metrics)
+        log.info("DIM: %s built (%d rows)", name, landed[name].metrics["rows"])
+    return landed
+
+
+def fact_blocks() -> dict[str, dict]:
+    """The source blocks build_fact unions into the fact: each ``src``
+    (also the staged source the block conforms) → its conform spec. The
+    one place the block names live; load_gold observes each block's rows
+    on its write under the same names."""
     return {
-        name: spark.read.parquet(os.path.join(gold_dir, name)) for name in dims
+        "orders": {
+            "cliente_key": F.col("o_custkey").cast("long"),
+            "producto_key": F.lit(None).cast("long"),
+            "fecha_key": fecha_key("o_orderdate"),
+            "puntaje": to_double_or("o_totalprice", 0.0),
+            "texto": truncate("o_orderpriority", 2000),
+        },
+        "events": {
+            "cliente_key": F.col("user_id").cast("long"),
+            "producto_key": F.lit(None).cast("long"),
+            "fecha_key": fecha_key("ts"),
+            "puntaje": to_double_or("value", 0.0),
+            "texto": truncate("props", 2000),
+        },
     }
 
 
-def build_fact(spark: SparkSession, staged: dict[str, str], log) -> DataFrame:
+def build_fact(spark: SparkSession, staged: dict[str, Landed], log) -> DataFrame:
     """Conform heterogeneous sources to the canonical opinion-like fact
-    (reference add_block, main.py:208-269) and union them (U1)."""
-    orders = spark.read.parquet(staged["orders"])
-    events = spark.read.parquet(staged["events"])
+    (reference add_block, main.py:208-269) and union them (U1). The
+    fact stays lazy; load_gold observes each block's rows on its write."""
     blocks = [
-        conform_block(
-            orders,
-            {
-                "src": F.lit("orders"),
-                "cliente_key": F.col("o_custkey").cast("long"),
-                "producto_key": F.lit(None).cast("long"),
-                "fecha_key": fecha_key("o_orderdate"),
-                "puntaje": to_double_or("o_totalprice", 0.0),
-                "texto": truncate("o_orderpriority", 2000),
-            },
-        ),
-        conform_block(
-            events,
-            {
-                "src": F.lit("events"),
-                "cliente_key": F.col("user_id").cast("long"),
-                "producto_key": F.lit(None).cast("long"),
-                "fecha_key": fecha_key("ts"),
-                "puntaje": to_double_or("value", 0.0),
-                "texto": truncate("props", 2000),
-            },
-        ),
+        conform_block(staged[src].df, {"src": F.lit(src), **spec})
+        for src, spec in fact_blocks().items()
     ]
     fact = union_blocks(blocks)
     log.info("FACT: conformed %d source blocks", len(blocks))
@@ -165,17 +206,19 @@ def build_fact(spark: SparkSession, staged: dict[str, str], log) -> DataFrame:
 
 
 def load_gold(
-    spark: SparkSession, fact: DataFrame, dims: dict[str, DataFrame], gold_dir: str, log
-) -> DataFrame:
+    spark: SparkSession, fact: DataFrame, dims: dict[str, Landed], gold_dir: str, log
+) -> Landed:
     """FK resolution with the reference's never-drop-rows policy
     (main.py:323-411): modulo-fold out-of-range business keys into the
-    dim key range (J5), resolve date keys via broadcast lookup (J3),
-    sentinel-default what cannot match — then write the fact partitioned
-    by year (K4: the Spark substitute for the reference's B-tree index
-    on the date key is partition pruning)."""
-    max_cliente = int(scalar_agg(dims["dim_cliente"], F.max("IdCliente")))
-    max_producto = int(scalar_agg(dims["dim_producto"], F.max("IdProducto")))
-    default_fuente = int(scalar_agg(dims["dim_fuente"], F.min("IdFuente")))
+    dim key range (J5) by the bounds observed on the dim writes, resolve
+    date keys via broadcast lookup (J3), sentinel-default what cannot
+    match — then write the fact partitioned by year (K4: the Spark
+    substitute for the reference's B-tree index on the date key is
+    partition pruning). The write also observes the rows of each source
+    block (``fact_blocks``)."""
+    max_cliente = int(dims["dim_cliente"].metrics["bound"])
+    max_producto = int(dims["dim_producto"].metrics["bound"])
+    default_fuente = int(dims["dim_fuente"].metrics["bound"])
 
     resolved = (
         fact.withColumn(
@@ -190,7 +233,7 @@ def load_gold(
     )
     resolved = enrich_lookup(
         resolved,
-        dims["dim_fecha"].select("fecha_key", "IdFecha"),
+        dims["dim_fecha"].df.select("fecha_key", "IdFecha"),
         "fecha_key",
         "fecha_key",
         {"IdFecha": "IdFecha"},
@@ -207,10 +250,20 @@ def load_gold(
         F.col("texto").alias("Comentario"),
         (F.col("fecha_key") / 10000).cast("int").alias("anio"),
     )
-    write_partitioned(gold_fact, os.path.join(gold_dir, "fact_opinion"), ["anio"])
-    out = spark.read.parquet(os.path.join(gold_dir, "fact_opinion"))
-    log.info("GOLD: fact_opinion loaded (%d rows)", out.count())
+    per_src = {src: F.count_if(F.col("src") == src) for src in fact_blocks()}
+    out = _land(gold_fact, os.path.join(gold_dir, "fact_opinion"), per_src, partition_by=["anio"])
+    log.info("GOLD: fact_opinion loaded (%d rows)", out.metrics["rows"])
     return out
+
+
+class RunCounts(dict):
+    """run_pipeline's row-count reconciliation (table → rows), carrying
+    the run record as ``record``: one ``{stage, rows_out, sec}`` entry
+    per stage, where ``rows_out`` maps each table the stage produced to
+    its rows (for the lazy build_fact, each source block's rows as
+    observed on load_gold's write)."""
+
+    record: list[dict]
 
 
 def run_pipeline(
@@ -219,16 +272,32 @@ def run_pipeline(
     staging_dir: str,
     gold_dir: str,
     log_path: str | None = None,
-) -> dict[str, int]:
+) -> RunCounts:
     """X1: the orchestrator — sequential stages, fail-fast between
     stages, per-source isolation inside extraction/staging. Returns the
-    row-count reconciliation the reference logs at every stage."""
+    row-count reconciliation the reference logs at every stage, taken
+    from the metrics observed on the writes, with the run record
+    attached (building it starts no Spark job)."""
     log = get_logger(log_path)
+    t0 = time.perf_counter()
     staged = stage_sources(spark, sources, staging_dir, log)
+    t1 = time.perf_counter()
     dims = build_dimensions(spark, staged, gold_dir, log)
+    t2 = time.perf_counter()
     fact = build_fact(spark, staged, log)
+    t3 = time.perf_counter()
     gold = load_gold(spark, fact, dims, gold_dir, log)
-    counts = {name: df.count() for name, df in dims.items()}
-    counts["fact_opinion"] = gold.count()
+    t4 = time.perf_counter()
+    counts = RunCounts({name: tbl.metrics["rows"] for name, tbl in dims.items()})
+    counts["fact_opinion"] = gold.metrics["rows"]
     log.info("PIPELINE DONE: %s", counts)
+    counts.record = [
+        {"stage": stage, "rows_out": rows, "sec": round(sec, 3)}
+        for stage, rows, sec in (
+            ("stage_sources", {name: tbl.metrics["rows"] for name, tbl in staged.items()}, t1 - t0),
+            ("build_dimensions", {name: counts[name] for name in dims}, t2 - t1),
+            ("build_fact", {src: gold.metrics[src] for src in fact_blocks()}, t3 - t2),
+            ("load_gold", {"fact_opinion": counts["fact_opinion"]}, t4 - t3),
+        )
+    ]
     return counts

@@ -474,40 +474,48 @@ ORACLES["streaming_funnel_replay"] = EVENT_FUNNEL_SQL
 _LP_ROUNDS = 3
 
 # Order-isomorphic int64 embedding of the 'C'||k / 'S'||k label domain
-# (r11): the decimal digits d_1..d_L of k (no leading zeros, L ≤ 10)
-# become base-11 digits d_i+1 left-aligned in a 10-slot field padded
+# (r11): the decimal digits d_1..d_L of k (no leading zeros, L ≤ 12)
+# become base-11 digits d_i+1 left-aligned in a 12-slot field padded
 # with 0 — 0 sorts below every real digit, so the numeric order of the
 # codes equals the LEXICOGRAPHIC order of the digit strings (shorter-
 # prefix-wins included: 'C10' > 'C1', 'C115' < 'C12' both preserved);
-# the node-type prefix rides the 11^10 bit ('C'=0 < 'S'=1, matching
+# the node-type prefix rides the 11^12 place ('C'=0 < 'S'=1, matching
 # 'C' < 'S'). Injective on the real domain because real digits encode
-# as d+1 ≥ 1, never 0. Max code 2·11^10 ≈ 5.2e10 ≪ 2^63. min() over
+# as d+1 ≥ 1, never 0. Max code 2·11^12 ≈ 6.3e12 ≪ 2^63. min() over
 # codes therefore equals min() over label strings, which is what lets
-# the LPA rounds run on 8-byte longs with hash aggregation.
-_POW11 = ", ".join(str(11**(10 - i)) + "L" for i in range(1, 11))  # 11^9..11^0
+# the LPA rounds run on 8-byte longs with hash aggregation. Keys
+# outside [0, 10^12) have no code and fail the query (raise_error)
+# rather than encode to NULL and drop out of the min-label rounds;
+# 10^12 covers TPC-H custkey (1.5e10) and suppkey at SF 1e5.
+_LP_SLOTS = 12
+_LP_TYPE = 11**_LP_SLOTS  # the 'S' offset
+_POW11 = ", ".join(f"{11 ** (_LP_SLOTS - i)}L" for i in range(1, _LP_SLOTS + 1))  # 11^11..11^0
 
 
 def _lp_enc(key: str, is_supplier: int):
     """Encode an integer key column into the order-isomorphic label
     code (see module comment above). CLOSED FORM, no HOF: with L the
-    digit count, code = P·11^10 + 11^(10-L) · Σ_{j=0..L-1}
+    digit count, code = P·11^12 + 11^(12-L) · Σ_{j=0..L-1}
     ((k div 10^j) % 10 + 1)·11^j — the left-aligned base-11 field
     factored so the whole thing is a flat codegen expression (a
     sequence/aggregate lambda re-evaluates its outer digit-count
-    expression per element, the r10 lambda-binding lesson)."""
+    expression per element, the r10 lambda-binding lesson). A key
+    outside [0, 10^12) raises; a NULL key stays NULL."""
     k = f"cast({key} as bigint)"
     scale = " ".join(
-        f"WHEN {k} < {10 ** j}L THEN {11 ** (10 - j)}L"
-        for j in range(1, 11)
+        f"WHEN {k} < {10 ** j}L THEN {11 ** (_LP_SLOTS - j)}L"
+        for j in range(1, _LP_SLOTS + 1)
     )
     terms = " + ".join(
         f"(CASE WHEN {k} >= {10 ** j}L THEN "
         f"(({k} div {10 ** j}L) % 10 + 1) * {11 ** j}L ELSE 0L END)"
-        for j in range(1, 10)
+        for j in range(1, _LP_SLOTS)
     )
     return F.expr(
-        f"{is_supplier}L * 25937424601L"
-        f" + (CASE {scale} END) * (({k} % 10 + 1) + {terms})"
+        f"CASE WHEN {k} < 0L OR {k} >= {10 ** _LP_SLOTS}L THEN raise_error("
+        f"concat('label key out of the encodable range [0, 10^{_LP_SLOTS}): ', {k}))"
+        f" ELSE {is_supplier}L * {_LP_TYPE}L"
+        f" + (CASE {scale} END) * (({k} % 10 + 1) + {terms}) END"
     )
 
 
@@ -515,11 +523,11 @@ def _lp_dec(code: str):
     """Decode a label code back to its 'C'||k / 'S'||k string (output
     projection only — ≤ top-k rows)."""
     return F.concat(
-        F.when(F.col(code) < 25937424601, F.lit("C")).otherwise(F.lit("S")),
+        F.when(F.col(code) < _LP_TYPE, F.lit("C")).otherwise(F.lit("S")),
         F.expr(
             f"""cast(
                 aggregate(
-                    sequence(1, 10),
+                    sequence(1, {_LP_SLOTS}),
                     0L,
                     (acc, i) -> CASE
                         WHEN ({code} div element_at(array({_POW11}), i)) % 11 > 0
@@ -555,7 +563,7 @@ def label_propagation_communities(spark: SparkSession, sf_dir: str) -> DataFrame
       defined over the STRING ordering of 'C'||k / 'S'||k, which the
       even/odd int encoding does not preserve — but the base-11 digit
       embedding (_lp_enc) does: each decimal digit maps to 11-ary
-      digit d+1 in a fixed 10-slot field (0 = below-any-digit pad), so
+      digit d+1 in a fixed 12-slot field (0 = below-any-digit pad), so
       lexicographic order over variable-length digit strings equals
       numeric int64 order, with 'C' < 'S' as the top bit. Every round
       then shuffles 8-byte longs and min() runs as a codegen

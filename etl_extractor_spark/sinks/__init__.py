@@ -1,7 +1,6 @@
 from etl_extractor_spark.sinks.writers import (
-    write_overwrite,
     write_append,
-    write_partitioned,
+    write_observed,
 )
 
-__all__ = ["write_overwrite", "write_append", "write_partitioned"]
+__all__ = ["write_append", "write_observed"]

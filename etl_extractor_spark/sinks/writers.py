@@ -16,28 +16,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 
 
-def write_overwrite(df: DataFrame, path: str, fmt: str = "parquet") -> None:
-    df.write.mode("overwrite").format(fmt).save(path)
-
-
 def write_append(df: DataFrame, path: str, fmt: str = "parquet") -> None:
     df.write.mode("append").format(fmt).save(path)
-
-
-def write_partitioned(
-    df: DataFrame,
-    path: str,
-    partition_by: list[str],
-    fmt: str = "parquet",
-    mode: str = "overwrite",
-) -> None:
-    """K4 analog: physical layout keyed for partition pruning.
-
-    A fact table partitioned by date key turns time-range scans into
-    directory pruning — the 100 TB equivalent of the reference's B-tree
-    index on fecha_key (reference load/load_to_staging.py:9-15).
-    """
-    df.write.mode(mode).format(fmt).partitionBy(*partition_by).save(path)
 
 
 def write_observed(
@@ -46,6 +26,7 @@ def write_observed(
     metrics: dict | None = None,
     fmt: str = "parquet",
     mode: str = "overwrite",
+    partition_by: list[str] | None = None,
 ) -> dict:
     """Write with free metrics: attach an Observation so row counts
     (and any caller-supplied aggregate expressions) are collected ON
@@ -56,6 +37,12 @@ def write_observed(
     A3): at 100 TB a separate count re-scans the table; an observed
     metric rides the same task set for free. Returns the metrics dict
     (always includes ``rows``).
+
+    ``partition_by`` is the K4 analog: physical layout keyed for
+    partition pruning. A fact table partitioned by date key turns
+    time-range scans into directory pruning — the 100 TB equivalent of
+    the reference's B-tree index on fecha_key (reference
+    load/load_to_staging.py:9-15).
     """
     from pyspark.sql import Observation
     from pyspark.sql import functions as F
@@ -64,5 +51,8 @@ def write_observed(
     exprs = [F.count(F.lit(1)).alias("rows")]
     for name, col in (metrics or {}).items():
         exprs.append(col.alias(name))
-    df.observe(obs, *exprs).write.mode(mode).format(fmt).save(path)
+    writer = df.observe(obs, *exprs).write.mode(mode).format(fmt)
+    if partition_by:
+        writer = writer.partitionBy(*partition_by)
+    writer.save(path)
     return obs.get

@@ -5,11 +5,14 @@ label_propagation_communities runs its min-label rounds on int64 codes
 code order equals the string order EXACTLY (min over codes == min over
 labels) and the decode is the exact inverse. This pins both over a
 range that exercises every digit-count boundary (the classic traps:
-'C10' > 'C1', 'C115' < 'C12', power-of-ten lengths, 'C' < 'S').
+'C10' > 'C1', 'C115' < 'C12', power-of-ten lengths, 'C' < 'S'), up to
+the top of the 12-digit domain, and pins that a key past it fails
+loudly instead of encoding to NULL.
 """
 
 from __future__ import annotations
 
+import pytest
 from pyspark.sql import functions as F
 
 from etl_extractor_spark.plans.pipeline_ops2 import _lp_dec, _lp_enc
@@ -18,10 +21,11 @@ from etl_extractor_spark.plans.pipeline_ops2 import _lp_dec, _lp_enc
 def test_lp_encoding_order_isomorphic_and_roundtrip(spark):
     keys = sorted(
         set(range(1, 1201))
-        | {10**j for j in range(1, 10)}
-        | {10**j - 1 for j in range(2, 10)}
-        | {10**j + 1 for j in range(1, 10)}
-        | {9999999999}
+        | {0}
+        | {10**j for j in range(1, 12)}
+        | {10**j - 1 for j in range(2, 13)}
+        | {10**j + 1 for j in range(1, 12)}
+        | {15_000_000_000, 123_456_789_012, 100_000_000_001}
     )
     rows = [(k, p) for k in keys for p in (0, 1)]
     df = spark.createDataFrame(rows, "k long, p int")
@@ -45,3 +49,15 @@ def test_lp_encoding_order_isomorphic_and_roundtrip(spark):
     by_str = [r["s"] for r in sorted(got, key=lambda r: r["s"])]
     by_code = [r["s"] for r in sorted(got, key=lambda r: r["code"])]
     assert by_str == by_code, "code order diverges from label-string order"
+
+
+@pytest.mark.parametrize("key", [10**12, 10**15, -1])
+def test_lp_encoding_out_of_range_key_raises(spark, key):
+    df = spark.createDataFrame([(key,)], "k long")
+    with pytest.raises(Exception, match="encodable range"):
+        df.select(_lp_enc("k", 0).alias("code")).collect()
+
+
+def test_lp_encoding_null_key_stays_null(spark):
+    df = spark.createDataFrame([(None,)], "k long")
+    assert df.select(_lp_enc("k", 1).alias("code")).first()["code"] is None

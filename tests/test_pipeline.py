@@ -105,3 +105,99 @@ def test_write_observed_metrics_ride_the_write(spark, sf_dir, tmp_path):
     assert got["n_open"] == orders.filter("o_orderstatus = 'O'").count()
     assert got["max_price"] == orders.agg(F.max("o_totalprice")).first()[0]
     assert spark.read.parquet(out).count() == got["rows"]
+
+
+SOURCES = ("customer", "part", "supplier", "orders", "lineitem", "events")
+
+
+def test_pipeline_starts_only_write_jobs(spark, sf_dir, tmp_path):
+    """Row counts and FK bounds ride the writes, and every re-read
+    carries its schema: no count, first() or schema-inference job."""
+    sources = {name: load_table(spark, sf_dir, name) for name in SOURCES}
+    sc = spark.sparkContext
+    sc.setJobGroup("pipeline-job-shape", "run_pipeline")
+    try:
+        run_pipeline(spark, sources, str(tmp_path / "staging"), str(tmp_path / "gold"))
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    st = sc.statusTracker()
+    jobs = st.getJobIdsForGroup("pipeline-job-shape")
+    names = [
+        st.getStageInfo(s).name
+        for j in jobs
+        for s in st.getJobInfo(j).stageIds
+        if st.getStageInfo(s) is not None
+    ]
+    side = [n for n in names if n.startswith(("count at", "first at", "parquet at"))]
+    assert not side, side
+    # 6 staging saves + 11 dim jobs + 2 fact jobs. Under AQE a count of a
+    # written table shows as two more shuffle-stage jobs, not by name.
+    assert len(jobs) <= 19, len(jobs)
+
+
+def test_counts_equal_gold_dirs(lake):
+    sp, tmp, counts = lake
+    got = {name: sp.read.parquet(os.path.join(tmp, "gold", name)).count() for name in counts}
+    assert got == counts
+
+
+def test_carried_schemas_match_inferred(spark, sf_dir, tmp_path):
+    """Each stage's re-read carries the writer's schema instead of
+    inferring one; it must match what Spark infers from the dir."""
+    from etl_extractor_spark.pipeline import (
+        build_dimensions,
+        build_fact,
+        get_logger,
+        load_gold,
+        stage_sources,
+    )
+
+    log = get_logger()
+    sources = {name: load_table(spark, sf_dir, name) for name in SOURCES}
+    staged = stage_sources(spark, sources, str(tmp_path / "staging"), log)
+    dims = build_dimensions(spark, staged, str(tmp_path / "gold"), log)
+    fact = build_fact(spark, staged, log)
+    gold = load_gold(spark, fact, dims, str(tmp_path / "gold"), log)
+    landed = {
+        **{f"staging/stg_{n}": t for n, t in staged.items()},
+        **{f"gold/{n}": t for n, t in dims.items()},
+        "gold/fact_opinion": gold,
+    }
+    assert len(staged) == len(SOURCES)
+    shape = lambda schema: [(f.name, f.dataType) for f in schema]  # noqa: E731
+    for rel, table in landed.items():
+        inferred = spark.read.parquet(str(tmp_path / rel)).schema
+        assert shape(table.df.schema) == shape(inferred), rel
+
+
+def test_cli_writes_run_record(spark, sf_dir, tmp_path, monkeypatch):
+    """The CLI's run record: one {stage, rows_out, sec} entry per
+    stage, rows taken from the observed writes."""
+    import json
+
+    from etl_extractor_spark.__main__ import main
+
+    # main() re-applies the session factory's SQL confs to the shared
+    # test session; keep its shuffle width the fixture's
+    monkeypatch.setenv("SPARK_GRAFT_SHUFFLE", spark.conf.get("spark.sql.shuffle.partitions"))
+    assert main(["--sf-dir", sf_dir, "--out", str(tmp_path)]) == 0
+    with open(tmp_path / "run_record.json") as f:
+        record = json.load(f)
+
+    assert [e["stage"] for e in record] == [
+        "stage_sources", "build_dimensions", "build_fact", "load_gold",
+    ]
+    for entry in record:
+        assert set(entry) == {"stage", "rows_out", "sec"}
+        assert isinstance(entry["sec"], float) and entry["sec"] >= 0
+        assert entry["rows_out"] and all(
+            isinstance(k, str) and isinstance(v, int) for k, v in entry["rows_out"].items()
+        )
+    rows = {e["stage"]: e["rows_out"] for e in record}
+    assert set(rows["stage_sources"]) == set(SOURCES)
+    assert set(rows["build_dimensions"]) == {"dim_cliente", "dim_producto", "dim_fuente", "dim_fecha"}
+    staged = rows["stage_sources"]
+    assert rows["build_fact"] == {"orders": staged["orders"], "events": staged["events"]}
+    assert rows["load_gold"] == {"fact_opinion": staged["orders"] + staged["events"]}
+    assert staged["orders"] == load_table(spark, sf_dir, "orders").count()
