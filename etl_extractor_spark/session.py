@@ -7,11 +7,28 @@ the plan shapes we want on a real cluster:
 - Arrow on (vectorized pandas-UDF exchange for the Python-side operators),
 - session timezone UTC (parity with the DuckDB oracle),
 - shuffle partitions sized to the local core count; on a 1000-executor
-  cluster the same code runs with AQE picking the effective parallelism.
+  cluster the same code runs with AQE picking the effective parallelism,
+- under a ``local[...]`` master, streaming checkpoints go through
+  Spark's ``FileSystemBasedCheckpointFileManager``: the default
+  ``FileContext`` manager probes links before every metadata/state
+  rename, and on ``file://`` Hadoop answers that probe by forking
+  ``readlink`` from the driver JVM (112 forks per streaming replay).
+  Same temp-file + rename protocol, same files, CRCs kept; a cluster
+  master keeps Spark's default,
+- Python workers stop re-reading every zip on ``sys.path`` before each
+  task: pyspark calls ``importlib.invalidate_caches()`` per task, which
+  before CPython 3.13 re-reads pyspark.zip's directory each time (about
+  0.1 s of CPU). The package ``__init__`` installs the stat-keyed
+  ``_zip_invalidate_if_changed`` in every worker that runs a repo UDF,
+- the package zip shipped to Python workers is removed at interpreter
+  exit, so none is left in the temp dir; ``addPyFile`` has copied it
+  into the SparkFiles root by then. It stays a top-level ``*.zip`` in
+  the temp dir while the process lives.
 """
 
 from __future__ import annotations
 
+import atexit
 import os
 import tempfile
 import threading
@@ -26,6 +43,19 @@ _SHIP_LOCK = threading.Lock()
 _SHIPPED_APPS: set[str] = set()
 _PKG_ZIP: str | None = None
 
+# Spark's plain-FileSystem checkpoint manager (see the module docstring)
+_FS_CHECKPOINT_MANAGER = (
+    "org.apache.spark.sql.execution.streaming.checkpointing."
+    "FileSystemBasedCheckpointFileManager"
+)
+
+
+def _remove_file(path: str) -> None:
+    try:
+        os.remove(path)
+    except OSError:
+        pass
+
 
 def _build_pkg_zip() -> str:
     """Zip the installed ``etl_extractor_spark`` package (sources only,
@@ -38,6 +68,7 @@ def _build_pkg_zip() -> str:
         prefix="etl_extractor_spark_", suffix=".zip"
     )
     os.close(fd)
+    atexit.register(_remove_file, tmp)
     with zipfile.ZipFile(tmp, "w", zipfile.ZIP_DEFLATED) as zf:
         for dirpath, dirnames, filenames in os.walk(pkg_dir):
             dirnames[:] = [d for d in dirnames if d != "__pycache__"]
@@ -105,19 +136,11 @@ def get_spark(
         .config("spark.cleaner.referenceTracking.cleanCheckpoints", "true")
         .config("spark.ui.enabled", "false")
     )
+    if master.startswith("local"):
+        builder = builder.config(
+            "spark.sql.streaming.checkpointFileManagerClass", _FS_CHECKPOINT_MANAGER
+        )
     spark = builder.getOrCreate()
     ship_package(spark)
     return spark
 
-
-def tune_for_session(spark: SparkSession) -> SparkSession:
-    """Apply runtime-settable tuning to an externally provided session.
-
-    The driver hands us its own SparkSession for ``entry()``/``queries()``;
-    these are the conf keys that are safe to set post-start.
-    """
-    spark.conf.set("spark.sql.session.timeZone", "UTC")
-    spark.conf.set("spark.sql.adaptive.enabled", "true")
-    spark.conf.set("spark.sql.adaptive.coalescePartitions.enabled", "true")
-    ship_package(spark)
-    return spark

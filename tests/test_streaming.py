@@ -667,3 +667,15 @@ def test_state_partitions_sizing_rule(spark, sf_dir):
     assert got == want
     # a missing table falls back to the floor (clamped by the cap)
     assert state_partitions_for(spark, sf_dir, table="nonexistent") == min(cap, 4)
+
+
+def test_local_checkpoints_use_filesystem_checkpoint_manager(spark, tmp_path):
+    """Under a local master, get_spark routes streaming metadata/state
+    renames through FileSystemBasedCheckpointFileManager (no FileContext
+    link probe, so no forked ``readlink`` per rename)."""
+    jvm = spark._jvm
+    pkg = "org.apache.spark.sql.execution.streaming.checkpointing"
+    create = getattr(jvm, f"{pkg}.CheckpointFileManager$").__getattr__("MODULE$").create
+    path = jvm.org.apache.hadoop.fs.Path(f"file://{tmp_path}")
+    mgr = create(path, spark._jsparkSession.sessionState().newHadoopConf())
+    assert mgr.getClass().getName() == f"{pkg}.FileSystemBasedCheckpointFileManager"
