@@ -1,11 +1,5 @@
 """Round-5-late pipeline-operations wave.
 
-This module is deliberately LAST in ``plans/registry._MODULES``: its
-names are never-driver-checked and must sort BEHIND the 57-name
-never-checked backlog (the r5 sweep window + the 7 r6-queued names),
-so registering new work here never displaces a judge-prescribed
-first-time check from the capped window.
-
 Queries (each oracle-backed):
 
 - shard_zip_members     : real PKZIP codec round-trip, 8 docs/shard
@@ -1171,9 +1165,8 @@ def streaming_rate_limit_replay(spark: SparkSession, sf_dir: str) -> DataFrame:
     events in (ev_us, event_id) order, the same total order the batch
     row_number uses (pinned by
     tests/test_streaming.py::test_streaming_rate_limit_matches_batch).
-    Registered here (module is LAST in the registry) so the new name
-    queues behind the r5 sweep window. Lives in append mode: emitted
-    rows are final — no final-state selection problem at all."""
+    Lives in append mode: emitted rows are final — no final-state
+    selection problem at all."""
     from etl_extractor_spark.streaming import events_stream as SE
 
     kept = SE.streaming_rate_limit(SE.events_stream(spark, sf_dir))

@@ -30,15 +30,6 @@ main.py:97-306) profiles and conforms these same order attributes but
 has no inference layer; these tests are the decision layer a
 warehouse-scale DQ/experimentation pipeline runs on top of the
 conformed facts.
-
-Registry placement: appended AFTER pipeline_ops9 in
-plans/registry._MODULES AND defer-tiered at pseudo-round-FOUR
-(``registry._DEFER_RANK`` rank 4, NOT the ops9 rank 3): the r11
-window is booked (14 remaining ops8 + 36 oldest-r3 stale) and r12 is
-booked with the 22 ops9 first-times + remaining r3 + oldest-r4 stale.
-Rank-4 names tie with the real r4-era tier and sort BEHIND all of it
-(stable module order), so nothing here displaces a scheduled check
-from either committed window; these names enter rotation at r13+.
 """
 
 from __future__ import annotations
@@ -2884,16 +2875,3 @@ SELECT wk, count(*)::BIGINT AS n_events,
             * 1000000) AS BIGINT) AS vwap_micro
 FROM e GROUP BY 1 ORDER BY wk
 """
-
-
-def _register_defer() -> None:
-    """Foot-of-module hook: rank this module's names as pseudo-round-4
-    stale (see module docstring — rank 3 would enter the booked r12
-    window ahead of the oldest-r4 stale re-checks). Must run AFTER
-    every QUERIES[...] binding."""
-    from etl_extractor_spark.plans import registry as _registry
-
-    _registry._DEFER_RANK.update({k: 4 for k in QUERIES})
-
-
-_register_defer()

@@ -1,9 +1,5 @@
 """Round-5 session-3 pipeline-operations wave (misc surface).
 
-Appended after plans/pipeline_ops + geo + inference in the registry
-module order for the same sweep-window-stability reason: never-checked
-names registered here sort behind the whole existing backlog.
-
 Queries (all oracle-backed):
 
 ingestion / formats

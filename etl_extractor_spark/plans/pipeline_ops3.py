@@ -13,11 +13,6 @@ top of its ETL surface, built Spark-first with the repo's exact
 cross-engine arithmetic conventions (integer sufficient statistics,
 floor(x*10^k + 0.5) half-up quantization, multiply-before-divide,
 IEEE-exact sqrt/+-*/ only after identical integer inputs).
-
-Registry placement: this module is appended AFTER pipeline_ops2 in
-plans/registry._MODULES, so its never-driver-checked names sort
-behind the existing first-time backlog and the judge-verified r6
-sweep window (50 first-time oracle-backed names) stays intact.
 """
 
 from __future__ import annotations

@@ -15,16 +15,6 @@ its ETL surface, built Spark-first with the repo's cross-engine
 arithmetic conventions (integer sufficient statistics, floor
 half-up quantization, multiply-before-divide, integer floor division
 via div///, IEEE-exact float only after identical integer inputs).
-
-Registry placement: this module is appended AFTER pipeline_ops3 in
-plans/registry._MODULES AND registers its names in
-registry._DEFER_AS_STALE — the never-checked backlog (41 names) is
-now smaller than the ~50-slot driver sweep window, so a plain append
-would displace the 9 oldest-r1 stale re-checks scheduled for round 7
-(the staleness tier's first real exercise). Deferred names rank as
-pseudo-r1-stale until actually checked: behind every real
-never-checked name and, by stable module order, behind the real
-r1-checked anchors — they enter the window in round 8.
 """
 
 from __future__ import annotations
@@ -1561,14 +1551,3 @@ ORACLES["sprt_sequential_test"] = f"""
                      ELSE 0 END AS BIGINT) AS decision
     FROM cum ORDER BY day
 """
-
-
-def _register_defer() -> None:
-    """Foot-of-module hook: rank this module's names as pseudo-stale
-    (see module docstring). Must run AFTER every QUERIES[...] binding."""
-    from etl_extractor_spark.plans import registry as _registry
-
-    _registry._DEFER_AS_STALE = _registry._DEFER_AS_STALE | frozenset(QUERIES)
-
-
-_register_defer()

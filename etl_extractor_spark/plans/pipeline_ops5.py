@@ -14,13 +14,6 @@ surface, built Spark-first with the repo's cross-engine arithmetic
 conventions (integer sufficient statistics, multiply-before-divide,
 integer floor division via div///, one identical floor(num/den·10^k)
 DOUBLE sequence over exact int64 inputs for final scalars).
-
-Registry placement: appended AFTER pipeline_ops4 in
-plans/registry._MODULES AND defer-tiered (``_register_defer`` foot
-hook): the r8 sweep window is fully booked (36 oldest-r1 stale
-re-checks + 14 deferred round-7 names, judge-simulated), so round-8
-additions must rank as pseudo-r1-stale — behind the 4 spilled round-7
-closers by stable module order — and enter the window from round 9.
 """
 
 from __future__ import annotations
@@ -1678,14 +1671,3 @@ ORACLES["partition_evolution_scan"] = """
     WHERE year(CAST(o_orderdate AS DATE)) BETWEEN 1996 AND 1999
     GROUP BY 1 ORDER BY 1
 """
-
-
-def _register_defer() -> None:
-    """Foot-of-module hook: rank this module's names as pseudo-stale
-    (see module docstring). Must run AFTER every QUERIES[...] binding."""
-    from etl_extractor_spark.plans import registry as _registry
-
-    _registry._DEFER_AS_STALE = _registry._DEFER_AS_STALE | frozenset(QUERIES)
-
-
-_register_defer()

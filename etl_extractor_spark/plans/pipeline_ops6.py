@@ -15,16 +15,6 @@ built Spark-first with the repo's cross-engine arithmetic conventions
 (integer sufficient statistics, multiply-before-divide, integer floor
 division, per-element micro-unit quantization of transcendental
 terms).
-
-Registry placement: appended AFTER pipeline_ops5 in
-plans/registry._MODULES AND defer-tiered at pseudo-round-2
-(``_registry._DEFER_RANK``): the r9 sweep window is fully booked
-(22 deferred ops4/ops5 first-times + the 28 oldest-r2 stale
-re-checks, judge-simulated), and the pseudo-r1 defer tier the earlier
-modules used would now OUTRANK the r2 stale tier and displace those
-scheduled re-checks. Pseudo-r2 names tie with the real r2-era names
-and sort behind all of them by stable module order, so they stay out
-of the r9 window and enter the rotation in round 10.
 """
 
 from __future__ import annotations
@@ -753,16 +743,3 @@ ORACLES["schema_evolution_scan"] = """
     FROM orders
     GROUP BY 1 ORDER BY status
 """
-
-
-def _register_defer() -> None:
-    """Foot-of-module hook: rank this module's names as pseudo-round-2
-    stale (see module docstring — pseudo-r1 would displace the r9
-    window's scheduled r2 re-checks). Must run AFTER every
-    QUERIES[...] binding."""
-    from etl_extractor_spark.plans import registry as _registry
-
-    _registry._DEFER_RANK.update({k: 2 for k in QUERIES})
-
-
-_register_defer()

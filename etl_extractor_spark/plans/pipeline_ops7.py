@@ -15,15 +15,6 @@ forecasting; these are the operators its DW surface grows into at
 100 TB, built Spark-first with the repo's cross-engine arithmetic
 conventions (integer sufficient statistics, multiply-before-divide,
 integer floor division, pinned constants over data-derived ones).
-
-Registry placement: appended AFTER pipeline_ops6 in
-plans/registry._MODULES AND defer-tiered at pseudo-round-2
-(``registry._DEFER_RANK``), exactly like pipeline_ops6: the r9 sweep
-window is fully booked (22 deferred ops4/ops5 first-times + the 28
-oldest-r2 stale re-checks); pseudo-r2 names tie with the real r2-era
-names and sort behind ALL of them (and behind ops6, by stable module
-order), so these names stay out of the r9 window and enter the r10
-rotation after the 15 remaining real-r2 names and the 8 ops6 names.
 """
 
 from __future__ import annotations
@@ -1712,15 +1703,3 @@ ORACLES["positional_delete_scan"] = """
     WHERE o_orderkey % 97 <> 0
     GROUP BY 1 ORDER BY status
 """
-
-
-def _register_defer() -> None:
-    """Foot-of-module hook: rank this module's names as pseudo-round-2
-    stale (see module docstring). Must run AFTER every QUERIES[...]
-    binding."""
-    from etl_extractor_spark.plans import registry as _registry
-
-    _registry._DEFER_RANK.update({k: 2 for k in QUERIES})
-
-
-_register_defer()

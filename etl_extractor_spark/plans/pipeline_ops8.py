@@ -19,16 +19,6 @@ operators that surface the week its DW grows past full reloads,
 built Spark-first under the repo's cross-engine conventions (integer
 sufficient statistics, multiply-before-divide, pinned constants,
 md5-fold hashing shared between engines).
-
-Registry placement: appended AFTER pipeline_ops7 in
-plans/registry._MODULES AND defer-tiered at pseudo-round-2
-(``registry._DEFER_RANK``), exactly like ops6/ops7: the r9 sweep
-window is fully booked (22 deferred ops4/ops5 first-times + the 28
-oldest-r2 stale re-checks); pseudo-r2 names tie with the real r2-era
-names and sort behind ALL of them (and behind ops6/ops7, by stable
-module order), so these names stay out of the r9 window and enter the
-r10 rotation after the remaining real-r2 names and both earlier
-round-9 waves.
 """
 
 from __future__ import annotations
@@ -2445,15 +2435,3 @@ ORACLES["event_burst_collapse"] = f"""
     WHERE prev IS NULL OR us - prev >= {_BURST_GAP_US}
     GROUP BY 1 ORDER BY event_type
 """
-
-
-def _register_defer() -> None:
-    """Foot-of-module hook: rank this module's names as pseudo-round-2
-    stale (see module docstring). Must run AFTER every QUERIES[...]
-    binding."""
-    from etl_extractor_spark.plans import registry as _registry
-
-    _registry._DEFER_RANK.update({k: 2 for k in QUERIES})
-
-
-_register_defer()

@@ -13,16 +13,6 @@ Reference provenance: the reference pipeline (nilfredb/ETL-Extractor,
 main.py:323-411) restarts from scratch on any failure — a full
 reload. Checkpointed resume is the operator that replaces that
 full-reload recovery model at warehouse scale.
-
-Registry placement: appended AFTER pipeline_ops8 in
-plans/registry._MODULES AND defer-tiered at pseudo-round-THREE
-(``registry._DEFER_RANK`` rank 3, NOT the ops6/7/8 rank 2): the r10
-sweep window is fully booked (15 remaining real-r2 stale + 8 ops6 +
-15 ops7 + 12 ops8 first-times, the judge-pre-verified composition)
-and r11 is booked with the 12 remaining ops8 names + the 38 oldest-r3
-stale re-checks. Rank-3 names tie with the real r3-era tier and sort
-BEHIND all of it (stable module order), so nothing here displaces a
-scheduled check from either window.
 """
 
 from __future__ import annotations
@@ -2137,15 +2127,3 @@ ORACLES["backfill_stream_handoff"] = """
            round(sum(value), 4) AS sum_value
     FROM events GROUP BY 1 ORDER BY day
 """
-
-
-def _register_defer() -> None:
-    """Foot-of-module hook: rank this module's names as pseudo-round-3
-    stale (see module docstring — rank 2 would displace the booked
-    r10/r11 windows). Must run AFTER every QUERIES[...] binding."""
-    from etl_extractor_spark.plans import registry as _registry
-
-    _registry._DEFER_RANK.update({k: 3 for k in QUERIES})
-
-
-_register_defer()

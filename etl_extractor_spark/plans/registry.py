@@ -3,6 +3,11 @@
 Each plan module exports ``QUERIES`` (name → fn(spark, sf_dir) →
 DataFrame) and ``ORACLES`` (name → DuckDB SQL, or absent for
 non-SQL-expressible ops which get a rows-only check).
+
+The registry's order is one sort key (``_ordered``): never
+driver-checked names first, then the stalest-checked, then by name,
+with rows-only names and the canary last. Which module a query lives
+in never affects where it sorts.
 """
 
 from __future__ import annotations
@@ -13,146 +18,43 @@ from pyspark.sql import DataFrame, SparkSession
 
 QueryFn = Callable[[SparkSession, str], DataFrame]
 
-# Ordered so the driver's (possibly capped) CORRECTNESS sweep verifies
-# the not-yet-driver-verified modules first: SURVEY-§2 parity anchors,
-# then the LLM-pipeline suites, then the analytics modules whose
-# oracles were retyped in r2, then the r1-green TPC-H modules last.
 _MODULES = (
-    "etl_extractor_spark.plans.parity",
-    "etl_extractor_spark.plans.dedup",
-    "etl_extractor_spark.plans.similarity",
-    "etl_extractor_spark.plans.events",
-    "etl_extractor_spark.plans.multimodal",
-    "etl_extractor_spark.plans.text_analysis",
-    "etl_extractor_spark.plans.corpus_quality",
     "etl_extractor_spark.plans.analytics2",
     "etl_extractor_spark.plans.analytics3",
     "etl_extractor_spark.plans.analytics4",
-    "etl_extractor_spark.plans.stats",
     "etl_extractor_spark.plans.cleaning",
-    "etl_extractor_spark.plans.pii",
     "etl_extractor_spark.plans.corpus_prep",
-    "etl_extractor_spark.plans.web_curation",
+    "etl_extractor_spark.plans.corpus_quality",
+    "etl_extractor_spark.plans.dedup",
+    "etl_extractor_spark.plans.events",
+    "etl_extractor_spark.plans.geo",
     "etl_extractor_spark.plans.graph",
+    "etl_extractor_spark.plans.inference",
+    "etl_extractor_spark.plans.multimodal",
+    "etl_extractor_spark.plans.parity",
+    "etl_extractor_spark.plans.pii",
+    "etl_extractor_spark.plans.pipeline_ops",
+    "etl_extractor_spark.plans.pipeline_ops10",
+    "etl_extractor_spark.plans.pipeline_ops2",
+    "etl_extractor_spark.plans.pipeline_ops3",
+    "etl_extractor_spark.plans.pipeline_ops4",
+    "etl_extractor_spark.plans.pipeline_ops5",
+    "etl_extractor_spark.plans.pipeline_ops6",
+    "etl_extractor_spark.plans.pipeline_ops7",
+    "etl_extractor_spark.plans.pipeline_ops8",
+    "etl_extractor_spark.plans.pipeline_ops9",
     "etl_extractor_spark.plans.recursive",
     "etl_extractor_spark.plans.roundtrip",
-    "etl_extractor_spark.plans.training_prep",
+    "etl_extractor_spark.plans.similarity",
+    "etl_extractor_spark.plans.stats",
+    "etl_extractor_spark.plans.text_analysis",
     "etl_extractor_spark.plans.tpch",
     "etl_extractor_spark.plans.tpch2",
     "etl_extractor_spark.plans.tpch3",
     "etl_extractor_spark.plans.tpch4",
     "etl_extractor_spark.plans.training_eval",
-    # LAST on purpose: never-checked names here sort behind the whole
-    # existing never-checked backlog, so late additions cannot displace
-    # a first-time check from the capped sweep window.
-    "etl_extractor_spark.plans.pipeline_ops",
-    # Round-5 third-session additions — appended after pipeline_ops for
-    # the same window-stability reason.
-    "etl_extractor_spark.plans.geo",
-    "etl_extractor_spark.plans.inference",
-    "etl_extractor_spark.plans.pipeline_ops2",
-    # Round-6 additions — appended last so the 28 pipeline-ops2-era
-    # names still queued for the r7 window keep their slots.
-    "etl_extractor_spark.plans.pipeline_ops3",
-    # Round-7 additions — appended last AND defer-tiered (see
-    # _DEFER_AS_STALE): the never-checked backlog (41 names) is now
-    # SMALLER than the ~50-slot sweep window, so a plain append would
-    # land new names in slots 42+ and displace the 9 oldest-r1 stale
-    # re-checks that round 7 is scheduled to exercise (the staleness
-    # tier's first real rotation). Deferred names join the rotation as
-    # pseudo-r1-stale instead: behind every real never-checked name
-    # and behind the real r1 anchors, so they enter the window in r8.
-    "etl_extractor_spark.plans.pipeline_ops4",
-    # Round-8 additions — appended last AND defer-tiered like
-    # pipeline_ops4: the r8 window is fully booked (36 oldest-r1 stale
-    # + 14 deferred r7 names), so r8 additions rank as pseudo-r1-stale
-    # BEHIND the 4 spilled r7 closers (stable module order) and enter
-    # the window from round 9.
-    "etl_extractor_spark.plans.pipeline_ops5",
-    # Round-9 additions — appended last and defer-tiered at pseudo-
-    # ROUND-2 (_DEFER_RANK), not pseudo-r1: the r9 window is fully
-    # booked (22 deferred ops4/ops5 first-times + the 28 oldest-r2
-    # stale re-checks), and a pseudo-r1 defer would outrank the r2
-    # tier and displace those re-checks. Pseudo-r2 names tie with the
-    # real r2-era names and sort BEHIND all of them (stable module
-    # order), so they stay out of the r9 window and enter the rotation
-    # in round 10 after the 15 remaining real-r2 names.
-    "etl_extractor_spark.plans.pipeline_ops6",
-    # Round-9 second wave — appended last and defer-tiered at pseudo-
-    # round-2 like pipeline_ops6 (ties with the real r2 names, sorts
-    # behind them AND behind ops6 by stable module order).
-    "etl_extractor_spark.plans.pipeline_ops7",
-    # Round-9 third wave — appended last and defer-tiered at pseudo-
-    # round-2 like pipeline_ops6/7 (ties with the real r2 names, sorts
-    # behind them AND behind both earlier waves by stable module
-    # order).
-    "etl_extractor_spark.plans.pipeline_ops8",
-    # Round-10 additions — appended last and defer-tiered at pseudo-
-    # round-THREE (rank 3 in _DEFER_RANK, not the ops6/7/8 rank 2):
-    # the r10 window is fully booked (15 real-r2 stale + 8 ops6 +
-    # 15 ops7 + 12 ops8) and r11 with the remaining 12 ops8 + the 38
-    # oldest-r3 stale; rank-3 names tie with the real r3 era and sort
-    # behind all of it, entering the rotation from r12.
-    "etl_extractor_spark.plans.pipeline_ops9",
-    # Round-10 continuation — appended last and defer-tiered at
-    # pseudo-round-FOUR (rank 4): r11 is booked (14 remaining ops8 +
-    # 36 oldest-r3 stale) and r12 with the 22 ops9 first-times +
-    # remaining r3 + oldest-r4 stale; rank-4 names tie with the real
-    # r4 era and sort behind all of it, entering rotation from r13.
-    "etl_extractor_spark.plans.pipeline_ops10",
-)
-
-
-# PREFERENCE order within the never-driver-checked class (the class
-# partitioning itself is automatic — ``_ordered`` reads the driver's
-# CORRECTNESS_r*.json files, so the capped ~50/round sweep window
-# self-rotates as rounds complete): flagship algorithms first, then
-# the round-4 deterministic sketch twins, then the stats / roundtrip /
-# wave tails, then later additions. Names not listed here sort after
-# these in module order; names not present in any module are skipped
-# harmlessly.
-_PRIORITY = (
-    # --- flagship round-3 algorithms, never driver-checked (judge order)
-    "ivfpq_adc_topk", "pq_adc_topk", "common_paragraph_filter",
-    "bpe_train_rounds", "bpe_segment_docs", "embedding_dbscan",
-    "cluster_representatives", "pagerank_purchase_graph",
-    "doc_tree_depth", "doc_subtree_rollup", "scd2_point_in_time",
-    "dpp_partitioned_join", "bucketed_join_colocated", "multimodal_dhash",
-    "snapshot_diff", "distinct_users_salted", "topk_orders_salted",
-    # --- round-4 fixes + new deterministic twins (VERDICT tasks 2/3/6)
-    "theil_sen_nation_trend", "kmv_user_reach", "kmv_distinct_tokens",
-    "value_quantiles_exact", "funnel_overlap_exact",
-    "multimodal_format_dispatch",
-    # --- stats suite, never driver-checked
-    "bootstrap_revenue_ci", "woe_encoding", "ab_test_zscore",
-    "psi_price_drift", "chi2_segment_status", "benford_first_digit",
-    "rolling_zscore_outliers", "part_association_rules",
-    "nation_revenue_trend", "decayed_daily_revenue",
-    # --- roundtrip tail, never driver-checked
-    "orc_roundtrip", "jsonl_roundtrip", "compaction_roundtrip",
-    "parquet_schema_evolution", "sql_udf_margin",
-    # --- wave-5/6 tail, never driver-checked
-    "events_asof_next_click", "events_asof_nearest_click",
-    "events_rate_limit", "source_similarity_kmv", "k_anonymity_audit",
-    "user_erasure_audit", "triangle_participation",
-    "purchase_graph_degrees", "dedup_containment", "pii_luhn_cards",
-    "orders_nested_lines", "customer_order_streaks",
-    "weighted_sample_orders", "user_active_coverage",
-    "phrase_search_postings", "url_canonical_dedup", "doc_quality_logreg",
-    "bigram_lm_score", "ann_recall_at_k", "split_leakage_audit",
-    "curriculum_order", "doc_length_p99_filter", "hashed_feature_vectors",
-    "chunk_sliding_stride", "oov_rate", "rerank_bm25_hash_stub",
-    "top_session_paths", "pmi_collocations", "knn_label_agreement",
-    "contrastive_negatives", "mixture_epochs", "vocab_growth_by_source",
-    "shuffle_deterministic", "lateral_top_orders",
-    "multimodal_features_arrow",
-    # --- round-4-new additions (behind the never-checked backlog)
-    "dsir_importance_weights", "multimodal_bmp_roundtrip",
-    "cluster_aware_split", "length_bucketed_batches",
-    "rrf_fusion", "l_diversity_audit", "ses_forecast_nation", "doc_keyterms",
-    "maxsim_multivector", "ndcg_retrieval_eval", "zipf_fit_tokens",
-    "gini_revenue_concentration", "hhi_market_concentration",
-    "maxsim_ivf_pruned",
+    "etl_extractor_spark.plans.training_prep",
+    "etl_extractor_spark.plans.web_curation",
 )
 
 # Previously-green anchors pinned to the VERY END of the registry order
@@ -170,13 +72,10 @@ def _driver_checked() -> dict:
     round that checked each, read from the CORRECTNESS_r*.json files the
     driver drops in the repo root. Makes the rotation SELF-MAINTAINING:
     each round's capped sweep window automatically leads with
-    never-checked queries, with no manual priority edits (the r2/r3
-    failure mode was exactly a stale hand-written rotation); once the
-    never-checked backlog drains, the round number drives a STALENESS
-    tier — oldest-checked names are re-verified first, so r1-era
-    anchors don't go unre-checked forever. Unreadable files are
-    skipped — worst case the ordering degrades to the static priority,
-    never breaks."""
+    never-checked queries, then re-checks the stalest names, with no
+    manual edits. Unreadable files are skipped — worst case every name
+    counts as never-checked and the order falls back to by-name, never
+    breaks."""
     import glob
     import json
     import os
@@ -196,62 +95,17 @@ def _driver_checked() -> dict:
     return latest
 
 
-# Names registered AFTER the never-checked backlog shrank below the
-# sweep-window cap (round-7 additions onward). While never-checked,
-# these sort as if checked in round 1 — i.e. in the STALENESS tier,
-# behind every genuinely never-checked name and (by stable module
-# order) behind the real r1-checked anchors — so a late registration
-# can no longer displace a scheduled stale re-check from the capped
-# window. The pseudo-round applies ONLY until the driver actually
-# checks the name; from then on its real round governs like any other.
-# Populated by the deferred modules themselves at import time
-# (``_registry._DEFER_AS_STALE |= frozenset(QUERIES)`` at the foot of
-# pipeline_ops4 and successors) so every import path — driver _load,
-# dry-run rigs, tests — sees the same ordering.
-_DEFER_AS_STALE: frozenset = frozenset()
-
-# Rank-parameterized defer tier (round-9 onward): name → pseudo-round.
-# _DEFER_AS_STALE hardcodes pseudo-round 1, which was right while the
-# rotation's oldest tier WAS r1 — but once the r1 era drains (after
-# r9), a new module deferred at rank 1 would OUTRANK the oldest real
-# stale tier and displace its scheduled re-checks. Modules register
-# here with the rank that puts them exactly behind the current oldest
-# real tier (``_registry._DEFER_RANK.update({k: 2 for k in QUERIES})``
-# at the module foot). Checked names always use their real round.
-_DEFER_RANK: dict = {}
-
-
-def _ordered(out: dict, oracles: dict | None = None) -> dict:
-    """Never-driver-checked names first (priority head order, then
-    module order), then already-checked names STALEST-FIRST (lowest
-    latest-checked round — so once the never-checked backlog drains,
-    the capped window becomes a rotating re-check band that reaches
-    r1-era anchors before re-touching last round's greens), with
-    oracle-backed before rows-only within each class (a rows-only name
-    inside the capped window burns a sweep slot as ``no_oracle``), and
-    the canary last. Names in _DEFER_AS_STALE rank as round-1 stale
-    while never-checked (see its note)."""
-    checked = _driver_checked()
-    ranked = list(_PRIORITY) + [k for k in out if k not in set(_PRIORITY)]
+def _ordered(out: dict, oracles: dict, checked: dict) -> dict:
+    """The one ordering rule: never-driver-checked names first, then
+    checked names stalest-first (lowest latest-checked round), ties by
+    name; rows-only names behind every oracle-backed name (a rows-only
+    name inside the capped window burns a sweep slot as ``no_oracle``)
+    and the canary last. Module order plays no part."""
 
     def key(k: str):
-        if k in checked:
-            tier, rnd = True, checked[k]
-        elif k in _DEFER_AS_STALE:
-            tier, rnd = True, 1  # pseudo-stale: waits its turn in the rotation
-        elif k in _DEFER_RANK:
-            tier, rnd = True, _DEFER_RANK[k]  # pseudo-stale at the given rank
-        else:
-            tier, rnd = False, 0
-        return (
-            k in _CANARY,  # canary at the very end
-            (oracles is not None) and (k not in oracles),  # rows-only behind
-            tier,  # never-checked first
-            rnd,  # staleness tier: oldest-checked first
-        )
+        return (k in _CANARY, k not in oracles, k in checked, checked.get(k, 0), k)
 
-    ordered = sorted((k for k in ranked if k in out), key=key)  # stable
-    return {k: out[k] for k in ordered}
+    return {k: out[k] for k in sorted(out, key=key)}
 
 
 def _with_shipping(fn: QueryFn) -> QueryFn:
@@ -275,47 +129,47 @@ def _with_shipping(fn: QueryFn) -> QueryFn:
     return wrapper
 
 
-def _load(attr: str) -> tuple[dict, bool]:
-    """Returns (registry, complete): ``complete`` is False if any plan
-    module failed to import — a partial registry must NOT be memoized,
-    or a transiently-missing dependency would permanently hide its
-    queries from this process."""
+def _load() -> dict[str, dict]:
+    """One walk over the plan modules and one read of the CORRECTNESS
+    files fill both registries. If any plan module failed to import,
+    the partial registries are returned but NOT memoized, or a
+    transiently-missing dependency would permanently hide its queries
+    from this process."""
     import importlib
 
-    out: dict = {}
-    complete = True
+    queries: dict = {}
     oracles: dict = {}
+    complete = True
     for mod_name in _MODULES:
         try:
             mod = importlib.import_module(mod_name)
         except ImportError:
             complete = False
             continue  # module not importable right now
-        out.update(getattr(mod, attr, {}))
+        queries.update(getattr(mod, "QUERIES", {}))
         oracles.update(getattr(mod, "ORACLES", {}))
-    return _ordered(out, oracles), complete
+    checked = _driver_checked()
+    loaded = {
+        "QUERIES": {
+            k: _with_shipping(fn)
+            for k, fn in _ordered(queries, oracles, checked).items()
+        },
+        "ORACLES": _ordered(oracles, oracles, checked),
+    }
+    if complete:
+        _CACHE.update(loaded)
+    return loaded
 
 
-# Registry hygiene at 134+ queries: the 17-module import walk runs once;
-# repeated driver calls to __spark_entry__.queries() are O(1). A fresh
-# dict is returned each call so callers may mutate their copy safely.
+# The module walk runs once per process; repeated driver calls to
+# __spark_entry__.queries() are O(1). A fresh dict is returned each
+# call so callers may mutate their copy safely.
 _CACHE: dict[str, dict] = {}
 
 
 def all_queries() -> dict[str, QueryFn]:
-    if "QUERIES" not in _CACHE:
-        out, complete = _load("QUERIES")
-        out = {k: _with_shipping(fn) for k, fn in out.items()}
-        if not complete:
-            return out  # partial: retry imports next call, don't memoize
-        _CACHE["QUERIES"] = out
-    return dict(_CACHE["QUERIES"])
+    return dict((_CACHE or _load())["QUERIES"])
 
 
 def all_oracles() -> dict[str, str]:
-    if "ORACLES" not in _CACHE:
-        out, complete = _load("ORACLES")
-        if not complete:
-            return out
-        _CACHE["ORACLES"] = out
-    return dict(_CACHE["ORACLES"])
+    return dict((_CACHE or _load())["ORACLES"])

@@ -217,7 +217,7 @@ def parquet_schema_evolution(spark: SparkSession, sf_dir: str) -> DataFrame:
     itself is unchanged.
     """
     d = load_table(spark, sf_dir, "documents")
-    base = pid_scratch_dir("spark_graft_schema_evo_")
+    base = pid_scratch_dir("spark_graft_parquet_evo_")
     d.filter(F.col("doc_id") % 2 == 0).select("doc_id", "lang").write.mode(
         "overwrite"
     ).parquet(os.path.join(base, "gen=1"))

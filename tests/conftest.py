@@ -18,77 +18,3 @@ def spark():
 @pytest.fixture(scope="session")
 def sf_dir():
     return SF_DIR
-
-
-def pinned_driver_checked(max_round: int) -> dict:
-    """Latest-checked round per query name computed from ONLY the
-    committed CORRECTNESS_r01..r{max_round} files — a truly FROZEN
-    snapshot for registry simulations. Filtering the live
-    ``_driver_checked()`` map by round instead (the first fix's form)
-    DRIFTS: that map collapses to the latest round per name, so a
-    name re-checked in a later round silently drops out of the
-    'pinned' state as new rounds land (review catch, twice)."""
-    import glob
-    import json
-    import os
-    import re
-    import subprocess
-
-    root = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
-
-    def _committed_text(rel: str) -> str | None:
-        # COMMITTED content first (advice r8): the docstring promises a
-        # frozen snapshot, but globbing the working tree would let a
-        # locally modified or untracked CORRECTNESS file silently drift
-        # the simulation. Disk is the fallback for non-git checkouts.
-        try:
-            r = subprocess.run(
-                ["git", "-C", root, "show", "HEAD:" + rel],
-                capture_output=True,
-                text=True,
-                timeout=30,
-            )
-            if r.returncode == 0:
-                return r.stdout
-        except Exception:
-            pass
-        try:
-            with open(os.path.join(root, rel)) as f:
-                return f.read()
-        except OSError:
-            return None
-
-    # enumerate candidate names from git HEAD, falling back to the tree
-    names: set = set()
-    try:
-        r = subprocess.run(
-            ["git", "-C", root, "ls-tree", "--name-only", "HEAD"],
-            capture_output=True,
-            text=True,
-            timeout=30,
-        )
-        if r.returncode == 0:
-            names = {n for n in r.stdout.split() if n.startswith("CORRECTNESS_r")}
-    except Exception:
-        pass
-    if not names:
-        names = {
-            os.path.basename(p)
-            for p in glob.glob(os.path.join(root, "CORRECTNESS_r*.json"))
-        }
-
-    latest: dict = {}
-    for rel in sorted(names):
-        m = re.search(r"CORRECTNESS_r(\d+)\.json$", rel)
-        rnd = int(m.group(1)) if m else 0
-        if not m or rnd > max_round:
-            continue
-        text = _committed_text(rel)
-        if text is None:
-            continue
-        try:
-            for name in json.loads(text):
-                latest[name] = max(latest.get(name, 0), rnd)
-        except Exception:
-            continue
-    return latest

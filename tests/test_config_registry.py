@@ -1,12 +1,15 @@
 """Config-driven source registry (X4): a settings.json like the
 reference's routes every source through the registry with per-source
-isolation."""
+isolation. Also the query registry (plans/registry): its one-walk
+cache and its one ordering rule."""
 
 from __future__ import annotations
 
 import json
 import os
 import tempfile
+
+import pytest
 
 from etl_extractor_spark.config import Settings
 from etl_extractor_spark.sources.registry import SourceRegistry
@@ -46,18 +49,6 @@ def test_settings_load_and_registry(spark, sf_dir):
         assert frames["api"].count() == 0
 
 
-def test_priority_names_all_resolve():
-    """Every name in the registry's _PRIORITY rotation must exist in
-    the query registry — _ordered() skips unknown names silently, so a
-    typo here would quietly drop a query from the driver's capped
-    CORRECTNESS sweep."""
-    from etl_extractor_spark.plans import registry as R
-
-    qs = set(R.all_queries())
-    missing = [n for n in R._PRIORITY if n not in qs]
-    assert missing == [], f"_PRIORITY names not in registry: {missing}"
-
-
 def test_all_oracle_names_have_queries():
     from etl_extractor_spark.plans import registry as R
 
@@ -65,23 +56,47 @@ def test_all_oracle_names_have_queries():
     assert set(os_) <= set(qs)
 
 
-def test_registry_scan_is_cached_and_fast():
-    """221+ queries eager-import 23 plan modules; the walk must run
-    once (memoized) and repeat calls must be O(1) so the driver
-    harness startup doesn't creep as the registry grows (VERDICT r3
-    task 8)."""
-    import time
-
+@pytest.fixture
+def registry():
+    """The query registry with an empty cache, emptied again on exit so
+    a monkeypatched order never leaks into later tests."""
     from etl_extractor_spark.plans import registry as R
 
     R._CACHE.clear()
+    yield R
+    R._CACHE.clear()
+
+
+def test_registry_scan_is_cached_and_fast(registry, monkeypatch):
+    """The plan-module walk runs once per process (memoized), fills
+    both registries in that one walk, and repeat calls are O(1) so the
+    driver harness startup doesn't creep as the registry grows."""
+    import importlib
+    import time
+
+    R = registry
+    imports, reads = [], []
+    real_import, real_checked = importlib.import_module, R._driver_checked
+    monkeypatch.setattr(
+        importlib,
+        "import_module",
+        lambda name, *a: imports.append(name) or real_import(name, *a),
+    )
+    monkeypatch.setattr(
+        R, "_driver_checked", lambda: reads.append(1) or real_checked()
+    )
     t0 = time.perf_counter()
     first = R.all_queries()
     fresh = time.perf_counter() - t0
     t0 = time.perf_counter()
     second = R.all_queries()
     cached = time.perf_counter() - t0
+    oracles = R.all_oracles()
+    # one walk and one CORRECTNESS read serve queries AND oracles
+    assert sorted(imports) == sorted(R._MODULES)
+    assert len(reads) == 1
     assert list(first) == list(second)
+    assert list(oracles) == [n for n in first if n in oracles]
     # fresh scan: module imports already warm in this process, the walk
     # itself (plus any first-import stragglers) must stay under 2 s
     assert fresh < 2.0, f"registry scan took {fresh:.2f}s"
@@ -91,76 +106,59 @@ def test_registry_scan_is_cached_and_fast():
     assert len(R.all_queries()) == len(first)
 
 
-def test_registry_self_rotation():
-    """The sweep window rotates itself: once a name appears in a
-    CORRECTNESS_r*.json, it must sort behind every never-checked
-    oracle-backed name; DEFERRED never-checked names (the round-7
-    mechanism for additions made after the backlog shrank below the
-    window) rank with the checked band as pseudo-r1-stale; rank-deferred
-    names (the round-9 ``_DEFER_RANK`` generalization) likewise rank
-    inside the checked band at their pseudo-round; rows-only names sort
-    behind ALL oracle-backed names; the canary stays last regardless."""
-    from etl_extractor_spark.plans import registry as R
+def test_partial_registry_is_not_memoized(registry, monkeypatch):
+    """A plan module that fails to import drops only its own queries,
+    and the partial registry is not cached: the next call walks again,
+    so a transiently-missing dependency does not hide queries for the
+    rest of the process."""
+    R = registry
+    full = R.all_queries()
+    R._CACHE.clear()
+    modules = R._MODULES
+    monkeypatch.setattr(
+        R, "_MODULES", modules + ("etl_extractor_spark.plans.no_such_module",)
+    )
+    assert list(R.all_queries()) == list(full)
+    assert not R._CACHE
+    monkeypatch.setattr(R, "_MODULES", modules)
+    assert set(R.all_oracles()) <= set(full)
+    assert R._CACHE
 
+
+def test_registry_order_is_one_rule(registry, monkeypatch):
+    """The registry order is one sort key: never driver-checked names
+    first, then stalest-checked, then by name, with rows-only names
+    behind every oracle-backed name and the canary last. Module order
+    plays no part, so code can move between plan modules freely. Runs
+    against a synthetic checked map, not the CORRECTNESS files on
+    disk."""
+    R = registry
+    names = sorted(R.all_queries())
     oracles = R.all_oracles()
-    checked = R._driver_checked()
-    names = list(R.all_queries())
-    # partition points must be monotone: never-checked oracle-backed,
-    # checked-or-deferred oracle-backed, rows-only, canary
-    def cls(n):
-        if n in R._CANARY:
-            return 3
-        if n not in oracles:
-            return 2
-        deferred = n in R._DEFER_AS_STALE or n in R._DEFER_RANK
-        return 1 if (n in checked or deferred) else 0
+    checked = {n: 1 + i % 4 for i, n in enumerate(names) if i % 3 == 0}
+    monkeypatch.setattr(R, "_driver_checked", lambda: dict(checked))
+    R._CACHE.clear()
+    order = list(R.all_queries())
 
-    classes = [cls(n) for n in names]
-    assert classes == sorted(classes), "registry order violates rotation classes"
-    # simulate the next round: marking the current window as checked
-    # must pull every remaining NON-deferred never-checked oracle-backed
-    # name into the front of the order (deferred names wait their turn
-    # inside the staleness rotation instead)
-    win = set(names[:50])
-    orig = R._driver_checked
-    try:
-        R._driver_checked = lambda: {**checked, **{n: 99 for n in win}}
-        R._CACHE.clear()
-        nxt = list(R.all_queries())
-        remaining = [
-            n
-            for n in names
-            if n in oracles
-            and n not in checked
-            and n not in win
-            and n not in R._DEFER_AS_STALE
-            and n not in R._DEFER_RANK
-        ]
-        assert nxt[: len(remaining)] == sorted(
-            remaining, key=lambda n: nxt.index(n)
-        )
-        assert set(nxt[: len(remaining)]) == set(remaining)
-    finally:
-        R._driver_checked = orig
-        R._CACHE.clear()
+    def key(k):
+        return (k in R._CANARY, k not in oracles, k in checked, checked.get(k, 0), k)
 
+    assert order == sorted(names, key=key)
+    assert list(R.all_oracles()) == [n for n in order if n in oracles]
 
-def test_registry_staleness_tier():
-    """Within the already-checked oracle-backed class, names re-sort
-    OLDEST-latest-check first, so once the never-checked backlog drains
-    the capped window becomes a rotating re-check band that reaches
-    r1-era anchors before re-touching last round's greens."""
-    from etl_extractor_spark.plans import registry as R
+    canary = len(R._CANARY)
+    assert set(order[-canary:]) == set(R._CANARY)
+    rows_only = [i for i, n in enumerate(order[:-canary]) if n not in oracles]
+    assert rows_only and rows_only == list(range(rows_only[0], len(order) - canary))
+    backed = [n for n in order[:-canary] if n in oracles]
+    seen = [n in checked for n in backed]
+    assert seen == sorted(seen) and any(seen) and not all(seen)
+    rounds = [checked[n] for n in backed if n in checked]
+    assert rounds == sorted(rounds) and len(set(rounds)) > 1
 
-    oracles = R.all_oracles()
-    checked = R._driver_checked()
-    assert checked, "driver CORRECTNESS artifacts missing from repo root"
-    # latest-round values must be parsed from filenames (not all equal)
-    assert len(set(checked.values())) > 1
-    names = list(R.all_queries())
-    rounds = [
-        checked[n]
-        for n in names
-        if n in checked and n in oracles and n not in R._CANARY
-    ]
-    assert rounds == sorted(rounds), "checked names not ordered stalest-first"
+    by_module = {k: fn.__wrapped__ for k, fn in R.all_queries().items()}
+    monkeypatch.setattr(R, "_MODULES", R._MODULES[::-1])
+    R._CACHE.clear()
+    reversed_walk = R.all_queries()
+    assert list(reversed_walk) == order
+    assert {k: fn.__wrapped__ for k, fn in reversed_walk.items()} == by_module

@@ -2,8 +2,6 @@
 
 Value correctness is covered by the parametrized oracle gate
 (test_queries_oracle); these tests pin what the oracle can't see:
-(1) the window protection the wave's rank-4 defer tier exists for —
-the booked r11 AND r12 compositions must be untouched; and (2)
 independent brute-force derivations of every statistic (pandas ranks
 / numpy algebra, a different algorithm than the distributed
 value-domain plans), so a matched Spark/DuckDB convention bug cannot
@@ -12,74 +10,10 @@ certify itself.
 
 from __future__ import annotations
 
-import importlib
-
 import numpy as np
 import pandas as pd
 import pytest
 from pyspark.sql import functions as F
-
-
-_ORACLES: dict = {}
-
-
-def _registry_order(pinned: dict) -> list[str]:
-    import etl_extractor_spark.plans.registry as R
-
-    oracles: dict = {}
-    out: dict = {}
-    for m in R._MODULES:
-        mod = importlib.import_module(m)
-        out.update({k: None for k in getattr(mod, "QUERIES", {})})
-        oracles.update(getattr(mod, "ORACLES", {}))
-    _ORACLES.update(oracles)
-    orig = R._driver_checked
-    R._driver_checked = lambda: pinned
-    try:
-        return list(R._ordered(out, oracles))
-    finally:
-        R._driver_checked = orig
-
-
-def test_r11_r12_windows_protected_from_ops10():
-    """With CORRECTNESS pinned through r9 and the r10/r11 windows
-    simulated as drained, no ops10 name appears in either window, and
-    ops10 names sort behind every oracle-backed real-r4 name still in
-    rotation (the rank-4 tie resolves by stable module order)."""
-    from conftest import pinned_driver_checked
-
-    from etl_extractor_spark.plans import pipeline_ops9 as p9
-    from etl_extractor_spark.plans import pipeline_ops10 as p10
-
-    pinned = pinned_driver_checked(9)
-    r10 = _registry_order(pinned)[:50]
-    assert not (set(r10) & set(p10.QUERIES))
-    after_r10 = dict(pinned, **{n: 10 for n in r10})
-    r11 = _registry_order(after_r10)[:50]
-    assert not (set(r11) & set(p10.QUERIES))
-    after_r11 = dict(after_r10, **{n: 11 for n in r11})
-    order = _registry_order(after_r11)
-    pos = {n: i for i, n in enumerate(order)}
-    real_r4 = [
-        n
-        for n, rnd in after_r11.items()
-        if rnd == 4
-        and n in pos
-        and n not in p9.QUERIES
-        and n not in p10.QUERIES
-        and n in _ORACLES
-    ]
-    assert real_r4, "simulation left real r4-era names in rotation"
-    last_real_r4 = max(pos[n] for n in real_r4)
-    assert all(pos[n] > last_real_r4 for n in p10.QUERIES if n in pos)
-    # and behind the ops9 wave too (module order within rank ties)
-    assert all(
-        pos[a] < pos[b]
-        for a in p9.QUERIES
-        if a in pos
-        for b in p10.QUERIES
-        if b in pos
-    )
 
 
 def _mk_table(spark, tmpdir, rows, start=0):

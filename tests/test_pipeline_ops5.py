@@ -1,8 +1,7 @@
 """Round-8 wave guards: salted-join answer preservation + plan shape +
 decision wiring, independent derivations for the day-domain statistics
 (Mann-Kendall pairs, seasonal-naive MAPE, rolling median), fixture
-non-vacuity for the paired test and the IQR fences, and the defer-tier
-placement of the new module.
+non-vacuity for the paired test and the IQR fences.
 """
 
 from __future__ import annotations
@@ -585,51 +584,3 @@ def test_dq_report_rules_and_counts(spark, sf_dir):
     want = j.filter(F.to_date("l_shipdate") < F.to_date("o_orderdate")).count()
     assert rows["ship_on_or_after_order"]["n_violations"] == want > 0
     assert rows["ship_on_or_after_order"]["n_checked"] == j.count()
-
-
-def test_pipeline_ops5_is_defer_tiered():
-    """Round-8 names must sit in the defer tier AND rank behind the
-    four spilled round-7 closers (stable module order keeps the r9
-    drain order: closers first, then this module). Simulated against
-    the FROZEN r1–r7 snapshot via the shared pinned helper — reading
-    live disk state would crash this test with a correct registry the
-    moment the driver checks the closers (the exact transient-state
-    bug class the r7 judge flagged in the ops4 twin; review catch)."""
-    import importlib
-
-    from conftest import pinned_driver_checked
-
-    import etl_extractor_spark.plans.registry as R
-    from etl_extractor_spark.plans import pipeline_ops5 as P5
-
-    assert set(P5.QUERIES) <= R._DEFER_AS_STALE
-    out, oracles = {}, {}
-    for m in R._MODULES:
-        mod = importlib.import_module(m)
-        out.update({k: None for k in getattr(mod, "QUERIES", {})})
-        oracles.update(getattr(mod, "ORACLES", {}))
-    pinned = pinned_driver_checked(7)
-    closers = [
-        "bellman_ford_cheapest_hops",
-        "join_key_skew_report",
-        "nelson_aalen_hazard",
-        "sprt_sequential_test",
-    ]
-    assert not (set(closers) & set(pinned)), (
-        "pinned r1-r7 snapshot should predate the closers' first check"
-    )
-    orig = R._driver_checked
-    try:
-        R._driver_checked = lambda: dict(pinned)
-        ordering = list(R._ordered(out, oracles))
-        pos = {n: i for i, n in enumerate(ordering)}
-        last_closer = max((pos[n] for n in closers), default=-1)
-        first_p5 = min(
-            (pos[n] for n in P5.QUERIES), default=len(ordering)
-        )
-        assert first_p5 > last_closer >= 0, (
-            "round-8 names must drain AFTER the spilled round-7 closers"
-        )
-    finally:
-        R._driver_checked = orig
-        R._CACHE.clear()

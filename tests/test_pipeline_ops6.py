@@ -1,7 +1,6 @@
 """Round-9 surface: compaction-absorbs-deletes certification, skew
-aggregation twins, window-protection invariants for the pseudo-r2
-defer tier, and the short-name completeness path of the edit-distance
-join."""
+aggregation twins, and the short-name completeness path of the
+edit-distance join."""
 
 from __future__ import annotations
 
@@ -252,72 +251,3 @@ def test_mv_incremental_equals_rebuild(spark, sf_dir):
         .collect()
     }
     assert got == want
-
-
-def test_r9_window_protected_from_ops6():
-    """Invariant the round hangs on: with the committed CORRECTNESS
-    files through r8 pinned, the 50-slot window is exactly 22 deferred
-    first-times + 28 r2-stale re-checks, and NO pipeline_ops6 name is
-    inside it (the pseudo-r2 defer rank keeps them behind every real
-    r2 name)."""
-    import importlib
-
-    from conftest import pinned_driver_checked
-
-    import etl_extractor_spark.plans.registry as R
-    from etl_extractor_spark.plans import pipeline_ops6 as p6
-
-    oracles: dict = {}
-    out: dict = {}
-    for m in R._MODULES:
-        mod = importlib.import_module(m)
-        out.update({k: None for k in getattr(mod, "QUERIES", {})})
-        oracles.update(getattr(mod, "ORACLES", {}))
-    pinned = pinned_driver_checked(8)
-    orig = R._driver_checked
-    R._driver_checked = lambda: pinned
-    try:
-        window = list(R._ordered(out, oracles))[:50]
-    finally:
-        R._driver_checked = orig
-    ft = [n for n in window if n not in pinned]
-    stale = [n for n in window if n in pinned]
-    assert len(ft) == 22 and len(stale) == 28
-    assert all(pinned[n] == 2 for n in stale)
-    assert not (set(window) & set(p6.QUERIES))
-
-
-def test_ops6_names_enter_r10_after_real_r2():
-    """After r9 drains (simulated), ops6 names join the r10 window
-    BEHIND the 15 remaining real-r2 names — the defer tier delays, it
-    never starves."""
-    import importlib
-
-    from conftest import pinned_driver_checked
-
-    import etl_extractor_spark.plans.registry as R
-    from etl_extractor_spark.plans import pipeline_ops6 as p6
-
-    oracles: dict = {}
-    out: dict = {}
-    for m in R._MODULES:
-        mod = importlib.import_module(m)
-        out.update({k: None for k in getattr(mod, "QUERIES", {})})
-        oracles.update(getattr(mod, "ORACLES", {}))
-    pinned = pinned_driver_checked(8)
-    orig = R._driver_checked
-    R._driver_checked = lambda: pinned
-    try:
-        r9 = list(R._ordered(out, oracles))[:50]
-        sim = dict(pinned)
-        for n in r9:
-            sim[n] = 9
-        R._driver_checked = lambda: sim
-        r10 = list(R._ordered(out, oracles))[:50]
-    finally:
-        R._driver_checked = orig
-    in_r10 = [n for n in r10 if n in p6.QUERIES]
-    assert set(in_r10) == set(p6.QUERIES)  # all ops6 names drain in r10
-    first_p6 = min(r10.index(n) for n in in_r10)
-    real_r2_left = [n for n in r10 if sim.get(n) == 2]
-    assert all(r10.index(n) < first_p6 for n in real_r2_left)

@@ -3,14 +3,12 @@
 Each query's end-to-end value correctness is covered by the
 parametrized oracle gate (test_queries_oracle); these tests pin the
 invariants the oracle can't see: Python brute-force derivations
-independent of BOTH engines, bit-width edge cases, plan/branch
-structure, and the registry-window protection the wave's defer rank
-exists for.
+independent of BOTH engines, bit-width edge cases and plan/branch
+structure.
 """
 
 from __future__ import annotations
 
-import importlib
 
 import pyspark.sql.functions as F
 import pytest
@@ -114,73 +112,6 @@ def test_late_arriving_backfill_partitions_cleanly(spark, sf_dir):
     assert int(got[got["was_backfilled"] == 1]["n_orders"].sum()) == n_late
     assert set(got["was_backfilled"]) <= {0, 1}
     assert "UNKNOWN" not in set(got["nation"]) and -1 not in set(got["nation"])
-
-
-def test_r9_window_protected_from_ops7():
-    """The wave's reason-to-exist invariant: with CORRECTNESS pinned
-    through r8, the 50-slot window is still 22 deferred first-times +
-    28 r2-stale, and NO ops7 (or ops6) name is inside it."""
-    from conftest import pinned_driver_checked
-
-    import etl_extractor_spark.plans.registry as R
-    from etl_extractor_spark.plans import pipeline_ops6 as p6
-    from etl_extractor_spark.plans import pipeline_ops7 as p7
-
-    oracles: dict = {}
-    out: dict = {}
-    for m in R._MODULES:
-        mod = importlib.import_module(m)
-        out.update({k: None for k in getattr(mod, "QUERIES", {})})
-        oracles.update(getattr(mod, "ORACLES", {}))
-    pinned = pinned_driver_checked(8)
-    orig = R._driver_checked
-    R._driver_checked = lambda: pinned
-    try:
-        window = list(R._ordered(out, oracles))[:50]
-    finally:
-        R._driver_checked = orig
-    ft = [n for n in window if n not in pinned]
-    stale = [n for n in window if n in pinned]
-    assert len(ft) == 22 and len(stale) == 28
-    assert all(pinned[n] == 2 for n in stale)
-    assert not (set(window) & (set(p6.QUERIES) | set(p7.QUERIES)))
-
-
-def test_ops7_names_enter_r10_behind_ops6():
-    """After r9 drains (simulated), ops7 names join the r10 window
-    BEHIND the remaining real-r2 names AND behind every ops6 name —
-    stable module order inside the pseudo-r2 tie."""
-    from conftest import pinned_driver_checked
-
-    import etl_extractor_spark.plans.registry as R
-    from etl_extractor_spark.plans import pipeline_ops6 as p6
-    from etl_extractor_spark.plans import pipeline_ops7 as p7
-
-    oracles: dict = {}
-    out: dict = {}
-    for m in R._MODULES:
-        mod = importlib.import_module(m)
-        out.update({k: None for k in getattr(mod, "QUERIES", {})})
-        oracles.update(getattr(mod, "ORACLES", {}))
-    pinned = pinned_driver_checked(8)
-    orig = R._driver_checked
-    try:
-        R._driver_checked = lambda: pinned
-        r9 = list(R._ordered(out, oracles))[:50]
-        sim = dict(pinned)
-        for n in r9:
-            sim[n] = 9
-        R._driver_checked = lambda: sim
-        r10 = list(R._ordered(out, oracles))[:50]
-    finally:
-        R._driver_checked = orig
-    in_r10_p7 = [n for n in r10 if n in p7.QUERIES]
-    assert in_r10_p7, "ops7 names never drain"
-    first_p7 = min(r10.index(n) for n in in_r10_p7)
-    real_r2_left = [n for n in r10 if sim.get(n) == 2]
-    assert all(r10.index(n) < first_p7 for n in real_r2_left)
-    for n in (set(r10) & set(p6.QUERIES)):
-        assert r10.index(n) < first_p7
 
 
 def test_modularity_brute_force(spark, sf_dir):

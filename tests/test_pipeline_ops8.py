@@ -3,14 +3,12 @@
 Each query's end-to-end value correctness is covered by the
 parametrized oracle gate (test_queries_oracle); these tests pin the
 invariants the oracle can't see: Python brute-force derivations
-independent of BOTH engines, pruning effectiveness, and the
-registry-window protection the wave's defer rank exists for.
+independent of BOTH engines and pruning effectiveness.
 """
 
 from __future__ import annotations
 
 import hashlib
-import importlib
 
 import pandas as pd
 import pytest
@@ -30,76 +28,6 @@ def _nation_of(sf_dir):
     return c.merge(n, left_on="c_nationkey", right_on="n_nationkey")[
         ["c_custkey", "n_name"]
     ]
-
-
-def test_r9_window_protected_from_ops8():
-    """The wave's reason-to-exist invariant: with CORRECTNESS pinned
-    through r8, the 50-slot window is still 22 deferred first-times +
-    28 r2-stale, and NO round-9-wave name (ops6/ops7/ops8) is inside
-    it."""
-    from conftest import pinned_driver_checked
-
-    import etl_extractor_spark.plans.registry as R
-    from etl_extractor_spark.plans import pipeline_ops6 as p6
-    from etl_extractor_spark.plans import pipeline_ops7 as p7
-    from etl_extractor_spark.plans import pipeline_ops8 as p8
-
-    oracles: dict = {}
-    out: dict = {}
-    for m in R._MODULES:
-        mod = importlib.import_module(m)
-        out.update({k: None for k in getattr(mod, "QUERIES", {})})
-        oracles.update(getattr(mod, "ORACLES", {}))
-    pinned = pinned_driver_checked(8)
-    orig = R._driver_checked
-    R._driver_checked = lambda: pinned
-    try:
-        window = list(R._ordered(out, oracles))[:50]
-    finally:
-        R._driver_checked = orig
-    ft = [n for n in window if n not in pinned]
-    stale = [n for n in window if n in pinned]
-    assert len(ft) == 22 and len(stale) == 28
-    assert all(pinned[n] == 2 for n in stale)
-    assert not (
-        set(window)
-        & (set(p6.QUERIES) | set(p7.QUERIES) | set(p8.QUERIES))
-    )
-
-
-def test_ops8_names_enter_rotation_behind_ops7():
-    """After r9 drains (simulated: every r9-window name checked in
-    round 9), ops8 names appear in the next window BEHIND every ops6
-    and ops7 name (stable module order within the pseudo-r2 tie)."""
-    from conftest import pinned_driver_checked
-
-    import etl_extractor_spark.plans.registry as R
-    from etl_extractor_spark.plans import pipeline_ops6 as p6
-    from etl_extractor_spark.plans import pipeline_ops7 as p7
-    from etl_extractor_spark.plans import pipeline_ops8 as p8
-
-    oracles: dict = {}
-    out: dict = {}
-    for m in R._MODULES:
-        mod = importlib.import_module(m)
-        out.update({k: None for k in getattr(mod, "QUERIES", {})})
-        oracles.update(getattr(mod, "ORACLES", {}))
-    pinned = pinned_driver_checked(8)
-    orig = R._driver_checked
-    R._driver_checked = lambda: pinned
-    try:
-        r9_window = list(R._ordered(out, oracles))[:50]
-    finally:
-        R._driver_checked = orig
-    after_r9 = dict(pinned, **{n: 9 for n in r9_window})
-    R._driver_checked = lambda: after_r9
-    try:
-        order = list(R._ordered(out, oracles))
-    finally:
-        R._driver_checked = orig
-    pos = {n: i for i, n in enumerate(order)}
-    last_67 = max(pos[n] for n in list(p6.QUERIES) + list(p7.QUERIES))
-    assert all(pos[n] > last_67 for n in p8.QUERIES)
 
 
 def test_pivot_brute_force(spark, sf_dir):
