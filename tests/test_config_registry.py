@@ -162,3 +162,60 @@ def test_registry_order_is_one_rule(registry, monkeypatch):
     reversed_walk = R.all_queries()
     assert list(reversed_walk) == order
     assert {k: fn.__wrapped__ for k, fn in reversed_walk.items()} == by_module
+
+
+def test_registry_self_rotation(registry, monkeypatch):
+    """The sweep window rotates itself: once a name appears in a
+    CORRECTNESS_r*.json, it sorts behind every never-checked
+    oracle-backed name; rows-only names sort behind ALL oracle-backed
+    names; the canary stays last regardless. Marking the current window
+    as checked pulls every remaining never-checked oracle-backed name to
+    the front of the next order."""
+    R = registry
+    oracles = R.all_oracles()
+    checked = R._driver_checked()
+    names = list(R.all_queries())
+
+    # partition points must be monotone: never-checked oracle-backed,
+    # checked oracle-backed, rows-only, canary
+    def cls(n):
+        if n in R._CANARY:
+            return 3
+        if n not in oracles:
+            return 2
+        return 1 if n in checked else 0
+
+    classes = [cls(n) for n in names]
+    assert classes == sorted(classes), "registry order violates rotation classes"
+    # simulate the next round with the current window marked as checked
+    win = set(names[:50])
+    monkeypatch.setattr(
+        R, "_driver_checked", lambda: {**checked, **{n: 99 for n in win}}
+    )
+    R._CACHE.clear()
+    nxt = list(R.all_queries())
+    remaining = [
+        n for n in names if n in oracles and n not in checked and n not in win
+    ]
+    assert set(nxt[: len(remaining)]) == set(remaining)
+    assert nxt[: len(remaining)] == sorted(remaining)
+
+
+def test_registry_staleness_tier(registry):
+    """Within the already-checked oracle-backed class, names re-sort
+    OLDEST-latest-check first, so once the never-checked backlog drains
+    the capped window becomes a rotating re-check band that reaches
+    r1-era anchors before re-touching last round's greens."""
+    R = registry
+    oracles = R.all_oracles()
+    checked = R._driver_checked()
+    assert checked, "driver CORRECTNESS artifacts missing from repo root"
+    # latest-round values must be parsed from filenames (not all equal)
+    assert len(set(checked.values())) > 1
+    names = list(R.all_queries())
+    rounds = [
+        checked[n]
+        for n in names
+        if n in checked and n in oracles and n not in R._CANARY
+    ]
+    assert rounds == sorted(rounds), "checked names not ordered stalest-first"
