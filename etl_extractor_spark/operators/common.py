@@ -2,6 +2,14 @@
 
 from __future__ import annotations
 
+import atexit
+import json
+import os
+import shutil
+import tempfile
+import threading
+import time
+
 from pyspark.sql import DataFrame
 
 
@@ -62,8 +70,6 @@ def spread_groups(df: DataFrame, *keys: str) -> DataFrame:
 
 
 def _pid_alive(pid: int) -> bool:
-    import os
-
     try:
         os.kill(pid, 0)
     except ProcessLookupError:
@@ -75,6 +81,8 @@ def _pid_alive(pid: int) -> bool:
 
 _SCRATCH_REGISTERED: set = set()
 _REAPED_PREFIXES: set = set()
+_SCRATCH_LOCK = threading.Lock()
+_SCRATCH_CALLS: dict[str, int] = {}  # prefix -> next call number
 
 # mtime-age fallback for PID-REUSED orphans (advice r7): a dead sweep's
 # pid can be recycled by an unrelated live process, making the orphan
@@ -84,11 +92,15 @@ _REAPED_PREFIXES: set = set()
 _ORPHAN_MAX_AGE_S = 7 * 24 * 3600
 
 
-def pid_scratch_dir(prefix: str) -> str:
-    """Pid-named scratch directory under the system temp dir with the
-    FULL lifecycle the r6 disk incident taught: (a) atexit removal for
-    this process, and (b) reaping of same-prefix orphans whose pid is
-    dead — atexit never runs under a timeout-SIGTERM kill, which is
+def process_scratch_dir(prefix: str) -> str:
+    """``<tmp>/<prefix><pid>``: ONE scratch directory for the whole
+    process, for what outlives a call (a database ``LOCATION``, an
+    embedded Derby database). Per-call scratch uses
+    ``pid_scratch_dir``, which builds on this.
+
+    The FULL lifecycle the r6 disk incident taught: (a) atexit removal
+    for this process, and (b) reaping of same-prefix orphans whose pid
+    is dead — atexit never runs under a timeout-SIGTERM kill, which is
     exactly how chunked driver sweeps die, so without reaping every
     killed sweep leaks one corpus-scale scratch table per process
     (tests/oracle.py applies the same discipline to DuckDB spill).
@@ -98,12 +110,6 @@ def pid_scratch_dir(prefix: str) -> str:
     need collecting once), with an mtime-age fallback so pid-reused
     orphans are reclaimed too. Returns the path WITHOUT creating it
     (writers mkdir as needed)."""
-    import atexit
-    import os
-    import shutil
-    import tempfile
-    import time
-
     base = tempfile.gettempdir()
     if prefix not in _REAPED_PREFIXES:
         _REAPED_PREFIXES.add(prefix)
@@ -158,3 +164,37 @@ def pid_scratch_dir(prefix: str) -> str:
         _SCRATCH_REGISTERED.add(d)
         atexit.register(shutil.rmtree, d, ignore_errors=True)
     return d
+
+
+def pid_scratch_dir(prefix: str) -> str:
+    """A fresh directory ``<tmp>/<prefix><pid>/<n>`` for one call,
+    where ``n`` counts this process's calls with ``prefix``.
+
+    Contract: a call's directory stays valid until the second later
+    call with the same prefix starts. Handing out ``n`` removes the
+    prefix's numbered siblings below ``n - 1``, so a DataFrame still
+    reading an earlier call's files survives one re-invocation (after
+    two its files are gone, but it never reads another call's), two
+    threads running one query write to different directories, and
+    a long sweep keeps at most two directories per prefix. Orphan
+    reaping and atexit removal come from ``process_scratch_dir``.
+    Returns the path WITHOUT creating it."""
+    root = process_scratch_dir(prefix)
+    with _SCRATCH_LOCK:
+        n = _SCRATCH_CALLS.get(prefix, 0)
+        _SCRATCH_CALLS[prefix] = n + 1
+    if os.path.isdir(root):
+        for name in os.listdir(root):
+            if name.isdigit() and int(name) < n - 1:
+                shutil.rmtree(os.path.join(root, name), ignore_errors=True)
+    return os.path.join(root, str(n))
+
+
+def batch_watermark(state_path: str, meta: str) -> int:
+    """The last committed batch id recorded in ``<state_path>/<meta>``
+    by a batch-id-idempotent sink; -1 before its first commit."""
+    p = os.path.join(state_path, meta)
+    if not os.path.exists(p):
+        return -1
+    with open(p) as fh:
+        return json.load(fh)["batch_id"]

@@ -39,6 +39,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from etl_extractor_spark.operators.checkpoints import reliable_checkpoint
+from etl_extractor_spark.operators.common import batch_watermark
 from etl_extractor_spark.operators.dedup import (
     band_frame_arr,
     doc_shingle_hashes,
@@ -46,14 +47,6 @@ from etl_extractor_spark.operators.dedup import (
 )
 
 _META = "_dedup_index_meta.json"
-
-
-def _watermark(index_path: str) -> int:
-    p = os.path.join(index_path, _META)
-    if not os.path.exists(p):
-        return -1
-    with open(p) as fh:
-        return json.load(fh)["batch_id"]
 
 
 def _exists(path: str) -> bool:
@@ -84,7 +77,7 @@ def ingest_batch(
     empty = batch.sparkSession.createDataFrame(
         [], "id_a long, id_b long, jaccard double"
     )
-    if batch_id <= _watermark(index_path):
+    if batch_id <= batch_watermark(index_path, _META):
         return empty
 
     hashed = doc_shingle_hashes(batch, id_col, text_col, k).persist()
@@ -159,5 +152,5 @@ def index_stats(spark: SparkSession, index_path: str) -> dict[str, Any]:
     return {
         "docs": bands.select("doc_id").distinct().count(),
         "band_rows": bands.count(),
-        "last_batch": _watermark(index_path),
+        "last_batch": batch_watermark(index_path, _META),
     }

@@ -32,16 +32,9 @@ from pyspark.sql import functions as F
 
 from etl_extractor_spark.operators.similarity import as_double, cosine
 from etl_extractor_spark.operators.checkpoints import reliable_checkpoint
+from etl_extractor_spark.operators.common import batch_watermark
 
 _META = "_ivf_meta.json"
-
-
-def _watermark(index_path: str) -> int:
-    p = os.path.join(index_path, _META)
-    if not os.path.exists(p):
-        return -1
-    with open(p) as fh:
-        return json.load(fh)["batch_id"]
 
 
 def _sq_dist(a, b) -> F.Column:
@@ -116,7 +109,7 @@ def ingest_vectors(
     """Assign a batch to existing centroids and append to the index.
     No refit — cost is O(batch × n_clusters) arithmetic. Replays of a
     committed batch_id are no-ops. Returns vectors ingested."""
-    if batch_id <= _watermark(index_path):
+    if batch_id <= batch_watermark(index_path, _META):
         return 0
     centroids = spark.read.parquet(os.path.join(index_path, "centroids"))
     vecs = batch.select(

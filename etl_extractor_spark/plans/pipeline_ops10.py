@@ -981,7 +981,6 @@ def vacuum_orphan_files(spark: SparkSession, sf_dir: str) -> DataFrame:
         "o_orderkey", _cents("o_totalprice").alias("cents")
     )
     path = pid_scratch_dir("spark_graft_vac_")
-    shutil.rmtree(path, ignore_errors=True)
     even = F.col("o_orderkey") % 2 == 0
     MF.write_with_manifest(
         spark, o.filter(even).repartition(2), path, stats_cols=["o_orderkey"]
@@ -1059,8 +1058,6 @@ def snapshot_rollback(spark: SparkSession, sf_dir: str) -> DataFrame:
     no data movement, because prior generations are already on disk
     (the COW/append invariant). This is the operational answer to
     'yesterday's load was garbage' at any table size."""
-    import shutil
-
     from etl_extractor_spark.operators.common import pid_scratch_dir, small_df
     from etl_extractor_spark.sinks import manifest as MF
 
@@ -1068,7 +1065,6 @@ def snapshot_rollback(spark: SparkSession, sf_dir: str) -> DataFrame:
         "o_orderkey", _cents("o_totalprice").alias("cents")
     )
     path = pid_scratch_dir("spark_graft_rb_")
-    shutil.rmtree(path, ignore_errors=True)
     slot = F.col("o_orderkey") % 3
     MF.write_with_manifest(
         spark, o.filter(slot == 0).repartition(2), path, stats_cols=["o_orderkey"]
@@ -1137,8 +1133,6 @@ def table_branch_read(spark: SparkSession, sf_dir: str) -> DataFrame:
     isolation is by the manifest's file LISTS). This is the
     multi-commit write-audit-publish and what-if-experiment primitive
     at table scale."""
-    import shutil
-
     from etl_extractor_spark.operators.common import pid_scratch_dir, small_df
     from etl_extractor_spark.sinks import manifest as MF
 
@@ -1146,7 +1140,6 @@ def table_branch_read(spark: SparkSession, sf_dir: str) -> DataFrame:
         "o_orderkey", _cents("o_totalprice").alias("cents")
     )
     path = pid_scratch_dir("spark_graft_br_")
-    shutil.rmtree(path, ignore_errors=True)
     slot = F.col("o_orderkey") % 3
     MF.write_with_manifest(
         spark, o.filter(slot == 0).repartition(2), path, stats_cols=["o_orderkey"]
@@ -1222,8 +1215,6 @@ def metadata_stats_pushdown(spark: SparkSession, sf_dir: str) -> DataFrame:
     one JSON read vs a full scan. Min/max come from per-file footer
     stats folded at plan time; correctness rides the same harvest the
     skipping readers already certify."""
-    import shutil
-
     from etl_extractor_spark.operators.common import pid_scratch_dir, small_df
     from etl_extractor_spark.sinks import manifest as MF
 
@@ -1231,7 +1222,6 @@ def metadata_stats_pushdown(spark: SparkSession, sf_dir: str) -> DataFrame:
         "o_orderkey", _cents("o_totalprice").alias("cents")
     )
     path = pid_scratch_dir("spark_graft_meta_")
-    shutil.rmtree(path, ignore_errors=True)
     MF.write_with_manifest(
         spark, o.repartition(3), path, stats_cols=["o_orderkey", "cents"]
     )
@@ -1705,7 +1695,6 @@ def streaming_manifest_sink_replay(spark: SparkSession, sf_dir: str) -> DataFram
     Rows: per-day rollup of the manifest table (oracle = plain batch
     GROUP BY over the same events)."""
     import os
-    import shutil
 
     from etl_extractor_spark.operators.common import pid_scratch_dir
     from etl_extractor_spark.plans.pipeline_ops9 import _build_mod3_batches
@@ -1714,8 +1703,6 @@ def streaming_manifest_sink_replay(spark: SparkSession, sf_dir: str) -> DataFram
     src = _build_mod3_batches(spark, sf_dir, "spark_graft_msink_src_")
     tbl = pid_scratch_dir("spark_graft_msink_tbl_")
     ckpt = pid_scratch_dir("spark_graft_msink_ckpt_")
-    shutil.rmtree(tbl, ignore_errors=True)
-    shutil.rmtree(ckpt, ignore_errors=True)
     schema = spark.read.parquet(src + "/ev-b0.parquet").schema
     stream = (
         spark.readStream.schema(schema)
@@ -2140,8 +2127,6 @@ def mv_query_routing(spark: SparkSession, sf_dir: str) -> DataFrame:
     metadata (grain containment), certified here end-to-end.
 
     Rows: year, n_orders, revenue_cents."""
-    import shutil
-
     from etl_extractor_spark.operators.common import pid_scratch_dir
     from etl_extractor_spark.sinks import manifest as MF
 
@@ -2150,8 +2135,6 @@ def mv_query_routing(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     base = pid_scratch_dir("spark_graft_mvr_base_")
     mv = pid_scratch_dir("spark_graft_mvr_mv_")
-    shutil.rmtree(base, ignore_errors=True)
-    shutil.rmtree(mv, ignore_errors=True)
     MF.write_with_manifest(spark, o.repartition(2), base, stats_cols=["cents"])
     monthly = (
         MF.read_table(spark, base)
@@ -2211,8 +2194,6 @@ def full_sync_merge_dim(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Rows: per-segment rollup — n_rows, n_carried, n_new,
     sum_acctbal_cents."""
-    import shutil
-
     from etl_extractor_spark.operators.common import pid_scratch_dir
     from etl_extractor_spark.sinks import manifest as MF
     from etl_extractor_spark.sinks.merge import merge_full_sync
@@ -2223,7 +2204,6 @@ def full_sync_merge_dim(spark: SparkSession, sf_dir: str) -> DataFrame:
         _cents("c_acctbal").alias("bal"),
     )
     path = pid_scratch_dir("spark_graft_fsync_")
-    shutil.rmtree(path, ignore_errors=True)
     target = c.filter(F.col("ck") % 3 != 0).withColumn(
         "first_seen", F.lit(0).cast("long")
     )
@@ -2289,8 +2269,6 @@ def table_files_metadata(spark: SparkSession, sf_dir: str) -> DataFrame:
     layout-stable; file NAMES (uuid-bearing) stay out of the hash.
 
     Rows: one per data file — n_rows, min_key, max_key."""
-    import shutil
-
     from etl_extractor_spark.operators.common import pid_scratch_dir
     from etl_extractor_spark.operators.common import small_df
     from etl_extractor_spark.sinks import manifest as MF
@@ -2299,7 +2277,6 @@ def table_files_metadata(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("o_orderkey").alias("k")
     )
     path = pid_scratch_dir("spark_graft_files_")
-    shutil.rmtree(path, ignore_errors=True)
     hi = o.agg(F.max("k")).collect()[0][0]
     cut1, cut2 = hi // 3, 2 * (hi // 3)
     MF.write_with_manifest(
@@ -2358,8 +2335,6 @@ def string_range_skipping_scan(spark: SparkSession, sf_dir: str) -> DataFrame:
     100 TB: string zone maps make prefix scans metadata-bounded; the
     lexicographic compare is the same JSON-domain compare plan_files
     already certifies for numerics."""
-    import shutil
-
     from etl_extractor_spark.operators.common import pid_scratch_dir
     from etl_extractor_spark.sinks import manifest as MF
 
@@ -2367,7 +2342,6 @@ def string_range_skipping_scan(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("p_name").alias("nm"), _cents("p_retailprice").alias("cents")
     )
     path = pid_scratch_dir("spark_graft_strskip_")
-    shutil.rmtree(path, ignore_errors=True)
     first = F.substring("nm", 1, 1)
     bands = [(first < "g"), (first >= "g") & (first < "q"), (first >= "q")]
     MF.write_with_manifest(spark, p.filter(bands[0]).repartition(1), path, ["nm"])
@@ -2569,8 +2543,6 @@ def compaction_batch_plan(spark: SparkSession, sf_dir: str) -> DataFrame:
     scale; each planned batch bounds the compactor's working set.
 
     Rows: batch, n_files, total_rows."""
-    import shutil
-
     from etl_extractor_spark.operators.common import pid_scratch_dir, small_df
     from etl_extractor_spark.sinks import manifest as MF
 
@@ -2578,7 +2550,6 @@ def compaction_batch_plan(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("o_orderkey").alias("k")
     )
     path = pid_scratch_dir("spark_graft_binpack_")
-    shutil.rmtree(path, ignore_errors=True)
     MF.write_with_manifest(
         spark, o.filter(F.col("k") % 9 == 0).repartition(1), path, ["k"]
     )

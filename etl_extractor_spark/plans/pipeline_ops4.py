@@ -985,16 +985,11 @@ def streaming_ngram_counts_replay(spark: SparkSession, sf_dir: str) -> DataFrame
     batch a no-op (exactly-once), and the GT derivation reads only the
     state table. This is the live-corpus form of the batch query: the
     counter absorbs new documents incrementally at per-batch cost."""
-    import shutil
-
     from etl_extractor_spark.plans.pipeline_ops import _norm_toks, _trigram_col
     from etl_extractor_spark.sinks.incremental import read_state
     from etl_extractor_spark.streaming import events_stream as SE
 
     base = pid_scratch_dir("spark_graft_ngram_replay_")
-    # fresh replay per invocation: the query certifies a deterministic
-    # rebuild, so stale state/offsets from a prior sf_dir must not leak
-    shutil.rmtree(base, ignore_errors=True)
     state_path = f"{base}/state"
     # streaming analog of operators/common.fan_out: a one-file micro-
     # batch arrives as ONE partition, which would serialize the

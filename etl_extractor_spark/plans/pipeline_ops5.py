@@ -1351,12 +1351,9 @@ def streaming_heavy_hitters_replay(spark: SparkSession, sf_dir: str) -> DataFram
 
     100 TB: per-batch state is O(k·partitions) rows appended to the
     candidate table; no streaming state store, nothing driver-side."""
-    import shutil
-
     from etl_extractor_spark.operators.common import fan_out, pid_scratch_dir
 
     base = pid_scratch_dir("spark_graft_mg_replay_")
-    shutil.rmtree(base, ignore_errors=True)
     out_dir = f"{base}/cands"
     stream = (
         spark.readStream.schema("l_orderkey long")
@@ -1439,8 +1436,6 @@ def tfidf_incremental_deletes(spark: SparkSession, sf_dir: str) -> DataFrame:
     (compaction_roundtrip covers that path). Index-scale df/idf
     re-derivation is the same sum(df²) ≤ 32·sum(df) bound as the
     flagship."""
-    import shutil
-
     from etl_extractor_spark.operators.checkpoints import reliable_checkpoint
     from etl_extractor_spark.operators.common import pid_scratch_dir
     from etl_extractor_spark.plans.pipeline_ops3 import (
@@ -1451,7 +1446,6 @@ def tfidf_incremental_deletes(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     d = load_table(spark, sf_dir, "documents").select("doc_id", "text")
     path = pid_scratch_dir("spark_graft_tfidf_del_")
-    shutil.rmtree(path, ignore_errors=True)  # deterministic rebuild per run
     MF.write_with_manifest(
         spark, _doc_trigram_tf(d), path, stats_cols=["doc_id"],
         mode="overwrite",
@@ -1615,8 +1609,6 @@ def partition_evolution_scan(spark: SparkSession, sf_dir: str) -> DataFrame:
     whole point — a re-partition of 100 TB is the alternative);
     per-spec planning adds one metadata pass per spec, and pruning
     efficiency follows each spec's own granularity."""
-    import shutil
-
     from etl_extractor_spark.operators.common import pid_scratch_dir
 
     o = load_table(spark, sf_dir, "orders").select(
@@ -1628,7 +1620,6 @@ def partition_evolution_scan(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.month(F.to_date("o_orderdate")).alias("p_month"),
     )
     base = pid_scratch_dir("spark_graft_part_evo_")
-    shutil.rmtree(base, ignore_errors=True)
     o.filter(F.col("p_year") <= 1997).write.partitionBy("p_year").parquet(
         f"{base}/spec=0"
     )

@@ -229,8 +229,6 @@ def tfidf_postings_compaction(spark: SparkSession, sf_dir: str) -> DataFrame:
     probe: MOR read tax ~1.6 s/read vs one compaction rewrite at
     ~bootstrap cost; reads after compaction return to the pre-delete
     baseline (BASELINE.md round-9 row)."""
-    import shutil
-
     from etl_extractor_spark.operators.common import pid_scratch_dir
     from etl_extractor_spark.plans.pipeline_ops3 import (
         _doc_trigram_tf,
@@ -242,7 +240,6 @@ def tfidf_postings_compaction(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     d = load_table(spark, sf_dir, "documents").select("doc_id", "text")
     path = pid_scratch_dir("spark_graft_tfidf_cpt_")
-    shutil.rmtree(path, ignore_errors=True)  # deterministic rebuild per run
     MF.write_with_manifest(
         spark, _doc_trigram_tf(d), path, stats_cols=["doc_id"],
         mode="overwrite",
@@ -386,8 +383,6 @@ def mv_incremental_daily_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
     rewriting). Counts and cents are algebraic, so partials merge by
     SUM; non-algebraic MVs (distinct users) need sketch columns
     instead (the HLL/KMV surface covers that half)."""
-    import shutil
-
     from etl_extractor_spark.operators.checkpoints import reliable_checkpoint
     from etl_extractor_spark.operators.common import pid_scratch_dir
     from etl_extractor_spark.sinks import manifest as MF
@@ -407,7 +402,6 @@ def mv_incremental_daily_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
 
     path = pid_scratch_dir("spark_graft_mv_daily_")
-    shutil.rmtree(path, ignore_errors=True)  # deterministic rebuild per run
     MF.write_with_manifest(
         spark, day_agg(o.filter(split)), path,
         stats_cols=["o_orderdate"], mode="overwrite",
@@ -696,8 +690,6 @@ def schema_evolution_scan(spark: SparkSession, sf_dir: str) -> DataFrame:
     the default fill is a map-side coalesce. The v1/v2 split is
     deterministic (key parity) so every run writes the same two file
     generations to the pid-scratch table."""
-    import shutil
-
     from etl_extractor_spark.operators.common import pid_scratch_dir
 
     o = load_table(spark, sf_dir, "orders").select(
@@ -708,7 +700,6 @@ def schema_evolution_scan(spark: SparkSession, sf_dir: str) -> DataFrame:
         "o_orderstatus",
     )
     path = pid_scratch_dir("spark_graft_schema_evo_")
-    shutil.rmtree(path, ignore_errors=True)  # deterministic rebuild per run
     o.filter(F.col("o_orderkey") % 2 == 0).select("o_orderkey", "cents").write.mode(
         "overwrite"
     ).parquet(path + "/gen=v1")

@@ -880,14 +880,11 @@ def streaming_scd1_latest_replay(spark: SparkSession, sf_dir: str) -> DataFrame:
     watermark makes replayed uncommitted batches no-ops. The struct
     comparator never reaches the payload fields (event_id is unique),
     so payload doubles ride along without affecting the order."""
-    import shutil
-
     from etl_extractor_spark.operators.common import pid_scratch_dir
     from etl_extractor_spark.sinks.incremental import read_state
     from etl_extractor_spark.streaming import events_stream as SE
 
     base = pid_scratch_dir("spark_graft_scd1_replay_")
-    shutil.rmtree(base, ignore_errors=True)
     ev = SE.events_stream(spark, sf_dir).select(
         "user_id",
         F.struct(
@@ -977,15 +974,12 @@ def schema_widening_scan(spark: SparkSession, sf_dir: str) -> DataFrame:
     the footer probe reads ONE footer per generation, not per file
     (generations share a schema by construction — the writer enforces
     it). The cast is map-side."""
-    import shutil
-
     from etl_extractor_spark.operators.common import pid_scratch_dir
 
     o = load_table(spark, sf_dir, "orders").select(
         "o_orderkey", _CENTS("o_totalprice").alias("cents"), "o_orderstatus"
     ).persist()  # two generation writes below — one corpus pass, not two
     path = pid_scratch_dir("spark_graft_widen_scan_")
-    shutil.rmtree(path, ignore_errors=True)
     o.filter(F.col("o_orderkey") % 2 == 0).select(
         "o_orderkey",
         F.expr("CAST(cents div 1000 AS INT)").alias("qty"),
@@ -1172,14 +1166,11 @@ def streaming_bitmap_reach_replay(spark: SparkSession, sf_dir: str) -> DataFrame
     domain, not the event volume; each micro-batch partial-ORs itself
     map-side before the merge. Day comes from ts_ntz (wall clock), so
     the replay is session-timezone independent."""
-    import shutil
-
     from etl_extractor_spark.operators.common import pid_scratch_dir
     from etl_extractor_spark.sinks.incremental import read_state
     from etl_extractor_spark.streaming import events_stream as SE
 
     base = pid_scratch_dir("spark_graft_bmreach_replay_")
-    shutil.rmtree(base, ignore_errors=True)
     ev = SE.events_stream(spark, sf_dir).select(
         F.to_date("ts_ntz").cast("string").alias("day"),
         F.expr(f"user_id div {_BM_WORD}").alias("word_idx"),
@@ -1472,8 +1463,6 @@ def manifest_snapshot_expiry(spark: SparkSession, sf_dir: str) -> DataFrame:
     O(deleted keys), the COW rewrite is one pass of the CURRENT view
     (the price of physical absorption, paid once per retention
     window), expiry is manifest set-algebra + unlinks."""
-    import shutil
-
     from etl_extractor_spark.operators.common import pid_scratch_dir
     from etl_extractor_spark.sinks.compact import compact_copy_on_write
     from etl_extractor_spark.sinks.manifest import (
@@ -1489,7 +1478,6 @@ def manifest_snapshot_expiry(spark: SparkSession, sf_dir: str) -> DataFrame:
         "o_orderstatus",
     ).persist()
     path = pid_scratch_dir("spark_graft_snap_expiry_")
-    shutil.rmtree(path, ignore_errors=True)
     write_with_manifest(
         spark, o.filter(F.col("o_orderkey") % 2 == 0), path, ["o_orderkey"]
     )
@@ -1560,9 +1548,9 @@ def _bucket_lookup_df(spark: SparkSession, sf_dir: str) -> DataFrame:
     bucketed scans (measured: "Bucketed: false (disabled by query
     planner)", zero pruning)."""
     from etl_extractor_spark.operators.bucketing import write_bucketed
-    from etl_extractor_spark.operators.common import pid_scratch_dir
+    from etl_extractor_spark.operators.common import process_scratch_dir
 
-    base = pid_scratch_dir("spark_graft_bpl_")
+    base = process_scratch_dir("spark_graft_bpl_")
     spark.sql(f"CREATE DATABASE IF NOT EXISTS graft_bpl LOCATION '{base}'")
     o = load_table(spark, sf_dir, "orders").select(
         "o_custkey", "o_orderpriority", _CENTS("o_totalprice").alias("cents")
@@ -1599,13 +1587,10 @@ def bucket_pruned_lookup(spark: SparkSession, sf_dir: str) -> DataFrame:
     off for the session, making every later bucketed query's plan
     depend on bench execution order). Oracle = the same profile from
     the base table."""
-    import shutil
-
     from etl_extractor_spark.operators.common import pid_scratch_dir
 
     prev = spark.conf.get(_BPL_SCAN_CONF, "true")
     out = pid_scratch_dir("spark_graft_bpl_result_")
-    shutil.rmtree(out, ignore_errors=True)
     spark.conf.set(_BPL_SCAN_CONF, "false")
     try:
         _bucket_lookup_df(spark, sf_dir).write.mode("overwrite").parquet(out)
@@ -1655,8 +1640,6 @@ def positional_delete_scan(spark: SparkSession, sf_dir: str) -> DataFrame:
     broadcast anti-join on (file, pos) until a compaction absorbs it
     (compact_copy_on_write reads through this same MOR path, so
     positional deletes are absorbed exactly like equality ones)."""
-    import shutil
-
     from etl_extractor_spark.operators.common import pid_scratch_dir
     from etl_extractor_spark.sinks.manifest import (
         _with_pos_meta,
@@ -1671,7 +1654,6 @@ def positional_delete_scan(spark: SparkSession, sf_dir: str) -> DataFrame:
         "o_orderstatus",
     )
     path = pid_scratch_dir("spark_graft_posdel_")
-    shutil.rmtree(path, ignore_errors=True)
     write_with_manifest(spark, o, path, ["o_orderkey"])
     pos = (
         _with_pos_meta(spark.read.parquet(path))

@@ -384,8 +384,6 @@ def mv_incremental_join_enrich(spark: SparkSession, sf_dir: str) -> DataFrame:
     bloom narrows that scan; the repo's manifest bloom layer is
     exactly that). The commit appends delta files only — the
     bootstrapped MV files are never rewritten."""
-    import shutil
-
     from etl_extractor_spark.operators.common import pid_scratch_dir
     from etl_extractor_spark.sinks import manifest as MF
 
@@ -409,7 +407,6 @@ def mv_incremental_join_enrich(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
 
     path = pid_scratch_dir("spark_graft_mv_join_")
-    shutil.rmtree(path, ignore_errors=True)  # deterministic rebuild per run
     MF.write_with_manifest(
         spark, enrich(o_old, c_old), path, stats_cols=["year"], mode="overwrite"
     )
@@ -468,8 +465,6 @@ def scd2_merge_apply(spark: SparkSession, sf_dir: str) -> DataFrame:
     only; history rows stream through untouched. On a real lakehouse
     the overwrite is partition-scoped (sinks/merge's partition-COW);
     here the dim is small enough to rewrite whole."""
-    import shutil
-
     from etl_extractor_spark.operators.checkpoints import reliable_checkpoint
     from etl_extractor_spark.operators.common import pid_scratch_dir
     from etl_extractor_spark.sinks.merge import scd2_apply
@@ -494,7 +489,6 @@ def scd2_merge_apply(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
     )
     path = pid_scratch_dir("spark_graft_scd2_")
-    shutil.rmtree(path, ignore_errors=True)  # deterministic rebuild per run
     dim0.write.mode("overwrite").parquet(path)
     target = spark.read.parquet(path)
     merged = reliable_checkpoint(
@@ -664,8 +658,6 @@ def bloom_file_skipping_scan(spark: SparkSession, sf_dir: str) -> DataFrame:
     secondary-index half of the skipping story — min/max/Z-order
     prune ranges (``manifest_time_travel``, ``zorder``), Blooms prune
     point lookups on high-cardinality hash-distributed keys."""
-    import shutil
-
     from etl_extractor_spark.operators.common import pid_scratch_dir
     from etl_extractor_spark.sinks import bloom as BL
 
@@ -673,7 +665,6 @@ def bloom_file_skipping_scan(spark: SparkSession, sf_dir: str) -> DataFrame:
         "o_orderkey", "o_custkey", _order_cents().alias("cents")
     )
     path = pid_scratch_dir("spark_graft_bloom_")
-    shutil.rmtree(path, ignore_errors=True)  # deterministic rebuild per run
     o.repartition(32, "o_custkey").write.mode("overwrite").parquet(path)
     BL.attach_blooms(spark, path, "o_custkey")
     mx = load_table(spark, sf_dir, "customer").agg(
@@ -719,8 +710,6 @@ def _build_late_batches(spark: SparkSession, sf_dir: str) -> str:
     2+ batches after its cohort, i.e. genuinely behind the watermark.
     One parquet file per batch with pinned, strictly increasing
     mtimes."""
-    import shutil
-
     from etl_extractor_spark.operators.common import pid_scratch_dir
 
     e = load_table(spark, sf_dir, "events").select("event_id", "ts", "value")
@@ -731,7 +720,6 @@ def _build_late_batches(spark: SparkSession, sf_dir: str) -> str:
         F.least(F.expr("(dayofmonth(ts) - 1) div 10"), F.lit(2))
     )
     src = pid_scratch_dir("spark_graft_late_src_")
-    shutil.rmtree(src, ignore_errors=True)
     _write_pinned_batches(
         [e.filter(b == k) for k in range(3)], src, "data"
     )
@@ -862,7 +850,6 @@ def manifest_incremental_diff(spark: SparkSession, sf_dir: str) -> DataFrame:
     scans are O(change); 'unchanged' is metadata arithmetic. The
     class join broadcasts the delete-key set (O(deletes))."""
     import os
-    import shutil
 
     from etl_extractor_spark.operators.common import pid_scratch_dir, small_df
     from etl_extractor_spark.sinks import manifest as MF
@@ -874,7 +861,6 @@ def manifest_incremental_diff(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     v1 = base.filter(F.col("day") < "2001-01-01").select("o_orderkey", "cents")
     path = pid_scratch_dir("spark_graft_incdiff_")
-    shutil.rmtree(path, ignore_errors=True)  # deterministic rebuild per run
     MF.write_with_manifest(spark, v1, path, stats_cols=["o_orderkey"])
     del_keys = v1.filter(
         (F.col("o_orderkey") % 113 == 0) | (F.col("o_orderkey") % 17 == 0)
@@ -1334,7 +1320,6 @@ def csv_quarantine_scan(spark: SparkSession, sf_dir: str) -> DataFrame:
     branch. Classification reads the RAW line from the corrupt
     column, so no re-parse pass is needed."""
     import os
-    import shutil
 
     from etl_extractor_spark.operators.common import pid_scratch_dir
     from pyspark.sql import types as T
@@ -1357,7 +1342,6 @@ def csv_quarantine_scan(spark: SparkSession, sf_dir: str) -> DataFrame:
         .alias("value")
     )
     path = pid_scratch_dir("spark_graft_quarantine_")
-    shutil.rmtree(path, ignore_errors=True)  # deterministic rebuild per run
     lines.write.mode("overwrite").text(path)
 
     schema = T.StructType(
@@ -1622,8 +1606,6 @@ def mv_cdc_signed_delta(spark: SparkSession, sf_dir: str) -> DataFrame:
     aggregates need the count column to know when a group dies
     (MIN/MAX would need a full per-group recompute on delete — the
     documented boundary of signed-delta maintenance)."""
-    import shutil
-
     from etl_extractor_spark.operators.checkpoints import reliable_checkpoint
     from etl_extractor_spark.operators.common import pid_scratch_dir
     from etl_extractor_spark.sinks import manifest as MF
@@ -1638,7 +1620,6 @@ def mv_cdc_signed_delta(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
 
     path = pid_scratch_dir("spark_graft_mv_cdc_")
-    shutil.rmtree(path, ignore_errors=True)  # deterministic rebuild per run
     MF.write_with_manifest(spark, day_agg(base), path, stats_cols=["day"])
 
     deletes, updates, inserts = _cdc_signed_deltas(o)
@@ -1921,7 +1902,6 @@ def streaming_mv_cdc_replay(spark: SparkSession, sf_dir: str) -> DataFrame:
     cardinality = |days|, per-batch work = O(batch), exactly-once via
     the sink's checkpointed batch ids."""
     import os
-    import shutil
 
     from etl_extractor_spark.operators.common import pid_scratch_dir
     from etl_extractor_spark.sinks.incremental import read_state
@@ -1938,7 +1918,6 @@ def streaming_mv_cdc_replay(spark: SparkSession, sf_dir: str) -> DataFrame:
         inserts,
     ]
     base = pid_scratch_dir("spark_graft_mvcdc_stream_")
-    shutil.rmtree(base, ignore_errors=True)
     src = os.path.join(base, "src")
     _write_pinned_batches(batches, src, "cdc")
 

@@ -41,14 +41,11 @@ def _build_mod3_batches(
     fixture would let a state-losing engine pass by accident). One
     parquet file per batch, pinned strictly increasing mtimes
     (file-source processing order)."""
-    import shutil
-
     from etl_extractor_spark.operators.common import pid_scratch_dir
     from etl_extractor_spark.plans.pipeline_ops8 import _write_pinned_batches
 
     e = load_table(spark, sf_dir, "events").select(*cols)
     src = pid_scratch_dir(prefix)
-    shutil.rmtree(src, ignore_errors=True)
     _write_pinned_batches(
         [e.filter(F.col("event_id") % 3 == k) for k in range(3)], src, "ev"
     )
@@ -82,7 +79,6 @@ def streaming_crash_resume_replay(spark: SparkSession, sf_dir: str) -> DataFrame
     one re-executed micro-batch, never a replay from origin; state
     restore is a checkpoint read, O(|state|), not a recompute."""
     import os
-    import shutil
 
     from pyspark.errors.exceptions.captured import StreamingQueryException
 
@@ -92,8 +88,6 @@ def streaming_crash_resume_replay(spark: SparkSession, sf_dir: str) -> DataFrame
     src = _build_mod3_batches(spark, sf_dir, "spark_graft_crash_src_")
     out_dir = pid_scratch_dir("spark_graft_crash_out_")
     ckpt = pid_scratch_dir("spark_graft_crash_ckpt_")
-    shutil.rmtree(out_dir, ignore_errors=True)
-    shutil.rmtree(ckpt, ignore_errors=True)
 
     schema = spark.read.parquet(src + "/ev-b0.parquet").schema
 
@@ -218,8 +212,6 @@ def manifest_shallow_clone(spark: SparkSession, sf_dir: str) -> DataFrame:
     100 TB: the instant dev-fork / safe-experiment primitive — clone
     cost is one manifest write at any table size, and the risky MERGE
     runs on the clone while the source serves traffic."""
-    import shutil
-
     from etl_extractor_spark.operators.common import pid_scratch_dir
     from etl_extractor_spark.sinks import manifest as MF
 
@@ -228,8 +220,6 @@ def manifest_shallow_clone(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     src = pid_scratch_dir("spark_graft_clone_src_")
     dst = pid_scratch_dir("spark_graft_clone_dst_")
-    shutil.rmtree(src, ignore_errors=True)
-    shutil.rmtree(dst, ignore_errors=True)
     MF.write_with_manifest(spark, o, src, stats_cols=["o_orderkey"])
     MF.shallow_clone(src, dst)
     keys = (
@@ -467,8 +457,6 @@ def wap_audit_publish(spark: SparkSession, sf_dir: str) -> DataFrame:
     batch, never the table; a reader can never observe a partial or
     unaudited batch because visibility is the atomic manifest
     commit."""
-    import shutil
-
     from etl_extractor_spark.operators.common import pid_scratch_dir
     from etl_extractor_spark.sinks import manifest as MF
 
@@ -476,7 +464,6 @@ def wap_audit_publish(spark: SparkSession, sf_dir: str) -> DataFrame:
         "o_orderkey", "o_orderdate", _order_cents().alias("cents")
     )
     path = pid_scratch_dir("spark_graft_wap_")
-    shutil.rmtree(path, ignore_errors=True)
     split = F.col("o_orderdate") < F.lit("2000-01-01")
     MF.write_with_manifest(
         spark, o.filter(split), path, stats_cols=["o_orderkey"]
@@ -543,7 +530,6 @@ def streaming_dim_refresh_replay(spark: SparkSession, sf_dir: str) -> DataFrame:
     this is the foreachBatch idiom Spark's own docs prescribe for
     mutable lookup data, here pinned by an oracle."""
     import os
-    import shutil
 
     from etl_extractor_spark.operators.common import pid_scratch_dir
 
@@ -555,8 +541,6 @@ def streaming_dim_refresh_replay(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     out_dir = pid_scratch_dir("spark_graft_dimref_out_")
     dim_dir = pid_scratch_dir("spark_graft_dimref_dim_")
-    shutil.rmtree(out_dir, ignore_errors=True)
-    shutil.rmtree(dim_dir, ignore_errors=True)
 
     types = [
         r[0]
@@ -918,7 +902,6 @@ def streaming_crash_resume_custom_state(
     recovery path; this query is the certification that their state
     survives the restart their semantics assume."""
     import os
-    import shutil
 
     from pyspark.errors.exceptions.captured import StreamingQueryException
     from pyspark.sql.streaming.state import GroupStateTimeout
@@ -934,8 +917,6 @@ def streaming_crash_resume_custom_state(
     )
     out_dir = pid_scratch_dir("spark_graft_crashst_out_")
     ckpt = pid_scratch_dir("spark_graft_crashst_ckpt_")
-    shutil.rmtree(out_dir, ignore_errors=True)
-    shutil.rmtree(ckpt, ignore_errors=True)
     schema = spark.read.parquet(src + "/ev-b0.parquet").schema
 
     def stateful_stream() -> DataFrame:
@@ -1045,7 +1026,6 @@ def snapshot_row_cdf(spark: SparkSession, sf_dir: str) -> DataFrame:
     added files + the delete keys and touches nothing else
     (asserted: the insert scan plans only the WAP-added files)."""
     import os
-    import shutil
 
     from etl_extractor_spark.operators.common import pid_scratch_dir
     from etl_extractor_spark.sinks import manifest as MF
@@ -1054,7 +1034,6 @@ def snapshot_row_cdf(spark: SparkSession, sf_dir: str) -> DataFrame:
         "o_orderkey", "o_orderdate", _order_cents().alias("cents")
     )
     path = pid_scratch_dir("spark_graft_cdf_")
-    shutil.rmtree(path, ignore_errors=True)
     split = F.col("o_orderdate") < F.lit("2001-01-01")
     base = o.filter(split)
     MF.write_with_manifest(spark, base, path, stats_cols=["o_orderkey"])  # s0
@@ -1185,8 +1164,6 @@ def hidden_partition_pruning(spark: SparkSession, sf_dir: str) -> DataFrame:
     the plain date-range filter, certifying that pruning is
     answer-preserving including the boundary months the month
     transform over-covers."""
-    import shutil
-
     from etl_extractor_spark.operators.common import pid_scratch_dir
     from etl_extractor_spark.sinks import hidden as H
 
@@ -1194,7 +1171,6 @@ def hidden_partition_pruning(spark: SparkSession, sf_dir: str) -> DataFrame:
         "o_orderkey", "o_orderdate", _order_cents().alias("cents")
     )
     path = pid_scratch_dir("spark_graft_hidden_")
-    shutil.rmtree(path, ignore_errors=True)
     H.write_month_partitioned(spark, o, path, "o_orderdate")
     lo, hi = "1996-03-15", "1997-06-10"
     return (
@@ -1245,8 +1221,6 @@ def bitemporal_point_query(spark: SparkSession, sf_dir: str) -> DataFrame:
     and why') are exactly this composition — snapshot read (metadata
     file-list planning) + valid-interval predicate; neither axis
     costs a table rewrite."""
-    import shutil
-
     from etl_extractor_spark.operators.common import pid_scratch_dir
     from etl_extractor_spark.sinks import manifest as MF
     from etl_extractor_spark.sinks.merge import scd2_apply
@@ -1262,7 +1236,6 @@ def bitemporal_point_query(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.lit(True).alias("is_current"),
     )
     path = pid_scratch_dir("spark_graft_bitemp_")
-    shutil.rmtree(path, ignore_errors=True)
     MF.write_with_manifest(spark, dim0, path, stats_cols=["c_custkey"])  # s0
     changes = c.filter(F.col("c_custkey") % 7 == 0).select(
         "c_custkey", F.lit("GOLD").alias("segment")
@@ -1329,8 +1302,6 @@ def manifest_dim_driven_skipping(spark: SparkSession, sf_dir: str) -> DataFrame:
     turns a 7-year fact scan into the 1-year slice the dim selects —
     on clusters where partition layout doesn't match the join key,
     this manifest form is the only skipping available."""
-    import shutil
-
     from etl_extractor_spark.operators.common import pid_scratch_dir
     from etl_extractor_spark.sinks import manifest as MF
 
@@ -1338,7 +1309,6 @@ def manifest_dim_driven_skipping(spark: SparkSession, sf_dir: str) -> DataFrame:
         "o_custkey", _order_cents().alias("cents")
     )
     path = pid_scratch_dir("spark_graft_dimskip_")
-    shutil.rmtree(path, ignore_errors=True)
     MF.write_with_manifest(
         spark,
         o.repartitionByRange(16, "o_custkey"),
@@ -1403,14 +1373,11 @@ def metadata_ndv_estimate(spark: SparkSession, sf_dir: str) -> DataFrame:
     100 TB: this is Iceberg's puffin-NDV pattern — the optimizer's
     join-size decisions read file stats, never the data; sketch
     build rides the write, merge cost is |files|·K longs."""
-    import shutil
-
     from etl_extractor_spark.operators.common import pid_scratch_dir
     from etl_extractor_spark.sinks import ndv as NDV
 
     o = load_table(spark, sf_dir, "orders").select("o_custkey")
     path = pid_scratch_dir("spark_graft_ndv_")
-    shutil.rmtree(path, ignore_errors=True)
     o.repartition(8, "o_custkey").write.parquet(path)
     NDV.attach_ndv(spark, path, "o_custkey")
     est = NDV.estimate_ndv(path, "o_custkey")
@@ -1462,8 +1429,6 @@ def table_history_query(spark: SparkSession, sf_dir: str) -> DataFrame:
     100 TB: the history relation is the audit surface operators
     actually query ('what changed this week, how many files per
     commit') — metadata-sized at any table size."""
-    import shutil
-
     from etl_extractor_spark.operators.common import pid_scratch_dir
     from etl_extractor_spark.sinks import manifest as MF
 
@@ -1471,7 +1436,6 @@ def table_history_query(spark: SparkSession, sf_dir: str) -> DataFrame:
         "o_orderkey", "o_orderdate", _order_cents().alias("cents")
     )
     path = pid_scratch_dir("spark_graft_hist_")
-    shutil.rmtree(path, ignore_errors=True)
     split = F.col("o_orderdate") < F.lit("2001-01-01")
     # repartition, not coalesce: coalesce only REDUCES, so a source
     # that already arrives single-partitioned writes 1 file and the
@@ -1549,7 +1513,6 @@ def streaming_wap_gate_replay(spark: SparkSession, sf_dir: str) -> DataFrame:
     ``sinks/manifest.wap_commit`` with the streaming engine
     unchanged."""
     import os
-    import shutil
 
     from etl_extractor_spark.operators.common import pid_scratch_dir
     from etl_extractor_spark.plans.pipeline_ops8 import _write_pinned_batches
@@ -1563,7 +1526,6 @@ def streaming_wap_gate_replay(spark: SparkSession, sf_dir: str) -> DataFrame:
         -F.col("value"),
     ).otherwise(F.col("value"))
     src = pid_scratch_dir("spark_graft_swap_src_")
-    shutil.rmtree(src, ignore_errors=True)
     _write_pinned_batches(
         [
             e.withColumn("value", corrupt).filter(F.col("event_id") % 3 == k)
@@ -1573,7 +1535,6 @@ def streaming_wap_gate_replay(spark: SparkSession, sf_dir: str) -> DataFrame:
         "ev",
     )
     table = pid_scratch_dir("spark_graft_swap_tbl_")
-    shutil.rmtree(table, ignore_errors=True)
     MF.write_with_manifest(
         spark,
         e.filter(F.lit(False)).repartition(1),
@@ -1853,7 +1814,6 @@ def write_target_file_size(spark: SparkSession, sf_dir: str) -> DataFrame:
     lakehouse runbook warns about; sizing writes at the source keeps
     compaction for the delete-absorption path only."""
     import os
-    import shutil
 
     from etl_extractor_spark.operators.common import pid_scratch_dir
 
@@ -1870,7 +1830,6 @@ def write_target_file_size(spark: SparkSession, sf_dir: str) -> DataFrame:
     sample_n = 10_000
     total_rows = o.count()
     probe = pid_scratch_dir("spark_graft_tfs_probe_")
-    shutil.rmtree(probe, ignore_errors=True)
     # spread the sample across the WHOLE table by key modulo — a
     # limit() sample reads only the first partitions, and a
     # better-compressing prefix (sorted/clustered head) would
@@ -1889,7 +1848,6 @@ def write_target_file_size(spark: SparkSession, sf_dir: str) -> DataFrame:
     bpr = sample_bytes / max(1, n_sampled)
     n_files = max(1, int(round(total_rows * bpr / target)))
     path = pid_scratch_dir("spark_graft_tfs_")
-    shutil.rmtree(path, ignore_errors=True)
     o.repartition(int(n_files)).write.parquet(path)
     files = [
         f
@@ -1941,8 +1899,6 @@ def txn_consistent_read(spark: SparkSession, sf_dir: str) -> DataFrame:
     (multi-table transactions); the cost model is per-table COW
     commits + one atomic pointer write, with crash recovery = retry
     the transaction."""
-    import shutil
-
     from etl_extractor_spark.operators.common import pid_scratch_dir
     from etl_extractor_spark.sinks import manifest as MF
 
@@ -1955,8 +1911,6 @@ def txn_consistent_read(spark: SparkSession, sf_dir: str) -> DataFrame:
     t_orders = pid_scratch_dir("spark_graft_txn_o_")
     t_cust = pid_scratch_dir("spark_graft_txn_c_")
     log_dir = pid_scratch_dir("spark_graft_txn_log_")
-    for p in (t_orders, t_cust, log_dir):
-        shutil.rmtree(p, ignore_errors=True)
 
     def orders_rollup(df: DataFrame) -> DataFrame:
         return df.groupBy(
@@ -2058,7 +2012,6 @@ def backfill_stream_handoff(spark: SparkSession, sf_dir: str) -> DataFrame:
     getting the half-open interval right at the seam is the entire
     correctness content, and it is what the hash certifies."""
     import os
-    import shutil
 
     from etl_extractor_spark.operators.common import pid_scratch_dir
     from etl_extractor_spark.plans.pipeline_ops8 import _write_pinned_batches
@@ -2071,14 +2024,12 @@ def backfill_stream_handoff(spark: SparkSession, sf_dir: str) -> DataFrame:
     batch_part = e.filter(F.to_date("ts") < F.lit(cutoff))
     stream_rows = e.filter(F.to_date("ts") >= F.lit(cutoff))
     src = pid_scratch_dir("spark_graft_handoff_src_")
-    shutil.rmtree(src, ignore_errors=True)
     _write_pinned_batches(
         [stream_rows.filter(F.col("event_id") % 2 == k) for k in range(2)],
         src,
         "ev",
     )
     out_dir = pid_scratch_dir("spark_graft_handoff_out_")
-    shutil.rmtree(out_dir, ignore_errors=True)
     # backfill leg: plain batch write of the pre-cutoff rollup
     batch_part.groupBy(
         F.to_date("ts").cast("string").alias("day")

@@ -34,7 +34,7 @@ from etl_extractor_spark.sources.csv import read_csv
 from etl_extractor_spark.sources.jdbc import read_jdbc, write_jdbc
 from etl_extractor_spark.sources.json_api import records_to_df
 from etl_extractor_spark.sources.parquet import load_table
-from etl_extractor_spark.operators.common import pid_scratch_dir
+from etl_extractor_spark.operators.common import pid_scratch_dir, process_scratch_dir
 
 _DERBY_DRIVER = "org.apache.derby.jdbc.EmbeddedDriver"
 
@@ -51,8 +51,6 @@ def csv_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     extra = spark.createDataFrame(
         [(-1, None, -1)], "n_nationkey: int, n_name: string, n_regionkey: int"
     )
-    # fixed per-process path, overwritten each run — repeated driver
-    # sweeps must not leak a new temp dir per invocation
     out_dir = pid_scratch_dir("spark_graft_csv_roundtrip_")
     nation.unionByName(extra).coalesce(1).write.mode("overwrite").option(
         "header", True
@@ -118,7 +116,7 @@ def jdbc_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     # fixed per-process Derby database, tables overwritten each run
     # (embedded Derby allows re-boot of the same db within one JVM)
-    db = os.path.join(pid_scratch_dir("spark_graft_jdbc_roundtrip_"), "db")
+    db = os.path.join(process_scratch_dir("spark_graft_jdbc_roundtrip_"), "db")
     url = f"jdbc:derby:{db};create=true"
     write_jdbc(region, url, "t_round", mode="overwrite", driver=_DERBY_DRIVER)
     extra = spark.createDataFrame(
@@ -344,7 +342,7 @@ def bucketed_join_colocated(spark: SparkSession, sf_dir: str) -> DataFrame:
     this is the single largest shuffle saving available. The database
     LOCATION is explicit (temp dir), so a vanilla driver session's
     in-memory catalog works and nothing lands in the driver's cwd."""
-    base = pid_scratch_dir("spark_graft_bkt_")
+    base = process_scratch_dir("spark_graft_bkt_")
     spark.sql(
         f"CREATE DATABASE IF NOT EXISTS graft_bkt LOCATION '{base}'"
     )

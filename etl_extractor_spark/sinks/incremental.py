@@ -31,6 +31,8 @@ from typing import Any
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from etl_extractor_spark.operators.common import batch_watermark
+
 _META = "_incremental_meta.json"
 
 # measure -> (partial expr builder, merge expr builder)
@@ -57,14 +59,6 @@ def read_state(spark: SparkSession, state_path: str) -> DataFrame | None:
     return spark.read.parquet(os.path.join(state_path, "data"))
 
 
-def _watermark(state_path: str) -> int:
-    p = os.path.join(state_path, _META)
-    if not os.path.exists(p):
-        return -1
-    with open(p) as fh:
-        return json.load(fh)["batch_id"]
-
-
 def apply_batch(
     spark: SparkSession,
     state_path: str,
@@ -86,7 +80,7 @@ def apply_batch(
         raise ValueError(f"non-mergeable aggregates: {sorted(unknown)}")
 
     current = read_state(spark, state_path)
-    if batch_id <= _watermark(state_path):
+    if batch_id <= batch_watermark(state_path, _META):
         if current is None:
             raise RuntimeError("watermark exists but state is missing")
         return current  # already applied — exactly-once replay guard

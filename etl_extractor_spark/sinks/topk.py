@@ -22,15 +22,9 @@ import shutil
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from etl_extractor_spark.operators.common import batch_watermark
+
 _META = "_topk_meta.json"
-
-
-def _watermark(state_path: str) -> int:
-    p = os.path.join(state_path, _META)
-    if not os.path.exists(p):
-        return -1
-    with open(p) as fh:
-        return json.load(fh)["batch_id"]
 
 
 def read_topk(spark: SparkSession, state_path: str) -> DataFrame | None:
@@ -53,7 +47,7 @@ def apply_topk_batch(
 ) -> DataFrame:
     """Merge one batch into the k-row state; replays are no-ops."""
     current = read_topk(spark, state_path)
-    if batch_id <= _watermark(state_path):
+    if batch_id <= batch_watermark(state_path, _META):
         if current is None:
             raise RuntimeError("watermark exists but state is missing")
         return current

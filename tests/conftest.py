@@ -18,3 +18,22 @@ def spark():
 @pytest.fixture(scope="session")
 def sf_dir():
     return SF_DIR
+
+
+@pytest.fixture
+def scratch_given(monkeypatch):
+    """``{prefix: path}``: the directory ``operators.common.pid_scratch_dir``
+    last handed out for each prefix during the test. Each call gets a
+    fresh directory, so a test that reads a query's scratch files takes
+    the path the query was given rather than calling the helper again."""
+    from etl_extractor_spark.operators import common
+
+    given: dict[str, str] = {}
+    real = common.pid_scratch_dir
+
+    def spy(prefix: str) -> str:
+        given[prefix] = real(prefix)
+        return given[prefix]
+
+    monkeypatch.setattr(common, "pid_scratch_dir", spy)
+    return given

@@ -219,7 +219,7 @@ def test_column_entropy_limits(spark):
     assert abs(row["entropy_micronat"] - 693147) <= 1
 
 
-def test_mv_incremental_equals_rebuild(spark, sf_dir):
+def test_mv_incremental_equals_rebuild(spark, sf_dir, scratch_given):
     """The MV maintenance contract at the day level (the registered
     query rolls up to years; this pins the finer grain): merged MV
     rows == full-rebuild rows, day for day."""
@@ -230,10 +230,9 @@ def test_mv_incremental_equals_rebuild(spark, sf_dir):
 
     # run the maintenance path (writes + merges the scratch MV)
     mv_incremental_daily_revenue(spark, sf_dir).collect()
-    from etl_extractor_spark.operators.common import pid_scratch_dir
     from etl_extractor_spark.sinks import manifest as MF
 
-    path = pid_scratch_dir("spark_graft_mv_daily_")
+    path = scratch_given["spark_graft_mv_daily_"]
     got = {
         r["o_orderdate"]: (r["n_orders"], r["revenue_cents"])
         for r in MF.read_table(spark, path).collect()

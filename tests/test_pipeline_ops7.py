@@ -303,15 +303,12 @@ def test_tdiv_is_truncating():
     assert _tdiv(9, -10) == 0 and _tdiv(-9, -10) == 0
 
 
-def test_scd1_state_is_batch_order_independent(spark, sf_dir):
+def test_scd1_state_is_batch_order_independent(spark, sf_dir, tmp_path):
     """The struct-max reduction must give the same state no matter how
     the stream is split into micro-batches: apply the batch merge with
     two different splits (and one shuffled order) and compare."""
-    import shutil
-
     import pyspark.sql.functions as F
 
-    from etl_extractor_spark.operators.common import pid_scratch_dir
     from etl_extractor_spark.sinks.incremental import apply_batch, read_state
     from etl_extractor_spark.sources.parquet import load_table
 
@@ -330,8 +327,7 @@ def test_scd1_state_is_batch_order_independent(spark, sf_dir):
     for i, splits in enumerate(
         ([0, 1, 2], [2, 0, 1], [0])  # 3 batches, reordered, single batch
     ):
-        base = pid_scratch_dir(f"spark_graft_scd1_guard{i}_")
-        shutil.rmtree(base, ignore_errors=True)
+        base = str(tmp_path / f"scd1_guard{i}")
         sp = f"{base}/state"
         for bid, s in enumerate(splits):
             b = ev.filter(F.col("part") == s if len(splits) > 1 else F.lit(True))
@@ -349,18 +345,13 @@ def test_scd1_state_is_batch_order_independent(spark, sf_dir):
     assert states[0] == states[1] == states[2]
 
 
-def test_widening_merge_refusal_pinned(spark):
+def test_widening_merge_refusal_pinned(spark, tmp_path):
     """The reason schema_widening_scan exists: Spark's mergeSchema
     refuses INT vs BIGINT. If a future Spark version starts widening,
     this pin fires and the operator can be simplified."""
-    import shutil
-
     import pyspark.sql.functions as F
 
-    from etl_extractor_spark.operators.common import pid_scratch_dir
-
-    base = pid_scratch_dir("spark_graft_widen_pin_")
-    shutil.rmtree(base, ignore_errors=True)
+    base = str(tmp_path / "widen_pin")
     spark.range(3).select(F.col("id").cast("int").alias("q")).write.parquet(
         base + "/gen=v1"
     )
@@ -406,15 +397,12 @@ def test_bitmap_retention_brute_force(spark, sf_dir):
         assert r["retention_bps"] == inter * 10000 // len(by_year[y])
 
 
-def test_bit_or_measure_is_mergeable_and_idempotent(spark):
+def test_bit_or_measure_is_mergeable_and_idempotent(spark, tmp_path):
     """The new incremental-sink measure: OR-merging the same batch
     twice (simulating a replayed batch that dodges the id watermark)
     and merging in any split must give the same state as one pass."""
-    import shutil
-
     import pyspark.sql.functions as F
 
-    from etl_extractor_spark.operators.common import pid_scratch_dir
     from etl_extractor_spark.sinks.incremental import apply_batch, read_state
 
     rows = [(i % 5, 1 << (i % 60)) for i in range(200)]
@@ -422,8 +410,7 @@ def test_bit_or_measure_is_mergeable_and_idempotent(spark):
     measures = {"bm": ("bit_or", "bit_val")}
     outs = []
     for i, splits in enumerate(([0], [0, 1, 2], [0, 0, 1, 2])):
-        base = pid_scratch_dir(f"spark_graft_bitor_guard{i}_")
-        shutil.rmtree(base, ignore_errors=True)
+        base = str(tmp_path / f"bitor_guard{i}")
         sp = f"{base}/state"
         for bid, s in enumerate(splits):
             part = df.filter((F.col("k") % 3 == s) if len(splits) > 1 else F.lit(True))
@@ -471,17 +458,15 @@ def test_blocking_audit_schemes_differ(spark, sf_dir):
     assert bs["n_pairs"] == nt["n_pairs"] > 0 and nt["n_true"] > 0
 
 
-def test_snapshot_expiry_lifecycle_disk_effects(spark, sf_dir):
+def test_snapshot_expiry_lifecycle_disk_effects(spark, sf_dir, tmp_path):
     """What the oracle can't see: after COW compaction the OLD files
     and snapshots are still on disk/readable; after expiry the dead
     files are unlinked, expired ids raise, the current view is
     byte-identical, and expiry is idempotent."""
     import os
-    import shutil
 
     import pyspark.sql.functions as F
 
-    from etl_extractor_spark.operators.common import pid_scratch_dir
     from etl_extractor_spark.sinks.compact import compact_copy_on_write
     from etl_extractor_spark.sinks.manifest import (
         expire_snapshots,
@@ -496,8 +481,7 @@ def test_snapshot_expiry_lifecycle_disk_effects(spark, sf_dir):
     o = load_table(spark, sf_dir, "orders").select(
         "o_orderkey", (F.col("o_totalprice") * 100).cast("long").alias("c")
     )
-    path = pid_scratch_dir("spark_graft_expiry_guard_")
-    shutil.rmtree(path, ignore_errors=True)
+    path = str(tmp_path / "expiry_guard")
     write_with_manifest(spark, o.filter("o_orderkey % 2 = 0"), path, ["o_orderkey"])
     write_with_manifest(
         spark, o.filter("o_orderkey % 2 = 1"), path, ["o_orderkey"], mode="append"
@@ -562,18 +546,15 @@ def test_bucket_lookup_actually_prunes(spark, sf_dir):
     assert spark.conf.get(_BPL_SCAN_CONF, "true") == prev
 
 
-def test_cow_preserves_mor_time_travel_and_appends(spark, sf_dir):
+def test_cow_preserves_mor_time_travel_and_appends(spark, sf_dir, tmp_path):
     """The two second-review catches: (a) after COW compaction,
     read_snapshot_mor on the prior delete-bearing snapshot still
     works (the delete registry keeps entries referenced by surviving
     snapshots); (b) an APPEND after COW extends only the current
     view — the superseded generation on disk must not be re-harvested
     (no resurrected or doubled rows)."""
-    import shutil
-
     import pyspark.sql.functions as F
 
-    from etl_extractor_spark.operators.common import pid_scratch_dir
     from etl_extractor_spark.sinks.compact import compact_copy_on_write
     from etl_extractor_spark.sinks.manifest import (
         read_merge_on_read,
@@ -586,8 +567,7 @@ def test_cow_preserves_mor_time_travel_and_appends(spark, sf_dir):
     o = load_table(spark, sf_dir, "orders").select(
         "o_orderkey", (F.col("o_totalprice") * 100).cast("long").alias("c")
     )
-    path = pid_scratch_dir("spark_graft_cow_guard_")
-    shutil.rmtree(path, ignore_errors=True)
+    path = str(tmp_path / "cow_guard")
     write_with_manifest(spark, o.filter("o_orderkey % 2 = 0"), path, ["o_orderkey"])
     write_equality_deletes(
         spark, path, o.filter("o_orderkey % 10 = 0").select("o_orderkey")
@@ -640,17 +620,14 @@ def test_bitmap_rollup_plan_is_map_combined(spark, sf_dir):
     assert "Exchange hashpartitioning" in plan[:pre], plan[:1500]
 
 
-def test_positional_delete_removes_one_of_duplicates(spark):
+def test_positional_delete_removes_one_of_duplicates(spark, tmp_path):
     """THE semantic positional deletes exist for: two bit-identical
     rows, delete ONE physical position — the count drops by exactly
     one (an equality delete would remove both). Also: mixing
     positional and equality deletes on one table applies both, and
     COW compaction absorbs them together."""
-    import shutil
-
     import pyspark.sql.functions as F
 
-    from etl_extractor_spark.operators.common import pid_scratch_dir
     from etl_extractor_spark.sinks.compact import compact_copy_on_write
     from etl_extractor_spark.sinks.manifest import (
         _with_pos_meta,
@@ -662,8 +639,7 @@ def test_positional_delete_removes_one_of_duplicates(spark):
 
     rows = [(1, "a"), (1, "a"), (2, "b"), (3, "c"), (3, "c"), (4, "d")]
     df = spark.createDataFrame(rows, "k long, v string").coalesce(1)
-    path = pid_scratch_dir("spark_graft_posdel_guard_")
-    shutil.rmtree(path, ignore_errors=True)
+    path = str(tmp_path / "posdel_guard")
     write_with_manifest(spark, df, path, ["k"])
     # one physical position of the duplicated k=1 row
     pos = (

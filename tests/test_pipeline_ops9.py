@@ -152,20 +152,17 @@ def test_gap_fill_brute_force(spark, sf_dir):
         assert got[nation] == (n_days, n_gaps, gap_cents, total), nation
 
 
-def test_dim_refresh_versions_visible_per_batch(spark, sf_dir):
+def test_dim_refresh_versions_visible_per_batch(spark, sf_dir, scratch_given):
     """Each batch's rows must carry factor == batch_id + 1 — the dim
     VERSION current at that batch, not the final one (a plan-embedded
     static join would show factor 1 everywhere or crash on the
     overwritten listing)."""
-    import os
-
-    from etl_extractor_spark.operators.common import pid_scratch_dir
     from etl_extractor_spark.plans.pipeline_ops9 import (
         streaming_dim_refresh_replay,
     )
 
     streaming_dim_refresh_replay(spark, sf_dir).collect()
-    out_dir = pid_scratch_dir("spark_graft_dimref_out_")
+    out_dir = scratch_given["spark_graft_dimref_out_"]
     got = spark.read.option("basePath", out_dir).parquet(
         out_dir + "/batch_id=*"
     )
