@@ -21,3 +21,10 @@ def q6(col: Column) -> Column:
     identical exact integers on both engines; the matching oracle SQL
     is ``FLOOR(x * 1000000 + 0.5) / 1000000``."""
     return F.floor(col * 1000000 + F.lit(0.5)) / 1000000
+
+
+def cents(col: str) -> Column:
+    """Exact integer cents of a money column: the decimal cast comes
+    BEFORE the scale-up, so no double round-off. The matching oracle
+    SQL is ``CAST(CAST(col AS DECIMAL(18,2)) * 100 AS BIGINT)``."""
+    return (F.col(col).cast("decimal(18,2)") * 100).cast("long")

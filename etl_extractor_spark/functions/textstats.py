@@ -36,30 +36,10 @@ def bpe_token_count(c: ColumnOrName) -> Column:
     return F.size(F.regexp_extract_all(_col(c), F.lit(TOKEN_REGEX), 0)).cast("long")
 
 
-def distinct_token_ratio(c: ColumnOrName) -> Column:
-    """Type-token ratio — low values signal repetitive/degenerate text."""
-    t = tokens(c)
-    return F.round(F.size(F.array_distinct(t)) / F.size(t), 4)
-
-
-def avg_token_length(c: ColumnOrName) -> Column:
-    t = tokens(c)
-    return F.round(
-        F.aggregate(t, F.lit(0).cast("double"), lambda acc, x: acc + F.length(x))
-        / F.size(t),
-        4,
-    )
-
-
 def _marker_hits(c: ColumnOrName, markers: tuple[str, ...]) -> Column:
     t = tokens(c)
     arr = F.array(*[F.lit(m) for m in markers])
     return F.size(F.filter(t, lambda x: F.array_contains(arr, x))).cast("long")
-
-
-def stopword_ratio(c: ColumnOrName, stopwords: tuple[str, ...] = EN_MARKERS) -> Column:
-    t = tokens(c)
-    return F.round(_marker_hits(c, stopwords) / F.size(t), 4)
 
 
 def lang_scores(c: ColumnOrName) -> dict[str, Column]:

@@ -544,26 +544,29 @@ def connected_components(
     nodes: single-column frame of ids; edges: (id_a, id_b) undirected.
     Returns (node, cluster_id = min id in component).
     """
+    from etl_extractor_spark.operators.checkpoints import reliable_checkpoint
+
     bidir = (
         edges.selectExpr("id_a AS src", "id_b AS dst")
         .unionByName(edges.selectExpr("id_b AS src", "id_a AS dst"))
         .distinct()
         .persist()
     )
-    labels = nodes.toDF("node").withColumn("lbl", F.col("node")).persist()
+    labels = nodes.toDF("node").withColumn("lbl", F.col("node"))
     for _ in range(max_iter):
         neighbor_min = (
             bidir.join(labels, bidir.src == labels.node)
             .groupBy(F.col("dst").alias("node"))
             .agg(F.min("lbl").alias("nlbl"))
         )
-        new_labels = (
-            labels.join(neighbor_min, "node", "left")
-            .select(
+        # each round's plan refers to the previous labels twice: cut it
+        # on disk so the plan stays one round deep (same rule as the
+        # star version below)
+        new_labels = reliable_checkpoint(
+            labels.join(neighbor_min, "node", "left").select(
                 "node",
                 F.least(F.col("lbl"), F.coalesce("nlbl", F.col("lbl"))).alias("lbl"),
             )
-            .persist()
         )
         changed = (
             new_labels.join(labels.withColumnRenamed("lbl", "old"), "node")
@@ -571,7 +574,6 @@ def connected_components(
             .limit(1)
             .count()
         )
-        labels.unpersist()
         labels = new_labels
         if changed == 0:
             break

@@ -20,24 +20,6 @@ from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
 from etl_extractor_spark.functions.dates import date_dim_columns, parse_date
-from etl_extractor_spark.functions.text import normalize_text, prefixed_key
-
-
-def build_dim(
-    df: DataFrame,
-    key_col: str,
-    prefix: str,
-    attrs: dict[str, Column],
-    width: int = 9,
-    business_key_name: str = "business_key",
-) -> DataFrame:
-    """Generic dim: synthesize prefixed business key, project attrs,
-    full-row dedup (P5), deterministic order for stable comparison."""
-    out = df.select(
-        prefixed_key(key_col, prefix, width).alias(business_key_name),
-        *[expr.alias(name) for name, expr in attrs.items()],
-    )
-    return out.dropDuplicates()
 
 
 def add_surrogate_key(
@@ -88,14 +70,4 @@ def build_dim_date(dates: list[DataFrame | Column] | DataFrame) -> DataFrame:
         attrs["fecha_key"].alias("fecha_key"),
         F.col("fecha"),
         *[attrs[k].alias(k) for k in ("anio", "mes", "dia", "trimestre", "mes_nombre", "dia_semana")],
-    )
-
-
-def clean_dim_text(df: DataFrame, cols: list[str]) -> DataFrame:
-    """Apply normalize_text (F1) to the given string attributes."""
-    return df.select(
-        *[
-            normalize_text(c).alias(c) if c in cols else F.col(c)
-            for c in df.columns
-        ]
     )

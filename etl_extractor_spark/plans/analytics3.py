@@ -19,6 +19,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from etl_extractor_spark.functions import textstats as ts
+from etl_extractor_spark.plans.stats import _hex8_to_int_sql
 from etl_extractor_spark.sources.parquet import load_table
 
 # ---------------------------------------------------------------------------
@@ -1013,18 +1014,10 @@ def weighted_sample_orders(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def _ws_hex8(expr: str) -> str:
-    return " + ".join(
-        f"(CAST(strpos('0123456789abcdef', substr({expr}, {1 + j}, 1)) - 1 AS BIGINT)"
-        f" << {4 * (7 - j)})"
-        for j in range(8)
-    )
-
-
 WEIGHTED_SAMPLE_SQL = f"""
 WITH j AS (
   SELECT c_mktsegment, o_orderkey, o_totalprice AS w,
-         ({_ws_hex8("md5(CAST(o_orderkey AS VARCHAR))")}) / 4294967296.0 AS u
+         ({_hex8_to_int_sql("md5(CAST(o_orderkey AS VARCHAR))")}) / 4294967296.0 AS u
   FROM orders JOIN customer ON o_custkey = c_custkey
 ), ranked AS (
   SELECT c_mktsegment, o_orderkey, w,

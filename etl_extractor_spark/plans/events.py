@@ -807,7 +807,6 @@ def streaming_kmv_reach_replay(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     emitted = SE.run_to_memory(
         SE.streaming_kmv_reach(SE.events_stream(spark, sf_dir)),
-        "t_kmv_reach_replay",
         output_mode="update",
         state_partitions=SE.state_partitions_for(spark, sf_dir),
     )
@@ -837,7 +836,6 @@ def streaming_tumbling_replay(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     return SE.run_to_memory(
         SE.streaming_tumbling(SE.events_stream(spark, sf_dir)),
-        "t_tumbling_replay",
         output_mode="complete",
         state_partitions=SE.state_partitions_for(spark, sf_dir),
     )
@@ -859,7 +857,6 @@ def streaming_sessionize_replay(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     return SE.run_to_memory(
         SE.streaming_sessionize(SE.events_stream(spark, sf_dir)),
-        "t_sessionize_replay",
         output_mode="complete",
         state_partitions=SE.state_partitions_for(spark, sf_dir),
     )
@@ -971,7 +968,6 @@ def streaming_interval_join_replay(spark: SparkSession, sf_dir: str) -> DataFram
 
     return SE.run_to_memory(
         SE.streaming_interval_join(spark, sf_dir),
-        "t_interval_join_replay",
         output_mode="append",
         # volume-sized state partitioning: stream-stream joins pay a
         # state store per shuffle partition per side per epoch —
@@ -1007,7 +1003,6 @@ def streaming_dedup_replay(spark: SparkSession, sf_dir: str) -> DataFrame:
     deduped = SE.streaming_dedup_exact(SE.documents_stream(spark, sf_dir))
     return SE.run_to_memory(
         deduped.select("content_hash"),
-        "t_dedup_replay",
         output_mode="append",
         state_partitions=SE.state_partitions_for(spark, sf_dir, table="documents"),
     ).select("content_hash").orderBy("content_hash")

@@ -28,17 +28,13 @@ from etl_extractor_spark.operators.facts import (
 from etl_extractor_spark.sources.parquet import load_table
 
 
-def _t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
-    return load_table(spark, sf_dir, name)
-
-
 # --- dimensions ---------------------------------------------------------
 
 
 def dim_customer(spark: SparkSession, sf_dir: str) -> DataFrame:
     """dim_cliente analog (reference main.py:101-116): prefixed business
     key (F9/F10), normalized text (F1), projection (P1), dedup (P5)."""
-    c = _t(spark, sf_dir, "customer")
+    c = load_table(spark, sf_dir, "customer")
     return c.select(
         prefixed_key("c_custkey", "C", 9).alias("cliente_id"),
         normalize_text("c_name").alias("nombre"),
@@ -57,7 +53,7 @@ FROM customer
 
 def dim_product(spark: SparkSession, sf_dir: str) -> DataFrame:
     """dim_producto analog (reference main.py:121-139)."""
-    p = _t(spark, sf_dir, "part")
+    p = load_table(spark, sf_dir, "part")
     return p.select(
         prefixed_key("p_partkey", "P", 9).alias("producto_id"),
         normalize_text("p_name").alias("nombre"),
@@ -79,7 +75,7 @@ FROM part
 def dim_source(spark: SparkSession, sf_dir: str) -> DataFrame:
     """dim_fuente analog (reference main.py:144-159): rename + project +
     dedup, F### business keys."""
-    s = _t(spark, sf_dir, "supplier")
+    s = load_table(spark, sf_dir, "supplier")
     return s.select(
         prefixed_key("s_suppkey", "F", 9).alias("fuente_id"),
         normalize_text("s_name").alias("nombre"),
@@ -100,8 +96,8 @@ def dim_date(spark: SparkSession, sf_dir: str) -> DataFrame:
     """dim_fecha analog (F4; reference main.py:164-190): union of the
     date columns of two fact-side tables → parse → distinct → calendar
     attributes. Date surfaced as DATE for stable comparison."""
-    o = _t(spark, sf_dir, "orders").select("o_orderdate")
-    l = _t(spark, sf_dir, "lineitem").select("l_shipdate")
+    o = load_table(spark, sf_dir, "orders").select("o_orderdate")
+    l = load_table(spark, sf_dir, "lineitem").select("l_shipdate")
     dim = build_dim_date([o, l])
     return dim.select(
         "fecha_key",
@@ -143,8 +139,8 @@ def fact_conformed(spark: SparkSession, sf_dir: str) -> DataFrame:
     union at main.py:289-303): two heterogeneous sources projected onto
     one canonical 7-column schema (source tag, string FKs, coerced
     score, yyyymmdd date key, truncated text) then unionByName."""
-    o = _t(spark, sf_dir, "orders")
-    e = _t(spark, sf_dir, "events")
+    o = load_table(spark, sf_dir, "orders")
+    e = load_table(spark, sf_dir, "events")
     orders_block = conform_block(
         o,
         {
@@ -206,8 +202,8 @@ def fact_enriched(spark: SparkSession, sf_dir: str) -> DataFrame:
     """J1 lookup-enrich with sentinel: events left-join customer on
     user_id=c_custkey (some user_ids have no customer at tiny SF → the
     '-1' sentinel path is exercised). Dim side broadcast."""
-    e = _t(spark, sf_dir, "events")
-    c = _t(spark, sf_dir, "customer")
+    e = load_table(spark, sf_dir, "events")
+    c = load_table(spark, sf_dir, "customer")
     enriched = enrich_lookup(
         e.select(
             "event_id",
@@ -250,8 +246,8 @@ def fk_modulo_fold(spark: SparkSession, sf_dir: str) -> DataFrame:
     """J5/A1: scalar max over the dimension, then fold every lineitem
     part key into [1, max] (reference main.py:347-372). The scalar agg
     is the only driver-side materialization."""
-    p = _t(spark, sf_dir, "part")
-    l = _t(spark, sf_dir, "lineitem")
+    p = load_table(spark, sf_dir, "part")
+    l = load_table(spark, sf_dir, "lineitem")
     max_part = int(scalar_agg(p, F.max("p_partkey")))
     return (
         l.select(
@@ -274,7 +270,7 @@ FROM lineitem, m
 
 def scalar_bounds(spark: SparkSession, sf_dir: str) -> DataFrame:
     """A1/A2/A3: min/max/count scalar aggregates in one plan."""
-    c = _t(spark, sf_dir, "customer")
+    c = load_table(spark, sf_dir, "customer")
     return c.agg(
         F.min("c_custkey").cast("long").alias("min_key"),
         F.max("c_custkey").cast("long").alias("max_key"),
@@ -296,7 +292,7 @@ def surrogate_suppliers(spark: SparkSession, sf_dir: str) -> DataFrame:
     """O1/W1: deterministic surrogate keys — row_number over the natural
     key order, matching the reference's sort-then-IDENTITY
     (reference sync_dimensions_dw.py:33)."""
-    s = _t(spark, sf_dir, "supplier")
+    s = load_table(spark, sf_dir, "supplier")
     w = Window.orderBy(F.col("s_suppkey"))
     return s.select(
         F.row_number().over(w).cast("long").alias("sk"),
@@ -317,7 +313,7 @@ def window_top_orders(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Window function: top-3 orders per customer by totalprice
     (partitioned window — shuffles once on the partition key; no global
     sort)."""
-    o = _t(spark, sf_dir, "orders")
+    o = load_table(spark, sf_dir, "orders")
     w = Window.partitionBy("o_custkey").orderBy(
         F.desc("o_totalprice"), F.asc("o_orderkey")
     )
@@ -347,7 +343,7 @@ def orders_systematic_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Deterministic 10% systematic sample by key modulo — the
     reproducible sampling primitive (hash/TABLESAMPLE variants are
     engine-specific; key-modulo is exact in both engines)."""
-    o = _t(spark, sf_dir, "orders")
+    o = load_table(spark, sf_dir, "orders")
     return (
         o.filter(F.pmod(F.col("o_orderkey"), F.lit(10)) == 0)
         .groupBy("o_orderstatus")
@@ -370,7 +366,7 @@ def orders_stratified_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Stratified sampling (sampleBy): per-stratum fractions with a
     fixed seed — rows-only (Bernoulli draws are engine-specific); the
     driver checks shape, tests bound the per-stratum rates."""
-    o = _t(spark, sf_dir, "orders")
+    o = load_table(spark, sf_dir, "orders")
     fractions = {"F": 0.2, "O": 0.1, "P": 0.5}
     return (
         o.sampleBy("o_orderstatus", fractions, seed=42)
@@ -383,7 +379,7 @@ def profile_orders(spark: SparkSession, sf_dir: str) -> DataFrame:
     """One-pass data-quality profile of the orders table."""
     from etl_extractor_spark.operators.profile import profile_table
 
-    o = _t(spark, sf_dir, "orders").select(
+    o = load_table(spark, sf_dir, "orders").select(
         "o_orderkey", "o_custkey", "o_orderstatus", "o_totalprice"
     )
     return profile_table(o)
@@ -422,10 +418,10 @@ def star_join_detail(spark: SparkSession, sf_dir: str) -> DataFrame:
     (reference test.py:26-32): a ROW-LEVEL 4-way star join projecting
     attributes from the fact and every dimension — no aggregation —
     with a deterministic top-100 preview (test.py prints head())."""
-    o = _t(spark, sf_dir, "orders")
-    c = _t(spark, sf_dir, "customer")
-    n = _t(spark, sf_dir, "nation")
-    r = _t(spark, sf_dir, "region")
+    o = load_table(spark, sf_dir, "orders")
+    c = load_table(spark, sf_dir, "customer")
+    n = load_table(spark, sf_dir, "nation")
+    r = load_table(spark, sf_dir, "region")
     return (
         o.join(c, o.o_custkey == c.c_custkey)
         .join(F.broadcast(n), c.c_nationkey == n.n_nationkey)
@@ -510,7 +506,7 @@ def orders_stratified_sample_hash(spark: SparkSession, sf_dir: str) -> DataFrame
     scale this IS the production sampler: reproducible across cluster
     sizes, re-runs, and engines, unlike seeded Bernoulli whose draws
     depend on partitioning."""
-    o = _t(spark, sf_dir, "orders")
+    o = load_table(spark, sf_dir, "orders")
     bucket = F.pmod(
         F.conv(
             F.substring(F.md5(F.col("o_orderkey").cast("string")), 1, 8),

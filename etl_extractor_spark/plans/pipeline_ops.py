@@ -1173,7 +1173,6 @@ def streaming_rate_limit_replay(spark: SparkSession, sf_dir: str) -> DataFrame:
     return (
         SE.run_to_memory(
             kept,
-            "t_rate_limit_replay",
             output_mode="append",
             state_partitions=SE.state_partitions_for(spark, sf_dir),
         )

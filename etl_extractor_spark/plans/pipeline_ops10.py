@@ -38,6 +38,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
+from etl_extractor_spark.functions.quantize import cents as _cents
 from etl_extractor_spark.sources.parquet import load_table
 
 QUERIES: dict = {}
@@ -49,10 +50,6 @@ def _r6(col):
     (same as mann_whitney_u's z), mirrored as floor(x*1e6 + 0.5)/1e6
     in every oracle."""
     return F.floor(col * 1000000 + F.lit(0.5)) / 1000000
-
-
-def _cents(col: str):
-    return (F.col(col).cast("decimal(18,2)") * 100).cast("long")
 
 
 def _grp(col: str = "o_orderpriority"):
@@ -1777,9 +1774,7 @@ def streaming_quantile_grid_replay(spark: SparkSession, sf_dir: str) -> DataFram
     counts = stream.groupBy(bucket.alias("bkt")).agg(
         F.count(F.lit(1)).cast("long").alias("c")
     )
-    state = SE.run_to_memory(
-        counts, "qgrid_state", output_mode="complete", state_partitions=8
-    )
+    state = SE.run_to_memory(counts, output_mode="complete", state_partitions=8)
     w = Window.orderBy("bkt").rowsBetween(Window.unboundedPreceding, 0)
     cum = state.withColumn("cum", F.sum("c").over(w).cast("long"))
     n = cum.agg(F.max("cum").cast("long").alias("n"))
@@ -2821,9 +2816,7 @@ def streaming_vwap_replay(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.sum("vw").alias("svw"),
         F.sum("w").cast("long").alias("total_w"),
     )
-    state = SE.run_to_memory(
-        pairs, "svwap_state", output_mode="complete", state_partitions=8
-    )
+    state = SE.run_to_memory(pairs, output_mode="complete", state_partitions=8)
     vwap = F.floor(
         F.col("svw").cast("double") / F.col("total_w").cast("double") * 1000000
     ).cast("long")

@@ -439,7 +439,6 @@ def streaming_funnel_replay(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     emitted = SE.run_to_memory(
         SE.streaming_funnel(SE.events_stream(spark, sf_dir)),
-        "t_funnel_replay",
         output_mode="update",
         state_partitions=SE.state_partitions_for(spark, sf_dir),
     )
@@ -1760,7 +1759,6 @@ def streaming_interval_union_replay(spark: SparkSession, sf_dir: str) -> DataFra
 
     emitted = SE.run_to_memory(
         SE.streaming_interval_union(SE.events_stream(spark, sf_dir)),
-        "t_interval_union_replay",
         output_mode="update",
         state_partitions=SE.state_partitions_for(spark, sf_dir),
     )

@@ -963,7 +963,6 @@ def streaming_enrich_replay(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     return SE.run_to_memory(
         SE.streaming_enriched_totals(spark, sf_dir),
-        "t_enrich_replay",
         output_mode="complete",
         state_partitions=SE.state_partitions_for(spark, sf_dir),
     )

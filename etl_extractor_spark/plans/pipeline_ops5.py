@@ -1352,6 +1352,7 @@ def streaming_heavy_hitters_replay(spark: SparkSession, sf_dir: str) -> DataFram
     100 TB: per-batch state is O(k·partitions) rows appended to the
     candidate table; no streaming state store, nothing driver-side."""
     from etl_extractor_spark.operators.common import fan_out, pid_scratch_dir
+    from etl_extractor_spark.streaming.events_stream import run_foreach_batch
 
     base = pid_scratch_dir("spark_graft_mg_replay_")
     out_dir = f"{base}/cands"
@@ -1369,13 +1370,7 @@ def streaming_heavy_hitters_replay(spark: SparkSession, sf_dir: str) -> DataFram
             out_dir
         )
 
-    q = (
-        stream.writeStream.foreachBatch(apply_batch)
-        .option("checkpointLocation", f"{base}/ckpt")
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
+    run_foreach_batch(stream, apply_batch, f"{base}/ckpt")
     cand = spark.read.parquet(out_dir).distinct()
     li = load_table(spark, sf_dir, "lineitem")
     keys = fan_out(li.select(_skew_key("l_orderkey").alias("k")))

@@ -475,7 +475,6 @@ def streaming_outer_join_replay(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     return SE.run_to_memory(
         SE.streaming_interval_join_outer(spark, sf_dir),
-        "t_ssjoin_outer_replay",
         output_mode="append",
         # volume-sized state partitioning (see events.py's inner-join
         # replay and streaming/events_stream.state_partitions_for)

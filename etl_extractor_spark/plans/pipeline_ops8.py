@@ -26,16 +26,11 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from etl_extractor_spark.functions.quantize import cents as _cents
 from etl_extractor_spark.sources.parquet import load_table
 
 QUERIES: dict = {}
 ORACLES: dict = {}
-
-
-def _order_cents() -> F.Column:
-    """Exact integer cents for o_totalprice (the repo convention:
-    decimal cast BEFORE the scale-up, so no double round-off)."""
-    return (F.col("o_totalprice").cast("decimal(18,2)") * 100).cast("long")
 
 
 _CENTS_SQL = "CAST(CAST(o_totalprice AS DECIMAL(18,2)) * 100 AS BIGINT)"
@@ -68,7 +63,7 @@ def pivot_wide_nation_year(spark: SparkSession, sf_dir: str) -> DataFrame:
     o = load_table(spark, sf_dir, "orders").select(
         "o_custkey",
         F.substring(F.col("o_orderdate").cast("string"), 1, 4).alias("yr"),
-        _order_cents().alias("cents"),
+        _cents("o_totalprice").alias("cents"),
     )
     c = load_table(spark, sf_dir, "customer").select("c_custkey", "c_nationkey")
     n = load_table(spark, sf_dir, "nation").select("n_nationkey", "n_name")
@@ -128,7 +123,7 @@ def cusum_changepoint_daily(spark: SparkSession, sf_dir: str) -> DataFrame:
     o = load_table(spark, sf_dir, "orders").select(
         "o_custkey",
         F.substring(F.col("o_orderdate").cast("string"), 1, 10).alias("day"),
-        _order_cents().alias("cents"),
+        _cents("o_totalprice").alias("cents"),
     )
     c = load_table(spark, sf_dir, "customer").select("c_custkey", "c_nationkey")
     n = load_table(spark, sf_dir, "nation").select("n_nationkey", "n_name")
@@ -239,7 +234,7 @@ def merkle_range_diff(spark: SparkSession, sf_dir: str) -> DataFrame:
     never collected; the keyspace max joins in as a broadcast 1-row
     aggregate, never collected either."""
     base = load_table(spark, sf_dir, "orders").select(
-        "o_orderkey", _order_cents().alias("cents")
+        "o_orderkey", _cents("o_totalprice").alias("cents")
     )
     mx = base.agg(F.max("o_orderkey").alias("mx"))
     keyed = base.crossJoin(F.broadcast(mx))
@@ -391,7 +386,7 @@ def mv_incremental_join_enrich(spark: SparkSession, sf_dir: str) -> DataFrame:
         "o_orderkey",
         "o_custkey",
         F.substring(F.col("o_orderdate").cast("string"), 1, 4).alias("year"),
-        _order_cents().alias("cents"),
+        _cents("o_totalprice").alias("cents"),
     )
     c = load_table(spark, sf_dir, "customer").select(
         "c_custkey", "c_mktsegment"
@@ -662,7 +657,7 @@ def bloom_file_skipping_scan(spark: SparkSession, sf_dir: str) -> DataFrame:
     from etl_extractor_spark.sinks import bloom as BL
 
     o = load_table(spark, sf_dir, "orders").select(
-        "o_orderkey", "o_custkey", _order_cents().alias("cents")
+        "o_orderkey", "o_custkey", _cents("o_totalprice").alias("cents")
     )
     path = pid_scratch_dir("spark_graft_bloom_")
     o.repartition(32, "o_custkey").write.mode("overwrite").parquet(path)
@@ -789,7 +784,6 @@ def streaming_late_data_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     src = _build_late_batches(spark, sf_dir)
     return SE.run_to_memory(
         _late_stream_agg(spark, src),
-        "t_late_data_audit",
         output_mode="append",
         state_partitions=SE.state_partitions_for(spark, sf_dir),
     ).orderBy("window_start")
@@ -857,7 +851,7 @@ def manifest_incremental_diff(spark: SparkSession, sf_dir: str) -> DataFrame:
     base = load_table(spark, sf_dir, "orders").select(
         "o_orderkey",
         F.substring(F.col("o_orderdate").cast("string"), 1, 10).alias("day"),
-        _order_cents().alias("cents"),
+        _cents("o_totalprice").alias("cents"),
     )
     v1 = base.filter(F.col("day") < "2001-01-01").select("o_orderkey", "cents")
     path = pid_scratch_dir("spark_graft_incdiff_")
@@ -1513,7 +1507,7 @@ def _cdc_orders(spark: SparkSession, sf_dir: str) -> DataFrame:
     return load_table(spark, sf_dir, "orders").select(
         "o_orderkey",
         F.substring(F.col("o_orderdate").cast("string"), 1, 10).alias("day"),
-        _order_cents().alias("cents"),
+        _cents("o_totalprice").alias("cents"),
     )
 
 
@@ -2067,7 +2061,7 @@ def python_udtf_installments(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     spark.udtf.register("installments", Installments)
     load_table(spark, sf_dir, "orders").select(
-        "o_orderkey", _order_cents().alias("cents")
+        "o_orderkey", _cents("o_totalprice").alias("cents")
     ).createOrReplaceTempView("_udtf_orders")
     return spark.sql(
         """

@@ -20,6 +20,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from etl_extractor_spark.functions.quantize import cents as _cents
+from etl_extractor_spark.plans.pipeline_ops8 import _CENTS_SQL
 from etl_extractor_spark.sources.parquet import load_table
 
 QUERIES: dict = {}
@@ -123,34 +125,17 @@ def streaming_crash_resume_replay(spark: SparkSession, sf_dir: str) -> DataFrame
                 "injected: sink wrote batch 1, offset not committed"
             )
 
-    def start():
-        return (
-            agg_stream()
-            .writeStream.foreachBatch(write_batch)
-            .outputMode("update")
-            .option("checkpointLocation", ckpt)
-            .trigger(availableNow=True)
-            .start()
-        )
-
     n_state = SE.state_partitions_for(spark, sf_dir)
-    prev_sp = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", str(n_state))
     try:
-        q = start()
-        try:
-            q.awaitTermination()
-            raise AssertionError(
-                "crash injection did not fire — fixture produced "
-                f"batches {crash['batches']}, expected a failure at 1"
-            )
-        except StreamingQueryException as ex:
-            if "injected" not in str(ex):
-                raise
-        q2 = start()
-        q2.awaitTermination()
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prev_sp)
+        SE.run_foreach_batch(agg_stream(), write_batch, ckpt, "update", n_state)
+        raise AssertionError(
+            "crash injection did not fire — fixture produced "
+            f"batches {crash['batches']}, expected a failure at 1"
+        )
+    except StreamingQueryException as ex:
+        if "injected" not in str(ex):
+            raise
+    SE.run_foreach_batch(agg_stream(), write_batch, ckpt, "update", n_state)
     # Recovery contract, asserted in-query so a silent from-origin
     # replay can never reach the (value-identical) result: batch 0
     # exactly once, batch 1 twice (the idempotent retry), batch 2 once.
@@ -186,13 +171,6 @@ ORACLES["streaming_crash_resume_replay"] = """
 # --- 2. Shallow clone: zero-copy fork + divergence isolation -----------------
 
 
-_ORDER_CENTS_SQL = "CAST(CAST(o_totalprice AS DECIMAL(18,2)) * 100 AS BIGINT)"
-
-
-def _order_cents() -> F.Column:
-    return (F.col("o_totalprice").cast("decimal(18,2)") * 100).cast("long")
-
-
 def manifest_shallow_clone(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Zero-copy SHALLOW CLONE with divergence isolation
     (``sinks/manifest.shallow_clone``): commit orders as a
@@ -216,7 +194,7 @@ def manifest_shallow_clone(spark: SparkSession, sf_dir: str) -> DataFrame:
     from etl_extractor_spark.sinks import manifest as MF
 
     o = load_table(spark, sf_dir, "orders").select(
-        "o_orderkey", _order_cents().alias("cents")
+        "o_orderkey", _cents("o_totalprice").alias("cents")
     )
     src = pid_scratch_dir("spark_graft_clone_src_")
     dst = pid_scratch_dir("spark_graft_clone_dst_")
@@ -257,11 +235,11 @@ QUERIES["manifest_shallow_clone"] = manifest_shallow_clone
 ORACLES["manifest_shallow_clone"] = f"""
     SELECT 'clone' AS side,
            count(*)::BIGINT AS n_orders,
-           CAST(sum({_ORDER_CENTS_SQL}) AS BIGINT) AS revenue_cents
+           CAST(sum({_CENTS_SQL}) AS BIGINT) AS revenue_cents
     FROM orders WHERE o_orderkey % 13 != 0
     UNION ALL
     SELECT 'source', count(*)::BIGINT,
-           CAST(sum({_ORDER_CENTS_SQL}) AS BIGINT)
+           CAST(sum({_CENTS_SQL}) AS BIGINT)
     FROM orders
     ORDER BY side
 """
@@ -315,7 +293,7 @@ def gap_fill_interpolate(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.expr("datediff(o_orderdate, DATE'1990-01-01')")
             .cast("long")
             .alias("d"),
-            _order_cents().alias("cents"),
+            _cents("o_totalprice").alias("cents"),
         )
         .groupBy("nation", "d")
         .agg(F.sum("cents").cast("long").alias("v"))
@@ -388,7 +366,7 @@ ORACLES["gap_fill_interpolate"] = f"""
     WITH j AS (
       SELECT n_name AS nation,
              date_diff('day', DATE '1990-01-01', CAST(o_orderdate AS DATE)) AS d,
-             {_ORDER_CENTS_SQL} AS cents
+             {_CENTS_SQL} AS cents
       FROM orders
       JOIN customer ON o_custkey = c_custkey
       JOIN nation ON c_nationkey = n_nationkey
@@ -461,7 +439,7 @@ def wap_audit_publish(spark: SparkSession, sf_dir: str) -> DataFrame:
     from etl_extractor_spark.sinks import manifest as MF
 
     o = load_table(spark, sf_dir, "orders").select(
-        "o_orderkey", "o_orderdate", _order_cents().alias("cents")
+        "o_orderkey", "o_orderdate", _cents("o_totalprice").alias("cents")
     )
     path = pid_scratch_dir("spark_graft_wap_")
     split = F.col("o_orderdate") < F.lit("2000-01-01")
@@ -501,7 +479,7 @@ QUERIES["wap_audit_publish"] = wap_audit_publish
 ORACLES["wap_audit_publish"] = f"""
     SELECT substr(CAST(o_orderdate AS VARCHAR), 1, 4) AS year,
            count(*)::BIGINT AS n_orders,
-           CAST(sum({_ORDER_CENTS_SQL}) AS BIGINT) AS revenue_cents
+           CAST(sum({_CENTS_SQL}) AS BIGINT) AS revenue_cents
     FROM orders GROUP BY 1 ORDER BY year
 """
 
@@ -532,6 +510,7 @@ def streaming_dim_refresh_replay(spark: SparkSession, sf_dir: str) -> DataFrame:
     import os
 
     from etl_extractor_spark.operators.common import pid_scratch_dir
+    from etl_extractor_spark.streaming import events_stream as SE
 
     src = _build_mod3_batches(
         spark,
@@ -572,15 +551,12 @@ def streaming_dim_refresh_replay(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         write_dim(batch_id + 1)  # next version, visible to batch k+1
 
-    q = (
+    SE.run_foreach_batch(
         spark.readStream.schema(schema)
         .option("maxFilesPerTrigger", 1)
-        .parquet(src + "/ev-*.parquet")
-        .writeStream.foreachBatch(handle)
-        .trigger(availableNow=True)
-        .start()
+        .parquet(src + "/ev-*.parquet"),
+        handle,
     )
-    q.awaitTermination()
 
     enriched = spark.read.option("basePath", out_dir).parquet(
         out_dir + "/batch_id=*"
@@ -662,7 +638,7 @@ def runtime_filter_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     execution really ran the filtered plan."""
     def build() -> DataFrame:
         o = load_table(spark, sf_dir, "orders").select(
-            "o_custkey", _order_cents().alias("cents")
+            "o_custkey", _cents("o_totalprice").alias("cents")
         )
         c = (
             load_table(spark, sf_dir, "customer")
@@ -689,7 +665,7 @@ QUERIES["runtime_filter_join"] = runtime_filter_join
 ORACLES["runtime_filter_join"] = f"""
     SELECT n_name AS nation,
            count(*)::BIGINT AS n_orders,
-           CAST(sum({_ORDER_CENTS_SQL}) AS BIGINT) AS revenue_cents
+           CAST(sum({_CENTS_SQL}) AS BIGINT) AS revenue_cents
     FROM orders
     JOIN customer ON o_custkey = c_custkey AND c_custkey % 97 = 0
     JOIN nation ON c_nationkey = n_nationkey
@@ -725,7 +701,7 @@ def tokenize_referential_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     n = load_table(spark, sf_dir, "nation").select("n_nationkey", "n_name")
     o = load_table(spark, sf_dir, "orders").select(
-        tok("o_custkey").alias("token"), _order_cents().alias("cents")
+        tok("o_custkey").alias("token"), _cents("o_totalprice").alias("cents")
     )
     return (
         o.join(c, "token")
@@ -745,7 +721,7 @@ ORACLES["tokenize_referential_join"] = f"""
     SELECT n_name AS nation,
            count(*)::BIGINT AS n_orders,
            count(DISTINCT o_custkey)::BIGINT AS n_customers,
-           CAST(sum({_ORDER_CENTS_SQL}) AS BIGINT) AS revenue_cents
+           CAST(sum({_CENTS_SQL}) AS BIGINT) AS revenue_cents
     FROM orders
     JOIN customer ON o_custkey = c_custkey
     JOIN nation ON c_nationkey = n_nationkey
@@ -948,33 +924,16 @@ def streaming_crash_resume_custom_state(
             crash["armed"] = False
             raise _InjectedCrash("injected: custom-state crash at batch 1")
 
-    def start():
-        return (
-            stateful_stream()
-            .writeStream.foreachBatch(write_batch)
-            .outputMode("update")
-            .option("checkpointLocation", ckpt)
-            .trigger(availableNow=True)
-            .start()
-        )
-
     n_state = SE.state_partitions_for(spark, sf_dir)
-    prev_sp = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", str(n_state))
     try:
-        q = start()
-        try:
-            q.awaitTermination()
-            raise AssertionError(
-                f"crash injection did not fire: {crash['batches']}"
-            )
-        except StreamingQueryException as ex:
-            if "injected" not in str(ex):
-                raise
-        q2 = start()
-        q2.awaitTermination()
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prev_sp)
+        SE.run_foreach_batch(
+            stateful_stream(), write_batch, ckpt, "update", n_state
+        )
+        raise AssertionError(f"crash injection did not fire: {crash['batches']}")
+    except StreamingQueryException as ex:
+        if "injected" not in str(ex):
+            raise
+    SE.run_foreach_batch(stateful_stream(), write_batch, ckpt, "update", n_state)
     assert crash["batches"] == [0, 1, 1, 2], crash["batches"]
 
     emitted = spark.read.option("basePath", out_dir).parquet(
@@ -1031,7 +990,7 @@ def snapshot_row_cdf(spark: SparkSession, sf_dir: str) -> DataFrame:
     from etl_extractor_spark.sinks import manifest as MF
 
     o = load_table(spark, sf_dir, "orders").select(
-        "o_orderkey", "o_orderdate", _order_cents().alias("cents")
+        "o_orderkey", "o_orderdate", _cents("o_totalprice").alias("cents")
     )
     path = pid_scratch_dir("spark_graft_cdf_")
     split = F.col("o_orderdate") < F.lit("2001-01-01")
@@ -1080,14 +1039,14 @@ ORACLES["snapshot_row_cdf"] = f"""
       SELECT 'insert' AS change_type,
              substr(CAST(o_orderdate AS VARCHAR), 1, 4) AS year,
              count(*)::BIGINT AS n_rows,
-             CAST(sum({_ORDER_CENTS_SQL}) AS BIGINT) AS cents
+             CAST(sum({_CENTS_SQL}) AS BIGINT) AS cents
       FROM orders WHERE o_orderdate >= DATE '2001-01-01'
       GROUP BY 2
     ), del AS (
       SELECT 'delete' AS change_type,
              substr(CAST(o_orderdate AS VARCHAR), 1, 4) AS year,
              count(*)::BIGINT AS n_rows,
-             CAST(sum({_ORDER_CENTS_SQL}) AS BIGINT) AS cents
+             CAST(sum({_CENTS_SQL}) AS BIGINT) AS cents
       FROM orders
       WHERE o_orderdate < DATE '2001-01-01' AND o_orderkey % 113 = 0
       GROUP BY 2
@@ -1116,7 +1075,7 @@ def exchange_reuse_argmax(spark: SparkSession, sf_dir: str) -> DataFrame:
     actually delivers it, so a refactor that breaks subtree identity
     (e.g. a stray alias) shows up as a plan regression."""
     o = load_table(spark, sf_dir, "orders").select(
-        "o_custkey", _order_cents().alias("cents")
+        "o_custkey", _cents("o_totalprice").alias("cents")
     )
     per_cust = o.groupBy("o_custkey").agg(
         F.sum("cents").cast("long").alias("tot")
@@ -1138,7 +1097,7 @@ QUERIES["exchange_reuse_argmax"] = exchange_reuse_argmax
 ORACLES["exchange_reuse_argmax"] = f"""
     WITH t AS (
       SELECT o_custkey,
-             CAST(sum({_ORDER_CENTS_SQL}) AS BIGINT) AS tot
+             CAST(sum({_CENTS_SQL}) AS BIGINT) AS tot
       FROM orders GROUP BY 1
     )
     SELECT o_custkey AS cust_key, tot AS revenue_cents
@@ -1168,7 +1127,7 @@ def hidden_partition_pruning(spark: SparkSession, sf_dir: str) -> DataFrame:
     from etl_extractor_spark.sinks import hidden as H
 
     o = load_table(spark, sf_dir, "orders").select(
-        "o_orderkey", "o_orderdate", _order_cents().alias("cents")
+        "o_orderkey", "o_orderdate", _cents("o_totalprice").alias("cents")
     )
     path = pid_scratch_dir("spark_graft_hidden_")
     H.write_month_partitioned(spark, o, path, "o_orderdate")
@@ -1190,7 +1149,7 @@ QUERIES["hidden_partition_pruning"] = hidden_partition_pruning
 ORACLES["hidden_partition_pruning"] = f"""
     SELECT substr(CAST(o_orderdate AS VARCHAR), 1, 7) AS month,
            count(*)::BIGINT AS n_orders,
-           CAST(sum({_ORDER_CENTS_SQL}) AS BIGINT) AS revenue_cents
+           CAST(sum({_CENTS_SQL}) AS BIGINT) AS revenue_cents
     FROM orders
     WHERE o_orderdate >= DATE '1996-03-15' AND o_orderdate <= DATE '1997-06-10'
     GROUP BY 1 ORDER BY month
@@ -1306,7 +1265,7 @@ def manifest_dim_driven_skipping(spark: SparkSession, sf_dir: str) -> DataFrame:
     from etl_extractor_spark.sinks import manifest as MF
 
     o = load_table(spark, sf_dir, "orders").select(
-        "o_custkey", _order_cents().alias("cents")
+        "o_custkey", _cents("o_totalprice").alias("cents")
     )
     path = pid_scratch_dir("spark_graft_dimskip_")
     MF.write_with_manifest(
@@ -1349,7 +1308,7 @@ ORACLES["manifest_dim_driven_skipping"] = f"""
     )
     SELECT c_nationkey AS nation_key,
            count(*)::BIGINT AS n_orders,
-           CAST(sum({_ORDER_CENTS_SQL}) AS BIGINT) AS revenue_cents
+           CAST(sum({_CENTS_SQL}) AS BIGINT) AS revenue_cents
     FROM orders JOIN dim ON o_custkey = c_custkey
     GROUP BY 1 ORDER BY nation_key
 """
@@ -1433,7 +1392,7 @@ def table_history_query(spark: SparkSession, sf_dir: str) -> DataFrame:
     from etl_extractor_spark.sinks import manifest as MF
 
     o = load_table(spark, sf_dir, "orders").select(
-        "o_orderkey", "o_orderdate", _order_cents().alias("cents")
+        "o_orderkey", "o_orderdate", _cents("o_totalprice").alias("cents")
     )
     path = pid_scratch_dir("spark_graft_hist_")
     split = F.col("o_orderdate") < F.lit("2001-01-01")
@@ -1517,6 +1476,7 @@ def streaming_wap_gate_replay(spark: SparkSession, sf_dir: str) -> DataFrame:
     from etl_extractor_spark.operators.common import pid_scratch_dir
     from etl_extractor_spark.plans.pipeline_ops8 import _write_pinned_batches
     from etl_extractor_spark.sinks import manifest as MF
+    from etl_extractor_spark.streaming import events_stream as SE
 
     e = load_table(spark, sf_dir, "events").select(
         "event_id", "event_type", "value"
@@ -1553,18 +1513,13 @@ def streaming_wap_gate_replay(spark: SparkSession, sf_dir: str) -> DataFrame:
         results.append((batch_id, res["published"]))
 
     schema = spark.read.parquet(src + "/ev-b0.parquet").schema
-    q = (
+    SE.run_foreach_batch(
         spark.readStream.schema(schema)
         .option("maxFilesPerTrigger", 1)
-        .parquet(src + "/ev-*.parquet")
-        .writeStream.foreachBatch(gate)
-        .trigger(availableNow=True)
-        .option(
-            "checkpointLocation", os.path.join(table, "_stream_ckpt")
-        )
-        .start()
+        .parquet(src + "/ev-*.parquet"),
+        gate,
+        os.path.join(table, "_stream_ckpt"),
     )
-    q.awaitTermination()
     assert results == [(0, True), (1, False), (2, True)], results
     assert MF.vacuum(table, dry_run=True) == []
 
@@ -1640,7 +1595,7 @@ def scd2_temporal_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     o = load_table(spark, sf_dir, "orders").select(
         "o_custkey",
         F.col("o_orderdate").cast("string").alias("d"),
-        _order_cents().alias("cents"),
+        _cents("o_totalprice").alias("cents"),
     )
     j = o.join(
         dim,
@@ -1669,7 +1624,7 @@ ORACLES["scd2_temporal_join"] = f"""
              ELSE c_mktsegment
            END AS segment,
            count(*)::BIGINT AS n_orders,
-           CAST(sum({_ORDER_CENTS_SQL}) AS BIGINT) AS revenue_cents
+           CAST(sum({_CENTS_SQL}) AS BIGINT) AS revenue_cents
     FROM orders JOIN customer ON o_custkey = c_custkey
     GROUP BY 1 ORDER BY segment
 """
@@ -1818,7 +1773,7 @@ def write_target_file_size(spark: SparkSession, sf_dir: str) -> DataFrame:
     from etl_extractor_spark.operators.common import pid_scratch_dir
 
     o = load_table(spark, sf_dir, "orders").select(
-        "o_orderkey", _order_cents().alias("cents")
+        "o_orderkey", _cents("o_totalprice").alias("cents")
     )
     # Size from the WRITTEN projection, not the source table: the
     # projected row is a fraction of the source row and compresses
@@ -1869,7 +1824,7 @@ def write_target_file_size(spark: SparkSession, sf_dir: str) -> DataFrame:
 QUERIES["write_target_file_size"] = write_target_file_size
 ORACLES["write_target_file_size"] = f"""
     SELECT count(*)::BIGINT AS n_orders,
-           CAST(sum({_ORDER_CENTS_SQL}) AS BIGINT) AS revenue_cents
+           CAST(sum({_CENTS_SQL}) AS BIGINT) AS revenue_cents
     FROM orders
 """
 
@@ -1903,7 +1858,7 @@ def txn_consistent_read(spark: SparkSession, sf_dir: str) -> DataFrame:
     from etl_extractor_spark.sinks import manifest as MF
 
     o = load_table(spark, sf_dir, "orders").select(
-        "o_orderkey", "o_orderdate", _order_cents().alias("cents")
+        "o_orderkey", "o_orderdate", _cents("o_totalprice").alias("cents")
     )
     c = load_table(spark, sf_dir, "customer").select(
         "c_custkey", "c_mktsegment"
@@ -1970,11 +1925,11 @@ QUERIES["txn_consistent_read"] = txn_consistent_read
 ORACLES["txn_consistent_read"] = f"""
     WITH o AS (
       SELECT count(*)::BIGINT AS n,
-             CAST(sum({_ORDER_CENTS_SQL}) AS BIGINT) AS cents
+             CAST(sum({_CENTS_SQL}) AS BIGINT) AS cents
       FROM orders
     ), o2 AS (
       SELECT count(*)::BIGINT AS n,
-             CAST(sum({_ORDER_CENTS_SQL}) AS BIGINT) AS cents
+             CAST(sum({_CENTS_SQL}) AS BIGINT) AS cents
       FROM orders WHERE o_orderdate < DATE '2000-01-01'
     ), c AS (
       SELECT count(*)::BIGINT AS n FROM customer
@@ -2015,6 +1970,7 @@ def backfill_stream_handoff(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     from etl_extractor_spark.operators.common import pid_scratch_dir
     from etl_extractor_spark.plans.pipeline_ops8 import _write_pinned_batches
+    from etl_extractor_spark.streaming import events_stream as SE
 
     e = load_table(spark, sf_dir, "events").select("event_id", "ts", "value")
     days = e.select(F.to_date("ts").alias("d")).agg(
@@ -2050,16 +2006,13 @@ def backfill_stream_handoff(spark: SparkSession, sf_dir: str) -> DataFrame:
             os.path.join(out_dir, f"leg=stream-{batch_id}")
         )
 
-    q = (
+    SE.run_foreach_batch(
         spark.readStream.schema(schema)
         .option("maxFilesPerTrigger", 1)
-        .parquet(src + "/ev-*.parquet")
-        .writeStream.foreachBatch(write_batch)
-        .trigger(availableNow=True)
-        .option("checkpointLocation", os.path.join(out_dir, "_ckpt"))
-        .start()
+        .parquet(src + "/ev-*.parquet"),
+        write_batch,
+        os.path.join(out_dir, "_ckpt"),
     )
-    q.awaitTermination()
     merged = spark.read.parquet(out_dir + "/leg=*")
     return (
         merged.groupBy("day")

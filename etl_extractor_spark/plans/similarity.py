@@ -552,12 +552,6 @@ PQ_KCODE = 16  # codes per subspace (4-bit)
 PQ_QSCALE = 64  # int quantization: floor(x*64 + 0.5)
 
 
-def _pq_cent(s: int, c, j: int):
-    """Closed-form pinned codebook value for (subspace, code, dim) —
-    works with ints (oracle text) and Columns (runtime lookup)."""
-    return (s * 73 + c * 37 + j * 17) % 25 - 12
-
-
 def _pq_int_vectors(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Embeddings with the integer-quantized view ``qv`` (and the raw
     double view ``v`` for coarse assignment)."""

@@ -20,15 +20,11 @@ from pyspark.sql import functions as F
 from etl_extractor_spark.sources.parquet import load_table
 
 
-def _t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
-    return load_table(spark, sf_dir, name)
-
-
 def q1_pricing_summary(spark: SparkSession, sf_dir: str) -> DataFrame:
     """TPC-H Q1 shape: scan-filter → hash agg. The filter reaches the
     parquet scan (PushedFilters) and the agg is partial+final with no
     pre-shuffle of raw rows."""
-    l = _t(spark, sf_dir, "lineitem")
+    l = load_table(spark, sf_dir, "lineitem")
     return (
         l.filter(F.col("l_shipdate") <= F.lit("2000-09-02").cast("timestamp_ntz"))
         .groupBy("l_returnflag", "l_linestatus")
@@ -73,11 +69,11 @@ GROUP BY l_returnflag, l_linestatus
 def q3_top_revenue_orders(spark: SparkSession, sf_dir: str) -> DataFrame:
     """TPC-H Q3 shape: selective 3-way join → agg → top-k. Customer is
     dimension-sized → broadcast; top-k has a deterministic tie-break."""
-    c = _t(spark, sf_dir, "customer").filter(F.col("c_mktsegment") == "BUILDING")
-    o = _t(spark, sf_dir, "orders").filter(
+    c = load_table(spark, sf_dir, "customer").filter(F.col("c_mktsegment") == "BUILDING")
+    o = load_table(spark, sf_dir, "orders").filter(
         F.col("o_orderdate") < F.lit("1998-03-15").cast("timestamp_ntz")
     )
-    l = _t(spark, sf_dir, "lineitem").filter(
+    l = load_table(spark, sf_dir, "lineitem").filter(
         F.col("l_shipdate") > F.lit("1998-03-15").cast("timestamp_ntz")
     )
     return (
@@ -114,15 +110,15 @@ def q5_regional_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
     analog): fact ⋈ 5 dimension-side tables. region/nation/customer/
     supplier are broadcast; only lineitem⋈orders is a real shuffle join,
     and AQE picks its strategy at runtime."""
-    r = _t(spark, sf_dir, "region")
-    n = _t(spark, sf_dir, "nation")
-    c = _t(spark, sf_dir, "customer")
-    s = _t(spark, sf_dir, "supplier")
-    o = _t(spark, sf_dir, "orders").filter(
+    r = load_table(spark, sf_dir, "region")
+    n = load_table(spark, sf_dir, "nation")
+    c = load_table(spark, sf_dir, "customer")
+    s = load_table(spark, sf_dir, "supplier")
+    o = load_table(spark, sf_dir, "orders").filter(
         (F.col("o_orderdate") >= F.lit("1996-01-01").cast("timestamp_ntz"))
         & (F.col("o_orderdate") < F.lit("1997-01-01").cast("timestamp_ntz"))
     )
-    l = _t(spark, sf_dir, "lineitem")
+    l = load_table(spark, sf_dir, "lineitem")
     return (
         l.join(o, l.l_orderkey == o.o_orderkey)
         .join(s, l.l_suppkey == s.s_suppkey)
@@ -159,7 +155,7 @@ GROUP BY n_name
 def q6_revenue_forecast(spark: SparkSession, sf_dir: str) -> DataFrame:
     """TPC-H Q6 shape: pure filter+scalar agg — the whole query should
     collapse to a pushed-filter parquet scan + partial/final sum."""
-    l = _t(spark, sf_dir, "lineitem")
+    l = load_table(spark, sf_dir, "lineitem")
     return (
         l.filter(
             (F.col("l_shipdate") >= F.lit("1996-01-01").cast("timestamp_ntz"))
@@ -184,13 +180,13 @@ WHERE l_shipdate >= TIMESTAMP '1996-01-01'
 
 def q10_returned_items(spark: SparkSession, sf_dir: str) -> DataFrame:
     """TPC-H Q10 shape: revenue lost to returns per customer, top 20."""
-    c = _t(spark, sf_dir, "customer")
-    o = _t(spark, sf_dir, "orders").filter(
+    c = load_table(spark, sf_dir, "customer")
+    o = load_table(spark, sf_dir, "orders").filter(
         (F.col("o_orderdate") >= F.lit("1996-10-01").cast("timestamp_ntz"))
         & (F.col("o_orderdate") < F.lit("1997-01-01").cast("timestamp_ntz"))
     )
-    l = _t(spark, sf_dir, "lineitem").filter(F.col("l_returnflag") == "R")
-    n = _t(spark, sf_dir, "nation")
+    l = load_table(spark, sf_dir, "lineitem").filter(F.col("l_returnflag") == "R")
+    n = load_table(spark, sf_dir, "nation")
     return (
         l.join(o, l.l_orderkey == o.o_orderkey)
         .join(c, o.o_custkey == c.c_custkey)
@@ -224,9 +220,9 @@ LIMIT 20
 
 def rollup_regional(spark: SparkSession, sf_dir: str) -> DataFrame:
     """ROLLUP (region, nation) — grouping-sets aggregation."""
-    r = _t(spark, sf_dir, "region")
-    n = _t(spark, sf_dir, "nation")
-    c = _t(spark, sf_dir, "customer")
+    r = load_table(spark, sf_dir, "region")
+    n = load_table(spark, sf_dir, "nation")
+    c = load_table(spark, sf_dir, "customer")
     return (
         c.join(F.broadcast(n), c.c_nationkey == n.n_nationkey)
         .join(F.broadcast(r), n.n_regionkey == r.r_regionkey)
@@ -250,7 +246,7 @@ GROUP BY ROLLUP (r_name, n_name)
 
 def topk_parts(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Sort + limit with deterministic tie-break (O2 analog)."""
-    p = _t(spark, sf_dir, "part")
+    p = load_table(spark, sf_dir, "part")
     return (
         p.select("p_partkey", "p_name", "p_brand", "p_retailprice")
         .orderBy(F.desc("p_retailprice"), F.asc("p_partkey"))
@@ -267,7 +263,7 @@ FROM part ORDER BY p_retailprice DESC, p_partkey ASC LIMIT 5
 def set_ops_customers(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Set operators: customers with orders EXCEPT customers with any
     open ('O') order — i.e. custkeys all of whose orders are closed."""
-    o = _t(spark, sf_dir, "orders")
+    o = load_table(spark, sf_dir, "orders")
     with_orders = o.select(F.col("o_custkey").alias("custkey")).distinct()
     with_open = (
         o.filter(F.col("o_orderstatus") == "O")

@@ -12,17 +12,13 @@ from pyspark.sql import functions as F
 from etl_extractor_spark.sources.parquet import load_table
 
 
-def _t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
-    return load_table(spark, sf_dir, name)
-
-
 def q4_priority_exists(spark: SparkSession, sf_dir: str) -> DataFrame:
     """TPC-H Q4 shape: EXISTS → left-semi join, then count by priority."""
-    o = _t(spark, sf_dir, "orders").filter(
+    o = load_table(spark, sf_dir, "orders").filter(
         (F.col("o_orderdate") >= F.lit("1996-07-01").cast("timestamp_ntz"))
         & (F.col("o_orderdate") < F.lit("1996-10-01").cast("timestamp_ntz"))
     )
-    l = _t(spark, sf_dir, "lineitem")
+    l = load_table(spark, sf_dir, "lineitem")
     late = l.filter(F.col("l_shipdate") > F.lit("1996-07-01").cast("timestamp_ntz"))
     return (
         o.join(late, o.o_orderkey == late.l_orderkey, "leftsemi")
@@ -47,8 +43,8 @@ GROUP BY o_orderpriority
 def anti_customers_no_orders(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Anti join: customers that never placed an URGENT order, per
     segment (the unfiltered variant is empty at these SFs)."""
-    c = _t(spark, sf_dir, "customer")
-    urgent = _t(spark, sf_dir, "orders").filter(
+    c = load_table(spark, sf_dir, "customer")
+    urgent = load_table(spark, sf_dir, "orders").filter(
         F.col("o_orderpriority") == "1-URGENT"
     )
     return (
@@ -77,7 +73,7 @@ def q17_small_quantity_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
     """TPC-H Q17 shape: correlated scalar subquery (per-part average
     quantity) decorrelated into an aggregate + broadcast join — Catalyst
     would do the same rewrite for the SQL form."""
-    l = _t(spark, sf_dir, "lineitem")
+    l = load_table(spark, sf_dir, "lineitem")
     avg_qty = l.groupBy(F.col("l_partkey").alias("pk")).agg(
         (F.avg("l_quantity") * 0.8).alias("qty_threshold")
     )
@@ -104,9 +100,9 @@ WHERE l_quantity < (
 def q18_large_orders(spark: SparkSession, sf_dir: str) -> DataFrame:
     """TPC-H Q18 shape: HAVING over a join-back — orders whose total
     quantity exceeds a threshold, with customer context."""
-    l = _t(spark, sf_dir, "lineitem")
-    o = _t(spark, sf_dir, "orders")
-    c = _t(spark, sf_dir, "customer")
+    l = load_table(spark, sf_dir, "lineitem")
+    o = load_table(spark, sf_dir, "orders")
+    c = load_table(spark, sf_dir, "customer")
     big = (
         l.groupBy("l_orderkey")
         .agg(F.sum("l_quantity").alias("total_qty"))
@@ -143,8 +139,8 @@ JOIN customer ON o_custkey = c_custkey
 def q19_disjunctive_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
     """TPC-H Q19 shape: OR-of-ANDs predicate — exercises disjunctive
     filter pushdown and join-condition simplification."""
-    l = _t(spark, sf_dir, "lineitem")
-    p = _t(spark, sf_dir, "part")
+    l = load_table(spark, sf_dir, "lineitem")
+    p = load_table(spark, sf_dir, "part")
     joined = l.join(p, l.l_partkey == p.p_partkey)
     cond = (
         ((F.col("p_brand") == "Brand#1") & (F.col("l_quantity") <= 10) & (F.col("p_size") <= 20))
@@ -171,8 +167,8 @@ WHERE (p_brand = 'Brand#1' AND l_quantity <= 10 AND p_size <= 20)
 
 def distinct_suppliers_per_type(spark: SparkSession, sf_dir: str) -> DataFrame:
     """TPC-H Q16 shape: COUNT(DISTINCT) aggregation after a join."""
-    l = _t(spark, sf_dir, "lineitem")
-    p = _t(spark, sf_dir, "part")
+    l = load_table(spark, sf_dir, "lineitem")
+    p = load_table(spark, sf_dir, "part")
     return (
         l.join(p, l.l_partkey == p.p_partkey)
         .groupBy("p_type")
@@ -195,7 +191,7 @@ GROUP BY p_type
 def events_user_lag_rolling(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Value windows over event time: per-user lag (seconds since the
     previous event) and a 5-row rolling mean of value."""
-    e = _t(spark, sf_dir, "events")
+    e = load_table(spark, sf_dir, "events")
     w = Window.partitionBy("user_id").orderBy("ts", "event_id")
     wroll = w.rowsBetween(-4, 0)
     return e.select(

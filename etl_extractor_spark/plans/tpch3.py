@@ -12,21 +12,17 @@ from pyspark.sql import functions as F
 from etl_extractor_spark.sources.parquet import load_table
 
 
-def _t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
-    return load_table(spark, sf_dir, name)
-
-
 def q7_nation_volume(spark: SparkSession, sf_dir: str) -> DataFrame:
     """TPC-H Q7 shape: shipping volume between two specific nations by
     year — double nation join with an OR-of-pairs condition."""
-    l = _t(spark, sf_dir, "lineitem")
-    o = _t(spark, sf_dir, "orders")
-    c = _t(spark, sf_dir, "customer")
-    s = _t(spark, sf_dir, "supplier")
-    n1 = _t(spark, sf_dir, "nation").select(
+    l = load_table(spark, sf_dir, "lineitem")
+    o = load_table(spark, sf_dir, "orders")
+    c = load_table(spark, sf_dir, "customer")
+    s = load_table(spark, sf_dir, "supplier")
+    n1 = load_table(spark, sf_dir, "nation").select(
         F.col("n_nationkey").alias("s_nk"), F.col("n_name").alias("supp_nation")
     )
-    n2 = _t(spark, sf_dir, "nation").select(
+    n2 = load_table(spark, sf_dir, "nation").select(
         F.col("n_nationkey").alias("c_nk"), F.col("n_name").alias("cust_nation")
     )
     pair = (
@@ -77,17 +73,17 @@ def q8_market_share(spark: SparkSession, sf_dir: str) -> DataFrame:
     """TPC-H Q8 shape: NATION_3's share of AMERICA-region revenue per
     order year — conditional aggregation over a 6-table join tree.
     The share ratio is rounded from raw sums (no intermediate rounds)."""
-    l = _t(spark, sf_dir, "lineitem")
-    o = _t(spark, sf_dir, "orders")
-    c = _t(spark, sf_dir, "customer")
-    s = _t(spark, sf_dir, "supplier")
-    n_c = _t(spark, sf_dir, "nation").select(
+    l = load_table(spark, sf_dir, "lineitem")
+    o = load_table(spark, sf_dir, "orders")
+    c = load_table(spark, sf_dir, "customer")
+    s = load_table(spark, sf_dir, "supplier")
+    n_c = load_table(spark, sf_dir, "nation").select(
         F.col("n_nationkey").alias("cnk"), F.col("n_regionkey").alias("crk")
     )
-    n_s = _t(spark, sf_dir, "nation").select(
+    n_s = load_table(spark, sf_dir, "nation").select(
         F.col("n_nationkey").alias("snk"), F.col("n_name").alias("supp_nation")
     )
-    r = _t(spark, sf_dir, "region").filter(F.col("r_name") == "AMERICA")
+    r = load_table(spark, sf_dir, "region").filter(F.col("r_name") == "AMERICA")
     vol = F.col("l_extendedprice") * (1 - F.col("l_discount"))
     return (
         l.join(o, l.l_orderkey == o.o_orderkey)
@@ -141,11 +137,11 @@ def q15_top_supplier(spark: SparkSession, sf_dir: str) -> DataFrame:
     compare equal — each engine picked a different tied subset. Exact
     decimal money sums are order-independent, so the tie set is
     identical everywhere (same rule as events_totals_salted)."""
-    l = _t(spark, sf_dir, "lineitem").filter(
+    l = load_table(spark, sf_dir, "lineitem").filter(
         (F.col("l_shipdate") >= F.lit("1996-01-01").cast("timestamp_ntz"))
         & (F.col("l_shipdate") < F.lit("1996-04-01").cast("timestamp_ntz"))
     )
-    s = _t(spark, sf_dir, "supplier")
+    s = load_table(spark, sf_dir, "supplier")
     price = F.col("l_extendedprice").cast("decimal(18,2)")
     disc = F.col("l_discount").cast("decimal(18,2)")
     revenue = l.groupBy(F.col("l_suppkey").alias("supplier_no")).agg(
@@ -184,9 +180,9 @@ def q21_waiting_suppliers(spark: SparkSession, sf_dir: str) -> DataFrame:
     """TPC-H Q21 shape: multi-level semi + anti self-join — suppliers
     with a late line in a multi-supplier order where NO other supplier
     was late. Late = shipped after the order date + 60 days."""
-    l = _t(spark, sf_dir, "lineitem")
-    o = _t(spark, sf_dir, "orders").filter(F.col("o_orderstatus") == "F")
-    s = _t(spark, sf_dir, "supplier")
+    l = load_table(spark, sf_dir, "lineitem")
+    o = load_table(spark, sf_dir, "orders").filter(F.col("o_orderstatus") == "F")
+    s = load_table(spark, sf_dir, "supplier")
     li = l.join(o, l.l_orderkey == o.o_orderkey).select(
         "l_orderkey",
         "l_suppkey",

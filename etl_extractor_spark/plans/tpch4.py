@@ -30,18 +30,14 @@ from pyspark.sql import functions as F
 from etl_extractor_spark.sources.parquet import load_table
 
 
-def _t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
-    return load_table(spark, sf_dir, name)
-
-
 def q9_profit_by_nation(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Q9 shape: product-line profit by supplier nation and year.
     (No partsupp table: profit = discounted revenue.)"""
-    l = _t(spark, sf_dir, "lineitem")
-    p = _t(spark, sf_dir, "part").filter(F.col("p_name").contains("red"))
-    s = _t(spark, sf_dir, "supplier")
-    o = _t(spark, sf_dir, "orders")
-    n = _t(spark, sf_dir, "nation")
+    l = load_table(spark, sf_dir, "lineitem")
+    p = load_table(spark, sf_dir, "part").filter(F.col("p_name").contains("red"))
+    s = load_table(spark, sf_dir, "supplier")
+    o = load_table(spark, sf_dir, "orders")
+    n = load_table(spark, sf_dir, "nation")
     return (
         l.join(p, l.l_partkey == p.p_partkey)
         .join(s, l.l_suppkey == s.s_suppkey)
@@ -77,7 +73,7 @@ def q11_important_parts(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Q11 shape: per-part value HAVING sum > fraction of the GLOBAL
     total — the scalar subquery is a 1-row aggregate broadcast-joined
     against the grouped frame (never collected to the driver)."""
-    l = _t(spark, sf_dir, "lineitem")
+    l = load_table(spark, sf_dir, "lineitem")
     value = F.col("l_extendedprice") * (1 - F.col("l_discount"))
     per_part = l.groupBy(F.col("l_partkey").cast("long").alias("p_key")).agg(
         F.sum(value).alias("val")
@@ -107,8 +103,8 @@ def q12_priority_class(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Q12 shape: per-class counts of high- vs low-priority orders via
     conditional CASE aggregation over the orders⋈lineitem join.
     (l_linestatus stands in for the missing l_shipmode.)"""
-    l = _t(spark, sf_dir, "lineitem").filter(F.year("l_shipdate") == 1997)
-    o = _t(spark, sf_dir, "orders")
+    l = load_table(spark, sf_dir, "lineitem").filter(F.year("l_shipdate") == 1997)
+    o = load_table(spark, sf_dir, "orders")
     high = F.col("o_orderpriority").isin("1-URGENT", "2-HIGH")
     return (
         l.join(o, l.l_orderkey == o.o_orderkey)
@@ -136,8 +132,8 @@ def q13_customer_distribution(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Q13 shape: distribution of customers by order count — LEFT
     OUTER join with the order-class filter in the ON clause (so
     zero-order customers survive), then count-of-counts."""
-    c = _t(spark, sf_dir, "customer")
-    o = _t(spark, sf_dir, "orders").filter(
+    c = load_table(spark, sf_dir, "customer")
+    o = load_table(spark, sf_dir, "orders").filter(
         F.col("o_orderpriority") != "1-URGENT"
     )
     per_cust = (
@@ -167,10 +163,10 @@ GROUP BY 1
 def q14_promo_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Q14 shape: promo revenue share — 100 × conditional sum / total
     sum over the lineitem⋈part join in one month."""
-    l = _t(spark, sf_dir, "lineitem").filter(
+    l = load_table(spark, sf_dir, "lineitem").filter(
         (F.col("l_shipdate") >= "1997-03-01") & (F.col("l_shipdate") < "1997-04-01")
     )
-    p = _t(spark, sf_dir, "part")
+    p = load_table(spark, sf_dir, "part")
     rev = F.col("l_extendedprice") * (1 - F.col("l_discount"))
     return (
         l.join(p, l.l_partkey == p.p_partkey)
@@ -201,11 +197,11 @@ def q16_supplier_part_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
     NOT-IN supplier exclusion. Lineitem bridges part↔supplier (no
     partsupp table). The excluded-supplier set is tiny → broadcast
     anti join, not a shuffled NOT IN."""
-    l = _t(spark, sf_dir, "lineitem")
-    p = _t(spark, sf_dir, "part").filter(
+    l = load_table(spark, sf_dir, "lineitem")
+    p = load_table(spark, sf_dir, "part").filter(
         (F.col("p_brand") != "Brand#1") & F.col("p_size").isin(1, 4, 9, 14, 23, 36, 45, 49)
     )
-    bad = _t(spark, sf_dir, "supplier").filter(F.col("s_acctbal") < 0).select(
+    bad = load_table(spark, sf_dir, "supplier").filter(F.col("s_acctbal") < 0).select(
         F.col("s_suppkey").alias("bad_key")
     )
     return (
@@ -233,9 +229,9 @@ def q22_dormant_customers(spark: SparkSession, sf_dir: str) -> DataFrame:
     (c_mktsegment stands in for the missing phone country code; every
     customer has at least one lifetime order in this dataset, so the
     dormancy cutoff makes the anti join meaningful.)"""
-    c = _t(spark, sf_dir, "customer")
+    c = load_table(spark, sf_dir, "customer")
     o = (
-        _t(spark, sf_dir, "orders")
+        load_table(spark, sf_dir, "orders")
         .filter(F.col("o_orderdate") >= "1999-01-01")
         .select("o_custkey")
     )
@@ -271,13 +267,13 @@ def q2_cheapest_supplier(spark: SparkSession, sf_dir: str) -> DataFrame:
     into a grouped min + join-back on (part, min). Unit price comes
     from lineitem (no partsupp table). Ties on the min keep all
     achieving suppliers, exactly like TPC-H Q2."""
-    l = _t(spark, sf_dir, "lineitem").select(
+    l = load_table(spark, sf_dir, "lineitem").select(
         "l_partkey",
         "l_suppkey",
         (F.col("l_extendedprice") / F.col("l_quantity")).alias("unit_price"),
     )
-    p = _t(spark, sf_dir, "part").filter(F.col("p_size") == 7)
-    s = _t(spark, sf_dir, "supplier")
+    p = load_table(spark, sf_dir, "part").filter(F.col("p_size") == 7)
+    s = load_table(spark, sf_dir, "supplier")
     offers = (
         l.join(p, l.l_partkey == p.p_partkey)
         .groupBy("l_partkey", "l_suppkey")
@@ -330,10 +326,10 @@ def q20_dominant_suppliers(spark: SparkSession, sf_dir: str) -> DataFrame:
     (partkey, suppkey); the per-part total reuses the same grouped
     frame (one extra reduce over ~|parts| rows, no second scan); part
     and supplier joins broadcast."""
-    l = _t(spark, sf_dir, "lineitem").filter(F.year("l_shipdate") == 1996)
-    p = _t(spark, sf_dir, "part").filter(F.col("p_name").contains("red"))
-    s = _t(spark, sf_dir, "supplier")
-    n = _t(spark, sf_dir, "nation")
+    l = load_table(spark, sf_dir, "lineitem").filter(F.year("l_shipdate") == 1996)
+    p = load_table(spark, sf_dir, "part").filter(F.col("p_name").contains("red"))
+    s = load_table(spark, sf_dir, "supplier")
+    n = load_table(spark, sf_dir, "nation")
     per_supp = (
         l.join(p, l.l_partkey == p.p_partkey)
         .groupBy("l_partkey", "l_suppkey")

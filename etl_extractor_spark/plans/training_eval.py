@@ -586,7 +586,6 @@ def streaming_cms_replay(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     emitted = SE.run_to_memory(
         SE.streaming_cms_grid(SE.documents_stream(spark, sf_dir)),
-        "t_cms_replay",
         output_mode="update",
         state_partitions=SE.state_partitions_for(spark, sf_dir, table="documents"),
     )

@@ -26,7 +26,6 @@ from __future__ import annotations
 import json
 import os
 import shutil
-from typing import Any
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -47,10 +46,6 @@ _MERGEABLE = {
     # reordered micro-batches converge like every other measure here.
     "bit_or": (F.bit_or, F.bit_or),
 }
-
-
-def _state_cols(measures: dict[str, tuple[str, str]]) -> list[str]:
-    return sorted(measures)
 
 
 def read_state(spark: SparkSession, state_path: str) -> DataFrame | None:
@@ -114,11 +109,3 @@ def apply_batch(
     with open(os.path.join(state_path, _META), "w") as fh:
         json.dump({"batch_id": batch_id}, fh)
     return spark.read.parquet(dst)
-
-
-def with_derived(df: DataFrame, derived: dict[str, Any]) -> DataFrame:
-    """Attach read-time derived measures (e.g. avg = sum/count)."""
-    out = df
-    for name, expr in derived.items():
-        out = out.withColumn(name, expr)
-    return out

@@ -861,6 +861,8 @@ def run_streaming_manifest_sink(
     """Streaming → manifest-table sink via foreachBatch + commit_batch
     (availableNow). Returns the number of batches COMMITTED this run
     (redelivered ids skip)."""
+    from etl_extractor_spark.streaming.events_stream import run_foreach_batch
+
     n = {"b": 0}
 
     def apply_batch(batch_df: DataFrame, batch_id: int) -> None:
@@ -871,14 +873,7 @@ def run_streaming_manifest_sink(
         ):
             n["b"] += 1
 
-    q = (
-        stream_df.writeStream.outputMode("append")
-        .foreachBatch(apply_batch)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
+    run_foreach_batch(stream_df, apply_batch, checkpoint_dir)
     return n["b"]
 
 

@@ -81,6 +81,8 @@ def run_streaming_topk(
     Checkpointed offsets + the batch-id watermark give effective
     exactly-once; state stays k rows regardless of stream length.
     Returns batches applied this run."""
+    from etl_extractor_spark.streaming.events_stream import run_foreach_batch
+
     applied = {"n": 0}
 
     def on_batch(batch_df: DataFrame, batch_id: int) -> None:
@@ -92,11 +94,5 @@ def run_streaming_topk(
         )
         applied["n"] += 1
 
-    q = (
-        stream_df.writeStream.foreachBatch(on_batch)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
+    run_foreach_batch(stream_df, on_batch, checkpoint_dir)
     return applied["n"]

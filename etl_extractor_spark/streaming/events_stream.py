@@ -18,6 +18,10 @@ semantics and is what the tests pin.)
 
 from __future__ import annotations
 
+import threading
+import uuid
+from typing import Callable
+
 import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -254,12 +258,10 @@ def run_foreach_batch_to_parquet(
     stream_df: DataFrame, out_dir: str, checkpoint_dir: str
 ) -> int:
     """foreachBatch sink: write each micro-batch to a batch-id
-    partition. With a checkpoint location the source offsets commit per
-    batch, so a restarted query resumes AFTER the last committed batch
-    — rerunning with the same checkpoint reprocesses nothing (the
-    exactly-once pattern for non-transactional sinks: batch-id
-    partition overwrite makes retries of an uncommitted batch
-    idempotent too). Returns the number of batches written this run."""
+    partition. Rerunning with the same checkpoint reprocesses nothing,
+    and the partition overwrite makes the retry of an uncommitted batch
+    idempotent (the exactly-once pattern for non-transactional sinks).
+    Returns the number of batches written this run."""
     import os
 
     batches_written = {"n": 0}
@@ -270,13 +272,7 @@ def run_foreach_batch_to_parquet(
         )
         batches_written["n"] += 1
 
-    q = (
-        stream_df.writeStream.foreachBatch(write_batch)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
+    run_foreach_batch(stream_df, write_batch, checkpoint_dir)
     return batches_written["n"]
 
 
@@ -314,39 +310,81 @@ def state_partitions_for(
     return min(cap, max(floor, math.ceil(nbytes / (32 * 1024 * 1024))))
 
 
+# A query reads its shuffle-partition (state-partition) count once, in
+# start(): the swap covers only that call, and under this lock no other
+# start() sees another replay's count or restores it.
+_START_LOCK = threading.Lock()
+
+
+def _run(
+    stream_df: DataFrame,
+    output_mode: str,
+    state_partitions: int | None,
+    sink: Callable,
+) -> None:
+    """Start ``stream_df`` under an availableNow trigger on the sink that
+    ``sink(writer)`` sets, and wait for it to end; every stream in the
+    package starts here. ``state_partitions`` (sized by
+    state_partitions_for) is the shuffle-partition count the query
+    starts with; results do not depend on it. A failed stream raises
+    its StreamingQueryException."""
+    spark = stream_df.sparkSession
+    writer = sink(
+        stream_df.writeStream.outputMode(output_mode).trigger(availableNow=True)
+    )
+    with _START_LOCK:
+        prev = spark.conf.get("spark.sql.shuffle.partitions")
+        if state_partitions is not None:
+            spark.conf.set("spark.sql.shuffle.partitions", str(state_partitions))
+        try:
+            q = writer.start()
+        finally:
+            spark.conf.set("spark.sql.shuffle.partitions", prev)
+    q.awaitTermination()
+
+
 def run_to_memory(
     stream_df: DataFrame,
-    name: str,
     output_mode: str = "complete",
     state_partitions: int | None = None,
 ) -> DataFrame:
-    """Drive a streaming query to completion with availableNow and
-    return the materialized result (test/bench harness).
-
-    ``state_partitions`` (optional) temporarily sets the session's
-    shuffle partitions — which fixes the stateful operator's state
-    partitioning — for the duration of the replay, restoring the
-    prior value before returning (safe here because the stream runs
-    EAGERLY inside this call; results are partition-count
-    independent). See state_partitions_for for the sizing rule."""
+    """Drive a streaming query to completion and return the
+    materialized result (test/bench harness); ``state_partitions`` as in
+    ``_run``. Each call names its own memory sink, so replays can run on
+    several threads of one session; the temp view is dropped once the
+    returned frame is resolved (the frame keeps the sink's rows)."""
     spark = stream_df.sparkSession
-    prev = None
-    if state_partitions is not None:
-        prev = spark.conf.get("spark.sql.shuffle.partitions")
-        spark.conf.set("spark.sql.shuffle.partitions", str(state_partitions))
-    try:
-        q = (
-            stream_df.writeStream.format("memory")
-            .queryName(name)
-            .outputMode(output_mode)
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
-    finally:
-        if prev is not None:
-            spark.conf.set("spark.sql.shuffle.partitions", prev)
-    return spark.table(name)
+    name = f"mem_{uuid.uuid4().hex}"
+    _run(
+        stream_df,
+        output_mode,
+        state_partitions,
+        lambda w: w.format("memory").queryName(name),
+    )
+    out = spark.table(name)
+    spark.catalog.dropTempView(name)
+    return out
+
+
+def run_foreach_batch(
+    stream_df: DataFrame,
+    fn: Callable[[DataFrame, int], None],
+    checkpoint_dir: str | None = None,
+    output_mode: str = "append",
+    state_partitions: int | None = None,
+) -> None:
+    """Drive a streaming query to completion through the foreachBatch
+    sink ``fn(batch_df, batch_id)``. With ``checkpoint_dir`` the source
+    offsets (and any state) commit per batch, so a rerun on the same
+    checkpoint resumes after the last committed batch."""
+
+    def sink(w):
+        w = w.foreachBatch(fn)
+        if checkpoint_dir is None:
+            return w
+        return w.option("checkpointLocation", checkpoint_dir)
+
+    _run(stream_df, output_mode, state_partitions, sink)
 
 
 def run_streaming_upsert(
@@ -378,13 +416,7 @@ def run_streaming_upsert(
         )
         applied["n"] += 1
 
-    q = (
-        stream_df.writeStream.foreachBatch(apply_batch)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
+    run_foreach_batch(stream_df, apply_batch, checkpoint_dir)
     return applied["n"]
 
 
@@ -419,13 +451,7 @@ def run_streaming_incremental_agg(
         )
         applied["n"] += 1
 
-    q = (
-        stream_df.writeStream.foreachBatch(on_batch)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
+    run_foreach_batch(stream_df, on_batch, checkpoint_dir)
     return applied["n"]
 
 
@@ -480,13 +506,7 @@ def run_streaming_quarantine(
         counts["batches"] += 1
         tagged.unpersist()
 
-    q = (
-        stream_df.writeStream.foreachBatch(on_batch)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
+    run_foreach_batch(stream_df, on_batch, checkpoint_dir)
     return counts
 
 
@@ -523,13 +543,7 @@ def run_streaming_minhash_dedup(
         )
         applied["n"] += 1
 
-    q = (
-        stream_df.writeStream.foreachBatch(on_batch)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
+    run_foreach_batch(stream_df, on_batch, checkpoint_dir)
     return applied["n"]
 
 
@@ -563,13 +577,7 @@ def run_streaming_jdbc_sink(
         )
         n["b"] += 1
 
-    q = (
-        stream_df.writeStream.foreachBatch(apply_batch)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
+    run_foreach_batch(stream_df, apply_batch, checkpoint_dir)
     return n["b"]
 
 

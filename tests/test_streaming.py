@@ -2,11 +2,17 @@
 
 from __future__ import annotations
 
+import pathlib
+import threading
+
+import pytest
 from pyspark.sql import functions as F
 
 from etl_extractor_spark.operators import events as BE
 from etl_extractor_spark.sources.parquet import load_table
 from etl_extractor_spark.streaming import events_stream as SE
+
+PKG = pathlib.Path(__file__).resolve().parent.parent / "etl_extractor_spark"
 
 
 def _rows(df, cols):
@@ -16,7 +22,7 @@ def _rows(df, cols):
 def test_streaming_tumbling_matches_batch(spark, sf_dir):
     batch = BE.tumbling_agg(load_table(spark, sf_dir, "events"))
     stream = SE.streaming_tumbling(SE.events_stream(spark, sf_dir))
-    got = SE.run_to_memory(stream, "t_tumbling", output_mode="complete")
+    got = SE.run_to_memory(stream, output_mode="complete")
     cols = ["window_start", "event_type", "n_events", "sum_value"]
     assert _rows(got, cols) == _rows(batch, cols)
 
@@ -24,7 +30,7 @@ def test_streaming_tumbling_matches_batch(spark, sf_dir):
 def test_streaming_sessionize_matches_batch(spark, sf_dir):
     batch = BE.sessionize(load_table(spark, sf_dir, "events"))
     stream = SE.streaming_sessionize(SE.events_stream(spark, sf_dir))
-    got = SE.run_to_memory(stream, "t_session", output_mode="complete")
+    got = SE.run_to_memory(stream, output_mode="complete")
     cols = ["user_id", "session_start", "session_end", "n_events", "sum_value"]
     assert _rows(got, cols) == _rows(batch, cols)
 
@@ -46,7 +52,7 @@ def test_stream_stream_interval_join_matches_batch(spark, sf_dir):
     ).select(F.col("p_user").cast("long").alias("user_id"), "purchase_id", "click_id")
 
     stream = SE.streaming_interval_join(spark, sf_dir)
-    got = SE.run_to_memory(stream, "t_ssjoin", output_mode="append")
+    got = SE.run_to_memory(stream, output_mode="append")
     cols = ["user_id", "purchase_id", "click_id"]
     assert _rows(got, cols) == _rows(batch, cols)
 
@@ -58,7 +64,7 @@ def test_streaming_dedup_matches_batch(spark, sf_dir):
         load_table(spark, sf_dir, "documents"), "doc_id", "text"
     )
     stream = SE.streaming_dedup_exact(SE.documents_stream(spark, sf_dir))
-    got = SE.run_to_memory(stream, "t_dedup", output_mode="append")
+    got = SE.run_to_memory(stream, output_mode="append")
     assert got.count() == batch_groups.count()
     assert got.select("content_hash").distinct().count() == got.count()
 
@@ -92,7 +98,7 @@ def test_stateful_sessionize_emits_closed_sessions(spark, sf_dir):
     the batch result minus each user's final session."""
     batch = BE.sessionize(load_table(spark, sf_dir, "events"))
     stream = SE.streaming_sessionize_stateful(SE.events_stream(spark, sf_dir))
-    got = SE.run_to_memory(stream, "t_stateful", output_mode="append")
+    got = SE.run_to_memory(stream, output_mode="append")
 
     cols = ["user_id", "session_start", "session_end", "n_events", "sum_value"]
     from pyspark.sql import Window
@@ -321,7 +327,6 @@ def test_stream_static_join_matches_batch(spark, sf_dir):
     join+aggregation over static reads."""
     got = SE.run_to_memory(
         SE.streaming_enriched_totals(spark, sf_dir),
-        "t_enriched",
         output_mode="complete",
     )
     c = load_table(spark, sf_dir, "customer").select(
@@ -388,7 +393,6 @@ def test_stream_stream_outer_join_matches_batch(spark, sf_dir):
     )
     got = SE.run_to_memory(
         SE.streaming_interval_join_outer(spark, sf_dir),
-        "t_ssjoin_outer",
         output_mode="append",
     )
     cols = ["user_id", "purchase_id", "click_id"]
@@ -417,7 +421,6 @@ def test_timer_eviction_emits_inactive_users_only(spark, sf_dir):
     ).select(F.col("user_id").cast("long"), "n", "tot")
     got = SE.run_to_memory(
         SE.streaming_user_timeout_totals(SE.events_stream(spark, sf_dir)),
-        "t_timer_evict",
         output_mode="append",
     )
     assert _rows(got, ["user_id", "n_events", "sum_value"]) == _rows(
@@ -444,7 +447,6 @@ def test_dedup_within_watermark_drops_dupes_keeps_state_bounded(spark, sf_dir, t
     )
     got = SE.run_to_memory(
         SE.streaming_dedup_within_watermark(stream),
-        "t_dedup_wm",
         output_mode="append",
     )
     assert got.count() == e.count()
@@ -460,7 +462,6 @@ def test_streaming_url_frontier_matches_batch(spark, sf_dir):
 
     got = SE.run_to_memory(
         DS.streaming_url_frontier(DS.docs_stream(spark, sf_dir)),
-        "t_url_frontier",
         output_mode="complete",
     )
     expected = url_canonical_dedup(spark, sf_dir)
@@ -482,7 +483,6 @@ def test_streaming_quality_gate_matches_batch(spark, sf_dir):
 
     got = SE.run_to_memory(
         quality_logit(docs_stream(spark, sf_dir)),
-        "t_quality_gate",
         output_mode="append",
     )
     expected = doc_quality_logreg(spark, sf_dir)
@@ -504,7 +504,6 @@ def test_streaming_rate_limit_matches_batch(spark, sf_dir):
     )
     got = SE.run_to_memory(
         SE.streaming_rate_limit(SE.events_stream(spark, sf_dir)),
-        "t_rate_limit",
         output_mode="append",
     )
     assert _rows(got, ["user_id", "event_id"]) == _rows(
@@ -572,7 +571,6 @@ def test_streaming_kmv_reach_matches_batch(spark, sf_dir):
 
     got = SE.run_to_memory(
         SE.streaming_kmv_reach(SE.events_stream(spark, sf_dir)),
-        "t_kmv_reach",
         output_mode="update",
     )
     # update mode may emit one row per micro-batch per key; the final
@@ -632,21 +630,101 @@ def test_kmv_state_multi_batch():
 
 
 def test_run_to_memory_restores_shuffle_partitions(spark, sf_dir):
-    """state_partitions must be scoped to the replay: the session's
-    shuffle partitions round-trip even though the stream ran at the
-    sized value (the order-dependent-session-conf bug class the
-    round-9 reviews chased twice)."""
-    from etl_extractor_spark.streaming import events_stream as SE
+    """state_partitions must be scoped to the replay: the stream's state
+    operator runs at the sized value while the session's shuffle
+    partitions round-trip (a leaked value would make later queries
+    depend on run order)."""
+    import time
+
+    from pyspark.sql.streaming import StreamingQueryListener
+
+    class StateParts(StreamingQueryListener):
+        def __init__(self):
+            self.seen: list[int] = []
+
+        def onQueryStarted(self, event):
+            pass
+
+        def onQueryProgress(self, event):
+            self.seen += [s.numShufflePartitions for s in event.progress.stateOperators]
+
+        def onQueryIdle(self, event):
+            pass
+
+        def onQueryTerminated(self, event):
+            pass
 
     prev = spark.conf.get("spark.sql.shuffle.partitions")
-    out = SE.run_to_memory(
-        SE.streaming_tumbling(SE.events_stream(spark, sf_dir)),
-        "t_conf_restore_probe",
-        output_mode="complete",
-        state_partitions=3,
-    )
-    assert out.count() >= 0
+    assert prev != "3"
+    parts = StateParts()
+    spark.streams.addListener(parts)
+    try:
+        out = SE.run_to_memory(
+            SE.streaming_tumbling(SE.events_stream(spark, sf_dir)),
+            output_mode="complete",
+            state_partitions=3,
+        )
+        deadline = time.time() + 30  # progress events arrive asynchronously
+        while not parts.seen and time.time() < deadline:
+            time.sleep(0.1)
+    finally:
+        spark.streams.removeListener(parts)
+    assert out.count() > 0
+    assert parts.seen and set(parts.seen) == {3}, parts.seen
     assert spark.conf.get("spark.sql.shuffle.partitions") == prev
+
+
+@pytest.mark.parametrize("trial", range(3))
+def test_two_threads_run_one_replay(spark, sf_dir, trial):
+    """Two threads each run ``streaming_tumbling_replay`` once on one
+    session: both results match the oracle (each replay names its own
+    memory sink) and the session's shuffle partitions are unchanged
+    afterwards (each replay scopes its state-partition count to its own
+    start)."""
+    from etl_extractor_spark.plans.registry import all_oracles, all_queries
+    from tests.oracle import compare, duckdb_con
+
+    name = "streaming_tumbling_replay"
+    query, sql, con = all_queries()[name], all_oracles()[name], duckdb_con(sf_dir)
+    prev = spark.conf.get("spark.sql.shuffle.partitions")
+    errors: list[BaseException] = []
+    both = threading.Barrier(2)
+
+    def run() -> None:
+        try:
+            both.wait()
+            compare(query(spark, sf_dir), con.cursor(), sql)
+        except BaseException as exc:  # asserted in the main thread
+            errors.append(exc)
+
+    threads = [threading.Thread(target=run) for _ in range(2)]
+    for t in threads:
+        t.start()
+    for t in threads:
+        t.join(timeout=600)
+    assert not any(t.is_alive() for t in threads)
+    assert errors == []
+    assert spark.conf.get("spark.sql.shuffle.partitions") == prev
+
+
+def test_one_module_starts_streams_and_sets_partition_conf():
+    """Every stream starts in ``streaming/events_stream._run``, the one
+    place that scopes the session's shuffle partitions to a start():
+    under ``etl_extractor_spark/`` it is the only ``.writeStream`` site,
+    and only ``session.py``'s builder config names the key besides it."""
+    import ast
+
+    starts, confs = [], set()
+    for py in sorted(PKG.rglob("*.py")):
+        rel = str(py.relative_to(PKG.parent))
+        for node in ast.walk(ast.parse(py.read_text())):
+            if isinstance(node, ast.Attribute) and node.attr == "writeStream":
+                starts.append(rel)
+            if isinstance(node, ast.Constant) and node.value == "spark.sql.shuffle.partitions":
+                confs.add(rel)
+    runner = "etl_extractor_spark/streaming/events_stream.py"
+    assert starts == [runner]
+    assert confs - {"etl_extractor_spark/session.py"} == {runner}
 
 
 def test_state_partitions_sizing_rule(spark, sf_dir):

@@ -69,7 +69,6 @@ def test_streaming_rate_limit_tz_independent(spark, sf_dir, tz):
         )
         got = SE.run_to_memory(
             SE.streaming_rate_limit(SE.events_stream(spark, sf_dir)),
-            "t_rate_limit_tz",
             output_mode="append",
         )
         stream_kept = sorted(
