@@ -29,6 +29,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
+from etl_extractor_spark.session import query_session
 from etl_extractor_spark.sources.parquet import load_table
 
 
@@ -71,6 +72,7 @@ def grouping_sets_orders(spark: SparkSession, sf_dir: str) -> DataFrame:
     () grand total — the warehouse report shape. Money is aggregated in
     DECIMAL(18,2) (exact, addition-order-independent) and surfaced as a
     2-decimal double."""
+    spark = query_session(spark)
     load_table(spark, sf_dir, "orders").createOrReplaceTempView("orders_v")
     return spark.sql(
         """
@@ -294,6 +296,7 @@ def priority_first_last(spark: SparkSession, sf_dir: str) -> DataFrame:
     frame (UNBOUNDED on both sides — last_value with the default frame
     is a classic bug): per priority, the first, 100th and last order in
     (date, orderkey) order."""
+    spark = query_session(spark)
     load_table(spark, sf_dir, "orders").createOrReplaceTempView("orders_v")
     return spark.sql(
         """

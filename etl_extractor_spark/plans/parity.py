@@ -14,7 +14,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from etl_extractor_spark.functions.casts import to_double_or, to_long_or, to_string_or
+from etl_extractor_spark.functions.casts import to_double_or, to_string_or
 from etl_extractor_spark.functions.dates import fecha_key
 from etl_extractor_spark.functions.text import normalize_text, prefixed_key, truncate
 from etl_extractor_spark.operators.dims import build_dim_date

@@ -39,6 +39,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
 from etl_extractor_spark.functions.quantize import cents as _cents
+from etl_extractor_spark.session import query_session
 from etl_extractor_spark.sources.parquet import load_table
 
 QUERIES: dict = {}
@@ -1990,6 +1991,7 @@ def parameterized_sql_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
     reaches PushedFilters)."""
     from etl_extractor_spark.sources.parquet import register_views
 
+    spark = query_session(spark)
     register_views(spark, sf_dir, names=("orders", "customer"))
     return spark.sql(
         """
@@ -2489,6 +2491,7 @@ def group_order_by_all(spark: SparkSession, sf_dir: str) -> DataFrame:
     inference silently changes grain."""
     from etl_extractor_spark.sources.parquet import register_views
 
+    spark = query_session(spark)
     register_views(spark, sf_dir, names=("orders",))
     return spark.sql(
         """

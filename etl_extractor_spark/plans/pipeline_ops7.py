@@ -22,6 +22,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from etl_extractor_spark.session import query_session
 from etl_extractor_spark.sources.parquet import load_table
 
 QUERIES: dict = {}
@@ -1541,12 +1542,12 @@ def _bucket_lookup_df(spark: SparkSession, sf_dir: str) -> DataFrame:
     key (bounded ONE-scalar collect — bucket pruning happens at PLAN
     time, so the key must be a literal in the filter; a broadcast-
     join key would read every bucket), return the filtered rollup.
-    Callers must have _BPL_SCAN_CONF = false while the plan is
-    OPTIMIZED (i.e. at action time), else Spark drops to a plain
-    scan — with autoBucketedScan on (default) it disables bucketed
-    reads when no exchange is avoided, and pruning only applies to
-    bucketed scans (measured: "Bucketed: false (disabled by query
-    planner)", zero pruning)."""
+    Callers pass a query_session with _BPL_SCAN_CONF = false, the
+    value the plan must be OPTIMIZED under (i.e. at action time),
+    else Spark drops to a plain scan — with autoBucketedScan on
+    (default) it disables bucketed reads when no exchange is avoided,
+    and pruning only applies to bucketed scans (measured: "Bucketed:
+    false (disabled by query planner)", zero pruning)."""
     from etl_extractor_spark.operators.bucketing import write_bucketed
     from etl_extractor_spark.operators.common import process_scratch_dir
 
@@ -1580,22 +1581,16 @@ def bucket_pruned_lookup(spark: SparkSession, sf_dir: str) -> DataFrame:
     (SelectedBucketsCount 1/_BPL_BUCKETS, plan-guarded in tests via
     _bucket_lookup_df). The probed key is the largest custkey ≡ 0
     (mod 7) — data-derived but deterministic on both engines. The
-    pruned plan EXECUTES inside this call (materialized to scratch)
-    while the scan conf is flipped, and the conf is restored before
-    returning — a registered query must not leave session-wide plan
-    state behind (review catch: the first cut left autoBucketedScan
-    off for the session, making every later bucketed query's plan
-    depend on bench execution order). Oracle = the same profile from
-    the base table."""
+    plan builds in a query_session with the scan conf off, so the
+    caller's session keeps its own value. The pruned result is
+    written to a per-call scratch dir inside this call: the next call
+    rewrites graft_bpl.orders_pt, and a held frame reads the copy.
+    Oracle = the same profile from the base table."""
     from etl_extractor_spark.operators.common import pid_scratch_dir
 
-    prev = spark.conf.get(_BPL_SCAN_CONF, "true")
+    spark = query_session(spark, {_BPL_SCAN_CONF: "false"})
     out = pid_scratch_dir("spark_graft_bpl_result_")
-    spark.conf.set(_BPL_SCAN_CONF, "false")
-    try:
-        _bucket_lookup_df(spark, sf_dir).write.mode("overwrite").parquet(out)
-    finally:
-        spark.conf.set(_BPL_SCAN_CONF, prev)
+    _bucket_lookup_df(spark, sf_dir).write.mode("overwrite").parquet(out)
     return spark.read.parquet(out).orderBy("priority")
 
 

@@ -27,6 +27,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from etl_extractor_spark.functions.quantize import cents as _cents
+from etl_extractor_spark.session import query_session
 from etl_extractor_spark.sources.parquet import load_table
 
 QUERIES: dict = {}
@@ -1966,20 +1967,17 @@ def recursive_cte_depth_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
     fixpoint (no driver-side round trips, AQE applies per step)."""
     from etl_extractor_spark.sources.parquet import register_views
 
-    register_views(spark, sf_dir, ("customer",))
     # The recursive CTE accumulates one row per customer, and Spark's
     # default spark.sql.cteRecursionRowLimit is 1e6 — a >=SF-7 sweep
     # would throw RECURSION_ROW_LIMIT_EXCEEDED (review catch, verified
-    # on 4.1.2). Raise it for this call and restore after: the real
-    # guard against runaway recursion here is the level bound
-    # (log3 of the keyspace), not the row count.
-    from etl_extractor_spark.operators.checkpoints import reliable_checkpoint
-
-    prev = spark.conf.get("spark.sql.cteRecursionRowLimit", None)
-    spark.conf.set("spark.sql.cteRecursionRowLimit", str(2**31 - 1))
-    try:
-        out = spark.sql(
-            """
+    # on 4.1.2). The limit is enforced at execution, so it is raised
+    # in the session the frame belongs to; the caller's session keeps
+    # its own limit. The real guard against runaway recursion here is
+    # the level bound (log3 of the keyspace), not the row count.
+    spark = query_session(spark, {"spark.sql.cteRecursionRowLimit": str(2**31 - 1)})
+    register_views(spark, sf_dir, ("customer",))
+    return spark.sql(
+        """
         WITH RECURSIVE tree(k, depth, bal) AS (
           SELECT c_custkey, 1,
                  CAST(CAST(c_acctbal AS DECIMAL(18,2)) * 100 AS BIGINT)
@@ -1995,20 +1993,7 @@ def recursive_cte_depth_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
                CAST(sum(bal) AS BIGINT) AS bal_cents
         FROM tree GROUP BY depth ORDER BY depth
         """
-        )
-        # The limit is enforced at EXECUTION, and the returned frame is
-        # lazy — restoring the conf before the driver's action would
-        # re-impose the 1e6 cap. Materialize the (depth-level-sized)
-        # result under the raised conf, then restore.
-        return reliable_checkpoint(out)
-    finally:
-        if prev is not None:
-            spark.conf.set("spark.sql.cteRecursionRowLimit", prev)
-        else:
-            # conf.get may report None for an unset key: unset, don't
-            # skip, or the raised limit would disable the session's
-            # runaway-recursion backstop for every later query.
-            spark.conf.unset("spark.sql.cteRecursionRowLimit")
+    )
 
 
 QUERIES["recursive_cte_depth_rollup"] = recursive_cte_depth_rollup
@@ -2059,6 +2044,7 @@ def python_udtf_installments(spark: SparkSession, sf_dir: str) -> DataFrame:
             for i in range(n):
                 yield i, base + (1 if i < rem else 0)
 
+    spark = query_session(spark)
     spark.udtf.register("installments", Installments)
     load_table(spark, sf_dir, "orders").select(
         "o_orderkey", _cents("o_totalprice").alias("cents")
@@ -2161,6 +2147,7 @@ def pipe_syntax_star_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
     should be able to paste either dialect."""
     from etl_extractor_spark.sources.parquet import register_views
 
+    spark = query_session(spark)
     register_views(spark, sf_dir, ("orders", "customer", "nation"))
     return spark.sql(
         """
@@ -2209,6 +2196,7 @@ def sql_scripting_threshold_report(spark: SparkSession, sf_dir: str) -> DataFram
     data moves through the script layer."""
     from etl_extractor_spark.sources.parquet import register_views
 
+    spark = query_session(spark)
     register_views(spark, sf_dir, ("orders",))
     return spark.sql(
         """

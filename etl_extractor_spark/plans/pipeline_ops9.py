@@ -22,6 +22,7 @@ from pyspark.sql import functions as F
 
 from etl_extractor_spark.functions.quantize import cents as _cents
 from etl_extractor_spark.plans.pipeline_ops8 import _CENTS_SQL
+from etl_extractor_spark.session import query_session
 from etl_extractor_spark.sources.parquet import load_table
 
 QUERIES: dict = {}
@@ -598,26 +599,6 @@ _RF_CONFS = {
 }
 
 
-def _with_confs(spark: SparkSession, confs: dict, build) -> DataFrame:
-    """Build + MATERIALIZE a frame under temporarily-set confs (the
-    recursive-CTE precedent: the returned frame is lazy, so restoring
-    before the driver's action would re-plan without the confs —
-    checkpoint under them, then restore; unset keys restore to unset)."""
-    from etl_extractor_spark.operators.checkpoints import reliable_checkpoint
-
-    prev = {k: spark.conf.get(k, None) for k in confs}
-    try:
-        for k, v in confs.items():
-            spark.conf.set(k, v)
-        return reliable_checkpoint(build())
-    finally:
-        for k, v in prev.items():
-            if v is None:
-                spark.conf.unset(k)
-            else:
-                spark.conf.set(k, v)
-
-
 def runtime_filter_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Runtime bloom-filter join pruning (Spark's InjectRuntimeFilter):
     a selective dim predicate (customers with c_custkey % 97 = 0)
@@ -633,32 +614,29 @@ def runtime_filter_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     100 TB: the semi-join reduction that keeps a selective dim⋈fact
     from shuffling the whole fact table; at production scan sizes the
     default thresholds enable it without any conf (the lowered gates
-    here only make the test-scale fact eligible). Materialized under
-    the confs via reliable_checkpoint, so the driver-observed
-    execution really ran the filtered plan."""
-    def build() -> DataFrame:
-        o = load_table(spark, sf_dir, "orders").select(
-            "o_custkey", _cents("o_totalprice").alias("cents")
+    here only make the test-scale fact eligible). The plan builds in a
+    query_session with the gates lowered, so the frame runs the
+    filtered plan whenever the caller acts on it."""
+    spark = query_session(spark, _RF_CONFS)
+    o = load_table(spark, sf_dir, "orders").select(
+        "o_custkey", _cents("o_totalprice").alias("cents")
+    )
+    c = (
+        load_table(spark, sf_dir, "customer")
+        .filter(F.col("c_custkey") % 97 == 0)
+        .select("c_custkey", "c_nationkey")
+    )
+    n = load_table(spark, sf_dir, "nation").select("n_nationkey", "n_name")
+    return (
+        o.join(c, F.col("o_custkey") == F.col("c_custkey"))
+        .join(F.broadcast(n), F.col("c_nationkey") == F.col("n_nationkey"))
+        .groupBy(F.col("n_name").alias("nation"))
+        .agg(
+            F.count(F.lit(1)).cast("long").alias("n_orders"),
+            F.sum("cents").cast("long").alias("revenue_cents"),
         )
-        c = (
-            load_table(spark, sf_dir, "customer")
-            .filter(F.col("c_custkey") % 97 == 0)
-            .select("c_custkey", "c_nationkey")
-        )
-        n = load_table(spark, sf_dir, "nation").select(
-            "n_nationkey", "n_name"
-        )
-        return (
-            o.join(c, F.col("o_custkey") == F.col("c_custkey"))
-            .join(F.broadcast(n), F.col("c_nationkey") == F.col("n_nationkey"))
-            .groupBy(F.col("n_name").alias("nation"))
-            .agg(
-                F.count(F.lit(1)).cast("long").alias("n_orders"),
-                F.sum("cents").cast("long").alias("revenue_cents"),
-            )
-        )
-
-    return _with_confs(spark, _RF_CONFS, build).orderBy("nation")
+        .orderBy("nation")
+    )
 
 
 QUERIES["runtime_filter_join"] = runtime_filter_join
@@ -746,11 +724,6 @@ _AQE_SKEW_CONFS = {
     "spark.sql.adaptive.skewJoin.skewedPartitionFactor": "2.0",
     # no broadcast: AQE skew split only applies to shuffle joins
     "spark.sql.autoBroadcastJoinThreshold": "-1",
-    # a skewed reduce partition can only be split at MAP-output-block
-    # granularity: a single-file scan at test scale is ONE map task,
-    # leaving nothing to split (probed) — bound the input splits so
-    # the scan produces many map blocks, as any production scan does
-    "spark.sql.files.maxPartitionBytes": "128KB",
 }
 
 
@@ -770,54 +743,53 @@ def aqe_skew_join_split(spark: SparkSession, sf_dir: str) -> DataFrame:
     100 TB: AQE handles the skew you didn't predict; the manual salt
     remains for the shapes AQE can't reach (agg-wrapped exchanges,
     sub-threshold partitions — measured in the salted twin's
-    docstring). Join output is materialized under the confs
-    (reliable_checkpoint), so the driver-observed run executed the
-    split plan."""
+    docstring). The plan builds in a query_session with the gates
+    lowered, so the frame runs the split plan whenever the caller
+    acts on it."""
     from etl_extractor_spark.operators.common import fan_out
     from etl_extractor_spark.plans.pipeline_ops5 import _skew_key
 
-    def build() -> DataFrame:
-        li = load_table(spark, sf_dir, "lineitem")
-        o = load_table(spark, sf_dir, "orders")
-        # fan_out: a skewed reduce partition can only be split at
-        # MAP-block granularity, and the test-scale lineitem file is
-        # ONE row group = one map task = one unsplittable block
-        # (probed: the hot partition read [0,0,0,7778,0,0,0,0] from
-        # the 8 input splits — parquet assigns whole row groups). A
-        # production scan has thousands of row groups; fan_out gives
-        # the join shuffle the same multi-block map side here.
-        fact = fan_out(
-            li.select(
-                _skew_key("l_orderkey").alias("k"),
-                (F.col("l_extendedprice").cast("decimal(18,2)") * 100)
-                .cast("long")
-                .alias("cents"),
-            )
+    spark = query_session(spark, _AQE_SKEW_CONFS)
+    li = load_table(spark, sf_dir, "lineitem")
+    o = load_table(spark, sf_dir, "orders")
+    # fan_out: a skewed reduce partition can only be split at
+    # MAP-block granularity, and the test-scale lineitem file is ONE
+    # row group = one map task = one unsplittable block. A production
+    # scan has thousands of row groups; fan_out gives the join shuffle
+    # the same multi-block map side here. Smaller input splits do not:
+    # parquet assigns whole row groups (8 splits held rows
+    # [0,0,0,60000,0,0,0,0] at sf0.01), and fan_out keeps 8 partitions.
+    fact = fan_out(
+        li.select(
+            _skew_key("l_orderkey").alias("k"),
+            (F.col("l_extendedprice").cast("decimal(18,2)") * 100)
+            .cast("long")
+            .alias("cents"),
         )
-        # The dim must reach the join as a PLAIN shuffle — the manual
-        # twin's .distinct() puts an aggregate between the shuffle and
-        # the join, and OptimizeSkewedJoin only matches SMJ(sort(
-        # shuffle), sort(shuffle)) (probed: with the agg in between,
-        # "number of skewed partitions: left 0, right 0"). The skew-key
-        # domain is {0} ∪ {o_orderkey : %20=0}, which unions together
-        # duplicate-free without aggregation (o_orderkey is unique;
-        # key 0 is excluded from the filter arm and added once).
-        dim = (
-            o.filter((F.col("o_orderkey") % 20 == 0) & (F.col("o_orderkey") != 0))
-            .select(F.col("o_orderkey").cast("long").alias("k"))
-            .unionAll(spark.range(1).select(F.lit(0).cast("long").alias("k")))
-            .select("k", (F.col("k") % 7).cast("long").alias("seg"))
+    )
+    # The dim must reach the join as a PLAIN shuffle — the manual
+    # twin's .distinct() puts an aggregate between the shuffle and
+    # the join, and OptimizeSkewedJoin only matches SMJ(sort(
+    # shuffle), sort(shuffle)) (probed: with the agg in between,
+    # "number of skewed partitions: left 0, right 0"). The skew-key
+    # domain is {0} ∪ {o_orderkey : %20=0}, which unions together
+    # duplicate-free without aggregation (o_orderkey is unique;
+    # key 0 is excluded from the filter arm and added once).
+    dim = (
+        o.filter((F.col("o_orderkey") % 20 == 0) & (F.col("o_orderkey") != 0))
+        .select(F.col("o_orderkey").cast("long").alias("k"))
+        .unionAll(spark.range(1).select(F.lit(0).cast("long").alias("k")))
+        .select("k", (F.col("k") % 7).cast("long").alias("seg"))
+    )
+    return (
+        fact.join(dim, "k")
+        .groupBy("seg")
+        .agg(
+            F.count(F.lit(1)).cast("long").alias("n_items"),
+            F.sum("cents").cast("long").alias("revenue_cents"),
         )
-        return (
-            fact.join(dim, "k")
-            .groupBy("seg")
-            .agg(
-                F.count(F.lit(1)).cast("long").alias("n_items"),
-                F.sum("cents").cast("long").alias("revenue_cents"),
-            )
-        )
-
-    return _with_confs(spark, _AQE_SKEW_CONFS, build).orderBy("seg")
+        .orderBy("seg")
+    )
 
 
 QUERIES["aqe_skew_join_split"] = aqe_skew_join_split

@@ -32,19 +32,23 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
 
+from etl_extractor_spark.session import query_session
 from etl_extractor_spark.sources.parquet import load_table
 
 TOP_ANCESTORS = 64  # subtree rollup: ancestors restricted to doc_id < 64
 
 
-def _docs_view(spark: SparkSession, sf_dir: str, name: str) -> None:
+def _docs_session(spark: SparkSession, sf_dir: str) -> SparkSession:
+    """A query_session with documents' (doc_id, n_chars) as ``rec_docs``."""
+    spark = query_session(spark)
     load_table(spark, sf_dir, "documents").select(
         "doc_id", "n_chars"
-    ).createOrReplaceTempView(name)
+    ).createOrReplaceTempView("rec_docs")
+    return spark
 
 
 def doc_tree_depth(spark: SparkSession, sf_dir: str) -> DataFrame:
-    _docs_view(spark, sf_dir, "rec_docs")
+    spark = _docs_session(spark, sf_dir)
     return spark.sql(
         """
         WITH RECURSIVE walk(doc_id, depth, path_chars) AS (
@@ -76,7 +80,7 @@ FROM walk
 
 
 def doc_subtree_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
-    _docs_view(spark, sf_dir, "rec_docs")
+    spark = _docs_session(spark, sf_dir)
     return spark.sql(
         f"""
         WITH RECURSIVE sub(anc, node) AS (

@@ -24,7 +24,6 @@ Reference parity targets:
 from __future__ import annotations
 
 import os
-import tempfile
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -35,6 +34,7 @@ from etl_extractor_spark.sources.jdbc import read_jdbc, write_jdbc
 from etl_extractor_spark.sources.json_api import records_to_df
 from etl_extractor_spark.sources.parquet import load_table
 from etl_extractor_spark.operators.common import pid_scratch_dir, process_scratch_dir
+from etl_extractor_spark.session import query_session
 
 _DERBY_DRIVER = "org.apache.derby.jdbc.EmbeddedDriver"
 
@@ -160,6 +160,7 @@ def pyds_envelope_scan(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     from etl_extractor_spark.sources.pyds import register
 
+    spark = query_session(spark)
     register(spark)
     rows = (
         load_table(spark, sf_dir, "nation")

@@ -13,6 +13,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from etl_extractor_spark.session import query_session
 from etl_extractor_spark.sources.parquet import load_table, register_views
 
 
@@ -84,6 +85,7 @@ GROUP BY n_name
 
 
 def sql_star_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
+    spark = query_session(spark)
     register_views(spark, sf_dir)
     return spark.sql(_SQL_STAR)
 
@@ -452,6 +454,7 @@ def sql_udf_margin(spark: SparkSession, sf_dir: str) -> DataFrame:
     PARAMETER via spark.sql(..., args=...) — the injection-safe API a
     query service should always use. Oracle: DuckDB MACRO, the same
     define-once-inline-everywhere mechanism."""
+    spark = query_session(spark)
     register_views(spark, sf_dir)
     spark.sql(
         "CREATE OR REPLACE TEMPORARY FUNCTION line_margin(p DOUBLE, d DOUBLE, t DOUBLE) "

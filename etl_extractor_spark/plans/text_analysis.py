@@ -12,6 +12,7 @@ from pyspark.sql import functions as F
 
 from etl_extractor_spark.functions import textstats as ts
 from etl_extractor_spark.functions.text import normalize_text
+from etl_extractor_spark.session import query_session
 from etl_extractor_spark.sources.parquet import load_table
 from etl_extractor_spark.operators.checkpoints import reliable_checkpoint
 
@@ -265,6 +266,7 @@ def chunk_documents(spark: SparkSession, sf_dir: str) -> DataFrame:
     50-token chunk per document."""
     from etl_extractor_spark.functions.chunking import register_chunker
 
+    spark = query_session(spark)
     register_chunker(spark)
     load_table(spark, sf_dir, "documents").createOrReplaceTempView("documents")
     return spark.sql(

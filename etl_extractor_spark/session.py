@@ -144,3 +144,15 @@ def get_spark(
     ship_package(spark)
     return spark
 
+
+def query_session(spark: SparkSession, confs: dict[str, str] | None = None) -> SparkSession:
+    """A clone of ``spark`` with ``confs`` set, for one query to build in:
+    it keeps the caller's runtime confs, temp views and functions (a
+    ``newSession()`` would not), and what the query sets or registers in
+    it stays there. A frame built from it runs under its confs whenever
+    the caller acts on it."""
+    clone = SparkSession(spark.sparkContext, spark._jsparkSession.cloneSession())
+    for key, value in (confs or {}).items():
+        clone.conf.set(key, value)
+    return clone
+

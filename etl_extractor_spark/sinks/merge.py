@@ -51,7 +51,6 @@ def merge_upsert_partitioned(
     if not touched:
         return 0
 
-    spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
     target_slice = (
         spark.read.parquet(target_path)
         .filter(F.col(partition_col).isin(touched))  # partition-pruned scan
@@ -63,7 +62,8 @@ def merge_upsert_partitioned(
     # Break lineage before overwriting the path we just read — a lazy
     # plan reading its own output directory mid-overwrite is undefined.
     merged = reliable_checkpoint(merged)
-    merged.write.mode("overwrite").partitionBy(partition_col).parquet(target_path)
+    writer = merged.write.mode("overwrite").option("partitionOverwriteMode", "dynamic")
+    writer.partitionBy(partition_col).parquet(target_path)
     return len(touched)
 
 
@@ -92,7 +92,6 @@ def merge_cdc_apply(
     if not touched:
         return 0
 
-    spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
     target_slice = spark.read.parquet(target_path).filter(
         F.col(partition_col).isin(touched)
     )
@@ -102,7 +101,8 @@ def merge_cdc_apply(
     upserts = latest.filter(F.col(op_col) != "D").drop(op_col, seq_col)
     merged = survivors.unionByName(upserts.select(*survivors.columns))
     merged = reliable_checkpoint(merged)
-    merged.write.mode("overwrite").partitionBy(partition_col).parquet(target_path)
+    writer = merged.write.mode("overwrite").option("partitionOverwriteMode", "dynamic")
+    writer.partitionBy(partition_col).parquet(target_path)
     return len(touched)
 
 

@@ -106,3 +106,22 @@ def test_merge_cdc_latest_change_wins_and_deletes(spark):
         assert got[9] == ("i", 90.0)
         assert got[3] == ("c", 30.0)  # untouched partition intact
         assert got[4] == ("d", 40.0)
+
+
+def test_partitioned_overwrite_after_merge_drops_stale_partitions(spark, tmp_path):
+    """A merge overwrites dynamically for its own write only: a later
+    partitioned overwrite in the session (as ``load_gold`` writes
+    ``fact_opinion`` by ``anio``) replaces the whole table, so a
+    partition missing from its new output is gone."""
+    from etl_extractor_spark.sinks.writers import write_observed
+
+    path = str(tmp_path / "t")
+    _base(spark, path)
+    updates = spark.createDataFrame([(2, "b2", 21.0, "2026-01-01")], ["id", "name", "amt", "dt"])
+    merge_upsert_partitioned(spark, path, updates, ["id"], "dt")
+
+    gold = str(tmp_path / "gold")
+    facts = spark.createDataFrame([(1, 2023), (2, 2024)], ["id", "anio"])
+    write_observed(facts, gold, partition_by=["anio"])
+    write_observed(facts.filter(F.col("anio") == 2024), gold, partition_by=["anio"])
+    assert [(r["id"], r["anio"]) for r in spark.read.parquet(gold).collect()] == [(2, 2024)]

@@ -529,17 +529,14 @@ def test_bucket_lookup_actually_prunes(spark, sf_dir):
         _BPL_SCAN_CONF,
         _bucket_lookup_df,
     )
+    from etl_extractor_spark.session import query_session
 
     prev = spark.conf.get(_BPL_SCAN_CONF, "true")
-    spark.conf.set(_BPL_SCAN_CONF, "false")
-    try:
-        df = _bucket_lookup_df(spark, sf_dir)
-        plan = df._jdf.queryExecution().executedPlan().toString()
-    finally:
-        spark.conf.set(_BPL_SCAN_CONF, prev)
+    df = _bucket_lookup_df(query_session(spark, {_BPL_SCAN_CONF: "false"}), sf_dir)
+    plan = df._jdf.queryExecution().executedPlan().toString()
     plan = plan.split("== Initial Plan ==")[0]
     assert f"SelectedBucketsCount: 1 out of {_BPL_BUCKETS}" in plan, plan[:2000]
-    # and the registered wrapper restores the session conf
+    # and the registered wrapper leaves the session conf as it was
     from etl_extractor_spark.plans.pipeline_ops7 import bucket_pruned_lookup
 
     bucket_pruned_lookup(spark, sf_dir).collect()

@@ -830,9 +830,10 @@ def test_udtf_installments_are_exact_partitions(spark, sf_dir):
 
     from etl_extractor_spark.plans.pipeline_ops8 import python_udtf_installments
 
-    # registering the query once also registers the UDTF
-    python_udtf_installments(spark, sf_dir).collect()
-    rows = spark.sql(
+    # the UDTF and _udtf_orders live in the session the query built in
+    df = python_udtf_installments(spark, sf_dir)
+    df.collect()
+    rows = df.sparkSession.sql(
         """
         SELECT o_orderkey, cents, f.seq, f.part_cents
         FROM (SELECT * FROM _udtf_orders ORDER BY o_orderkey LIMIT 50)

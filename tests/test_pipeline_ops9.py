@@ -8,6 +8,8 @@ checkpoint reprocesses everything; a recovered one must not).
 
 from __future__ import annotations
 
+import os
+
 import pytest
 
 
@@ -172,94 +174,30 @@ def test_dim_refresh_versions_visible_per_batch(spark, sf_dir, scratch_given):
     }
 
 
-def _plan_under_confs(spark, confs, df_builder):
-    """Executed-plan string of df_builder() run under the given confs
-    (restored after, unset keys to unset)."""
-    prev = {k: spark.conf.get(k, None) for k in confs}
-    try:
-        for k, v in confs.items():
-            spark.conf.set(k, v)
-        df = df_builder()
-        df.collect()
-        return df._jdf.queryExecution().executedPlan().toString()
-    finally:
-        for k, v in prev.items():
-            if v is None:
-                spark.conf.unset(k)
-            else:
-                spark.conf.set(k, v)
+def test_runtime_filter_injected_in_plan(spark, sf_dir):
+    """The query's reason to exist: at sf0.01 the optimizer must inject
+    the Bloom runtime filter — might_contain over a bloom-filter
+    aggregate on the fact side. Without the injection the query
+    silently certifies a plain join."""
+    from etl_extractor_spark.plans.pipeline_ops9 import runtime_filter_join
 
-
-def test_runtime_filter_injected_in_plan(spark):
-    """The query's reason to exist: under its confs the optimizer must
-    inject the Bloom runtime filter — might_contain over a
-    bloom-filter aggregate on the fact side. Without the injection
-    the query silently certifies a plain join."""
-    import pyspark.sql.functions as F
-
-    from etl_extractor_spark.plans.pipeline_ops9 import _RF_CONFS
-
-    sf = "/root/testdata/sf0.01"
-
-    def build():
-        o = spark.read.parquet(f"{sf}/orders.parquet").select(
-            "o_custkey", "o_totalprice"
-        )
-        c = (
-            spark.read.parquet(f"{sf}/customer.parquet")
-            .filter(F.col("c_custkey") % 97 == 0)
-            .select("c_custkey")
-        )
-        return o.join(c, F.col("o_custkey") == F.col("c_custkey")).groupBy().agg(
-            F.count(F.lit(1)).alias("n")
-        )
-
-    plan = _plan_under_confs(spark, _RF_CONFS, build)
+    df = runtime_filter_join(spark, os.path.join(os.path.dirname(sf_dir), "sf0.01"))
+    df.collect()
+    plan = df._jdf.queryExecution().executedPlan().toString()
     assert "might_contain" in plan, plan[:2000]
 
 
-def test_aqe_skew_join_marked_in_plan(spark):
-    """Under the query's confs at sf0.01 the executed join node must
-    carry skew=true (OptimizeSkewedJoin split the hot partition) —
-    probed root causes pinned: the dim side must reach the join as a
-    PLAIN shuffle (no distinct-aggregate in between) and the fact side
-    needs multi-block map output (fan_out)."""
-    import pyspark.sql.functions as F
+def test_aqe_skew_join_marked_in_plan(spark, sf_dir):
+    """At sf0.01 the executed join node must carry skew=true
+    (OptimizeSkewedJoin split the hot partition) — probed root causes
+    pinned: the dim side must reach the join as a PLAIN shuffle (no
+    distinct-aggregate in between) and the fact side needs multi-block
+    map output (fan_out of a one-split scan)."""
+    from etl_extractor_spark.plans.pipeline_ops9 import aqe_skew_join_split
 
-    from etl_extractor_spark.operators.common import fan_out
-    from etl_extractor_spark.plans.pipeline_ops5 import _skew_key
-    from etl_extractor_spark.plans.pipeline_ops9 import _AQE_SKEW_CONFS
-
-    sf = "/root/testdata/sf0.01"
-
-    def build():
-        li = spark.read.parquet(f"{sf}/lineitem.parquet")
-        o = spark.read.parquet(f"{sf}/orders.parquet")
-        fact = fan_out(
-            li.select(
-                _skew_key("l_orderkey").alias("k"),
-                (F.col("l_extendedprice").cast("decimal(18,2)") * 100)
-                .cast("long")
-                .alias("cents"),
-            )
-        )
-        dim = (
-            o.filter(
-                (F.col("o_orderkey") % 20 == 0) & (F.col("o_orderkey") != 0)
-            )
-            .select(F.col("o_orderkey").cast("long").alias("k"))
-            .unionAll(
-                spark.range(1).select(F.lit(0).cast("long").alias("k"))
-            )
-            .select("k", (F.col("k") % 7).cast("long").alias("seg"))
-        )
-        return (
-            fact.join(dim, "k")
-            .groupBy("seg")
-            .agg(F.count(F.lit(1)).alias("n"))
-        )
-
-    plan = _plan_under_confs(spark, _AQE_SKEW_CONFS, build)
+    df = aqe_skew_join_split(spark, os.path.join(os.path.dirname(sf_dir), "sf0.01"))
+    df.collect()
+    plan = df._jdf.queryExecution().executedPlan().toString()
     assert "skew=true" in plan, plan[:2000]
 
 
