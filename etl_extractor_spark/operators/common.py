@@ -94,9 +94,8 @@ _ORPHAN_MAX_AGE_S = 7 * 24 * 3600
 
 def process_scratch_dir(prefix: str) -> str:
     """``<tmp>/<prefix><pid>``: ONE scratch directory for the whole
-    process, for what outlives a call (a database ``LOCATION``, an
-    embedded Derby database). Per-call scratch uses
-    ``pid_scratch_dir``, which builds on this.
+    process, for what outlives a call (an embedded Derby database).
+    Per-call scratch uses ``pid_scratch_dir``, which builds on this.
 
     The FULL lifecycle the r6 disk incident taught: (a) atexit removal
     for this process, and (b) reaping of same-prefix orphans whose pid
@@ -188,6 +187,27 @@ def pid_scratch_dir(prefix: str) -> str:
             if name.isdigit() and int(name) < n - 1:
                 shutil.rmtree(os.path.join(root, name), ignore_errors=True)
     return os.path.join(root, str(n))
+
+
+def scratch_database(spark, name: str, path: str) -> str:
+    """Create the database ``<name>_<n>`` located at ``path``, a
+    ``pid_scratch_dir`` directory ``.../<n>``, and return its name.
+    Tables a call writes through the catalog (``saveAsTable``) then
+    follow the directory contract: a DataFrame held across one
+    re-invocation still reads its own tables, and two threads write
+    apart. The databases of earlier calls whose directories that
+    hand-out pruned (numbers below ``n - 1``) are dropped, under the
+    hand-out lock: two threads listing and dropping at once would each
+    try to drop the same database."""
+    n = int(os.path.basename(path))
+    db = f"{name}_{n}"
+    with _SCRATCH_LOCK:
+        for old in spark.catalog.listDatabases(f"{name}_*"):
+            tail = old.name[len(name) + 1:]
+            if tail.isdigit() and int(tail) < n - 1:
+                spark.sql(f"DROP DATABASE IF EXISTS {old.name} CASCADE")
+        spark.sql(f"CREATE DATABASE IF NOT EXISTS {db} LOCATION '{path}'")
+    return db
 
 
 def batch_watermark(state_path: str, meta: str) -> int:

@@ -35,7 +35,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
-from etl_extractor_spark.functions.quantize import q6 as _q6
+from etl_extractor_spark.functions.quantize import cents, q6 as _q6
 from etl_extractor_spark.plans.pipeline_ops import _SPEND_CTE, _spend_by_customer
 from etl_extractor_spark.sources.parquet import load_table
 
@@ -77,7 +77,7 @@ def nn_matching_att(spark: SparkSession, sf_dir: str) -> DataFrame:
     bal = load_table(spark, sf_dir, "customer").select(
         "c_custkey",
         (
-            (F.col("c_acctbal").cast("decimal(18,2)") * 100).cast("long")
+            cents("c_acctbal")
             + F.lit(_BAL_SHIFT)
         ).alias("sc"),
     )
@@ -235,8 +235,7 @@ def jackknife_mean_se(spark: SparkSession, sf_dir: str) -> DataFrame:
     identical integers on both engines."""
     x = load_table(spark, sf_dir, "orders").select(
         "o_orderpriority",
-        ((F.col("o_totalprice").cast("decimal(18,2)") * 100).cast("long")
-         - F.lit(_JACK_CENTER)).alias("x"),
+        (cents("o_totalprice") - F.lit(_JACK_CENTER)).alias("x"),
     )
     s = x.groupBy("o_orderpriority").agg(
         F.count(F.lit(1)).cast("long").alias("n"),

@@ -57,7 +57,7 @@ import pandas as pd  # module-level: pandas_udf type hints resolve here
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from etl_extractor_spark.functions.quantize import q6
+from etl_extractor_spark.functions.quantize import cents, q6
 from etl_extractor_spark.operators import multimodal as M
 from etl_extractor_spark.sources.parquet import load_table
 from etl_extractor_spark.operators.common import pid_scratch_dir
@@ -692,9 +692,7 @@ def incremental_agg_merge(spark: SparkSession, sf_dir: str) -> DataFrame:
     o = load_table(spark, sf_dir, "orders").select(
         "o_orderpriority",
         F.to_date("o_orderdate").alias("d"),
-        (F.col("o_totalprice").cast("decimal(18,2)") * 100)
-        .cast("long")
-        .alias("cents"),
+        cents("o_totalprice").alias("cents"),
     )
     path = pid_scratch_dir("spark_graft_incr_agg_")
     MF.write_with_manifest(
@@ -767,9 +765,7 @@ def ols_price_model(spark: SparkSession, sf_dir: str) -> DataFrame:
         (F.col("l_discount").cast("decimal(12,4)") * 10000)
         .cast("long")
         .alias("x2"),
-        (F.col("l_extendedprice").cast("decimal(18,2)") * 100)
-        .cast("long")
-        .alias("y"),
+        cents("l_extendedprice").alias("y"),
     )
     # Exact, order-independent accumulation: per-row products stay in
     # long range (y <= ~1e7 cents so y*y <= ~1e14) but their SUMS can
@@ -1071,9 +1067,7 @@ def feature_correlation_matrix(spark: SparkSession, sf_dir: str) -> DataFrame:
         (F.col("l_discount").cast("decimal(12,4)") * 10000)
         .cast("long")
         .alias("x2"),
-        (F.col("l_extendedprice").cast("decimal(18,2)") * 100)
-        .cast("long")
-        .alias("y"),
+        cents("l_extendedprice").alias("y"),
     )
 
     def dsum(c):
@@ -1504,9 +1498,7 @@ def manifest_merge_on_read(spark: SparkSession, sf_dir: str) -> DataFrame:
         "o_orderkey",
         "o_orderpriority",
         "o_orderstatus",
-        (F.col("o_totalprice").cast("decimal(18,2)") * 100)
-        .cast("long")
-        .alias("cents"),
+        cents("o_totalprice").alias("cents"),
     )
     path = pid_scratch_dir("spark_graft_mor_")
     MF.write_with_manifest(spark, o, path, stats_cols=["o_orderkey"], mode="overwrite")
@@ -1845,7 +1837,7 @@ def seasonal_decompose_daily(spark: SparkSession, sf_dir: str) -> DataFrame:
         .groupBy(F.to_date("o_orderdate").alias("d"))
         .agg(
             F.sum(
-                (F.col("o_totalprice").cast("decimal(18,2)") * 100).cast("long")
+                cents("o_totalprice")
             )
             .cast("long")
             .alias("cents")
@@ -1933,9 +1925,7 @@ def _spend_by_customer(spark: SparkSession, sf_dir: str, grp_name: str) -> DataF
     o = load_table(spark, sf_dir, "orders").select(
         "o_custkey",
         F.year(F.to_date("o_orderdate")).alias("yr"),
-        (F.col("o_totalprice").cast("decimal(18,2)") * 100)
-        .cast("long")
-        .alias("cents"),
+        cents("o_totalprice").alias("cents"),
     )
     return (
         c.join(o, c.c_custkey == o.o_custkey, "left")
@@ -2155,9 +2145,7 @@ def mann_whitney_u(spark: SparkSession, sf_dir: str) -> DataFrame:
     from pyspark.sql.window import Window
 
     v = load_table(spark, sf_dir, "orders").select(
-        (F.col("o_totalprice").cast("decimal(18,2)") * 100)
-        .cast("long")
-        .alias("v"),
+        cents("o_totalprice").alias("v"),
         F.pmod(
             F.conv(
                 F.substring(F.md5(F.col("o_orderkey").cast("string")), 1, 12),

@@ -1353,139 +1353,6 @@ ORDER BY o_orderkey
 """
 
 
-# --- 14. Link prediction by neighborhood Jaccard ---------------------------------
-
-
-def link_prediction_jaccard(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Link-prediction scores on the co-purchase part graph: for the
-    top-50 co-purchased part pairs (by support, key-tiebroken), the
-    common-neighbor count and neighborhood Jaccard — the
-    common-neighbors family (CN / Jaccard / Adamic-Adar) that powers
-    'related items' at scale, in its EXACT-integer form (Jaccard in
-    micro-units via BIGINT div; Adamic-Adar's per-neighbor 1/log(deg)
-    is transcendental and engine-divergent, so the pinned contract is
-    CN + Jaccard). Candidate-restricted end to end: the 50 candidate
-    pairs broadcast into semi-joins against the adjacency list — the
-    intersection work is O(deg(a) + deg(b)) per candidate, NEVER an
-    all-pairs neighborhood join.
-
-    100 TB: adjacency and degrees are edge-scaled aggregations; the
-    scored pair set is bounded by the candidate list (a parameter),
-    which is how production link prediction actually runs (score a
-    candidate-generation output, not the n² pair space).
-
-    50 rows: p1, p2, support, cn, deg1, deg2, jaccard_micro."""
-    li = load_table(spark, sf_dir, "lineitem").select(
-        F.col("l_orderkey").alias("o"), F.col("l_partkey").alias("p")
-    ).distinct()
-    a, b = li.alias("a"), li.alias("b")
-    pairs = (
-        a.join(b, (F.col("a.o") == F.col("b.o")) & (F.col("a.p") < F.col("b.p")))
-        .groupBy(F.col("a.p").alias("p1"), F.col("b.p").alias("p2"))
-        .agg(F.count(F.lit(1)).cast("long").alias("support"))
-    )
-    cand = pairs.orderBy(
-        F.col("support").desc(), F.col("p1"), F.col("p2")
-    ).limit(50)
-    adj = (
-        pairs.select(F.col("p1").alias("p"), F.col("p2").alias("z"))
-        .union(pairs.select(F.col("p2").alias("p"), F.col("p1").alias("z")))
-        .distinct()
-    )
-    deg = adj.groupBy("p").agg(F.count(F.lit(1)).cast("long").alias("deg"))
-    ca = F.broadcast(cand)
-    # degrees restricted to candidate parts BEFORE broadcasting: the
-    # full degree relation is SF-scaled (one row per distinct part) and
-    # broadcasting it contradicts the candidate-restricted contract
-    # (review catch) — the ≤100-part candidate list is the small side
-    cand_parts = F.broadcast(
-        cand.select(F.col("p1").alias("p"))
-        .union(cand.select(F.col("p2").alias("p")))
-        .distinct()
-    )
-    deg_c = deg.join(cand_parts, "p")
-    # r11 (guide §3.2): the p2-side of the common-neighbor equi-join is
-    # SEMI-FILTERED by the broadcast candidate-part list BEFORE the
-    # join — only neighborhoods of the ≤100 candidate parts reach the
-    # (p2, z) exchange, instead of the whole SF-scaled adjacency (the
-    # join condition p2 == p2x already implies p2x ∈ candidates, so the
-    # filter drops only never-matching rows). At bench scale AQE then
-    # collapses the join to a broadcast at runtime; at 100 TB the
-    # shuffle is bounded by candidate-neighborhood volume either way.
-    adj_c = adj.join(cand_parts, "p", "semi")
-    common = (
-        adj.join(ca, F.col("p") == F.col("p1"))
-        .select("p1", "p2", "z")
-        .join(
-            adj_c.select(F.col("p").alias("p2x"), F.col("z").alias("zx")),
-            (F.col("p2") == F.col("p2x")) & (F.col("z") == F.col("zx")),
-        )
-        .groupBy("p1", "p2")
-        .agg(F.count(F.lit(1)).cast("long").alias("cn"))
-    )
-    out = (
-        cand.join(common, ["p1", "p2"], "left")
-        .fillna(0, subset=["cn"])
-        .join(
-            F.broadcast(
-                deg_c.withColumnRenamed("p", "p1").withColumnRenamed("deg", "deg1")
-            ),
-            "p1",
-        )
-        .join(
-            F.broadcast(
-                deg_c.withColumnRenamed("p", "p2").withColumnRenamed("deg", "deg2")
-            ),
-            "p2",
-        )
-    )
-    return out.select(
-        "p1",
-        "p2",
-        "support",
-        "cn",
-        "deg1",
-        "deg2",
-        F.expr("cn * 1000000 div (deg1 + deg2 - cn)").alias("jaccard_micro"),
-    ).orderBy(F.col("support").desc(), "p1", "p2")
-
-
-QUERIES["link_prediction_jaccard"] = link_prediction_jaccard
-ORACLES["link_prediction_jaccard"] = """
-WITH li AS (
-  SELECT DISTINCT l_orderkey AS o, l_partkey AS p FROM lineitem
-), pairs AS (
-  SELECT a.p AS p1, b.p AS p2, count(*)::BIGINT AS support
-  FROM li a JOIN li b ON a.o = b.o AND a.p < b.p
-  GROUP BY 1, 2
-), cand AS (
-  SELECT * FROM pairs ORDER BY support DESC, p1, p2 LIMIT 50
-), adj AS (
-  SELECT p1 AS p, p2 AS z FROM pairs
-  UNION
-  SELECT p2 AS p, p1 AS z FROM pairs
-), deg AS (
-  SELECT p, count(*)::BIGINT AS deg FROM adj GROUP BY 1
-), common AS (
-  SELECT c.p1, c.p2, count(*)::BIGINT AS cn
-  FROM cand c
-  JOIN adj x ON x.p = c.p1
-  JOIN adj y ON y.p = c.p2 AND y.z = x.z
-  GROUP BY 1, 2
-)
-SELECT c.p1, c.p2, c.support,
-       COALESCE(m.cn, 0)::BIGINT AS cn,
-       d1.deg AS deg1, d2.deg AS deg2,
-       COALESCE(m.cn, 0) * 1000000 // (d1.deg + d2.deg - COALESCE(m.cn, 0))
-         AS jaccard_micro
-FROM cand c
-LEFT JOIN common m ON m.p1 = c.p1 AND m.p2 = c.p2
-JOIN deg d1 ON d1.p = c.p1
-JOIN deg d2 ON d2.p = c.p2
-ORDER BY c.support DESC, c.p1, c.p2
-"""
-
-
 # --- 15. Lorenz curve by customer-revenue deciles --------------------------------
 
 

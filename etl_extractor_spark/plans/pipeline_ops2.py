@@ -16,11 +16,6 @@ warehouse ops
 - rendezvous_shard_assign : HRW sharding, minimal-disruption proof
 - join_cardinality_kmv    : optimizer join-size estimate by key sample
 
-graph
-- bfs_shortest_hops       : level-synchronous BFS vs recursive CTE
-- label_propagation_communities : 3 unrolled min-label rounds
-- kcore_peel_rounds       : bounded degree peeling (MATERIALIZED CTEs)
-
 streams (certified replays 8-9)
 - streaming_funnel_replay         : stateful per-user funnel machine
 - streaming_interval_union_replay : O(1)-state coverage accumulator
@@ -53,13 +48,12 @@ in production at 100 TB.
 """
 
 from __future__ import annotations
-from etl_extractor_spark.operators.checkpoints import reliable_checkpoint
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
-from etl_extractor_spark.functions.quantize import q6 as _q6
+from etl_extractor_spark.functions.quantize import cents, q6 as _q6
 from etl_extractor_spark.sources.parquet import load_table
 
 QUERIES: dict = {}
@@ -84,7 +78,7 @@ def xml_events_parse(spark: SparkSession, sf_dir: str) -> DataFrame:
     xml = F.concat(
         F.lit("<e><t>"), F.col("event_type"),
         F.lit("</t><v>"),
-        (F.col("value").cast("decimal(18,2)") * 100).cast("long").cast("string"),
+        cents("value").cast("string"),
         F.lit("</v><u>"), F.col("user_id").cast("string"), F.lit("</u></e>"),
     )
     parsed = e.select(F.from_xml(xml, "t STRING, v BIGINT, u BIGINT").alias("p"))
@@ -210,14 +204,14 @@ def merge_upsert_scd1(spark: SparkSession, sf_dir: str) -> DataFrame:
     c = load_table(spark, sf_dir, "customer").select(
         "c_custkey",
         "c_mktsegment",
-        (F.col("c_acctbal").cast("decimal(18,2)") * 100).cast("long").alias("bal"),
+        cents("c_acctbal").alias("bal"),
     )
     o = load_table(spark, sf_dir, "orders")
     spend97 = (
         o.where(F.year(F.to_date("o_orderdate")) == 1997)
         .groupBy(F.col("o_custkey").alias("c_custkey"))
         .agg(
-            F.sum((F.col("o_totalprice").cast("decimal(18,2)") * 100).cast("long"))
+            F.sum(cents("o_totalprice"))
             .cast("long")
             .alias("spend")
         )
@@ -303,125 +297,6 @@ ORACLES["merge_upsert_scd1"] = """
 """
 
 
-# --- 4. BFS shortest hops -----------------------------------------------------
-_BFS_HOPS = 4
-
-
-def _purchase_edges_int(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The bipartite purchase graph with INTEGER-ENCODED node ids
-    (customer k → 2k, supplier k → 2k+1 — a bijection with the
-    'C'||k / 'S'||k string domain of plans/graph._purchase_edges), so
-    iterative queries shuffle/checkpoint 8-byte longs instead of
-    ~10-char strings (~3× fewer bytes at sf1's 11.7 M edges). Shared
-    by the set-semantics graph loops (BFS, k-core); NOT usable by
-    min-label algorithms (LPA) whose ordering is defined over the
-    string domain — the encoding does not preserve string order."""
-    o = load_table(spark, sf_dir, "orders").select("o_orderkey", "o_custkey")
-    l = load_table(spark, sf_dir, "lineitem").select("l_orderkey", "l_suppkey")
-    pairs = (
-        o.join(l, o["o_orderkey"] == l["l_orderkey"])
-        .select(
-            (F.col("o_custkey").cast("long") * 2).alias("c"),
-            (F.col("l_suppkey").cast("long") * 2 + 1).alias("s"),
-        )
-        .distinct()
-    )
-    return pairs.select(F.col("c").alias("src"), F.col("s").alias("dst")).union(
-        pairs.select(F.col("s").alias("src"), F.col("c").alias("dst"))
-    )
-
-
-def _node_str(c: str):
-    """Reconstruct the 'C'||k / 'S'||k string form from an int-encoded
-    node id — used ONLY in final stat projections so min/max
-    fingerprints keep the string ordering the oracles pin."""
-    return F.concat(
-        F.when(F.col(c) % 2 == 0, F.lit("C")).otherwise(F.lit("S")),
-        F.expr(f"CAST({c} DIV 2 AS STRING)"),
-    )
-
-
-def bfs_shortest_hops(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Shortest-hop distances from seed suppliers (s_suppkey ≤ 2) over
-    the bipartite purchase graph, BFS to 4 hops: the frontier is the
-    set of nodes first reached at hop k; each round is one
-    frontier⋈edges join + an anti-join against the visited set, then a
-    distinct — level-synchronous BFS, the join-based Pregel shape
-    shared with PageRank/connected components. Output: nodes-per-hop
-    histogram with a min/max node fingerprint per level (order-free
-    evidence of WHICH nodes, not just how many). The oracle walks the
-    same levels with a recursive CTE (UNION dedup), so the level sets
-    must match exactly.
-
-    100 TB: visited/frontier stay key-partitioned; 4 bounded rounds;
-    the per-round dedup is the only wide op and it is hash-partitioned
-    on node id. The iteration runs on INT-ENCODED node ids
-    (_purchase_edges_int — BFS is set-semantics, so the encoding is
-    free; strings are reconstructed only in the final stats), and the
-    edge list is checkpointed ONCE so the four rounds read it instead
-    of re-executing the orders⋈lineitem build per hop. For unbounded
-    diameters the CC operator's checkpoint discipline applies
-    (operators/dedup.py)."""
-    edges = reliable_checkpoint(_purchase_edges_int(spark, sf_dir))
-    seeds = (
-        load_table(spark, sf_dir, "supplier")
-        .where(F.col("s_suppkey") <= 2)
-        .select((F.col("s_suppkey").cast("long") * 2 + 1).alias("node"))
-    )
-    visited = seeds.withColumn("hop", F.lit(0))
-    frontier = visited
-    for k in range(1, _BFS_HOPS + 1):
-        nxt = (
-            frontier.join(edges, frontier.node == edges.src)
-            .select(F.col("dst").alias("node"))
-            .distinct()
-            .join(visited.select("node"), "node", "left_anti")
-            .withColumn("hop", F.lit(k))
-        )
-        visited = reliable_checkpoint(visited.unionByName(nxt))
-        frontier = visited.where(F.col("hop") == k)
-    return (
-        visited.select("hop", _node_str("node").alias("node_s"))
-        .groupBy("hop")
-        .agg(
-            F.count(F.lit(1)).cast("long").alias("n_nodes"),
-            F.min("node_s").alias("min_node"),
-            F.max("node_s").alias("max_node"),
-        )
-    )
-
-
-QUERIES["bfs_shortest_hops"] = bfs_shortest_hops
-ORACLES["bfs_shortest_hops"] = f"""
-    WITH RECURSIVE edges AS (
-        SELECT DISTINCT 'C' || CAST(o_custkey AS VARCHAR) AS src,
-                        'S' || CAST(l_suppkey AS VARCHAR) AS dst
-        FROM orders JOIN lineitem ON o_orderkey = l_orderkey
-        UNION ALL
-        SELECT DISTINCT 'S' || CAST(l_suppkey AS VARCHAR) AS src,
-                        'C' || CAST(o_custkey AS VARCHAR) AS dst
-        FROM orders JOIN lineitem ON o_orderkey = l_orderkey
-    ),
-    walk(node, hop) AS (
-        SELECT 'S' || CAST(s_suppkey AS VARCHAR), 0
-        FROM supplier WHERE s_suppkey <= 2
-        UNION
-        SELECT e.dst, w.hop + 1
-        FROM walk w JOIN edges e ON w.node = e.src
-        WHERE w.hop < {_BFS_HOPS}
-    ),
-    first_seen AS (
-        SELECT node, MIN(hop)::BIGINT AS hop FROM walk GROUP BY node
-    )
-    SELECT hop,
-           COUNT(*)::BIGINT AS n_nodes,
-           MIN(node) AS min_node,
-           MAX(node) AS max_node
-    FROM first_seen
-    GROUP BY hop
-"""
-
-
 # --- 5. streaming funnel replay ------------------------------------------------
 def streaming_funnel_replay(spark: SparkSession, sf_dir: str) -> DataFrame:
     """8th driver-certified streaming query: the events table replayed
@@ -463,188 +338,6 @@ from etl_extractor_spark.plans.analytics3 import EVENT_FUNNEL_SQL
 
 QUERIES["streaming_funnel_replay"] = streaming_funnel_replay
 ORACLES["streaming_funnel_replay"] = EVENT_FUNNEL_SQL
-
-
-# --- 6. synchronous label propagation ------------------------------------------
-_LP_ROUNDS = 3
-
-# Order-isomorphic int64 embedding of the 'C'||k / 'S'||k label domain
-# (r11): the decimal digits d_1..d_L of k (no leading zeros, L ≤ 12)
-# become base-11 digits d_i+1 left-aligned in a 12-slot field padded
-# with 0 — 0 sorts below every real digit, so the numeric order of the
-# codes equals the LEXICOGRAPHIC order of the digit strings (shorter-
-# prefix-wins included: 'C10' > 'C1', 'C115' < 'C12' both preserved);
-# the node-type prefix rides the 11^12 place ('C'=0 < 'S'=1, matching
-# 'C' < 'S'). Injective on the real domain because real digits encode
-# as d+1 ≥ 1, never 0. Max code 2·11^12 ≈ 6.3e12 ≪ 2^63. min() over
-# codes therefore equals min() over label strings, which is what lets
-# the LPA rounds run on 8-byte longs with hash aggregation. Keys
-# outside [0, 10^12) have no code and fail the query (raise_error)
-# rather than encode to NULL and drop out of the min-label rounds;
-# 10^12 covers TPC-H custkey (1.5e10) and suppkey at SF 1e5.
-_LP_SLOTS = 12
-_LP_TYPE = 11**_LP_SLOTS  # the 'S' offset
-_POW11 = ", ".join(f"{11 ** (_LP_SLOTS - i)}L" for i in range(1, _LP_SLOTS + 1))  # 11^11..11^0
-
-
-def _lp_enc(key: str, is_supplier: int):
-    """Encode an integer key column into the order-isomorphic label
-    code (see module comment above). CLOSED FORM, no HOF: with L the
-    digit count, code = P·11^12 + 11^(12-L) · Σ_{j=0..L-1}
-    ((k div 10^j) % 10 + 1)·11^j — the left-aligned base-11 field
-    factored so the whole thing is a flat codegen expression (a
-    sequence/aggregate lambda re-evaluates its outer digit-count
-    expression per element, the r10 lambda-binding lesson). A key
-    outside [0, 10^12) raises; a NULL key stays NULL."""
-    k = f"cast({key} as bigint)"
-    scale = " ".join(
-        f"WHEN {k} < {10 ** j}L THEN {11 ** (_LP_SLOTS - j)}L"
-        for j in range(1, _LP_SLOTS + 1)
-    )
-    terms = " + ".join(
-        f"(CASE WHEN {k} >= {10 ** j}L THEN "
-        f"(({k} div {10 ** j}L) % 10 + 1) * {11 ** j}L ELSE 0L END)"
-        for j in range(1, _LP_SLOTS)
-    )
-    return F.expr(
-        f"CASE WHEN {k} < 0L OR {k} >= {10 ** _LP_SLOTS}L THEN raise_error("
-        f"concat('label key out of the encodable range [0, 10^{_LP_SLOTS}): ', {k}))"
-        f" ELSE {is_supplier}L * {_LP_TYPE}L"
-        f" + (CASE {scale} END) * (({k} % 10 + 1) + {terms}) END"
-    )
-
-
-def _lp_dec(code: str):
-    """Decode a label code back to its 'C'||k / 'S'||k string (output
-    projection only — ≤ top-k rows)."""
-    return F.concat(
-        F.when(F.col(code) < _LP_TYPE, F.lit("C")).otherwise(F.lit("S")),
-        F.expr(
-            f"""cast(
-                aggregate(
-                    sequence(1, {_LP_SLOTS}),
-                    0L,
-                    (acc, i) -> CASE
-                        WHEN ({code} div element_at(array({_POW11}), i)) % 11 > 0
-                        THEN acc * 10 + ({code} div element_at(array({_POW11}), i)) % 11 - 1
-                        ELSE acc END
-                ) as string)"""
-        ),
-    )
-
-
-def label_propagation_communities(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Community detection by synchronous min-label propagation over
-    the purchase graph: every node starts at its own id; each round
-    takes the least of its label and its neighbors' labels — after k
-    rounds a node holds the minimum id within k hops, the
-    deterministic LPA variant (and one large-star step of the
-    connected-components operator, operators/dedup.py). Top-20
-    communities by size. The oracle UNROLLS the same three rounds as
-    CTEs, so a hash match certifies every intermediate round.
-
-    100 TB: each round is ONE src-keyed join + one dst-keyed min
-    aggregation — the PageRank exchange shape. Two plan-structure
-    choices (r11, guide §2.4):
-
-    * SELF-MESSAGES instead of the per-round left join: unioning the
-      O(nodes) label frame into the message stream makes
-      min-over-(messages ∪ self) = min(own, neighbors) — exactly
-      ``least(label, coalesce(min nbr label, label))``. Each round
-      collapses from join + agg + left-join (3 exchanges) to
-      join + union + agg (1 exchange), with the agg output ALREADY
-      keyed by node for the next round.
-    * ORDER-ISOMORPHIC INT ENCODING of the label domain: min-label is
-      defined over the STRING ordering of 'C'||k / 'S'||k, which the
-      even/odd int encoding does not preserve — but the base-11 digit
-      embedding (_lp_enc) does: each decimal digit maps to 11-ary
-      digit d+1 in a fixed 12-slot field (0 = below-any-digit pad), so
-      lexicographic order over variable-length digit strings equals
-      numeric int64 order, with 'C' < 'S' as the top bit. Every round
-      then shuffles 8-byte longs and min() runs as a codegen
-      HashAggregate instead of the string domain's SortAggregate;
-      labels decode back to strings (_lp_dec) only in the ≤20-row
-      output projection.
-
-    Per-round reliable checkpoints stay: each round's plan is cheap to
-    keep linear, and the disk cut keeps Catalyst analysis flat."""
-    o = load_table(spark, sf_dir, "orders").select("o_orderkey", "o_custkey")
-    l = load_table(spark, sf_dir, "lineitem").select("l_orderkey", "l_suppkey")
-    pairs = (
-        o.join(l, o["o_orderkey"] == l["l_orderkey"])
-        .select(
-            _lp_enc("o_custkey", 0).alias("c"),
-            _lp_enc("l_suppkey", 1).alias("s"),
-        )
-        .distinct()
-    )
-    edges = reliable_checkpoint(
-        pairs.select(F.col("c").alias("src"), F.col("s").alias("dst")).union(
-            pairs.select(F.col("s").alias("src"), F.col("c").alias("dst"))
-        )
-    )
-    labels = edges.select(F.col("src").alias("node")).distinct().withColumn(
-        "label", F.col("node")
-    )
-    for _ in range(_LP_ROUNDS):
-        # self-message via UNION of the (checkpointed, O(nodes)) label
-        # frame instead of materialized self-loop edges: min over
-        # (neighbor messages ∪ own label) ≡ least(own, min-neighbor) —
-        # value-identical to the old join+agg+left-join round, one
-        # exchange instead of three, and no O(edges) distinct to build
-        # a loop edge set.
-        msgs = edges.join(labels, edges.src == labels.node).select(
-            F.col("dst").alias("node"), "label"
-        )
-        labels = reliable_checkpoint(
-            msgs.unionByName(labels)
-            .groupBy("node")
-            .agg(F.min("label").alias("label"))
-        )
-    return (
-        labels.groupBy("label")
-        .agg(F.count(F.lit(1)).cast("long").alias("n_nodes"))
-        .orderBy(F.desc("n_nodes"), "label")
-        .limit(20)
-        .select(_lp_dec("label").alias("label"), "n_nodes")
-    )
-
-
-def _lp_round_sql(prev: str, out: str) -> str:
-    return f"""
-    {out} AS MATERIALIZED (
-        SELECT n.node,
-               LEAST(n.label, COALESCE(m.ml, n.label)) AS label
-        FROM {prev} n LEFT JOIN (
-            SELECT e.dst AS node, MIN(l.label) AS ml
-            FROM pedges e JOIN {prev} l ON e.src = l.node
-            GROUP BY e.dst
-        ) m ON n.node = m.node
-    )"""
-
-
-QUERIES["label_propagation_communities"] = label_propagation_communities
-ORACLES["label_propagation_communities"] = f"""
-    WITH pairs AS MATERIALIZED (
-        SELECT DISTINCT 'C' || CAST(o_custkey AS VARCHAR) AS c,
-                        'S' || CAST(l_suppkey AS VARCHAR) AS s
-        FROM orders JOIN lineitem ON o_orderkey = l_orderkey
-    ),
-    pedges AS MATERIALIZED (
-        SELECT c AS src, s AS dst FROM pairs
-        UNION ALL
-        SELECT s AS src, c AS dst FROM pairs
-    ),
-    l0 AS (SELECT DISTINCT src AS node, src AS label FROM pedges),
-    {_lp_round_sql('l0', 'l1')},
-    {_lp_round_sql('l1', 'l2')},
-    {_lp_round_sql('l2', 'l3')}
-    SELECT label, COUNT(*)::BIGINT AS n_nodes
-    FROM l3
-    GROUP BY label
-    ORDER BY n_nodes DESC, label
-    LIMIT 20
-"""
 
 
 # --- 7. rendezvous (HRW) shard stability ----------------------------------------
@@ -742,7 +435,7 @@ def weighted_median_discount(spark: SparkSession, sf_dir: str) -> DataFrame:
     O(groups × domain)."""
     li = load_table(spark, sf_dir, "lineitem").select(
         "l_returnflag",
-        (F.col("l_discount").cast("decimal(18,2)") * 100).cast("long").alias("bp"),
+        cents("l_discount").alias("bp"),
         F.col("l_quantity").cast("long").alias("w"),
     )
     per = li.groupBy("l_returnflag", "bp").agg(F.sum("w").alias("wsum"))
@@ -1027,7 +720,7 @@ def decision_stump_split(spark: SparkSession, sf_dir: str) -> DataFrame:
     map-side-combinable aggregation, and the argmin is TakeOrdered(1),
     not a global sort."""
     x = load_table(spark, sf_dir, "orders").select(
-        (F.col("o_totalprice").cast("decimal(18,2)") * 100).cast("long").alias("v"),
+        cents("o_totalprice").alias("v"),
         (F.col("o_orderstatus") == "F").cast("long").alias("y"),
     )
     per_v = x.groupBy("v").agg(
@@ -1136,7 +829,7 @@ def target_encoding_loo(spark: SparkSession, sf_dir: str) -> DataFrame:
     c = load_table(spark, sf_dir, "customer").select("c_custkey", "c_mktsegment")
     o = load_table(spark, sf_dir, "orders").select(
         "o_custkey",
-        (F.col("o_totalprice").cast("decimal(18,2)") * 100).cast("long").alias("cents"),
+        cents("o_totalprice").alias("cents"),
     )
     y = (
         c.join(o, c.c_custkey == o.o_custkey, "left")
@@ -1188,131 +881,6 @@ ORACLES["target_encoding_loo"] = """
            MAX(loo) AS max_loo_cents
     FROM enc
     GROUP BY c_mktsegment
-"""
-
-
-# --- 14. bounded k-core peeling -----------------------------------------------------
-_KCORE_K = 4
-_KCORE_ROUNDS = 3
-
-
-def kcore_peel_rounds(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Three rounds of k-core peeling (k=4) on the purchase graph:
-    each round drops nodes of degree < k and the edges touching them —
-    the standard preprocessing that strips the low-degree fringe
-    before community/centrality passes (full k-core iterates to a
-    fixpoint; the bounded 3-round peel is deterministic and
-    oracle-unrollable, and each extra round is the same plan). Output:
-    survivors and edge count per round with min/max node fingerprints.
-
-    100 TB: per round one degree aggregation + two semi-joins, all
-    hash-partitioned on node id; rounds are bounded so lineage is
-    static. Node ids are INTEGER-ENCODED through the loop (customer k
-    → 2k, supplier k → 2k+1 — a bijection with the 'C'||k / 'S'||k
-    string domain), so every shuffle, join hash and checkpoint block
-    carries an 8-byte long instead of a ~10-char string (~3× fewer
-    shuffle/checkpoint bytes over the 11.6 M-edge sf1 graph). Strings
-    are reconstructed ONLY in the per-round stats projection, so
-    min/max fingerprints keep the string ordering and the output is
-    bit-identical to the string-domain loop.
-
-    FIXPOINT EARLY-EXIT (the r5→r6 sf1 fix, 99 s → ~14 s): when a
-    round removes no node (keep count == node count) the edge set is
-    provably unchanged, so later rounds skip the two joins, the
-    O(edges) re-checkpoint AND the stats recompute — they re-emit the
-    converged round's stats with a new round number. The sf1 purchase
-    graph converges at round 1 (min degree ≥ k already), so the old
-    loop's rounds 2-3 rewrote 11.7 M identical edges twice for
-    nothing. The keep-count probe is ONE aggregation job over the
-    exchange-free degree pass (r11; previously two count jobs against
-    a per-round degree checkpoint). The per-round stats row is
-    collected (1 row — contract-small) and the output assembled as a
-    literal frame."""
-    edges = _purchase_edges_int(spark, sf_dir)
-    node_str = _node_str
-
-    rows: list[tuple] = []
-    cur = reliable_checkpoint(edges)  # round 1 references it 3× (deg + 2 joins)
-    converged = False
-    last = None  # stats Row of the current (unchanged) edge set
-    for r in range(1, _KCORE_ROUNDS + 1):
-        if not converged:
-            deg = cur.groupBy("src").agg(F.count(F.lit(1)).alias("d"))
-            # ONE fixpoint-probe job instead of two counts (r11, r10
-            # verdict task 1: fold the fixpoint test into the round
-            # job): n nodes + surviving nodes in a single aggregation
-            # over the exchange-free degree pass.
-            probe = deg.agg(
-                F.count(F.lit(1)).alias("n"),
-                F.sum((F.col("d") >= _KCORE_K).cast("long")).alias("nk"),
-            ).first()
-            if probe["nk"] == probe["n"]:
-                converged = True  # nothing removed ⇒ cur is the k-core fixpoint
-            else:
-                keep = deg.where(F.col("d") >= _KCORE_K).select("src")
-                cur = reliable_checkpoint(
-                    cur.join(keep, "src")
-                    .join(keep.select(F.col("src").alias("dst")), "dst")
-                    .select("src", "dst")
-                )
-                last = None  # edge set changed: stats must recompute
-        if last is None:
-            last = (
-                cur.select("src", node_str("src").alias("src_s"))
-                .agg(
-                    F.countDistinct("src").cast("long").alias("n_nodes"),
-                    F.count(F.lit(1)).cast("long").alias("n_edges"),
-                    F.min("src_s").alias("min_node"),
-                    F.max("src_s").alias("max_node"),
-                )
-                .first()
-            )
-        rows.append(
-            (r, last["n_nodes"], last["n_edges"], last["min_node"], last["max_node"])
-        )
-    from etl_extractor_spark.operators.common import small_df
-
-    return small_df(
-        spark,
-        rows,
-        "round int, n_nodes long, n_edges long, min_node string, max_node string",
-    )
-
-
-def _kcore_round_sql(prev: str, out: str) -> str:
-    return f"""
-    {out} AS MATERIALIZED (
-        SELECT e.src, e.dst
-        FROM {prev} e
-        JOIN (SELECT src FROM {prev} GROUP BY src HAVING COUNT(*) >= {_KCORE_K}) ks
-          ON e.src = ks.src
-        JOIN (SELECT src AS dst FROM {prev} GROUP BY src HAVING COUNT(*) >= {_KCORE_K}) kd
-          ON e.dst = kd.dst
-    )"""
-
-
-QUERIES["kcore_peel_rounds"] = kcore_peel_rounds
-ORACLES["kcore_peel_rounds"] = f"""
-    WITH pairs AS MATERIALIZED (
-        SELECT DISTINCT 'C' || CAST(o_custkey AS VARCHAR) AS c,
-                        'S' || CAST(l_suppkey AS VARCHAR) AS s
-        FROM orders JOIN lineitem ON o_orderkey = l_orderkey
-    ),
-    e0 AS MATERIALIZED (
-        SELECT c AS src, s AS dst FROM pairs
-        UNION ALL
-        SELECT s AS src, c AS dst FROM pairs
-    ),
-    {_kcore_round_sql('e0', 'e1')},
-    {_kcore_round_sql('e1', 'e2')},
-    {_kcore_round_sql('e2', 'e3')}
-    SELECT 1 AS round, COUNT(DISTINCT src)::BIGINT AS n_nodes,
-           COUNT(*)::BIGINT AS n_edges, MIN(src) AS min_node, MAX(src) AS max_node
-    FROM e1
-    UNION ALL
-    SELECT 2, COUNT(DISTINCT src)::BIGINT, COUNT(*)::BIGINT, MIN(src), MAX(src) FROM e2
-    UNION ALL
-    SELECT 3, COUNT(DISTINCT src)::BIGINT, COUNT(*)::BIGINT, MIN(src), MAX(src) FROM e3
 """
 
 
@@ -1417,7 +985,7 @@ def cohort_ltv_curve(spark: SparkSession, sf_dir: str) -> DataFrame:
         "o_custkey",
         (F.year(F.to_date("o_orderdate")) * 12 + F.month(F.to_date("o_orderdate")) - 1)
         .alias("ym"),
-        (F.col("o_totalprice").cast("decimal(18,2)") * 100).cast("long").alias("cents"),
+        cents("o_totalprice").alias("cents"),
     )
     cohort = o.groupBy("o_custkey").agg(F.min("ym").alias("cm"))
     sized = cohort.groupBy("cm").agg(F.count(F.lit(1)).cast("long").alias("n_customers"))
@@ -1526,7 +1094,7 @@ def median_ci_orders(spark: SparkSession, sf_dir: str) -> DataFrame:
     identical integers."""
     x = load_table(spark, sf_dir, "orders").select(
         "o_orderpriority",
-        (F.col("o_totalprice").cast("decimal(18,2)") * 100).cast("long").alias("v"),
+        cents("o_totalprice").alias("v"),
     )
     per_v = x.groupBy("o_orderpriority", "v").agg(
         F.count(F.lit(1)).cast("long").alias("c")
@@ -1661,7 +1229,7 @@ def neyman_allocation_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
     x = load_table(spark, sf_dir, "orders").select(
         "o_orderkey",
         "o_orderpriority",
-        (F.col("o_totalprice").cast("decimal(18,2)") * 100).cast("long").alias("v"),
+        cents("o_totalprice").alias("v"),
     )
     mom = x.groupBy("o_orderpriority").agg(
         F.count(F.lit(1)).cast("long").alias("nh"),
@@ -1800,7 +1368,7 @@ def fixedwidth_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.lpad(F.col("o_custkey").cast("string"), 12, "0"),
         F.col("o_orderstatus"),
         F.lpad(
-            (F.col("o_totalprice").cast("decimal(18,2)") * 100).cast("long").cast("string"),
+            cents("o_totalprice").cast("string"),
             14, "0",
         ),
         F.date_format(F.to_date("o_orderdate"), "yyyyMMdd"),
@@ -2078,7 +1646,7 @@ def pseudonymize_join_integrity(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     o = load_table(spark, sf_dir, "orders").select(
         tok(F.col("o_custkey")).alias("otok"),
-        (F.col("o_totalprice").cast("decimal(18,2)") * 100).cast("long").alias("cents"),
+        cents("o_totalprice").alias("cents"),
     )
     return (
         c.join(o, c.ctok == o.otok)
@@ -2680,7 +2248,7 @@ def pareto_front_orders(spark: SparkSession, sf_dir: str) -> DataFrame:
     100 TB: one distinct aggregation, bucket-bounded windows, an
     O(buckets) broadcast — the skyline itself is output-sized."""
     o = load_table(spark, sf_dir, "orders").select(
-        (F.col("o_totalprice").cast("decimal(18,2)") * 100).cast("long").alias("p"),
+        cents("o_totalprice").alias("p"),
         (F.year(F.to_date("o_orderdate")) * 10000
          + F.month(F.to_date("o_orderdate")) * 100
          + F.dayofmonth(F.to_date("o_orderdate"))).alias("d"),
@@ -2742,7 +2310,7 @@ def median_impute_acctbal(spark: SparkSession, sf_dir: str) -> DataFrame:
     two aggregations."""
     c = load_table(spark, sf_dir, "customer").select(
         "c_mktsegment",
-        (F.col("c_acctbal").cast("decimal(18,2)") * 100).cast("long").alias("bal"),
+        cents("c_acctbal").alias("bal"),
     )
     valid = c.where(F.col("bal") >= 0)
     per_v = valid.groupBy("c_mktsegment", "bal").agg(
@@ -2844,7 +2412,7 @@ def trimmed_mean_orders(spark: SparkSession, sf_dir: str) -> DataFrame:
     boundary picks are two O(groups) lookups."""
     x = load_table(spark, sf_dir, "orders").select(
         "o_orderpriority",
-        (F.col("o_totalprice").cast("decimal(18,2)") * 100).cast("long").alias("v"),
+        cents("o_totalprice").alias("v"),
     )
     per_v = x.groupBy("o_orderpriority", "v").agg(
         F.count(F.lit(1)).cast("long").alias("c")

@@ -20,6 +20,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from etl_extractor_spark.functions.quantize import cents
 from etl_extractor_spark.sources.parquet import load_table
 
 QUERIES: dict = {}
@@ -339,9 +340,7 @@ def mad_outlier_orders(spark: SparkSession, sf_dir: str) -> DataFrame:
     o = load_table(spark, sf_dir, "orders").select(
         "o_orderpriority",
         "o_orderkey",
-        (F.col("o_totalprice").cast("decimal(18,2)") * 100)
-        .cast("long")
-        .alias("cents"),
+        cents("o_totalprice").alias("cents"),
     )
     wv = Window.partitionBy("o_orderpriority").orderBy("cents", "o_orderkey")
     wn = Window.partitionBy("o_orderpriority")
@@ -515,9 +514,7 @@ def spearman_daily_corr(spark: SparkSession, sf_dir: str) -> DataFrame:
     frame — the raw scan aggregates map-side first."""
     o = load_table(spark, sf_dir, "orders").select(
         F.col("o_orderdate").alias("day"),
-        (F.col("o_totalprice").cast("decimal(18,2)") * 100)
-        .cast("long")
-        .alias("cents"),
+        cents("o_totalprice").alias("cents"),
     )
     daily = o.groupBy("day").agg(
         F.sum("cents").alias("rev"), F.count(F.lit(1)).cast("long").alias("cnt")
@@ -586,9 +583,7 @@ def winsorized_revenue_segments(spark: SparkSession, sf_dir: str) -> DataFrame:
     o = load_table(spark, sf_dir, "orders").select(
         "o_custkey",
         "o_orderkey",
-        (F.col("o_totalprice").cast("decimal(18,2)") * 100)
-        .cast("long")
-        .alias("cents"),
+        cents("o_totalprice").alias("cents"),
     )
     c = load_table(spark, sf_dir, "customer").select("c_custkey", "c_mktsegment")
     seg = o.join(c, o["o_custkey"] == c["c_custkey"]).select(
@@ -851,9 +846,7 @@ def ks_two_sample_orders(spark: SparkSession, sf_dir: str) -> DataFrame:
     decision quantity."""
     o = load_table(spark, sf_dir, "orders").select(
         "o_custkey",
-        (F.col("o_totalprice").cast("decimal(18,2)") * 100)
-        .cast("long")
-        .alias("cents"),
+        cents("o_totalprice").alias("cents"),
     )
     c = load_table(spark, sf_dir, "customer").select("c_custkey", "c_mktsegment")
     x = (
@@ -1102,9 +1095,7 @@ def eb_shrunk_segment_means(spark: SparkSession, sf_dir: str) -> DataFrame:
     O(segments) scalar math."""
     o = load_table(spark, sf_dir, "orders").select(
         "o_custkey",
-        (F.col("o_totalprice").cast("decimal(18,2)") * 100)
-        .cast("long")
-        .alias("cents"),
+        cents("o_totalprice").alias("cents"),
     )
     c = load_table(spark, sf_dir, "customer").select("c_custkey", "c_mktsegment")
     seg = (

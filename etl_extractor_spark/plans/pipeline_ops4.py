@@ -5,8 +5,7 @@ tail (simhash pair audit, IVF recall, HLL distinct-count bound —
 VERDICT r6 task 5), and a set of exact-arithmetic analytics operators
 (sweep-line max concurrency, running-max drawdown, Good-Turing
 counts-of-counts smoothing, rank-biased overlap, cumulative-gains
-deciles, quantized HITS hub/authority, linear multi-touch
-attribution).
+deciles, linear multi-touch attribution).
 
 Reference provenance: the reference pipeline (nilfredb/ETL-Extractor,
 extract/*.py + main.py) has no analytics layer; these are the
@@ -22,6 +21,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from etl_extractor_spark.functions.quantize import cents
 from etl_extractor_spark.sources.parquet import load_table
 from etl_extractor_spark.operators.common import pid_scratch_dir
 
@@ -420,9 +420,7 @@ def revenue_max_drawdown(spark: SparkSession, sf_dir: str) -> DataFrame:
     o = load_table(spark, sf_dir, "orders").select(
         "o_custkey",
         F.to_date("o_orderdate").alias("d"),
-        (F.col("o_totalprice").cast("decimal(18,2)") * 100)
-        .cast("long")
-        .alias("cents"),
+        cents("o_totalprice").alias("cents"),
     )
     c = load_table(spark, sf_dir, "customer").select("c_custkey", "c_nationkey")
     n = load_table(spark, sf_dir, "nation").select("n_nationkey", "n_name")
@@ -859,103 +857,6 @@ ORACLES["linear_attribution_credit"] = """
 """
 
 
-# --- 11. HITS hub/authority (quantized iterations) -----------------------------
-def hits_hub_authority(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Two HITS iterations (Kleinberg 1999) over the directed
-    customer→supplier purchase graph: authority(s) = Σ hub(c) over
-    in-edges, hub(c) = Σ authority(s) over out-edges, max-normalized
-    each half-step to integer MILLI scores (x·1000 div max — the
-    repo's integer floor-division idiom, so every intermediate is
-    BIGINT-exact and the oracle can unroll the same rounds as
-    MATERIALIZED CTEs). Top-20 suppliers by final authority.
-
-    100 TB: each half-step is one key-joined sum — the PageRank
-    exchange shape; the edge list is checkpointed ONCE; max() is a
-    scalar broadcast, never a sort. Integer headroom: scores ≤ 1000,
-    so a sum is ≤ 1000·max_degree — safe to ~9e15 edges per node."""
-    from etl_extractor_spark.operators.checkpoints import reliable_checkpoint
-
-    o = load_table(spark, sf_dir, "orders").select("o_orderkey", "o_custkey")
-    l = load_table(spark, sf_dir, "lineitem").select("l_orderkey", "l_suppkey")
-    edges = reliable_checkpoint(
-        o.join(l, o["o_orderkey"] == l["l_orderkey"])
-        .select(
-            F.col("o_custkey").cast("long").alias("c"),
-            F.col("l_suppkey").cast("long").alias("s"),
-        )
-        .distinct()
-    )
-
-    def norm(df: DataFrame, key: str, raw: str, out: str) -> DataFrame:
-        mx = df.agg(F.max(raw).alias("mx"))
-        return df.crossJoin(F.broadcast(mx)).select(
-            key, F.expr(f"CAST({raw} * 1000 div mx AS BIGINT)").alias(out)
-        )
-
-    def auth_step(h: DataFrame) -> DataFrame:
-        raw = edges.join(h, "c").groupBy("s").agg(
-            F.sum("h").cast("long").alias("ar")
-        )
-        return norm(raw, "s", "ar", "a")
-
-    h = edges.select("c").distinct().withColumn("h", F.lit(1000).cast("long"))
-    a1 = auth_step(h)
-    h1 = norm(
-        edges.join(a1, "s").groupBy("c").agg(F.sum("a").cast("long").alias("hr")),
-        "c",
-        "hr",
-        "h",
-    )
-    a2 = auth_step(h1)
-    wr = Window.orderBy(F.desc("a"), F.asc("s"))
-    return (
-        a2.orderBy(F.desc("a"), F.asc("s"))
-        .limit(20)
-        .select(
-            F.col("s").alias("s_suppkey"),
-            F.col("a").alias("authority_milli"),
-            F.row_number().over(wr).cast("long").alias("rank"),
-        )
-    )
-
-
-QUERIES["hits_hub_authority"] = hits_hub_authority
-ORACLES["hits_hub_authority"] = """
-    WITH pairs AS MATERIALIZED (
-      SELECT DISTINCT o_custkey AS c, l_suppkey AS s
-      FROM orders JOIN lineitem ON o_orderkey = l_orderkey
-    ),
-    h0 AS (SELECT DISTINCT c, 1000::BIGINT AS h FROM pairs),
-    a1r AS MATERIALIZED (
-      SELECT s, CAST(sum(h) AS BIGINT) AS ar
-      FROM pairs JOIN h0 USING (c) GROUP BY s
-    ),
-    a1 AS MATERIALIZED (
-      SELECT s, CAST(ar * 1000 // (SELECT max(ar) FROM a1r) AS BIGINT) AS a
-      FROM a1r
-    ),
-    h1r AS MATERIALIZED (
-      SELECT c, CAST(sum(a) AS BIGINT) AS hr
-      FROM pairs JOIN a1 USING (s) GROUP BY c
-    ),
-    h1 AS MATERIALIZED (
-      SELECT c, CAST(hr * 1000 // (SELECT max(hr) FROM h1r) AS BIGINT) AS h
-      FROM h1r
-    ),
-    a2r AS MATERIALIZED (
-      SELECT s, CAST(sum(h) AS BIGINT) AS ar
-      FROM pairs JOIN h1 USING (c) GROUP BY s
-    ),
-    a2 AS (
-      SELECT s, CAST(ar * 1000 // (SELECT max(ar) FROM a2r) AS BIGINT) AS a
-      FROM a2r
-    )
-    SELECT s AS s_suppkey, a AS authority_milli,
-           CAST(row_number() OVER (ORDER BY a DESC, s ASC) AS BIGINT) AS rank
-    FROM a2 ORDER BY a DESC, s ASC LIMIT 20
-"""
-
-
 # --- 12. Streaming n-gram-counter replay (11th certified stream) ---------------
 #
 # Renamed from streaming_unigram_counts_replay before the name entered
@@ -1181,140 +1082,6 @@ ORACLES["percentile_approx_contract"] = """
            COUNT(*)::BIGINT AS n_events,
            1::BIGINT AS ok_p50, 1::BIGINT AS ok_p95, 1::BIGINT AS ok_p99
     FROM events GROUP BY event_type
-"""
-
-
-# --- 15. Bellman-Ford weighted shortest paths (bounded rounds) -----------------
-_BF_ROUNDS = 3
-
-
-def bellman_ford_cheapest_hops(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Min-COST paths over the weighted purchase graph (edge weight =
-    the cheapest order total in cents between a customer and a
-    supplier), 3 synchronous Bellman-Ford relaxation rounds from the
-    min-custkey source — the min-plus twin of bfs_shortest_hops
-    (which counts hops; this minimizes summed cost, so a 3-hop cheap
-    path CAN beat a 1-hop expensive edge). Top-20 reached nodes by
-    (cost, node). All integer cents; the oracle unrolls the same
-    rounds as MATERIALIZED CTEs, so a hash match certifies every
-    relaxation.
-
-    100 TB: each round is ONE edge⋈dist join + one dst-keyed min —
-    the PageRank exchange shape. r11 (guide §2.4): SELF-MESSAGES
-    replace the per-round full-outer merge — unioning the reached-set
-    frame into the relaxation messages makes min-over-(messages ∪
-    self) = least(own cost, best relaxation) and carries the reached
-    set forward, so ``dist`` is exactly the message aggregate
-    (value-identical to the old full-outer: the self-message
-    contributes d_k(v) precisely where the old plan coalesced the
-    preserved row, and the domain — reached ∪ newly-relaxed — is the
-    same union). Rounds go join + union + agg (1 exchange instead of
-    the full-outer's 3); per-round reliable checkpoints stay (dist is
-    referenced twice per round); costs stay BIGINT (≤ rounds ×
-    max-edge-cents ≪ 2^63)."""
-    from etl_extractor_spark.operators.checkpoints import reliable_checkpoint
-
-    o = load_table(spark, sf_dir, "orders").select(
-        "o_orderkey",
-        "o_custkey",
-        (F.col("o_totalprice").cast("decimal(18,2)") * 100)
-        .cast("long")
-        .alias("cents"),
-    )
-    l = load_table(spark, sf_dir, "lineitem").select("l_orderkey", "l_suppkey")
-    pairs = (
-        o.join(l, o["o_orderkey"] == l["l_orderkey"])
-        .groupBy(
-            (F.col("o_custkey").cast("long") * 2).alias("c"),
-            (F.col("l_suppkey").cast("long") * 2 + 1).alias("s"),
-        )
-        .agg(F.min("cents").cast("long").alias("w"))
-    )
-    edges = reliable_checkpoint(
-        pairs.select(F.col("c").alias("src"), F.col("s").alias("dst"), "w").union(
-            pairs.select(F.col("s").alias("src"), F.col("c").alias("dst"), "w")
-        )
-    )
-    src = (
-        o.agg(F.min(F.col("o_custkey").cast("long") * 2).alias("node"))
-        .withColumn("cost", F.lit(0).cast("long"))
-    )
-    dist = src
-    for _ in range(_BF_ROUNDS):
-        msgs = edges.join(dist, edges["src"] == dist["node"]).select(
-            F.col("dst").alias("node"),
-            (F.col("cost") + F.col("w")).alias("cost"),
-        )
-        dist = reliable_checkpoint(
-            msgs.unionByName(dist)
-            .groupBy("node")
-            .agg(F.min("cost").alias("cost"))
-        )
-    from etl_extractor_spark.plans.pipeline_ops2 import _node_str
-
-    return (
-        dist.orderBy("cost", "node")
-        .limit(20)
-        .select(
-            _node_str("node").alias("node"),
-            "cost",
-            F.row_number()
-            .over(Window.orderBy("cost", "node"))
-            .cast("long")
-            .alias("rank"),
-        )
-    )
-
-
-QUERIES["bellman_ford_cheapest_hops"] = bellman_ford_cheapest_hops
-
-
-def _bf_round_sql(prev: str, out: str) -> str:
-    return f"""
-    {out} AS MATERIALIZED (
-        SELECT coalesce(d.node, r.node2) AS node,
-               least(coalesce(d.cost, 4611686018427387904),
-                     coalesce(r.nc, 4611686018427387904)) AS cost
-        FROM {prev} d FULL OUTER JOIN (
-            SELECT e.dst AS node2, min(d2.cost + e.w) AS nc
-            FROM wedges e JOIN {prev} d2 ON e.src = d2.node
-            GROUP BY e.dst
-        ) r ON d.node = r.node2
-    )"""
-
-
-ORACLES["bellman_ford_cheapest_hops"] = f"""
-    WITH pairs AS MATERIALIZED (
-      SELECT o_custkey * 2 AS c, l_suppkey * 2 + 1 AS s,
-             CAST(min(CAST(CAST(o_totalprice AS DECIMAL(18,2)) * 100 AS BIGINT))
-                  AS BIGINT) AS w
-      FROM orders JOIN lineitem ON o_orderkey = l_orderkey
-      GROUP BY 1, 2
-    ),
-    wedges AS MATERIALIZED (
-      SELECT c AS src, s AS dst, w FROM pairs
-      UNION ALL
-      SELECT s AS src, c AS dst, w FROM pairs
-    ),
-    d0 AS (SELECT (SELECT min(o_custkey) * 2 FROM orders) AS node, 0::BIGINT AS cost),
-    {_bf_round_sql('d0', 'd1')},
-    {_bf_round_sql('d1', 'd2')},
-    {_bf_round_sql('d2', 'd3')}
-    SELECT CASE WHEN node % 2 = 0 THEN 'C' || CAST(node // 2 AS VARCHAR)
-                ELSE 'S' || CAST(node // 2 AS VARCHAR) END AS node,
-           cost, rank
-    FROM (
-      -- rank AND cut on the INTEGER node before projecting the string
-      -- form: a statement-level ORDER BY after the CASE alias would
-      -- bind ties to STRING order while the window binds to the base
-      -- BIGINT column — divergent tie-breaks vs the Spark side once a
-      -- digit-length crossing (S9 vs S10) straddles the cutoff
-      -- (review catch, reproduced in DuckDB)
-      SELECT node, CAST(cost AS BIGINT) AS cost,
-             CAST(row_number() OVER (ORDER BY cost, node) AS BIGINT) AS rank
-      FROM d3 ORDER BY cost, node LIMIT 20
-    )
-    ORDER BY rank
 """
 
 

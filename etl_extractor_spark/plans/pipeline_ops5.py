@@ -21,6 +21,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from etl_extractor_spark.functions.quantize import cents
 from etl_extractor_spark.sources.parquet import load_table
 
 QUERIES: dict = {}
@@ -115,9 +116,7 @@ def salted_skew_join_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
     o = load_table(spark, sf_dir, "orders")
     fact = li.select(
         _skew_key("l_orderkey").alias("k"),
-        (F.col("l_extendedprice").cast("decimal(18,2)") * 100)
-        .cast("long")
-        .alias("cents"),
+        cents("l_extendedprice").alias("cents"),
         "l_orderkey",
         "l_linenumber",
     )
@@ -176,7 +175,7 @@ def _daily_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
         .groupBy(F.to_date("o_orderdate").alias("d"))
         .agg(
             F.sum(
-                (F.col("o_totalprice").cast("decimal(18,2)") * 100).cast("long")
+                cents("o_totalprice")
             )
             .cast("long")
             .alias("rev")
@@ -1608,9 +1607,7 @@ def partition_evolution_scan(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     o = load_table(spark, sf_dir, "orders").select(
         "o_orderkey",
-        (F.col("o_totalprice").cast("decimal(18,2)") * 100)
-        .cast("long")
-        .alias("cents"),
+        cents("o_totalprice").alias("cents"),
         F.year(F.to_date("o_orderdate")).alias("p_year"),
         F.month(F.to_date("o_orderdate")).alias("p_month"),
     )

@@ -22,6 +22,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from etl_extractor_spark.functions.quantize import cents
 from etl_extractor_spark.sources.parquet import load_table
 
 QUERIES: dict = {}
@@ -69,9 +70,7 @@ def salted_skew_agg_totals(spark: SparkSession, sf_dir: str) -> DataFrame:
     li = load_table(spark, sf_dir, "lineitem")
     fact = li.select(
         _skew_key("l_orderkey").alias("k"),
-        (F.col("l_extendedprice").cast("decimal(18,2)") * 100)
-        .cast("long")
-        .alias("cents"),
+        cents("l_extendedprice").alias("cents"),
         ((F.col("l_orderkey") * 7 + F.col("l_linenumber")) % _AGG_SALT)
         .cast("int")
         .alias("salt"),
@@ -154,9 +153,7 @@ def skewed_exact_median_value(spark: SparkSession, sf_dir: str) -> DataFrame:
     li = load_table(spark, sf_dir, "lineitem")
     f = li.select(
         _skew_key("l_orderkey").alias("k"),
-        (F.col("l_extendedprice").cast("decimal(18,2)") * 100)
-        .cast("long")
-        .alias("cents"),
+        cents("l_extendedprice").alias("cents"),
     )
     vc = f.groupBy("k", "cents").agg(F.count(F.lit(1)).cast("long").alias("c"))
     w_cum = Window.partitionBy("k").orderBy("cents")
@@ -389,9 +386,7 @@ def mv_incremental_daily_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     o = load_table(spark, sf_dir, "orders").select(
         "o_orderdate",
-        (F.col("o_totalprice").cast("decimal(18,2)") * 100)
-        .cast("long")
-        .alias("cents"),
+        cents("o_totalprice").alias("cents"),
     )
     split = F.col("o_orderdate") < F.lit("1999-01-01")
 
@@ -549,9 +544,7 @@ def cuped_adjusted_lift(spark: SparkSession, sf_dir: str) -> DataFrame:
     o = load_table(spark, sf_dir, "orders").select(
         "o_custkey",
         "o_orderdate",
-        (F.col("o_totalprice").cast("decimal(18,2)") * 100)
-        .cast("long")
-        .alias("cents"),
+        cents("o_totalprice").alias("cents"),
     )
     c = load_table(spark, sf_dir, "customer").select(
         F.col("c_custkey").alias("cust"),
@@ -693,9 +686,7 @@ def schema_evolution_scan(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     o = load_table(spark, sf_dir, "orders").select(
         "o_orderkey",
-        (F.col("o_totalprice").cast("decimal(18,2)") * 100)
-        .cast("long")
-        .alias("cents"),
+        cents("o_totalprice").alias("cents"),
         "o_orderstatus",
     )
     path = pid_scratch_dir("spark_graft_schema_evo_")

@@ -4,7 +4,7 @@ DISTINCT), split-conformal prediction intervals (exact order-statistic
 calibration + held-out coverage), late-arriving-dimension backfill
 (the two-phase DW enrichment the reference's star loader would need
 the day its dim extract lags the fact extract), and — in later
-batches — IPF raking weights, graph modularity, Holt linear
+batches — IPF raking weights, Holt linear
 forecasting, and the 14th certified stream (conditional last-wins
 streaming upsert).
 
@@ -22,6 +22,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from etl_extractor_spark.functions.quantize import cents
 from etl_extractor_spark.session import query_session
 from etl_extractor_spark.sources.parquet import load_table
 
@@ -51,9 +52,6 @@ def _md5_bucket_col(key: F.Column, mod: int) -> F.Column:
         ),
         F.lit(mod),
     )
-
-
-_CENTS = lambda c: (F.col(c).cast("decimal(18,2)") * 100).cast("long")  # noqa: E731
 
 
 # --- 1. Mergeable exact-distinct bitmap rollup ---------------------------------
@@ -166,7 +164,7 @@ def conformal_interval_coverage(spark: SparkSession, sf_dir: str) -> DataFrame:
     are uniform); predictor and q are |segments|-row frames, joined
     back broadcast-small."""
     o = load_table(spark, sf_dir, "orders").select(
-        "o_orderkey", "o_custkey", _CENTS("o_totalprice").alias("cents")
+        "o_orderkey", "o_custkey", cents("o_totalprice").alias("cents")
     )
     c = load_table(spark, sf_dir, "customer").select(
         "c_custkey", "c_mktsegment"
@@ -323,7 +321,7 @@ def late_arriving_dim_backfill(spark: SparkSession, sf_dir: str) -> DataFrame:
     Parked rows carry their fact columns, so phase 2 never re-reads
     the fact table."""
     o = load_table(spark, sf_dir, "orders").select(
-        "o_orderkey", "o_custkey", _CENTS("o_totalprice").alias("cents")
+        "o_orderkey", "o_custkey", cents("o_totalprice").alias("cents")
     )
     cust = load_table(spark, sf_dir, "customer").select(
         "c_custkey", "c_nationkey"
@@ -381,188 +379,6 @@ ORACLES["late_arriving_dim_backfill"] = """
     JOIN nation ON c_nationkey = n_nationkey
     GROUP BY 1, 2
     ORDER BY nation, was_backfilled
-"""
-
-
-# --- 4. Graph modularity of the nation partition --------------------------------
-#
-# Newman modularity Q = Σ_c [ e_c/m − (D_c/2m)² ] of the purchase
-# graph (distinct customer↔supplier edges — the same graph pagerank /
-# degrees / k-core certify) under the nation partition (customers AND
-# suppliers both carry nations). Fixture measured NON-degenerate
-# before building (house rule): m=1444 / internal=59 at sf0.001,
-# m=48518 / internal=1938 at sf0.01 — sparse (m ∝ SF) with ~4%
-# internal mass. The co-supplier projection was measured OUT: it is
-# the COMPLETE graph at every SF (C(n_supp, 2) edges — quadratic and
-# structureless).
-
-
-def graph_modularity_nations(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Per-nation modularity contributions of the purchase graph:
-    internal edge count e_c, degree mass D_c, and q_contrib_micro =
-    floor((4·m·e_c − D_c²) / (4·m²) · 1e6). The division runs as ONE
-    identical exactly-rounded DOUBLE sequence over exact int64 inputs
-    on both engines (the repo's no-ceiling final-scalar recipe —
-    products are computed in double too, so there is no int64 4·m²
-    wrap to outgrow: every factor is exact and IEEE ops round
-    identically).
-
-    100 TB: the edge build is the ordinary fact⋈fact distinct (shuffle
-    on orderkey, then on the pair); degrees are two groupBys; the
-    per-nation rollup shuffles ≤ |nations| rows. m joins in as a
-    broadcast 1-row aggregate (the only crossJoin shape the repo
-    allows)."""
-    o = load_table(spark, sf_dir, "orders").select("o_orderkey", "o_custkey")
-    li = load_table(spark, sf_dir, "lineitem").select(
-        "l_orderkey", "l_suppkey"
-    )
-    cust = load_table(spark, sf_dir, "customer").select(
-        "c_custkey", "c_nationkey"
-    )
-    supp = load_table(spark, sf_dir, "supplier").select(
-        "s_suppkey", "s_nationkey"
-    )
-    nat = load_table(spark, sf_dir, "nation").select("n_nationkey", "n_name")
-    e = (
-        o.join(li, o["o_orderkey"] == li["l_orderkey"])
-        .select(F.col("o_custkey").alias("ck"), F.col("l_suppkey").alias("sk"))
-        .distinct()
-        .persist()
-    )
-    # NOTE (r11): eager e.count() A/B'd and REJECTED (lazy min 2.47 /
-    # mean 2.69 vs eager 2.77 / 3.61 interleaved) — the guaranteed
-    # extra fact⋈fact pass outweighs the occasional cold-cache race
-    # on this line.
-    m1 = e.agg(F.count(F.lit(1)).cast("long").alias("m"))
-    labeled = (
-        e.join(cust, e["ck"] == cust["c_custkey"])
-        .join(supp, e["sk"] == supp["s_suppkey"])
-        .select("ck", "sk", "c_nationkey", "s_nationkey")
-    )
-    internal = (
-        labeled.filter(F.col("c_nationkey") == F.col("s_nationkey"))
-        .groupBy(F.col("c_nationkey").alias("nationkey"))
-        .agg(F.count(F.lit(1)).cast("long").alias("internal_edges"))
-    )
-    deg_c = (
-        e.groupBy("ck")
-        .agg(F.count(F.lit(1)).alias("d"))
-        .join(cust, F.col("ck") == cust["c_custkey"])
-        .groupBy(F.col("c_nationkey").alias("nationkey"))
-        .agg(
-            F.sum("d").cast("long").alias("deg"),
-            F.count(F.lit(1)).cast("long").alias("n_customers"),
-        )
-    )
-    deg_s = (
-        e.groupBy("sk")
-        .agg(F.count(F.lit(1)).alias("d"))
-        .join(supp, F.col("sk") == supp["s_suppkey"])
-        .groupBy(F.col("s_nationkey").alias("nationkey"))
-        .agg(
-            F.sum("d").cast("long").alias("deg"),
-            F.count(F.lit(1)).cast("long").alias("n_suppliers"),
-        )
-    )
-    per_nat = (
-        deg_c.select(
-            "nationkey", "deg", "n_customers", F.lit(0).cast("long").alias("n_suppliers")
-        )
-        .unionByName(
-            deg_s.select(
-                "nationkey",
-                "deg",
-                F.lit(0).cast("long").alias("n_customers"),
-                "n_suppliers",
-            )
-        )
-        .groupBy("nationkey")
-        .agg(
-            F.sum("deg").cast("long").alias("degree_sum"),
-            F.sum("n_customers").cast("long").alias("n_customers"),
-            F.sum("n_suppliers").cast("long").alias("n_suppliers"),
-        )
-        .join(internal, "nationkey", "left")
-        .na.fill({"internal_edges": 0})
-    )
-    return (
-        per_nat.crossJoin(F.broadcast(m1))
-        .join(F.broadcast(nat), F.col("nationkey") == nat["n_nationkey"])
-        .select(
-            F.col("n_name").alias("nation"),
-            "n_customers",
-            "n_suppliers",
-            "internal_edges",
-            "degree_sum",
-            F.floor(
-                (
-                    F.lit(4.0) * F.col("m").cast("double")
-                    * F.col("internal_edges").cast("double")
-                    - F.col("degree_sum").cast("double")
-                    * F.col("degree_sum").cast("double")
-                )
-                / (
-                    F.lit(4.0) * F.col("m").cast("double")
-                    * F.col("m").cast("double")
-                )
-                * F.lit(1000000.0)
-            )
-            .cast("long")
-            .alias("q_contrib_micro"),
-        )
-        .orderBy("nation")
-    )
-
-
-QUERIES["graph_modularity_nations"] = graph_modularity_nations
-ORACLES["graph_modularity_nations"] = """
-    WITH e AS MATERIALIZED (
-      SELECT DISTINCT o_custkey AS ck, l_suppkey AS sk
-      FROM orders JOIN lineitem ON o_orderkey = l_orderkey
-    ), m1 AS (
-      SELECT count(*)::BIGINT AS m FROM e
-    ), internal AS (
-      SELECT c_nationkey AS nationkey, count(*)::BIGINT AS internal_edges
-      FROM e
-      JOIN customer ON ck = c_custkey
-      JOIN supplier ON sk = s_suppkey
-      WHERE c_nationkey = s_nationkey
-      GROUP BY 1
-    ), deg_c AS (
-      SELECT c_nationkey AS nationkey, sum(d)::BIGINT AS deg,
-             count(*)::BIGINT AS n_customers
-      FROM (SELECT ck, count(*)::BIGINT AS d FROM e GROUP BY ck)
-      JOIN customer ON ck = c_custkey
-      GROUP BY 1
-    ), deg_s AS (
-      SELECT s_nationkey AS nationkey, sum(d)::BIGINT AS deg,
-             count(*)::BIGINT AS n_suppliers
-      FROM (SELECT sk, count(*)::BIGINT AS d FROM e GROUP BY sk)
-      JOIN supplier ON sk = s_suppkey
-      GROUP BY 1
-    ), per_nat AS (
-      SELECT nationkey, sum(deg)::BIGINT AS degree_sum,
-             sum(n_customers)::BIGINT AS n_customers,
-             sum(n_suppliers)::BIGINT AS n_suppliers
-      FROM (
-        SELECT nationkey, deg, n_customers, 0::BIGINT AS n_suppliers FROM deg_c
-        UNION ALL
-        SELECT nationkey, deg, 0::BIGINT AS n_customers, n_suppliers FROM deg_s
-      )
-      GROUP BY 1
-    )
-    SELECT n_name AS nation, p.n_customers, p.n_suppliers,
-           coalesce(i.internal_edges, 0)::BIGINT AS internal_edges,
-           p.degree_sum,
-           CAST(floor(
-             (4.0 * (SELECT m FROM m1)::DOUBLE * coalesce(i.internal_edges, 0)::DOUBLE
-              - p.degree_sum::DOUBLE * p.degree_sum::DOUBLE)
-             / (4.0 * (SELECT m FROM m1)::DOUBLE * (SELECT m FROM m1)::DOUBLE)
-             * 1000000.0) AS BIGINT) AS q_contrib_micro
-    FROM per_nat p
-    LEFT JOIN internal i USING (nationkey)
-    JOIN nation ON nationkey = n_nationkey
-    ORDER BY nation
 """
 
 
@@ -747,7 +563,7 @@ def holt_linear_forecast(spark: SparkSession, sf_dir: str) -> DataFrame:
     o = load_table(spark, sf_dir, "orders").select(
         "o_custkey",
         F.date_trunc("week", F.col("o_orderdate")).alias("wk"),
-        _CENTS("o_totalprice").alias("cents"),
+        cents("o_totalprice").alias("cents"),
     )
     c = load_table(spark, sf_dir, "customer").select("c_custkey", "c_nationkey")
     n = load_table(spark, sf_dir, "nation").select("n_nationkey", "n_name")
@@ -978,7 +794,7 @@ def schema_widening_scan(spark: SparkSession, sf_dir: str) -> DataFrame:
     from etl_extractor_spark.operators.common import pid_scratch_dir
 
     o = load_table(spark, sf_dir, "orders").select(
-        "o_orderkey", _CENTS("o_totalprice").alias("cents"), "o_orderstatus"
+        "o_orderkey", cents("o_totalprice").alias("cents"), "o_orderstatus"
     ).persist()  # two generation writes below — one corpus pass, not two
     path = pid_scratch_dir("spark_graft_widen_scan_")
     o.filter(F.col("o_orderkey") % 2 == 0).select(
@@ -1475,7 +1291,7 @@ def manifest_snapshot_expiry(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     o = load_table(spark, sf_dir, "orders").select(
         "o_orderkey",
-        _CENTS("o_totalprice").alias("cents"),
+        cents("o_totalprice").alias("cents"),
         "o_orderstatus",
     ).persist()
     path = pid_scratch_dir("spark_graft_snap_expiry_")
@@ -1549,21 +1365,20 @@ def _bucket_lookup_df(spark: SparkSession, sf_dir: str) -> DataFrame:
     and pruning only applies to bucketed scans (measured: "Bucketed:
     false (disabled by query planner)", zero pruning)."""
     from etl_extractor_spark.operators.bucketing import write_bucketed
-    from etl_extractor_spark.operators.common import process_scratch_dir
+    from etl_extractor_spark.operators.common import pid_scratch_dir, scratch_database
 
-    base = process_scratch_dir("spark_graft_bpl_")
-    spark.sql(f"CREATE DATABASE IF NOT EXISTS graft_bpl LOCATION '{base}'")
+    db = scratch_database(spark, "graft_bpl", pid_scratch_dir("spark_graft_bpl_"))
     o = load_table(spark, sf_dir, "orders").select(
-        "o_custkey", "o_orderpriority", _CENTS("o_totalprice").alias("cents")
+        "o_custkey", "o_orderpriority", cents("o_totalprice").alias("cents")
     )
-    write_bucketed(o, "graft_bpl.orders_pt", "o_custkey", _BPL_BUCKETS)
+    write_bucketed(o, f"{db}.orders_pt", "o_custkey", _BPL_BUCKETS)
     key = (
         load_table(spark, sf_dir, "orders")
         .filter(F.col("o_custkey") % 7 == 0)
         .agg(F.max("o_custkey"))
         .collect()[0][0]
     )
-    t = spark.table("graft_bpl.orders_pt")
+    t = spark.table(f"{db}.orders_pt")
     return (
         t.filter(F.col("o_custkey") == F.lit(int(key)))
         .groupBy(F.col("o_orderpriority").alias("priority"))
@@ -1582,16 +1397,11 @@ def bucket_pruned_lookup(spark: SparkSession, sf_dir: str) -> DataFrame:
     _bucket_lookup_df). The probed key is the largest custkey ≡ 0
     (mod 7) — data-derived but deterministic on both engines. The
     plan builds in a query_session with the scan conf off, so the
-    caller's session keeps its own value. The pruned result is
-    written to a per-call scratch dir inside this call: the next call
-    rewrites graft_bpl.orders_pt, and a held frame reads the copy.
+    caller's session keeps its own value, and the frame runs under it
+    at the caller's action. Each call writes its own bucketed table
+    (``scratch_database``), so a held frame keeps reading its own.
     Oracle = the same profile from the base table."""
-    from etl_extractor_spark.operators.common import pid_scratch_dir
-
-    spark = query_session(spark, {_BPL_SCAN_CONF: "false"})
-    out = pid_scratch_dir("spark_graft_bpl_result_")
-    _bucket_lookup_df(spark, sf_dir).write.mode("overwrite").parquet(out)
-    return spark.read.parquet(out).orderBy("priority")
+    return _bucket_lookup_df(query_session(spark, {_BPL_SCAN_CONF: "false"}), sf_dir)
 
 
 QUERIES["bucket_pruned_lookup"] = bucket_pruned_lookup
@@ -1645,7 +1455,7 @@ def positional_delete_scan(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     o = load_table(spark, sf_dir, "orders").select(
         "o_orderkey",
-        _CENTS("o_totalprice").alias("cents"),
+        cents("o_totalprice").alias("cents"),
         "o_orderstatus",
     )
     path = pid_scratch_dir("spark_graft_posdel_")

@@ -1423,9 +1423,7 @@ def golden_record_survivorship(spark: SparkSession, sf_dir: str) -> DataFrame:
         "c_custkey",
         "c_nationkey",
         "c_name",
-        (F.col("c_acctbal").cast("decimal(18,2)") * 100)
-        .cast("long")
-        .alias("bal_cents"),
+        _cents("c_acctbal").alias("bal_cents"),
     )
     recs = c.select(
         "*",

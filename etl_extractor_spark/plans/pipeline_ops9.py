@@ -762,9 +762,7 @@ def aqe_skew_join_split(spark: SparkSession, sf_dir: str) -> DataFrame:
     fact = fan_out(
         li.select(
             _skew_key("l_orderkey").alias("k"),
-            (F.col("l_extendedprice").cast("decimal(18,2)") * 100)
-            .cast("long")
-            .alias("cents"),
+            _cents("l_extendedprice").alias("cents"),
         )
     )
     # The dim must reach the join as a PLAIN shuffle — the manual

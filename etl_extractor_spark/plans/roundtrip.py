@@ -29,11 +29,16 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from etl_extractor_spark.functions.quantize import cents
 from etl_extractor_spark.sources.csv import read_csv
 from etl_extractor_spark.sources.jdbc import read_jdbc, write_jdbc
 from etl_extractor_spark.sources.json_api import records_to_df
 from etl_extractor_spark.sources.parquet import load_table
-from etl_extractor_spark.operators.common import pid_scratch_dir, process_scratch_dir
+from etl_extractor_spark.operators.common import (
+    pid_scratch_dir,
+    process_scratch_dir,
+    scratch_database,
+)
 from etl_extractor_spark.session import query_session
 
 _DERBY_DRIVER = "org.apache.derby.jdbc.EmbeddedDriver"
@@ -336,17 +341,15 @@ ORACLES["dpp_partitioned_join"] = DPP_SQL
 def bucketed_join_colocated(spark: SparkSession, sf_dir: str) -> DataFrame:
     """K4's big⋈big answer as a driver-checkable query: orders and
     customer are written BUCKETED on the join key (8 buckets each,
-    sorted) into a pinned-location database, then joined — Spark reads
+    sorted) into this call's own database, then joined — Spark reads
     matching buckets directly, so the join plan has NO Exchange on
     either input (guarded in tests/test_plans.py); the only shuffle
     left is the final segment rollup. On repeated 100 TB fact joins
     this is the single largest shuffle saving available. The database
-    LOCATION is explicit (temp dir), so a vanilla driver session's
-    in-memory catalog works and nothing lands in the driver's cwd."""
-    base = process_scratch_dir("spark_graft_bkt_")
-    spark.sql(
-        f"CREATE DATABASE IF NOT EXISTS graft_bkt LOCATION '{base}'"
-    )
+    LOCATION is this call's scratch dir (``scratch_database``), so a
+    vanilla driver session's in-memory catalog works, nothing lands in
+    the driver's cwd, and no other call rewrites the tables."""
+    db = scratch_database(spark, "graft_bkt", pid_scratch_dir("spark_graft_bkt_"))
     o = load_table(spark, sf_dir, "orders").select(
         "o_orderkey",
         "o_custkey",
@@ -355,10 +358,10 @@ def bucketed_join_colocated(spark: SparkSession, sf_dir: str) -> DataFrame:
     c = load_table(spark, sf_dir, "customer").select("c_custkey", "c_mktsegment")
     from etl_extractor_spark.operators.bucketing import write_bucketed
 
-    write_bucketed(o, "graft_bkt.orders_b", "o_custkey", 8)
-    write_bucketed(c, "graft_bkt.customer_b", "c_custkey", 8)
-    ob = spark.table("graft_bkt.orders_b")
-    cb = spark.table("graft_bkt.customer_b")
+    write_bucketed(o, f"{db}.orders_b", "o_custkey", 8)
+    write_bucketed(c, f"{db}.customer_b", "c_custkey", 8)
+    ob = spark.table(f"{db}.orders_b")
+    cb = spark.table(f"{db}.customer_b")
     return (
         ob.join(cb, ob.o_custkey == cb.c_custkey)
         .groupBy("c_mktsegment")
@@ -480,9 +483,7 @@ def manifest_time_travel(spark: SparkSession, sf_dir: str) -> DataFrame:
     o = load_table(spark, sf_dir, "orders").select(
         "o_orderpriority",
         F.to_date("o_orderdate").alias("d"),
-        (F.col("o_totalprice").cast("decimal(18,2)") * 100)
-        .cast("long")
-        .alias("cents"),
+        cents("o_totalprice").alias("cents"),
     )
 
     def agg(df):

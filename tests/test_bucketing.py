@@ -20,20 +20,21 @@ def no_broadcast(spark):
     spark.conf.set("spark.sql.autoBroadcastJoinThreshold", old)
 
 
-def test_bucketed_join_has_no_exchange(spark, sf_dir, no_broadcast):
-    import shutil
-
-    warehouse = spark.conf.get("spark.sql.warehouse.dir").removeprefix("file:")
-    for t in ("b_orders", "b_lineitem"):  # clean slate incl. stale locations
-        spark.sql(f"DROP TABLE IF EXISTS {t}")
-        shutil.rmtree(f"{warehouse}/{t}", ignore_errors=True)
+def test_bucketed_join_has_no_exchange(spark, sf_dir, no_broadcast, tmp_path):
+    spark.sql("DROP DATABASE IF EXISTS test_bucketing CASCADE")
+    spark.sql(f"CREATE DATABASE test_bucketing LOCATION '{tmp_path}'")
     write_bucketed(
-        load_table(spark, sf_dir, "orders"), "b_orders", "o_orderkey", 8
+        load_table(spark, sf_dir, "orders"), "test_bucketing.b_orders", "o_orderkey", 8
     )
     write_bucketed(
-        load_table(spark, sf_dir, "lineitem"), "b_lineitem", "l_orderkey", 8
+        load_table(spark, sf_dir, "lineitem"), "test_bucketing.b_lineitem", "l_orderkey", 8
     )
-    joined = bucketed_join(spark, "b_lineitem", "b_orders", ("l_orderkey", "o_orderkey"))
+    joined = bucketed_join(
+        spark,
+        "test_bucketing.b_lineitem",
+        "test_bucketing.b_orders",
+        ("l_orderkey", "o_orderkey"),
+    )
     assert joined.count() == load_table(spark, sf_dir, "lineitem").count()
     assert exchanges_in_plan(joined) == 0  # co-located: no shuffle at all
 

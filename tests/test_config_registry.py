@@ -56,6 +56,20 @@ def test_all_oracle_names_have_queries():
     assert set(os_) <= set(qs)
 
 
+# sha256 of the sorted (name, oracle SQL or None) list: moving a query
+# between plan modules must keep every name and every oracle string.
+_REGISTRY_SHA256 = "d7441802ce0645a49603f298ca8ff2769f00d4575fa6a6dc5790ac8de8fa9fdd"
+
+
+def test_registry_names_and_oracles_are_pinned(registry):
+    import hashlib
+
+    qs, os_ = registry.all_queries(), registry.all_oracles()
+    assert (len(qs), len(os_)) == (479, 472)
+    pairs = json.dumps(sorted((name, os_.get(name)) for name in qs))
+    assert hashlib.sha256(pairs.encode()).hexdigest() == _REGISTRY_SHA256
+
+
 @pytest.fixture
 def registry():
     """The query registry with an empty cache, emptied again on exit so

@@ -49,6 +49,24 @@ def test_coercing_casts_use_sentinels(spark):
     assert [tuple(r) for r in row] == [(3.5, 7, "x"), (0.0, -1, "-1")]
 
 
+def test_to_double_or_rejects_java_only_literals(spark):
+    # Spark's cast accepts Java's type suffixes and hex floats; pandas
+    # to_numeric coerces them to NaN, so they take the default here.
+    vals = ["0D", "1.5f", "2.d\x1f", "0x1p3", "inf", "-Infinity", "NaN", " 1e2 ", "5."]
+    df = spark.createDataFrame([(v,) for v in vals], "v: string")
+    got = [r[0] for r in df.select(to_double_or("v", -7.5)).collect()]
+    assert got[:4] == [-7.5] * 4
+    assert got[4:6] == [float("inf"), float("-inf")]
+    assert got[6] != got[6]
+    assert got[7:] == [100.0, 5.0]
+
+
+def test_to_double_or_keeps_numeric_columns(spark):
+    df = spark.createDataFrame([(1.25, 3), (None, None)], "d: double, l: long")
+    got = df.select(to_double_or("d", -1.0), to_double_or("l", -1.0)).collect()
+    assert [tuple(r) for r in got] == [(1.25, 3.0), (-1.0, -1.0)]
+
+
 def test_fecha_key_sentinel(spark):
     df = spark.createDataFrame([("2025-06-15",), ("not a date",), (None,)], ["f"])
     out = [r[0] for r in df.select(fecha_key("f")).collect()]

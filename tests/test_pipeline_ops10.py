@@ -431,45 +431,6 @@ def test_weighted_sample_matches_exact_brute(orders_pdf, spark, sf_dir):
     assert len(got) <= k
 
 
-def test_link_prediction_matches_pandas_sets(spark, sf_dir):
-    from etl_extractor_spark.plans.pipeline_ops10 import (
-        link_prediction_jaccard,
-    )
-    from etl_extractor_spark.sources.parquet import load_table
-
-    rows = link_prediction_jaccard(spark, sf_dir).collect()
-    li = (
-        load_table(spark, sf_dir, "lineitem")
-        .select("l_orderkey", "l_partkey")
-        .toPandas()
-        .drop_duplicates()
-    )
-    from collections import Counter, defaultdict
-
-    by_order = defaultdict(set)
-    for o, p in zip(li["l_orderkey"], li["l_partkey"]):
-        by_order[o].add(p)
-    support = Counter()
-    adj = defaultdict(set)
-    for parts in by_order.values():
-        ps = sorted(parts)
-        for i in range(len(ps)):
-            for j in range(i + 1, len(ps)):
-                support[(ps[i], ps[j])] += 1
-                adj[ps[i]].add(ps[j])
-                adj[ps[j]].add(ps[i])
-    cand = sorted(support.items(), key=lambda kv: (-kv[1], kv[0]))[:50]
-    assert len(rows) == len(cand)
-    for r, ((p1, p2), sup) in zip(rows, cand):
-        assert (r["p1"], r["p2"], r["support"]) == (p1, p2, sup)
-        cn = len(adj[p1] & adj[p2])
-        assert r["cn"] == cn
-        assert (r["deg1"], r["deg2"]) == (len(adj[p1]), len(adj[p2]))
-        assert r["jaccard_micro"] == cn * 1000000 // (
-            len(adj[p1]) + len(adj[p2]) - cn
-        )
-
-
 def test_lorenz_deciles_match_pandas(orders_pdf, spark, sf_dir):
     from etl_extractor_spark.plans.pipeline_ops10 import lorenz_curve_deciles
     from etl_extractor_spark.sources.parquet import load_table

@@ -45,20 +45,6 @@ def test_incremental_tfidf_equals_batch(spark, sf_dir):
     assert incr == batch
 
 
-def test_hits_normalization_invariants(spark, sf_dir):
-    """Max-normalized integer HITS: exactly 20 ranked rows, scores in
-    (0, 1000], and the top supplier at exactly 1000 (x·1000 div max(x)
-    is 1000 at the max by construction)."""
-    from etl_extractor_spark.plans.pipeline_ops4 import hits_hub_authority
-
-    n_supp = load_table(spark, sf_dir, "supplier").count()
-    rows = hits_hub_authority(spark, sf_dir).collect()
-    assert len(rows) == min(20, n_supp)
-    assert [r["rank"] for r in rows] == list(range(1, len(rows) + 1))
-    assert rows[0]["authority_milli"] == 1000
-    assert all(0 < r["authority_milli"] <= 1000 for r in rows)
-
-
 def test_simhash_contract_audit_is_nonvacuous(spark, sf_dir):
     """The md5-gated audit subset must actually contain qualifying
     near-dup pairs — an empty brute-force side would make ok_recall

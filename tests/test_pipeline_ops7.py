@@ -114,67 +114,6 @@ def test_late_arriving_backfill_partitions_cleanly(spark, sf_dir):
     assert "UNKNOWN" not in set(got["nation"]) and -1 not in set(got["nation"])
 
 
-def test_modularity_brute_force(spark, sf_dir):
-    """Engine-independent brute force: per-nation e_c, D_c and the
-    floor'd double contribution re-derived in pure Python from the
-    raw parquet."""
-    import math
-
-    import pandas as pd
-
-    from etl_extractor_spark.plans.pipeline_ops7 import (
-        graph_modularity_nations,
-    )
-
-    got = {
-        r["nation"]: r for r in graph_modularity_nations(spark, sf_dir).collect()
-    }
-    o = pd.read_parquet(f"{sf_dir}/orders.parquet")[["o_orderkey", "o_custkey"]]
-    li = pd.read_parquet(f"{sf_dir}/lineitem.parquet")[["l_orderkey", "l_suppkey"]]
-    c = pd.read_parquet(f"{sf_dir}/customer.parquet")[["c_custkey", "c_nationkey"]]
-    s = pd.read_parquet(f"{sf_dir}/supplier.parquet")[["s_suppkey", "s_nationkey"]]
-    n = pd.read_parquet(f"{sf_dir}/nation.parquet")[["n_nationkey", "n_name"]]
-    nname = dict(zip(n["n_nationkey"], n["n_name"]))
-    e = (
-        o.merge(li, left_on="o_orderkey", right_on="l_orderkey")[
-            ["o_custkey", "l_suppkey"]
-        ]
-        .drop_duplicates()
-    )
-    m = len(e)
-    cn = dict(zip(c["c_custkey"], c["c_nationkey"]))
-    sn = dict(zip(s["s_suppkey"], s["s_nationkey"]))
-    ec: dict = {}
-    deg: dict = {}
-    nodes_c: dict = {}
-    nodes_s: dict = {}
-    for ck, sk in e.itertuples(index=False):
-        a, b = cn[ck], sn[sk]
-        deg[a] = deg.get(a, 0) + 1
-        deg[b] = deg.get(b, 0) + 1
-        nodes_c.setdefault(a, set()).add(ck)
-        nodes_s.setdefault(b, set()).add(sk)
-        if a == b:
-            ec[a] = ec.get(a, 0) + 1
-    nats = set(deg)
-    assert set(got) == {nname[k] for k in nats}
-    for k in nats:
-        r = got[nname[k]]
-        assert r["internal_edges"] == ec.get(k, 0)
-        assert r["degree_sum"] == deg[k]
-        assert r["n_customers"] == len(nodes_c.get(k, set()))
-        assert r["n_suppliers"] == len(nodes_s.get(k, set()))
-        want = math.floor(
-            (4.0 * m * ec.get(k, 0) - float(deg[k]) * deg[k])
-            / (4.0 * m * m)
-            * 1000000.0
-        )
-        assert r["q_contrib_micro"] == want
-    # whole-graph sanity: sum of contributions is a valid modularity
-    q = sum(r["q_contrib_micro"] for r in got.values()) / 1e6
-    assert -1.0 <= q <= 1.0
-
-
 def test_ipf_margins_converge(spark, sf_dir):
     """After the pinned rounds, every lang margin and every source
     margin must be within 2% of its uniform target — IPF actually

@@ -123,7 +123,13 @@ def test_schema_evolution_scan_keeps_parquet_schema_evolution_files(spark, sf_di
 
 @pytest.mark.filterwarnings("ignore:toPandas attempted Arrow optimization")
 @pytest.mark.parametrize(
-    "name", ["tfidf_postings_compaction", "manifest_snapshot_expiry"]
+    "name",
+    [
+        "tfidf_postings_compaction",
+        "manifest_snapshot_expiry",
+        "bucketed_join_colocated",
+        "bucket_pruned_lookup",
+    ],
 )
 def test_held_dataframe_survives_reinvocation(spark, sf_dir, name):
     """A DataFrame held across one re-invocation of its query still
@@ -152,14 +158,30 @@ def test_held_dataframe_survives_reinvocation(spark, sf_dir, name):
     assert compare(_Rows(), con, sql) > 0
 
 
-@pytest.mark.parametrize("trial", range(3))
-def test_two_threads_run_one_lifecycle_query(spark, sf_dir, trial):
-    """Two threads each run ``manifest_snapshot_expiry`` once on one
-    session; both results match the oracle."""
+# manifest_snapshot_expiry's cases keep their ids from before the
+# bucketed queries joined
+@pytest.mark.parametrize(
+    "name, trial",
+    [
+        pytest.param(
+            name,
+            trial,
+            id=str(trial) if name == "manifest_snapshot_expiry" else f"{name}-{trial}",
+        )
+        for name in (
+            "manifest_snapshot_expiry",
+            "bucketed_join_colocated",
+            "bucket_pruned_lookup",
+        )
+        for trial in range(3)
+    ],
+)
+def test_two_threads_run_one_lifecycle_query(spark, sf_dir, name, trial):
+    """Two threads each run one lifecycle query once on one session;
+    both results match the oracle."""
     from etl_extractor_spark.plans.registry import all_oracles, all_queries
     from tests.oracle import compare, duckdb_con
 
-    name = "manifest_snapshot_expiry"
     query, sql, con = all_queries()[name], all_oracles()[name], duckdb_con(sf_dir)
     errors: list[BaseException] = []
 

@@ -1,5 +1,5 @@
 """Unit pins for the round-5 session-3 operators (streaming funnel
-state machine, rendezvous minimal disruption, BFS/k-core level logic).
+state machine, rendezvous minimal disruption, plan shapes).
 Appended to tests/test_pipeline_ops.py-style standalone module."""
 
 from __future__ import annotations
@@ -85,29 +85,6 @@ def test_rendezvous_moves_only_to_new_shard(spark, sf_dir):
         (F.col("a") != F.col("b")) & (F.col("b") != _RV_N)
     )
     assert bad.count() == 0
-
-
-def test_bfs_levels_are_disjoint_and_minimal(spark, sf_dir):
-    """Every BFS level is disjoint from all earlier levels (anti-join
-    discipline), and hop counts are non-increasing in reachability:
-    re-deriving via one more expansion never finds a shorter path."""
-    from etl_extractor_spark.plans.pipeline_ops2 import bfs_shortest_hops
-
-    out = bfs_shortest_hops(spark, sf_dir).collect()
-    hops = sorted(r["hop"] for r in out)
-    assert hops == sorted(set(hops))  # one row per hop level
-    assert min(hops) == 0
-
-
-def test_kcore_rounds_monotone(spark, sf_dir):
-    """Peeling is monotone: node and edge counts never grow across
-    rounds."""
-    from etl_extractor_spark.plans.pipeline_ops2 import kcore_peel_rounds
-
-    rows = {r["round"]: r for r in kcore_peel_rounds(spark, sf_dir).collect()}
-    for r in range(2, 4):
-        assert rows[r]["n_nodes"] <= rows[r - 1]["n_nodes"]
-        assert rows[r]["n_edges"] <= rows[r - 1]["n_edges"]
 
 
 def _plan(df) -> str:
