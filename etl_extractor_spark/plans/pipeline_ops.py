@@ -6,10 +6,6 @@ Queries (each oracle-backed):
 - shard_warc_gzip       : CommonCrawl-style .warc.gz — one gzip member
                           per WARC record, concatenated; member-split
                           reader
-- bloom_prefilter_decontaminate : broadcast Bloom-filter prefilter +
-                          exact verify for eval-set decontamination
-- jaccard_prefix_filter_join : PPJoin-style prefix-filtered set-
-                          similarity self-join (exact, no all-pairs)
 - unicode_nfc_dedup     : NFC normalization parity (Arrow UDF vs
                           DuckDB nfc_normalize) + normalized dedup
 - mojibake_score        : ftfy-style mojibake / control-char detection
@@ -61,6 +57,7 @@ from etl_extractor_spark.functions.quantize import cents, q6
 from etl_extractor_spark.operators import multimodal as M
 from etl_extractor_spark.sources.parquet import load_table
 from etl_extractor_spark.operators.common import pid_scratch_dir
+from etl_extractor_spark.plans.trigrams import _norm_toks
 
 QUERIES: dict = {}
 ORACLES: dict = {}
@@ -206,348 +203,6 @@ QUERIES["shard_warc_gzip"] = shard_warc_gzip
 from etl_extractor_spark.plans.multimodal import SHARD_WARC_SQL as _WARC_SQL  # noqa: E402
 
 ORACLES["shard_warc_gzip"] = _WARC_SQL
-
-
-# --- Bloom-prefilter decontamination ----------------------------------
-
-BLOOM_M = 1 << 16          # bits in the filter (1024 longs)
-BLOOM_K = 4                # hash functions
-EVAL_MOD = 97              # doc_id % EVAL_MOD == 0 -> "eval benchmark" doc
-
-
-def _norm_toks(text):
-    """Lowercased whitespace tokens on the shared F1 normalization
-    (``functions/text.normalize_text`` — the same cast/collapse/trim
-    every corpus-side oracle in this repo mirrors); lower() commutes
-    with whitespace handling, so the SQL twin is
-    ``string_split(lower(trim(regexp_replace(...))), ' ')``."""
-    from etl_extractor_spark.functions.text import normalize_text
-
-    return F.split(F.lower(normalize_text(text)), " ")
-
-
-def _trigram_col(toks):
-    """Distinct word-3-gram array; empty for docs under 3 tokens (the
-    sequence guard avoids Spark's descending-sequence surprise).
-
-    ``toks`` is BOUND as a lambda variable through a 1-element array
-    wrapper before anything indexes it (r10): the gram lambda and the
-    two size() guards otherwise re-evaluate the whole ``toks``
-    EXPRESSION tree per reference — and when a consumer's filter
-    pushdown duplicates the projection, a caller passing the
-    normalize+split tree paid it per gram (measured 3.67 s → 0.54 s
-    on the 5000-doc jaccard substrate at sf0.1, same output)."""
-
-    def _grams_of(tk):
-        g = F.transform(
-            F.sequence(F.lit(1), F.size(tk) - 2),
-            lambda i: F.concat_ws(" ", F.slice(tk, i, 3)),
-        )
-        return F.when(F.size(tk) >= 3, g).otherwise(
-            F.array().cast("array<string>")
-        )
-
-    return F.element_at(F.transform(F.array(toks), _grams_of), 1)
-
-
-def bloom_prefilter_decontaminate(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Eval-set decontamination with a broadcast Bloom prefilter — the
-    standard 100 TB shape: the benchmark/eval n-gram set is a small
-    bounded artifact, so its Bloom bitmap (m=2^16 bits, k=4, built
-    DISTRIBUTED via bit_or and collected as <=1024 longs — constant
-    size regardless of SF) ships to every executor as a literal and
-    the corpus-side membership test is MAP-ONLY: no shuffle touches
-    the full corpus gram set. Only grams surviving the filter (true
-    hits + ~m/16-rate false positives) reach the exact verify join, so
-    the shuffled volume is O(contamination), not O(corpus). Bloom has
-    no false negatives by construction (same xxhash64 seeds build and
-    probe), and the exact verify removes false positives — the result
-    is EXACT, which is what lets the straight semi-join oracle pin it.
-    Output: per contaminated corpus doc, distinct-3-gram contamination
-    count and rate (4-decimal half-up). The scan is fanned out before
-    the trigram HOFs — the per-row normalize/split/shingle compute is
-    the dominant cost and a small parquet input arrives few-
-    partitioned (sf1: 46 s on 2 partitions → ~8 s on 32)."""
-    from etl_extractor_spark.operators.common import fan_out
-
-    d = fan_out(load_table(spark, sf_dir, "documents")).select(
-        "doc_id", _trigram_col(_norm_toks(F.col("text"))).alias("grams")
-    )
-    evl = (
-        d.filter(F.col("doc_id") % EVAL_MOD == 0)
-        .select(F.explode("grams").alias("gram"))
-        .distinct()
-    )
-    # distributed bitmap build: constant-bounded collect (<= m/64 rows)
-    seeds = F.array(*[F.lit(i) for i in range(BLOOM_K)])
-    pos = F.pmod(F.xxhash64("gram", F.col("seed")), F.lit(BLOOM_M))
-    words = (
-        evl.select(F.explode(seeds).alias("seed"), "gram")
-        .select(
-            (pos / F.lit(64)).cast("long").alias("w"),
-            F.call_function(
-                "shiftleft", F.lit(1).cast("long"), (pos % 64).cast("int")
-            ).alias("m"),
-        )
-        .groupBy("w")
-        .agg(F.bit_or("m").alias("bits"))
-        .collect()
-    )
-    bitmap = [0] * (BLOOM_M // 64)
-    for r in words:
-        bitmap[int(r["w"])] = int(r["bits"])
-    bits_lit = F.lit(bitmap)
-
-    # The corpus gram relation feeds BOTH the per-doc denominator and
-    # the Bloom-gated verify branch; persist it so the trigram HOF pass
-    # (the dominant cost) runs once, not once per branch. At cluster
-    # scale this is the same decision as checkpointing a shared scan.
-    corpus = (
-        d.filter(F.col("doc_id") % EVAL_MOD != 0)
-        .select("doc_id", F.explode(F.array_distinct("grams")).alias("gram"))
-        .persist()
-    )
-    member = None
-    for i in range(BLOOM_K):
-        p = F.pmod(F.xxhash64("gram", F.lit(i)), F.lit(BLOOM_M))
-        hit = (
-            F.element_at(bits_lit, (p / F.lit(64)).cast("int") + 1).bitwiseAND(
-                F.call_function(
-                    "shiftleft", F.lit(1).cast("long"), (p % 64).cast("int")
-                )
-            )
-            != 0
-        )
-        member = hit if member is None else (member & hit)
-    n_grams = corpus.groupBy("doc_id").agg(F.count(F.lit(1)).alias("n_grams"))
-    hits = (
-        corpus.filter(member)                      # map-only Bloom gate
-        .join(F.broadcast(evl), "gram")            # exact verify
-        .groupBy("doc_id")
-        .agg(F.count(F.lit(1)).alias("n_contaminated"))
-    )
-    # Quantization mirrors the oracle's op ORDER exactly (multiply
-    # before divide): floor((c/n)*1e4+0.5) and floor(c*1e4/n+0.5)
-    # differ by one ulp for real count pairs (e.g. 57/800) — the
-    # order-dependent-float hash-mismatch class (review catch).
-    rate_q = F.floor(
-        F.col("n_contaminated") * F.lit(10000.0) / F.col("n_grams") + F.lit(0.5)
-    )
-    return (
-        hits.join(n_grams, "doc_id")
-        .select(
-            "doc_id",
-            "n_grams",
-            "n_contaminated",
-            (rate_q / 10000).alias("contamination_rate"),
-        )
-        .orderBy("doc_id")
-    )
-
-
-BLOOM_DECONTAMINATE_SQL = f"""
-WITH toks AS (
-  SELECT doc_id,
-         string_split(lower(trim(regexp_replace(CAST(text AS VARCHAR), '\\s+', ' ', 'g'))), ' ') AS t
-  FROM documents
-), grams AS (
-  SELECT DISTINCT doc_id, array_to_string(t[i:i+2], ' ') AS gram
-  FROM toks, LATERAL (SELECT unnest(generate_series(1, len(t) - 2)) AS i)
-  WHERE len(t) >= 3
-), evl AS (
-  SELECT DISTINCT gram FROM grams WHERE doc_id % {EVAL_MOD} = 0
-), corpus AS (
-  SELECT doc_id, gram FROM grams WHERE doc_id % {EVAL_MOD} <> 0
-), ng AS (
-  SELECT doc_id, count(*) AS n_grams FROM corpus GROUP BY 1
-), hits AS (
-  SELECT c.doc_id, count(*) AS n_contaminated
-  FROM corpus c JOIN evl e USING (gram)
-  GROUP BY 1
-)
-SELECT h.doc_id,
-       ng.n_grams,
-       h.n_contaminated,
-       floor(h.n_contaminated * 10000.0 / ng.n_grams + 0.5) / 10000
-         AS contamination_rate
-FROM hits h JOIN ng USING (doc_id)
-ORDER BY doc_id
-"""
-
-QUERIES["bloom_prefilter_decontaminate"] = bloom_prefilter_decontaminate
-ORACLES["bloom_prefilter_decontaminate"] = BLOOM_DECONTAMINATE_SQL
-
-
-# --- PPJoin-style prefix-filtered set-similarity self-join ------------
-
-PFX_THRESHOLD = 0.8
-
-
-def jaccard_prefix_filter_join(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Exact word-3-gram Jaccard self-join >= 0.8 via PREFIX FILTERING
-    (Chaudhuri et al. SSJoin / Bayardo et al. All-Pairs): order every
-    doc's distinct trigram set by a global rarity rank (document
-    frequency asc, gram asc), keep only the first n - ceil(t*n) + 1
-    grams as the candidate-generating prefix — J(A,B) >= t forces the
-    two prefixes to share an element under ANY consistent global
-    order, so recall is guaranteed while the self-join touches prefix
-    grams (the RAREST ones) instead of all grams, and never goes
-    all-pairs. Candidates are verified EXACTLY with array_intersect
-    over the full gram sets, so false candidates die and the quadratic
-    oracle pins the result.
-    The set space is word TRIGRAMS, not unigram tokens, by a measured
-    scale argument: this corpus's token vocabulary is tiny (235 words
-    at sf1, median posting 3885 docs), so token-set prefix postings
-    degenerate to O(corpus) and the join exploded (>9 min at sf1);
-    trigram vocabulary is 255k with median posting 10 — prefix
-    filtering's rare-element assumption holds by construction since
-    gram space grows with content diversity.
-    100 TB: the explode/join volume is sum(prefix lengths) weighted by
-    posting size; both exploded sides carry merge hints against the
-    pre-explode size misestimate; the scan is fanned out before
-    shingling (few-partition parquet input)."""
-    from etl_extractor_spark.operators.common import fan_out
-
-    # persist: the shingling pass (the dominant cost) feeds THREE
-    # branches (postings, sets_a, sets_b) — repeated HOF trees are not
-    # collapsed by subexpression elimination (gotcha list).
-    #
-    # Grams are xxhash64-encoded the moment they exist (r10, guide
-    # §2.3/§8: shuffle lightweight proxies, not payloads): every
-    # downstream stage — document frequencies, the (df, gram) rarity
-    # sort, the prefix explode + self-join shuffle, and the verify
-    # arrays carried through TWO joins — moves 8-byte longs instead of
-    # ~25-byte gram strings. Result-preserving: the prefix filter only
-    # needs SOME consistent global order (hash order is one), recall
-    # is unchanged, the exact verify uses intersection/size COUNTS
-    # which are hash-invariant, and 64-bit collisions are the repo's
-    # accepted substitution convention (cf. common_paragraph_filter).
-    # (A word-hash-triple gram id was tried and REJECTED: 3 interpreted
-    # element_at calls per gram measured 2.5× slower than the
-    # slice+concat_ws string build it replaced — probe in
-    # OPTIMIZATION_r10.md.)
-    d = (
-        fan_out(load_table(spark, sf_dir, "documents"))
-        .select(
-            "doc_id",
-            F.array_distinct(
-                F.transform(
-                    _trigram_col(_norm_toks(F.col("text"))),
-                    lambda g: F.xxhash64(g),
-                )
-            ).alias("toks"),
-        )
-        .filter(F.size("toks") > 0)
-        .persist()
-    )
-    # Eager materialization: the three consuming branches plus AQE's
-    # concurrent broadcast-subtree jobs otherwise RACE the cold cache
-    # and re-evaluate the gram tree from lineage — profiled at up to
-    # 351 s of duplicated executor CPU in one rep (and once on a
-    # single AQE-coalesced partition: 74 s on 1 task). One count()
-    # builds the cache exactly once, in parallel.
-    d.count()
-
-    # Global order = (document frequency asc, gram asc) — used as a
-    # sort KEY directly (no global row_number: a single-partition rank
-    # window would bottleneck the vocabulary at scale, and prefix
-    # filtering only needs SOME consistent total order).
-    tok = d.select("doc_id", F.explode("toks").alias("tok"))
-    dfreq = tok.groupBy("tok").agg(F.count(F.lit(1)).alias("df"))
-    ranked = (
-        tok.join(dfreq, "tok")
-        .groupBy("doc_id")
-        .agg(
-            F.sort_array(F.collect_list(F.struct("df", "tok"))).alias("ordered"),
-            F.count(F.lit(1)).alias("n"),
-        )
-    )
-    pfx_len = (F.col("n") - F.ceil(F.col("n") * PFX_THRESHOLD) + 1).cast("int")
-    # persist: the SELF-join below would otherwise evaluate this whole
-    # subtree TWICE (df-count agg, its broadcast join, and the
-    # ObjectHashAggregate collect_list rank sort — the two dominant
-    # node times in the SQL-tab profile, r10) — once per join side.
-    # The prefix relation is tiny (≈0.2·|grams| rows of (long, long));
-    # it carries each doc's set size n for the length filter below.
-    prefixes = ranked.select(
-        "doc_id",
-        F.explode(F.slice("ordered", 1, pfx_len).tok).alias("tok"),
-        "n",
-    ).persist()
-    prefixes.count()  # same cold-cache race as `d` — build once, now
-    # LENGTH FILTER (r11, All-Pairs/SSJoin standard, guide §3):
-    # J(A,B) ≥ t ⇒ min(|A|,|B|) ≥ t·max(|A|,|B|), so candidate pairs
-    # whose set sizes differ by more than the threshold ratio cannot
-    # qualify. Applied INSIDE the prefix self-join, it drops 63% of
-    # candidate pairs (118,649 → 43,440 at sf0.1) before the distinct
-    # and before the two array-carrying verify joins. The bound uses
-    # t−1e-5, strictly below the threshold, so a pair sitting exactly
-    # at min = t·max (possible: A ⊂ B with J = t) can never be
-    # excluded by float rounding — recall is preserved and the exact
-    # verify still decides every kept pair.
-    _t_loose = PFX_THRESHOLD - 1e-5
-    cands = (
-        prefixes.alias("a")
-        .hint("merge")
-        .join(prefixes.alias("b").hint("merge"), "tok")
-        .filter(
-            (F.col("a.doc_id") < F.col("b.doc_id"))
-            & (F.col("b.n") >= F.col("a.n") * _t_loose)
-            & (F.col("a.n") >= F.col("b.n") * _t_loose)
-        )
-        .select(
-            F.col("a.doc_id").alias("id_a"), F.col("b.doc_id").alias("id_b")
-        )
-        .distinct()
-    )
-    sets_a = d.select(F.col("doc_id").alias("id_a"), F.col("toks").alias("ta"))
-    sets_b = d.select(F.col("doc_id").alias("id_b"), F.col("toks").alias("tb"))
-    inter = F.size(F.array_intersect("ta", "tb"))
-    union = F.size("ta") + F.size("tb") - inter
-    jac = inter / union
-    # multiply-before-divide mirrors the oracle's floor(c*1e4/u+0.5)
-    # op order — (c/u)*1e4 rounds differently by one ulp for real
-    # pairs (e.g. 16017/20000); the filter uses plain c/u on both
-    # sides, which IS order-identical.
-    jac_q = F.floor(inter * F.lit(10000.0) / union + F.lit(0.5))
-    return (
-        cands.join(sets_a.hint("merge"), "id_a")
-        .join(sets_b.hint("merge"), "id_b")
-        .filter(jac >= PFX_THRESHOLD)
-        .select("id_a", "id_b", (jac_q / 10000).alias("jaccard"))
-        .orderBy("id_a", "id_b")
-    )
-
-
-JACCARD_PFX_SQL = f"""
-WITH rawtoks AS (
-  SELECT doc_id,
-         string_split(lower(trim(regexp_replace(CAST(text AS VARCHAR), '\\s+', ' ', 'g'))), ' ') AS w
-  FROM documents
-), g3 AS (
-  SELECT DISTINCT doc_id, array_to_string(w[i:i+2], ' ') AS g
-  FROM rawtoks, LATERAL (SELECT unnest(generate_series(1, len(w) - 2)) AS i)
-  WHERE len(w) >= 3
-), nz AS (
-  SELECT doc_id, list(g) AS t FROM g3 GROUP BY doc_id
-), tk AS (
-  SELECT doc_id, g AS tok FROM g3
-), pairs AS (
-  SELECT a.doc_id AS id_a, b.doc_id AS id_b, count(*) AS c
-  FROM tk a JOIN tk b ON a.tok = b.tok AND a.doc_id < b.doc_id
-  GROUP BY 1, 2
-)
-SELECT id_a, id_b,
-       floor(c * 10000.0 / (len(sa.t) + len(sb.t) - c) + 0.5) / 10000 AS jaccard
-FROM pairs
-JOIN nz sa ON id_a = sa.doc_id
-JOIN nz sb ON id_b = sb.doc_id
-WHERE c * 1.0 / (len(sa.t) + len(sb.t) - c) >= {PFX_THRESHOLD}
-ORDER BY id_a, id_b
-"""
-
-QUERIES["jaccard_prefix_filter_join"] = jaccard_prefix_filter_join
-ORACLES["jaccard_prefix_filter_join"] = JACCARD_PFX_SQL
 
 
 # --- Unicode NFC normalization parity ---------------------------------

@@ -1,10 +1,7 @@
 """Round-6 wave: sketch error-contract certification rows (the two
-rows-only sketches gain driver-checkable twins — VERDICT r5 task 8),
-a df-capped TF-IDF cosine inverted-index join (the sparse-vector
-similarity gap between the dense-embedding kNN family and the set-
-Jaccard family), and four exact-arithmetic stats/splits utilities
-(MAD outliers, Wilson CIs, Spearman rank correlation, winsorized
-means, stratified k-fold audit).
+rows-only sketches gain driver-checkable twins) and exact-arithmetic
+stats/splits utilities (MAD outliers, Wilson CIs, Spearman rank
+correlation, winsorized means, stratified k-fold audit).
 
 Reference provenance: the reference pipeline (nilfredb/ETL-Extractor,
 extract/*.py + main.py) has no analytics layer; these are the
@@ -154,169 +151,6 @@ ORACLES["theta_sketch_contract"] = """
            1::BIGINT AS ok_intersection,
            1::BIGINT AS ok_difference
     FROM flags
-"""
-
-
-# --- 3. TF-IDF cosine top-k via df-capped inverted index ----------------------
-# The sparse-vector similarity join between the dense-embedding kNN
-# family (operators/similarity.py) and the set-Jaccard family
-# (jaccard_prefix_filter_join): weighted terms, dot products via
-# term-at-a-time postings, never all-pairs. Feature space = word
-# trigrams with document frequency in [2, 32]: df=1 grams cannot pair
-# (dropped from the space, not approximated), and the df cap bounds
-# every posting's self-join at 32² — the standard stop-feature cut
-# that makes inverted-index similarity O(sum df²) instead of
-# O(corpus²). Trigrams, not tokens, by the measured sf1 posting stats
-# (235-word vocab degenerates token postings; see
-# jaccard_prefix_filter_join).
-_TFIDF_DF_MIN, _TFIDF_DF_MAX = 2, 32
-_TFIDF_TOPK = 20
-
-
-def _doc_trigram_tf(d: DataFrame) -> DataFrame:
-    """Per-(doc, trigram) term frequencies — the ONLY corpus-scale text
-    pass of the TF-IDF family (fanned out ahead of the explode).
-    Shared by the batch flagship and the r7 incremental-maintenance
-    twin so the feature space cannot drift between them.
-
-    r11 note (guide §2.3 probe, REJECTED): xxhash64-encoding the
-    trigrams at this source (the jaccard_prefix int64-gram trick) was
-    A/B'd interleaved in one session at sf0.1 — substrate build was a
-    wash (0.97 s vs 0.96 s min-of-4) and the postings/pair phase was
-    ~15% SLOWER with hashed keys (1.48 s vs 1.74 s min-of-4), so the
-    change was reverted: here the gram strings feed ONE aggregation
-    immediately (unlike jaccard_prefix where they traverse rarity
-    sort + explode + three joins), and the random 64-bit keys lose
-    the sorted-run locality the string domain gives the merge joins.
-    Keep grams as strings until a measurement at larger SF says
-    otherwise."""
-    from etl_extractor_spark.operators.common import fan_out
-    from etl_extractor_spark.plans.pipeline_ops import _norm_toks, _trigram_col
-
-    return (
-        fan_out(d)
-        .select(
-            "doc_id", F.explode(_trigram_col(_norm_toks(F.col("text")))).alias("g")
-        )
-        .groupBy("doc_id", "g")
-        .agg(F.count(F.lit(1)).cast("long").alias("tf"))
-    )
-
-
-def _tfidf_topk_pairs(tf: DataFrame, n_docs: DataFrame) -> DataFrame:
-    """df-cap → integer milli-idf → postings self-join → top-k cosine,
-    all from a materialized (doc_id, g, tf) postings frame. Index-
-    scale arithmetic only: no pass over raw text happens here, which
-    is what makes the incremental twin's merge-then-requery cheap."""
-    dfreq = tf.groupBy("g").agg(F.count(F.lit(1)).cast("long").alias("df"))
-    kept = (
-        dfreq.filter(F.col("df").between(_TFIDF_DF_MIN, _TFIDF_DF_MAX))
-        .crossJoin(F.broadcast(n_docs))
-        .select(
-            "g",
-            F.floor(
-                F.log(F.col("n_docs") * F.lit(1.0) / F.col("df")) * 1000
-            ).alias("idf"),
-        )
-    )
-    w = tf.join(kept, "g").select(
-        "doc_id", "g", (F.col("tf") * F.col("idf")).alias("w")
-    )
-    norms = w.groupBy("doc_id").agg(F.sum(F.col("w") * F.col("w")).alias("nn"))
-    dots = (
-        w.alias("a")
-        .hint("merge")
-        .join(w.alias("b").hint("merge"), "g")
-        .filter(F.col("a.doc_id") < F.col("b.doc_id"))
-        .groupBy(
-            F.col("a.doc_id").alias("id_a"), F.col("b.doc_id").alias("id_b")
-        )
-        .agg(F.sum(F.col("a.w") * F.col("b.w")).alias("dot"))
-    )
-    cos = F.floor(
-        F.col("dot").cast("double")
-        * 10000.0
-        / F.sqrt(F.col("na").cast("double") * F.col("nb").cast("double"))
-        + 0.5
-    ) / 10000
-    return (
-        dots.join(norms.select(F.col("doc_id").alias("id_a"), F.col("nn").alias("na")), "id_a")
-        .join(norms.select(F.col("doc_id").alias("id_b"), F.col("nn").alias("nb")), "id_b")
-        .select("id_a", "id_b", cos.alias("cos_sim"))
-        .orderBy(F.desc("cos_sim"), "id_a", "id_b")
-        .limit(_TFIDF_TOPK)
-    )
-
-
-def tfidf_cosine_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Top-20 most TF-IDF-cosine-similar document pairs. Exact under
-    the DEFINED feature space (trigrams, 2 <= df <= 32; weights
-    tf * floor(ln(N/df)*1000) — integer milli-idf per the repo's
-    log-quantization convention, so dot products and norms are exact
-    BIGINT sums and the final cosine is one identical IEEE
-    multiply-divide-sqrt sequence on both engines).
-
-    100 TB: the only O(corpus) passes are the shingle explode (fanned
-    out) and two hash aggregations; the pair space is sum(df²) <= 32 ×
-    sum(df) — df-capped postings, never all-pairs; exploded join sides
-    carry merge hints against the pre-explode size misestimate."""
-    from etl_extractor_spark.operators.checkpoints import reliable_checkpoint
-
-    d = load_table(spark, sf_dir, "documents")
-    n_docs = d.agg(F.count(F.lit(1)).alias("n_docs"))
-    # Materialized once (feeds df-counts, postings and norms) via a
-    # reliable checkpoint, NOT .persist(): a persisted corpus-scale
-    # frame stays pinned in executor storage for the session (advisor
-    # catch -- it adds up across a 339-query sweep), while checkpoint
-    # storage is reclaimed by the checkpoint-lifecycle discipline
-    # (cleanCheckpoints in repo sessions; atexit/pid cleanup otherwise).
-    tf = reliable_checkpoint(_doc_trigram_tf(d))
-    return _tfidf_topk_pairs(tf, n_docs)
-
-
-QUERIES["tfidf_cosine_topk"] = tfidf_cosine_topk
-ORACLES["tfidf_cosine_topk"] = f"""
-    WITH rawtoks AS (
-      SELECT doc_id,
-             string_split(lower(trim(regexp_replace(CAST(text AS VARCHAR), '\\s+', ' ', 'g'))), ' ') AS w
-      FROM documents
-    ), g3 AS (
-      SELECT doc_id, array_to_string(w[i:i+2], ' ') AS g
-      FROM rawtoks, LATERAL (SELECT unnest(generate_series(1, len(w) - 2)) AS i)
-      WHERE len(w) >= 3
-    ), tf AS (
-      SELECT doc_id, g, count(*)::BIGINT AS tf FROM g3 GROUP BY 1, 2
-    ), dfreq AS (
-      SELECT g, count(*)::BIGINT AS df FROM tf GROUP BY 1
-    ), kept AS (
-      -- CAST before the joins/sums: DuckDB floor() returns DOUBLE, so
-      -- without it w and the dot/norm sums would accumulate in floating
-      -- point (exact only below 2^53) while Spark sums exact BIGINTs —
-      -- the advisor-caught divergence risk at large SF. With the cast
-      -- both engines sum exact integers (advice r6).
-      SELECT g,
-             CAST(floor(ln((SELECT count(*) FROM documents) * 1.0 / df) * 1000)
-                  AS BIGINT) AS idf
-      FROM dfreq WHERE df BETWEEN {_TFIDF_DF_MIN} AND {_TFIDF_DF_MAX}
-    ), wt AS (
-      SELECT tf.doc_id, tf.g, tf.tf * kept.idf AS w
-      FROM tf JOIN kept USING (g)
-    ), norms AS (
-      SELECT doc_id, sum(w * w)::BIGINT AS nn FROM wt GROUP BY 1
-    ), dots AS (
-      SELECT a.doc_id AS id_a, b.doc_id AS id_b, sum(a.w * b.w)::BIGINT AS dot
-      FROM wt a JOIN wt b ON a.g = b.g AND a.doc_id < b.doc_id
-      GROUP BY 1, 2
-    )
-    SELECT id_a, id_b,
-           floor(CAST(dot AS DOUBLE) * 10000.0
-                 / sqrt(CAST(na.nn AS DOUBLE) * CAST(nb.nn AS DOUBLE)) + 0.5) / 10000
-               AS cos_sim
-    FROM dots
-    JOIN norms na ON id_a = na.doc_id
-    JOIN norms nb ON id_b = nb.doc_id
-    ORDER BY cos_sim DESC, id_a, id_b
-    LIMIT {_TFIDF_TOPK}
 """
 
 

@@ -1,11 +1,8 @@
-"""Round-7 wave: incremental TF-IDF postings maintenance (the r6
-sparse-similarity flagship becomes maintainable without full recompute
-— VERDICT r6 task 6), error-contract rows that close the rows-only
-tail (simhash pair audit, IVF recall, HLL distinct-count bound —
-VERDICT r6 task 5), and a set of exact-arithmetic analytics operators
-(sweep-line max concurrency, running-max drawdown, Good-Turing
-counts-of-counts smoothing, rank-biased overlap, cumulative-gains
-deciles, linear multi-touch attribution).
+"""Round-7 wave: error-contract rows that close the rows-only tail
+(simhash pair audit, IVF recall, HLL distinct-count bound), and a set
+of exact-arithmetic analytics operators (sweep-line max concurrency,
+running-max drawdown, rank-biased overlap, cumulative-gains deciles,
+linear multi-touch attribution).
 
 Reference provenance: the reference pipeline (nilfredb/ETL-Extractor,
 extract/*.py + main.py) has no analytics layer; these are the
@@ -23,76 +20,9 @@ from pyspark.sql import functions as F
 
 from etl_extractor_spark.functions.quantize import cents
 from etl_extractor_spark.sources.parquet import load_table
-from etl_extractor_spark.operators.common import pid_scratch_dir
 
 QUERIES: dict = {}
 ORACLES: dict = {}
-
-
-# --- 1. Incremental TF-IDF postings maintenance (VERDICT r6 task 6) ----------
-#
-# The r6 sparse-similarity flagship (tfidf_cosine_topk) rebuilt its
-# postings from the full corpus on every run. Production corpora GROW:
-# the expensive pass — shingling raw text — should touch only the new
-# documents, with the index itself maintained as appended delta
-# postings. This query certifies exactly that: base postings are
-# committed to a manifest-backed table (snapshot 1), the delta batch's
-# postings are APPENDED (snapshot 2 — base files untouched, the
-# merge is the table format's append), and df/idf/df-cap are re-derived
-# from the merged postings (index-scale arithmetic, no text pass).
-# The oracle is the BATCH full-corpus SQL — a driver hash match proves
-# incremental maintenance ≡ full rebuild, including grams whose df
-# crossed the [2, 32] cap boundary when the delta landed.
-_TIP_MOD = 10  # delta batch = doc_id % 10 == 0 (~10% of the corpus)
-
-
-def tfidf_incremental_postings(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Incrementally-maintained TF-IDF inverted index: shingle ONLY the
-    delta docs, append their postings to the committed base index, then
-    answer the flagship top-20 cosine query from the merged postings.
-
-    100 TB: the text pass is O(delta), the index merge is an append
-    commit (no base-file rewrite), and df/idf re-derivation plus the
-    df-capped pair join are index-scale — the same sum(df²) ≤ 32·sum(df)
-    bound as the batch flagship. Min/max doc_id file stats on the
-    postings table keep per-doc delete/requery pruned."""
-    from etl_extractor_spark.plans.pipeline_ops3 import (
-        _doc_trigram_tf,
-        _tfidf_topk_pairs,
-    )
-    from etl_extractor_spark.sinks import manifest as MF
-
-    d = load_table(spark, sf_dir, "documents").select("doc_id", "text")
-    base = d.filter(F.col("doc_id") % _TIP_MOD != 0)
-    delta = d.filter(F.col("doc_id") % _TIP_MOD == 0)
-    path = pid_scratch_dir("spark_graft_tfidf_idx_")
-    # snapshot 1: the standing index; snapshot 2: delta postings appended
-    MF.write_with_manifest(
-        spark, _doc_trigram_tf(base), path, stats_cols=["doc_id"],
-        mode="overwrite",
-    )
-    MF.write_with_manifest(
-        spark, _doc_trigram_tf(delta), path, stats_cols=["doc_id"],
-        mode="append",
-    )
-    from etl_extractor_spark.operators.checkpoints import reliable_checkpoint
-
-    # one materialization of the merged index, exactly like the batch
-    # flagship checkpoints its tf frame: the pair join's tail reads the
-    # postings 4× (dfreq, both self-join sides, norms), and re-decoding
-    # parquet each time measured 61.0 s vs 42.3 s checkpointed at 500k
-    # docs (rig: /tmp/tip_requery_exp.py)
-    tf = reliable_checkpoint(MF.read_table(spark, path))
-    n_docs = d.agg(F.count(F.lit(1)).alias("n_docs"))
-    return _tfidf_topk_pairs(tf, n_docs)
-
-
-QUERIES["tfidf_incremental_postings"] = tfidf_incremental_postings
-# Same oracle as the batch flagship: incremental maintenance must be
-# indistinguishable from a full rebuild.
-from etl_extractor_spark.plans import pipeline_ops3 as _p3  # noqa: E402
-
-ORACLES["tfidf_incremental_postings"] = _p3.ORACLES["tfidf_cosine_topk"]
 
 
 # --- 2. SimHash banding completeness/precision contract (r6 task 5) ----------
@@ -469,92 +399,6 @@ ORACLES["revenue_max_drawdown"] = """
 """
 
 
-# --- 7. Good-Turing counts-of-counts smoothing --------------------------------
-_GT_MAX_R = 10
-
-
-def _gt_table(counts: DataFrame) -> DataFrame:
-    """Good-Turing N_r / r* derivation from a (g, r) type-count frame —
-    shared verbatim by the batch query and the streaming-counter replay
-    so the two stay hash-identical by construction (the anti-drift
-    extraction pattern, like inference's _risk_table)."""
-    coc = (
-        counts.groupBy("r")
-        .agg(F.count(F.lit(1)).cast("long").alias("n_r"))
-        .filter(F.col("r") <= _GT_MAX_R + 1)
-    )
-    nxt = coc.select((F.col("r") - 1).alias("r"), F.col("n_r").alias("n_r1"))
-    return (
-        coc.filter(F.col("r") <= _GT_MAX_R)
-        .join(F.broadcast(nxt), "r", "left")
-        .select(
-            "r",
-            "n_r",
-            F.expr(
-                "CAST((r + 1) * coalesce(n_r1, 0) * 1000 div n_r AS BIGINT)"
-            ).alias("gt_star_milli"),
-        )
-        .orderBy("r")
-    )
-
-
-def good_turing_smoothing(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Good-Turing frequency smoothing over the word-TRIGRAM counts:
-    for r = 1..10, N_r (how many trigram types occur exactly r times)
-    and the smoothed count r* = (r+1)·N_{r+1}/N_r in exact milli-units
-    (integer floor division on both engines — the repo's div // idiom).
-    The r*=0 rows where N_{r+1} is empty stay 0 (the estimator is
-    undefined there; production backs off to r).
-
-    Trigrams, not unigram tokens, by the corpus's measured stats (the
-    jaccard/tfidf set-space lesson): this corpus has 235 word types at
-    sf1 with median posting 3885, so the unigram low-count tail
-    (r ≤ 10) is EMPTY at scale and the estimator would certify nothing
-    — the 255k-type trigram space keeps every N_r populated at every
-    SF.
-
-    100 TB: trigram counts are one fanned-out explode + shuffle with
-    map-side combine; counts-of-counts is a second aggregation over
-    the TYPE space (vocab-sized, not corpus-sized); the N_{r+1} lookup
-    is a broadcast self-join on an ≤10-row frame."""
-    from etl_extractor_spark.operators.common import fan_out
-    from etl_extractor_spark.plans.pipeline_ops import _norm_toks, _trigram_col
-
-    d = load_table(spark, sf_dir, "documents")
-    counts = (
-        fan_out(d)
-        .select(F.explode(_trigram_col(_norm_toks(F.col("text")))).alias("g"))
-        .groupBy("g")
-        .agg(F.count(F.lit(1)).cast("long").alias("r"))
-    )
-    return _gt_table(counts)
-
-
-QUERIES["good_turing_smoothing"] = good_turing_smoothing
-ORACLES["good_turing_smoothing"] = rf"""
-    WITH rawtoks AS (
-      SELECT doc_id,
-             string_split(lower(trim(regexp_replace(CAST(text AS VARCHAR), '\s+', ' ', 'g'))), ' ') AS w
-      FROM documents
-    ), g3 AS (
-      SELECT doc_id, array_to_string(w[i:i+2], ' ') AS g
-      FROM rawtoks, LATERAL (SELECT unnest(generate_series(1, len(w) - 2)) AS i)
-      WHERE len(w) >= 3
-    ), counts AS (
-      SELECT g, count(*)::BIGINT AS r FROM g3 GROUP BY g
-    ), coc AS (
-      SELECT r, count(*)::BIGINT AS n_r FROM counts
-      WHERE r <= {_GT_MAX_R + 1} GROUP BY r
-    )
-    SELECT c.r, c.n_r,
-           CAST((c.r + 1) * coalesce(nx.n_r, 0) * 1000 // c.n_r AS BIGINT)
-               AS gt_star_milli
-    FROM coc c LEFT JOIN coc nx ON nx.r = c.r + 1
-    WHERE c.r <= {_GT_MAX_R}
-    ORDER BY c.r
-"""
-
-
 # --- 8. Rank-biased overlap (RBO) between two rankers --------------------------
 #
 # Pinned p=0.9 weights as integer micro-literals (floor(0.9^(d-1)·1e6))
@@ -855,62 +699,6 @@ ORACLES["linear_attribution_credit"] = """
     FROM touches t JOIN ksize USING (user_id, p_after)
     GROUP BY t.event_type ORDER BY t.event_type
 """
-
-
-# --- 12. Streaming n-gram-counter replay (11th certified stream) ---------------
-#
-# Renamed from streaming_unigram_counts_replay before the name entered
-# CORRECTNESS history (advice r7): it counts word TRIGRAMS (it shares
-# good_turing_smoothing's trigram oracle — the unigram space is empty
-# at sf1), so the old name misled bench/registry/driver output.
-def streaming_ngram_counts_replay(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """availableNow replay of a streaming-maintained n-gram (word
-    trigram) counter: documents stream → trigram explode →
-    ``foreachBatch`` into the incremental-aggregate sink
-    (sinks/incremental.apply_batch) — each micro-batch PARTIAL-counts
-    itself (map-side combine, shuffle O(types-in-batch)) and merges
-    into a persistent parquet state table keyed by trigram. The
-    registered projection derives the Good-Turing counts-of-counts
-    table from that state table. Shares ``good_turing_smoothing``'s
-    oracle — a hash match certifies the streaming counter replay ≡
-    the batch n-gram pass, through the full N_r / r* derivation.
-
-    100 TB (r7 verdict task 4 — the first cut used a complete-mode
-    memory sink, which restates the full type space through DRIVER
-    memory every trigger; trigram type spaces grow Heaps-law with real
-    corpora, so that sink is a multi-GB driver collect at 100×): state
-    now lives in an executor-written parquet table bounded by the type
-    space, no streaming state store (the groupBy happens per batch,
-    inside foreachBatch, as a batch plan), and nothing routes through
-    the driver. The batch-id watermark makes a replayed uncommitted
-    batch a no-op (exactly-once), and the GT derivation reads only the
-    state table. This is the live-corpus form of the batch query: the
-    counter absorbs new documents incrementally at per-batch cost."""
-    from etl_extractor_spark.plans.pipeline_ops import _norm_toks, _trigram_col
-    from etl_extractor_spark.sinks.incremental import read_state
-    from etl_extractor_spark.streaming import events_stream as SE
-
-    base = pid_scratch_dir("spark_graft_ngram_replay_")
-    state_path = f"{base}/state"
-    # streaming analog of operators/common.fan_out: a one-file micro-
-    # batch arrives as ONE partition, which would serialize the
-    # row-multiplying trigram explode on a single core (measured 47 s
-    # vs ~11 s batch at sf1); repartition the stream BEFORE the explode
-    grams = (
-        SE.documents_stream(spark, sf_dir)
-        .repartition(spark.sparkContext.defaultParallelism)
-        .select(F.explode(_trigram_col(_norm_toks(F.col("text")))).alias("g"))
-    )
-    SE.run_streaming_incremental_agg(
-        grams, state_path, f"{base}/ckpt", keys=["g"],
-        measures={"r": ("count", "*")},
-    )
-    counts = read_state(spark, state_path).select("g", F.col("r").cast("long"))
-    return _gt_table(counts)
-
-
-QUERIES["streaming_ngram_counts_replay"] = streaming_ngram_counts_replay
-ORACLES["streaming_ngram_counts_replay"] = ORACLES["good_turing_smoothing"]
 
 
 # --- 13. Isotonic calibration via the PAVA closed form -------------------------

@@ -1401,75 +1401,6 @@ QUERIES["streaming_heavy_hitters_replay"] = streaming_heavy_hitters_replay
 ORACLES["streaming_heavy_hitters_replay"] = ORACLES["heavy_hitters_mg_contract"]
 
 
-# --- 16. Delete-aware incremental TF-IDF index maintenance ------------------------------
-#
-# The round-8 flagship closer, completing the index-maintenance story
-# the r7 flagship opened: tfidf_incremental_postings proved APPEND
-# maintenance ≡ rebuild; this proves DELETE maintenance — GDPR
-# erasure, spam takedowns, dedup retractions — via the lakehouse
-# layer's merge-on-read equality deletes: the postings index commits
-# ONE delete file keyed by doc_id (O(deleted keys), zero data-file
-# rewrites), readers subtract it at scan time, and df/idf/norms are
-# re-derived from the subtracted postings. The oracle is the batch
-# flagship SQL over the SURVIVING documents — a driver hash match
-# proves delete-aware maintenance ≡ a full rebuild without the
-# deleted docs, including grams whose df dropped back inside the
-# [2, 32] cap when the deletions landed.
-_TID_DEL_MOD = 50  # delete doc_id % 50 == 0 (~2% of the corpus)
-
-
-def tfidf_incremental_deletes(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Top-20 TF-IDF cosine pairs answered from a postings index that
-    had ~2% of its documents ERASED by a merge-on-read equality-delete
-    commit (no text re-pass, no data-file rewrite — the delete is one
-    keys-file commit; the reader anti-joins it at scan time).
-
-    100 TB: erasure cost is O(deleted keys) + one broadcast anti-join
-    per uncompacted delete file at read time; the text pass never
-    re-runs, and a later compaction absorbs the delete physically
-    (compaction_roundtrip covers that path). Index-scale df/idf
-    re-derivation is the same sum(df²) ≤ 32·sum(df) bound as the
-    flagship."""
-    from etl_extractor_spark.operators.checkpoints import reliable_checkpoint
-    from etl_extractor_spark.operators.common import pid_scratch_dir
-    from etl_extractor_spark.plans.pipeline_ops3 import (
-        _doc_trigram_tf,
-        _tfidf_topk_pairs,
-    )
-    from etl_extractor_spark.sinks import manifest as MF
-
-    d = load_table(spark, sf_dir, "documents").select("doc_id", "text")
-    path = pid_scratch_dir("spark_graft_tfidf_del_")
-    MF.write_with_manifest(
-        spark, _doc_trigram_tf(d), path, stats_cols=["doc_id"],
-        mode="overwrite",
-    )
-    MF.write_equality_deletes(
-        spark, path,
-        d.filter(F.col("doc_id") % _TID_DEL_MOD == 0).select("doc_id"),
-    )
-    tf = reliable_checkpoint(MF.read_merge_on_read(spark, path))
-    n_docs = d.filter(F.col("doc_id") % _TID_DEL_MOD != 0).agg(
-        F.count(F.lit(1)).alias("n_docs")
-    )
-    return _tfidf_topk_pairs(tf, n_docs)
-
-
-QUERIES["tfidf_incremental_deletes"] = tfidf_incremental_deletes
-# The batch flagship SQL over the SURVIVING documents: both of its
-# `FROM documents` references (the trigram base AND the idf corpus
-# count) swap to the filtered relation, so the oracle IS "full rebuild
-# without the deleted docs".
-from etl_extractor_spark.plans import pipeline_ops3 as _p3_del  # noqa: E402
-
-ORACLES["tfidf_incremental_deletes"] = _p3_del.ORACLES[
-    "tfidf_cosine_topk"
-].replace(
-    "FROM documents",
-    f"FROM (SELECT * FROM documents WHERE doc_id % {_TID_DEL_MOD} != 0)",
-)
-
-
 # --- 17. Sequence packing for training batches -------------------------------------------
 #
 # The LLM-pretraining batch-prep op the surface still lacked: pack

@@ -1,11 +1,9 @@
 """Round-9 wave: the aggregation half of the skew-remediation story
-(r8 verdict task 5 — both answer-preservation certificates AND the
-honest 60M-row measurement of when salting aggregates helps), the
-delete-compaction closer for the incremental-postings flagship
-lifecycle (r8 verdict task 4), incremental materialized-view
-maintenance, column-entropy data profiling, CUPED covariate
-adjustment, and the 13th certified stream (stream-stream LEFT OUTER
-join — the watermark-driven null-emission semantics; the inner shape
+(both answer-preservation certificates AND the honest 60M-row
+measurement of when salting aggregates helps), incremental
+materialized-view maintenance, column-entropy data profiling, CUPED
+covariate adjustment, and the 13th certified stream (stream-stream LEFT
+OUTER join — the watermark-driven null-emission semantics; the inner shape
 was certified in round 5, the outer shape was pytest-only).
 
 Reference provenance: the reference pipeline (nilfredb/ETL-Extractor,
@@ -198,78 +196,6 @@ ORACLES["skewed_exact_median_value"] = f"""
            CAST(max(med) AS BIGINT) AS max_med_cents
     FROM med GROUP BY 1 ORDER BY seg
 """
-
-
-# --- 3. Compaction absorbs merge-on-read deletes (flagship lifecycle closer) --
-
-
-def tfidf_postings_compaction(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The last step of the incremental-postings lifecycle: top-20
-    TF-IDF cosine pairs answered from a postings index that was
-    delete-committed (merge-on-read, ~2% of docs erased) and then
-    COMPACTED — ``compact_with_manifest`` reads through the MOR
-    reader, physically materializes the subtraction, and drops the
-    delete files, so this query's read pays ZERO anti-joins (plan-
-    guarded in tests) while hash-matching the same filtered-rebuild
-    oracle as tfidf_incremental_deletes. Together the pair certifies:
-    delete commit ≡ filtered rebuild (MOR read) AND compaction ≡ the
-    same subtraction made physical (plain read).
-
-    The compaction itself is answer-only-preserving if the rewrite
-    reads the MOR view — reading raw data files would silently
-    RESURRECT the deleted rows (the bug the r9 compact_with_manifest
-    fix removes); this oracle match is the regression certificate.
-
-    100 TB: compaction is the O(table) maintenance job you schedule
-    when the per-read anti-join tax (O(delete files) broadcasts per
-    scan) exceeds the one-time rewrite — measured on the 500 k-doc
-    probe: MOR read tax ~1.6 s/read vs one compaction rewrite at
-    ~bootstrap cost; reads after compaction return to the pre-delete
-    baseline (BASELINE.md round-9 row)."""
-    from etl_extractor_spark.operators.common import pid_scratch_dir
-    from etl_extractor_spark.plans.pipeline_ops3 import (
-        _doc_trigram_tf,
-        _tfidf_topk_pairs,
-    )
-    from etl_extractor_spark.plans.pipeline_ops5 import _TID_DEL_MOD
-    from etl_extractor_spark.sinks import manifest as MF
-    from etl_extractor_spark.sinks.compact import compact_with_manifest
-
-    d = load_table(spark, sf_dir, "documents").select("doc_id", "text")
-    path = pid_scratch_dir("spark_graft_tfidf_cpt_")
-    MF.write_with_manifest(
-        spark, _doc_trigram_tf(d), path, stats_cols=["doc_id"],
-        mode="overwrite",
-    )
-    MF.write_equality_deletes(
-        spark, path,
-        d.filter(F.col("doc_id") % _TID_DEL_MOD == 0).select("doc_id"),
-    )
-    compact_with_manifest(spark, path, sort_col="doc_id")
-    # post-compaction read: plain manifest-tracked data files, no
-    # delete files left to apply (read_merge_on_read degenerates to
-    # read_table; tests assert the anti-join is gone from the plan).
-    # r11: NO reliable_checkpoint here — unlike the incremental-deletes
-    # twin (whose MOR read carries a delete anti-join worth
-    # materializing once), this read is already a bare scan of the
-    # freshly compacted files; checkpointing it re-wrote the whole
-    # table a second time in row-serialized form and every consumer
-    # then deserialized FULL rows where the parquet scans prune to the
-    # columns each one needs (A/B min-of-3 interleaved: 4.19 s -> 4.03,
-    # means 5.4 -> 4.5; at scale it removes one O(table) write).
-    tf = MF.read_merge_on_read(spark, path)
-    n_docs = d.filter(F.col("doc_id") % _TID_DEL_MOD != 0).agg(
-        F.count(F.lit(1)).alias("n_docs")
-    )
-    return _tfidf_topk_pairs(tf, n_docs)
-
-
-QUERIES["tfidf_postings_compaction"] = tfidf_postings_compaction
-# Same filtered-rebuild oracle as tfidf_incremental_deletes: compaction
-# must not change answers, only the physical file set.
-from etl_extractor_spark.plans import pipeline_ops5 as _p5  # noqa: E402
-
-ORACLES["tfidf_postings_compaction"] = _p5.ORACLES["tfidf_incremental_deletes"]
 
 
 # --- 4. Column entropy profiling -----------------------------------------------

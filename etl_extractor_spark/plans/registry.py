@@ -54,6 +54,7 @@ _MODULES = (
     "etl_extractor_spark.plans.tpch4",
     "etl_extractor_spark.plans.training_eval",
     "etl_extractor_spark.plans.training_prep",
+    "etl_extractor_spark.plans.trigrams",
     "etl_extractor_spark.plans.web_curation",
 )
 

@@ -70,6 +70,64 @@ def test_registry_names_and_oracles_are_pinned(registry):
     assert hashlib.sha256(pairs.encode()).hexdigest() == _REGISTRY_SHA256
 
 
+# (importer, numbered module, name) for every import the package still
+# takes from a numbered plan module. Re-homing a domain shrinks this
+# list; a new entry means a helper is shared across numbered modules
+# instead of living with its domain.
+_PIPELINE_OPS_CROSS_IMPORTS = {
+    ("plans.inference", "pipeline_ops", "_SPEND_CTE"),
+    ("plans.inference", "pipeline_ops", "_spend_by_customer"),
+    ("plans.pipeline_ops10", "pipeline_ops7", "_tdiv"),
+    ("plans.pipeline_ops10", "pipeline_ops9", "_build_mod3_batches"),
+    ("plans.pipeline_ops2", "pipeline_ops", "_hash_parity"),
+    ("plans.pipeline_ops4", "pipeline_ops", "_risk_table"),
+    ("plans.pipeline_ops4", "pipeline_ops", "_survival_cte"),
+    ("plans.pipeline_ops6", "pipeline_ops", "_hash_parity"),
+    ("plans.pipeline_ops6", "pipeline_ops5", "_skew_key"),
+    ("plans.pipeline_ops6", "pipeline_ops5", "_skew_key_sql"),
+    ("plans.pipeline_ops8", "pipeline_ops7", "_md5_bucket_col"),
+    ("plans.pipeline_ops8", "pipeline_ops7", "_md5_bucket_sql"),
+    ("plans.pipeline_ops9", "pipeline_ops5", "_skew_key"),
+    ("plans.pipeline_ops9", "pipeline_ops7", "_widened_type"),
+    ("plans.pipeline_ops9", "pipeline_ops8", "_CENTS_SQL"),
+    ("plans.pipeline_ops9", "pipeline_ops8", "_write_pinned_batches"),
+}
+
+
+def test_pipeline_ops_cross_imports_are_pinned():
+    """Every ``from etl_extractor_spark.plans.pipeline_opsN import x``
+    and every whole-module import of a numbered plan module under
+    ``etl_extractor_spark/`` is on the pinned list; a module import
+    (``import ... pipeline_opsN as m``) is listed with name None, so
+    none is allowed."""
+    import ast
+    import pathlib
+    import re
+
+    pkg = pathlib.Path(__file__).resolve().parent.parent / "etl_extractor_spark"
+    numbered = re.compile(r"pipeline_ops\d*")
+    found = set()
+    for py in sorted(pkg.rglob("*.py")):
+        importer = ".".join(py.relative_to(pkg).with_suffix("").parts)
+        for node in ast.walk(ast.parse(py.read_text())):
+            if isinstance(node, ast.ImportFrom) and node.module:
+                head, _, last = node.module.rpartition(".")
+                if head == "etl_extractor_spark.plans" and numbered.fullmatch(last):
+                    found |= {(importer, last, a.name) for a in node.names}
+                elif node.module == "etl_extractor_spark.plans":
+                    found |= {
+                        (importer, a.name, None)
+                        for a in node.names
+                        if numbered.fullmatch(a.name)
+                    }
+            elif isinstance(node, ast.Import):
+                for a in node.names:
+                    head, _, last = a.name.rpartition(".")
+                    if head == "etl_extractor_spark.plans" and numbered.fullmatch(last):
+                        found.add((importer, last, None))
+    assert found == _PIPELINE_OPS_CROSS_IMPORTS
+
+
 @pytest.fixture
 def registry():
     """The query registry with an empty cache, emptied again on exit so

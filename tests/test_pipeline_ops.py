@@ -8,73 +8,6 @@ from pyspark.sql import functions as F
 import etl_extractor_spark.plans.pipeline_ops as P
 
 
-def _grams_of(spark, texts):
-    df = spark.createDataFrame(
-        [(i, t) for i, t in enumerate(texts)], "doc_id long, text string"
-    )
-    return (
-        df.select(
-            "doc_id", P._trigram_col(P._norm_toks(F.col("text"))).alias("g")
-        )
-        .select(F.explode("g").alias("gram"))
-        .distinct()
-    )
-
-
-def test_bloom_gate_has_no_false_negatives(spark):
-    """Every gram used to BUILD the bitmap must pass the membership
-    test — the property that makes bloom-prefilter-then-exact-verify
-    an EXACT decontamination (same xxhash64 seed family builds and
-    probes)."""
-    evl = _grams_of(
-        spark,
-        [
-            "the quick brown fox jumps over the lazy dog",
-            "pack my box with five dozen liquor jugs",
-        ],
-    )
-    words = (
-        evl.select(
-            F.explode(F.array(*[F.lit(i) for i in range(P.BLOOM_K)])).alias("seed"),
-            "gram",
-        )
-        .select(
-            (F.pmod(F.xxhash64("gram", F.col("seed")), F.lit(P.BLOOM_M)) / 64)
-            .cast("long")
-            .alias("w"),
-            F.call_function(
-                "shiftleft",
-                F.lit(1).cast("long"),
-                (F.pmod(F.xxhash64("gram", F.col("seed")), F.lit(P.BLOOM_M)) % 64).cast(
-                    "int"
-                ),
-            ).alias("m"),
-        )
-        .groupBy("w")
-        .agg(F.bit_or("m").alias("bits"))
-        .collect()
-    )
-    bitmap = [0] * (P.BLOOM_M // 64)
-    for r in words:
-        bitmap[int(r["w"])] = int(r["bits"])
-    bits_lit = F.lit(bitmap)
-    member = None
-    for i in range(P.BLOOM_K):
-        p = F.pmod(F.xxhash64("gram", F.lit(i)), F.lit(P.BLOOM_M))
-        hit = (
-            F.element_at(bits_lit, (p / F.lit(64)).cast("int") + 1).bitwiseAND(
-                F.call_function(
-                    "shiftleft", F.lit(1).cast("long"), (p % 64).cast("int")
-                )
-            )
-            != 0
-        )
-        member = hit if member is None else (member & hit)
-    n_total = evl.count()
-    n_pass = evl.filter(member).count()
-    assert n_total > 0 and n_pass == n_total
-
-
 def test_cdc_boundaries_shift_with_prefix_insertion(spark):
     """The content-defined property: prepending k characters shifts
     every boundary beyond the first window by EXACTLY k — boundaries

@@ -376,33 +376,6 @@ def test_streaming_mg_replay_equals_batch_contract(spark, sf_dir):
     assert stream["ok_contained"] == 1
 
 
-def test_tfidf_deletes_equals_filtered_rebuild(spark, sf_dir):
-    """The delete-maintained index must answer the flagship query
-    identically to a FULL REBUILD over only the surviving documents —
-    row for row, including grams whose df dropped back inside the
-    [2, 32] cap when the deletions landed — and the fixture must
-    actually delete something."""
-    from etl_extractor_spark.plans.pipeline_ops3 import (
-        _doc_trigram_tf,
-        _tfidf_topk_pairs,
-    )
-    from etl_extractor_spark.plans.pipeline_ops5 import (
-        _TID_DEL_MOD,
-        tfidf_incremental_deletes,
-    )
-
-    d = load_table(spark, sf_dir, "documents").select("doc_id", "text")
-    n_deleted = d.filter(F.col("doc_id") % _TID_DEL_MOD == 0).count()
-    assert n_deleted > 0, "fixture deletes nothing; maintenance untested"
-    kept = d.filter(F.col("doc_id") % _TID_DEL_MOD != 0)
-    rebuild = _tfidf_topk_pairs(
-        _doc_trigram_tf(kept), kept.agg(F.count(F.lit(1)).alias("n_docs"))
-    )
-    got = sorted(map(tuple, tfidf_incremental_deletes(spark, sf_dir).collect()))
-    want = sorted(map(tuple, rebuild.collect()))
-    assert got == want
-
-
 def test_sequence_packing_matches_bruteforce(spark, sf_dir):
     """Stripe packing recomputed in plain Python (sorted cumsum, bin =
     prefix div C), plus the bounded-waste property: every bin except

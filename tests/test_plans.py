@@ -765,9 +765,7 @@ def test_bloom_gate_is_map_only_before_verify(spark, sf_dir):
     no join, no exchange between the corpus gram explode and the gate
     (the property that makes the prefilter O(corpus) map work instead
     of an O(corpus) shuffle)."""
-    from etl_extractor_spark.plans.pipeline_ops import (
-        bloom_prefilter_decontaminate,
-    )
+    from etl_extractor_spark.plans.trigrams import bloom_prefilter_decontaminate
 
     plan = _plan(bloom_prefilter_decontaminate(spark, sf_dir))
     assert "CartesianProduct" not in plan
@@ -779,9 +777,7 @@ def test_jaccard_prefix_join_is_merge_pinned(spark, sf_dir):
     """Both exploded prefix sides and both set sides carry merge-join
     pins (the pre-explode size-misestimate guard): no broadcast of a
     corpus-scaled side may appear."""
-    from etl_extractor_spark.plans.pipeline_ops import (
-        jaccard_prefix_filter_join,
-    )
+    from etl_extractor_spark.plans.trigrams import jaccard_prefix_filter_join
 
     plan = _plan(jaccard_prefix_filter_join(spark, sf_dir))
     assert "CartesianProduct" not in plan
@@ -811,7 +807,7 @@ def test_tfidf_cosine_postings_join_is_merge_pinned(spark, sf_dir):
     size misestimate would otherwise broadcast a corpus-scaled side.
     Broadcast joins may appear only for the bounded frames (idf'd
     feature set, 1-row doc count, top-k norms lookups under AQE)."""
-    from etl_extractor_spark.plans.pipeline_ops3 import tfidf_cosine_topk
+    from etl_extractor_spark.plans.trigrams import tfidf_cosine_topk
 
     plan = _plan(tfidf_cosine_topk(spark, sf_dir))
     assert "CartesianProduct" not in plan

@@ -126,6 +126,8 @@ def test_schema_evolution_scan_keeps_parquet_schema_evolution_files(spark, sf_di
     "name",
     [
         "tfidf_postings_compaction",
+        "tfidf_incremental_postings",
+        "tfidf_incremental_deletes",
         "manifest_snapshot_expiry",
         "bucketed_join_colocated",
         "bucket_pruned_lookup",
