@@ -16,6 +16,15 @@ write pass itself. Row counts and the dims' FK bounds ride those writes
 are the ones that write data — the reference's per-stage ``len(df)``
 logging (main.py:45…411) costs no extra job.
 
+A stage's writes run as concurrent Spark jobs (``_land_all``, one
+thread per table). The staging saves and dim writes are small jobs of a
+task or a few, so landing them one at a time leaves most cores idle
+while the driver waits for each job before it submits the next. The
+pool's threads inherit the caller's Spark local properties and session
+tags (job group, job description, scheduler pool), so their jobs are
+grouped and described like the caller's own. Stages stay barriers: a
+stage returns only once every one of its writes has ended.
+
 Stage map (reference → here):
   read_sources   main.py:29-76     source registry, per-source isolation
   stage          main.py:82-93     overwrite-mode staging parquet
@@ -33,11 +42,13 @@ from __future__ import annotations
 import logging
 import os
 import time
+from concurrent.futures import ThreadPoolExecutor
 from logging.handlers import RotatingFileHandler
 from typing import NamedTuple
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.util import inheritable_thread_target
 
 from etl_extractor_spark.functions.casts import to_double_or
 from etl_extractor_spark.functions.dates import fecha_key
@@ -73,6 +84,23 @@ def _land(
     return Landed(df.sparkSession.read.schema(df.schema).parquet(path), got)
 
 
+def _land_all(
+    spark: SparkSession, writes: dict[str, tuple[DataFrame, str, dict | None]]
+) -> dict[str, Landed | Exception]:
+    """``_land`` every ``name → (df, path, metrics)`` at once, one thread
+    per table, and wait for all of them: each name maps to its
+    ``Landed`` table or to the exception its write raised, in ``writes``
+    order. Each target is wrapped when it is submitted, so every thread
+    gets its own copy of the caller's local properties and tags."""
+    with ThreadPoolExecutor(max_workers=len(writes) or 1) as pool:
+        futures = {
+            name: pool.submit(inheritable_thread_target(spark)(_land), *args)
+            for name, args in writes.items()
+        }
+    # leaving the pool waited for every write
+    return {name: f.exception() or f.result() for name, f in futures.items()}
+
+
 def get_logger(log_path: str | None = None) -> logging.Logger:
     """X3: rotating-file + console logging (reference core/logger.py)."""
     log = logging.getLogger("etl_extractor_spark.pipeline")
@@ -92,16 +120,24 @@ def get_logger(log_path: str | None = None) -> logging.Logger:
 def stage_sources(
     spark: SparkSession, sources: dict[str, DataFrame], staging_dir: str, log: logging.Logger
 ) -> dict[str, Landed]:
-    """K1: overwrite-write every source frame to the staging zone.
-    Idempotent by construction (fixes the reference's rerun-append
+    """K1: overwrite-write every source frame to the staging zone, all
+    at once (``_land_all``). Idempotent by construction (fixes the reference's rerun-append
     duplication, SURVEY §4.2.5)."""
+    landed = _land_all(
+        spark,
+        {
+            name: (df, os.path.join(staging_dir, f"stg_{name}"), None)
+            for name, df in sources.items()
+        },
+    )
     staged: dict[str, Landed] = {}
-    for name, df in sources.items():
-        try:  # X2: per-source isolation — a bad source never kills the run
-            staged[name] = _land(df, os.path.join(staging_dir, f"stg_{name}"))
-            log.info("STAGING: stg_%s written (%d rows)", name, staged[name].metrics["rows"])
-        except Exception as exc:
-            log.warning("STAGING: stg_%s failed: %s", name, exc)
+    for name, got in landed.items():
+        # X2: per-source isolation — a bad source never kills the run
+        if isinstance(got, Exception):
+            log.warning("STAGING: stg_%s failed: %s", name, got)
+            continue
+        staged[name] = got
+        log.info("STAGING: stg_%s written (%d rows)", name, got.metrics["rows"])
     return staged
 
 
@@ -162,10 +198,14 @@ def build_dimensions(
         ),
         "dim_fecha": (dim_fecha.withColumn("IdFecha", F.col("fecha_key")), None),
     }
-    landed: dict[str, Landed] = {}
-    for name, (df, metrics) in dims.items():
-        landed[name] = _land(df, os.path.join(gold_dir, name), metrics)
-        log.info("DIM: %s built (%d rows)", name, landed[name].metrics["rows"])
+    landed = _land_all(
+        spark,
+        {name: (df, os.path.join(gold_dir, name), metrics) for name, (df, metrics) in dims.items()},
+    )
+    for name, got in landed.items():  # fail fast: the first failure in dim order
+        if isinstance(got, Exception):
+            raise got
+        log.info("DIM: %s built (%d rows)", name, got.metrics["rows"])
     return landed
 
 
