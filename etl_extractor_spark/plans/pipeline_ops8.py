@@ -880,9 +880,10 @@ def manifest_incremental_diff(spark: SparkSession, sf_dir: str) -> DataFrame:
     new_rows = spark.read.parquet(
         *[os.path.join(path, f) for f in new_files]
     ).select("o_orderkey")
+    by_name = {d["name"]: d for d in m.get("delete_files", [])}
     dk = None
     for name in cur.get("delete_files", []):
-        part = spark.read.parquet(os.path.join(path, "_deletes", name))
+        part = MF.read_delete_file(spark, path, by_name[name])
         dk = part if dk is None else dk.unionByName(part)
     if dk is None:  # append-only change set: no delete files committed
         dk = spark.createDataFrame([], "o_orderkey long")

@@ -979,10 +979,9 @@ def snapshot_row_cdf(spark: SparkSession, sf_dir: str) -> DataFrame:
     added = [n for n in snaps[-1]["files"] if n not in s0_files]
     assert added and all(n.startswith("wap-") for n in added), added
     inserts = spark.read.parquet(*[os.path.join(path, n) for n in added])
-    del_names = snaps[-1].get("delete_files", [])
-    deleted_keys = spark.read.parquet(
-        *[os.path.join(path, "_deletes", n) for n in del_names]
-    )
+    (del_name,) = snaps[-1]["delete_files"]
+    (entry,) = [d for d in m["delete_files"] if d["name"] == del_name]
+    deleted_keys = MF.read_delete_file(spark, path, entry)
     deletes = MF.read_snapshot(spark, path, 0).join(
         F.broadcast(deleted_keys), "o_orderkey", "left_semi"
     )

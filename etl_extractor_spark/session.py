@@ -23,7 +23,19 @@ the plan shapes we want on a real cluster:
 - the package zip shipped to Python workers is removed at interpreter
   exit, so none is left in the temp dir; ``addPyFile`` has copied it
   into the SparkFiles root by then. It stays a top-level ``*.zip`` in
-  the temp dir while the process lives.
+  the temp dir while the process lives,
+- every parquet file the package writes (staging, dims, the gold
+  fact, manifest and scratch tables) is zstd-compressed at Parquet's
+  default level 3 instead of Spark's default snappy; no write site
+  names a codec, so this one session default covers them all. Only
+  page compression changes: the values are identical and DuckDB,
+  pyarrow and Spark read the files alike. Measured on 4 vCPU: the
+  seeded sf0.01 warehouse load's lake fell from 0.7745 to 0.6105 bytes
+  per source byte (-21.2%; its staged lineitem from 920,618 to 786,051
+  B of parquet), the sf0.1 lake from 17.53 to 13.24 MB (-24.5%), and
+  the benchmark's process CPU and set-up time stayed within their
+  run-to-run spread. Level 1 saved about half as many bytes and wrote
+  no faster, so there is no level or codec option.
 """
 
 from __future__ import annotations
@@ -125,6 +137,7 @@ def get_spark(
         .config("spark.sql.shuffle.partitions", str(shuffle_partitions))
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         .config("spark.sql.parquet.filterPushdown", "true")
+        .config("spark.sql.parquet.compression.codec", "zstd")
         # keep wide plans (e.g. the 128-column MinHash signature agg)
         # inside whole-stage codegen; default cutoff is 100 fields
         .config("spark.sql.codegen.maxFields", "256")

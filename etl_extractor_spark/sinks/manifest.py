@@ -634,18 +634,42 @@ def write_equality_deletes(
 
     Delete files live under ``_deletes/`` (invisible to the data-file
     harvester) as plain parquet of the key columns."""
+    return _commit_delete_file(path, keys_df, key_cols=list(keys_df.columns))
+
+
+def write_positional_deletes(
+    spark: SparkSession, path: str, pos_df: DataFrame
+) -> dict[str, Any]:
+    """Iceberg-style POSITIONAL delete commit: ``pos_df`` holds
+    (file_name, pos) pairs — the physical row coordinates to subtract
+    (Spark's ``_metadata.file_name`` / ``_metadata.row_index``). The
+    semantic equality deletes cannot express: removing ONE specific
+    physical row of a set of duplicates. Same snapshot mechanics as
+    write_equality_deletes (cumulative delete list, O(deleted rows)
+    commit); readers apply it as a broadcast anti-join on the row
+    coordinates, which the MOR readers attach from the file metadata
+    at scan time and drop after."""
+    assert set(pos_df.columns) == {"file_name", "pos"}, pos_df.columns
+    return _commit_delete_file(path, pos_df, kind="positional")
+
+
+def _commit_delete_file(path: str, df: DataFrame, **entry: Any) -> dict[str, Any]:
+    """Write ``df``'s distinct rows as the table's next delete file and
+    commit a snapshot whose pending-delete set adds it. The delete
+    entry (``entry`` plus name, rows and schema) takes its row count
+    from the write pass and records the file's schema, so neither the
+    commit nor a reader starts a count or schema-inference job."""
+    from etl_extractor_spark.sinks.writers import write_observed
+
     m = read_manifest(path)
     if m is None:
         raise FileNotFoundError(f"no manifest at {path} — commit data first")
     dels: list[dict[str, Any]] = list(m.get("delete_files", []))
     name = f"delete-{len(dels)}"
-    dpath = os.path.join(path, "_deletes", name)
-    keys_df = keys_df.distinct()
-    keys_df.write.mode("overwrite").parquet(dpath)
-    n_keys = spark.read.parquet(dpath).count()
-    dels.append(
-        {"name": name, "rows": n_keys, "key_cols": list(keys_df.columns)}
-    )
+    df = df.distinct()
+    got = write_observed(df, os.path.join(path, "_deletes", name))
+    schema_json = json.dumps(df.schema.jsonValue())
+    dels.append({"name": name, "rows": got["rows"], "schema": schema_json, **entry})
     snapshots = list(m.get("snapshots", []))
     # base = MAIN's current snapshot (a trailing branch append must not
     # leak its file list or frozen delete view into a main delete
@@ -674,47 +698,13 @@ def write_equality_deletes(
     return m
 
 
-def write_positional_deletes(
-    spark: SparkSession, path: str, pos_df: DataFrame
-) -> dict[str, Any]:
-    """Iceberg-style POSITIONAL delete commit: ``pos_df`` holds
-    (file_name, pos) pairs — the physical row coordinates to subtract
-    (Spark's ``_metadata.file_name`` / ``_metadata.row_index``). The
-    semantic equality deletes cannot express: removing ONE specific
-    physical row of a set of duplicates. Same snapshot mechanics as
-    write_equality_deletes (cumulative delete list, O(deleted rows)
-    commit); readers apply it as a broadcast anti-join on the row
-    coordinates, which the MOR readers attach from the file metadata
-    at scan time and drop after."""
-    m = read_manifest(path)
-    if m is None:
-        raise FileNotFoundError(f"no manifest at {path} — commit data first")
-    assert set(pos_df.columns) == {"file_name", "pos"}, pos_df.columns
-    dels: list[dict[str, Any]] = list(m.get("delete_files", []))
-    name = f"delete-{len(dels)}"
-    dpath = os.path.join(path, "_deletes", name)
-    pos_df = pos_df.distinct()
-    pos_df.write.mode("overwrite").parquet(dpath)
-    n_rows = spark.read.parquet(dpath).count()
-    dels.append({"name": name, "rows": n_rows, "kind": "positional"})
-    snapshots = list(m.get("snapshots", []))
-    # extend MAIN's current snapshot's pending set, never the registry
-    # (restatement row-loss class) and never a trailing branch
-    # snapshot's (branch-leak class) — see write_equality_deletes
-    last = _main_snapshot(m)
-    assert last is not None, f"no main snapshot at {path}"
-    snapshots.append(
-        {
-            "id": snapshots[-1]["id"] + 1,
-            "files": list(last["files"]),
-            "total_rows": last["total_rows"],
-            "delete_files": list(last.get("delete_files", [])) + [name],
-        }
-    )
-    m["delete_files"] = dels
-    m["snapshots"] = snapshots
-    _write_manifest(path, m)
-    return m
+def read_delete_file(spark: SparkSession, path: str, entry: dict[str, Any]) -> DataFrame:
+    """The rows of one committed delete file (a ``delete_files`` entry),
+    read with the schema its commit recorded: no schema-inference job."""
+    from pyspark.sql.types import StructType
+
+    schema = StructType.fromJson(json.loads(entry["schema"]))
+    return spark.read.schema(schema).parquet(os.path.join(path, "_deletes", entry["name"]))
 
 
 _POS_COLS = ("_pd_file", "_pd_pos")
@@ -740,7 +730,7 @@ def _apply_deletes(
         df = _with_pos_meta(df)
     for name in names:
         d = by_name[name]
-        keys = spark.read.parquet(os.path.join(path, "_deletes", name))
+        keys = read_delete_file(spark, path, d)
         # delete sets are O(deletes) — broadcast the anti-join build side
         if d.get("kind") == "positional":
             keys = keys.select(

@@ -291,6 +291,14 @@ def state_partitions_for(
     stores. The cap WINS over the floor on a sub-4-core session
     (state stores beyond the core count only add commit I/O).
 
+    The floor stays at 4 because the pandas-state replays need the
+    parallelism. A floor of 1 (sf0.1, 4 vCPU, median of 3 interleaved
+    runs) ran three fewer pandas workers, which cut the lakehouse_stream
+    benchmark's peak RSS from 2947 to 2556 MB, but it slowed every
+    replay in wall time: funnel 1.82 -> 3.33 s, rate_limit 1.98 ->
+    3.95 s, interval_union 1.39 -> 3.09 s, cms 7.60 -> 12.60 s and
+    sessionize 1.45 -> 2.34 s.
+
     Sizing walks the table's data files (sinks/compact.dir_bytes —
     a Spark-written table is a DIRECTORY of part files; a bare
     getsize would read the directory inode, ~4 KB, and silently

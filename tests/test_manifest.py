@@ -425,6 +425,46 @@ def test_merge_on_read_equality_deletes(spark, tmp_path):
     assert clean == got2
 
 
+def test_mor_delete_commits_and_read_start_no_side_job(spark, tmp_path):
+    """A delete commit takes its row count from its own write and
+    records the delete file's schema, so neither the commits nor a
+    merge-on-read plan and read start a count or schema-inference job."""
+    from etl_extractor_spark.sinks import manifest as MF
+
+    path = str(tmp_path / "t")
+    df = spark.createDataFrame([(i, i * 10) for i in range(1, 21)], "k long, v long")
+    MF.write_with_manifest(spark, df, path, stats_cols=["k"], mode="overwrite")
+    keys = spark.createDataFrame([(2,), (4,), (4,), (6,)], "k long")
+    one = MF.read_table(spark, path).filter("k = 1").select(
+        F.col("_metadata.file_name").alias("file_name"),
+        F.col("_metadata.row_index").alias("pos"),
+    )
+    pos = one.unionByName(one)  # a repeated coordinate is one delete row
+    sc = spark.sparkContext
+    sc.setJobGroup("mor-side-jobs", "delete commits and a merge-on-read read")
+    try:
+        MF.write_equality_deletes(spark, path, keys)
+        m = MF.write_positional_deletes(spark, path, pos)
+        got = {r["k"] for r in MF.read_merge_on_read(spark, path).collect()}
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    assert got == set(range(1, 21)) - {1, 2, 4, 6}
+    assert [d["rows"] for d in m["delete_files"]] == [3, 1]
+
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    st = sc.statusTracker()
+    names = [
+        st.getStageInfo(s).name
+        for j in st.getJobIdsForGroup("mor-side-jobs")
+        for s in st.getJobInfo(j).stageIds
+        if st.getStageInfo(s) is not None
+    ]
+    assert names
+    side = [n for n in names if n.startswith(("count at", "parquet at"))]
+    assert not side, side
+
+
 def test_streaming_manifest_sink_exactly_once(spark, tmp_path, sf_dir):
     """foreachBatch → manifest commits are exactly-once: a replayed
     batch id is a no-op (the at-least-once redelivery window closes),

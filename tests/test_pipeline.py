@@ -67,6 +67,30 @@ def test_partition_pruning_on_gold_fact(lake):
     assert one_year.count() < fact.count() or len(years) == 1
 
 
+def test_lake_is_zstd_parquet(lake):
+    """Every column chunk the pipeline lands in staging and gold is
+    zstd-compressed: the session factory sets the codec and no write
+    site overrides it."""
+    import glob
+
+    import pyarrow.parquet as pq
+
+    sp, tmp, _ = lake
+    assert sp.conf.get("spark.sql.parquet.compression.codec") == "zstd"
+    codecs: dict[str, set[str]] = {}
+    for zone in ("staging", "gold"):
+        for f in glob.glob(os.path.join(tmp, zone, "*", "**", "*.parquet"), recursive=True):
+            table = os.path.relpath(f, tmp).split(os.sep)[1]
+            meta = pq.ParquetFile(f).metadata
+            codecs.setdefault(table, set()).update(
+                meta.row_group(g).column(c).compression
+                for g in range(meta.num_row_groups)
+                for c in range(meta.num_columns)
+            )
+    assert len(codecs) == 11, sorted(codecs)  # 6 staged sources, 4 dims, the fact
+    assert all(found == {"ZSTD"} for found in codecs.values()), codecs
+
+
 def test_pipeline_idempotent(lake, spark, sf_dir):
     """Re-running overwrites, never duplicates (fixes SURVEY §4.2.5)."""
     sp, tmp, counts = lake
